@@ -26,6 +26,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from flink_playground_spark.sqltext import quote
+
 
 def dedup_latest(
     df: DataFrame,
@@ -46,12 +48,15 @@ def dedup_latest(
     order_cols = [order_col, *tiebreakers]
     if strategy == "struct_max":
         rest = [c for c in df.columns if c not in order_cols]
-        winner = F.max(F.struct(*order_cols, *rest)).alias("__latest")
+        # SQL text: one JVM call per expression, not one per column
+        # (sqltext) — this runs in every keyed-state micro-batch
+        ranked = ", ".join(quote(c) for c in (*order_cols, *rest))
         return (
             df.groupBy(*keys)
-            .agg(winner)
-            .select(*keys, *[F.col(f"__latest.{c}").alias(c) for c in (*order_cols, *rest) if c not in keys])
-            .select(*df.columns)
+            .agg(F.expr(f"max(struct({ranked})) AS __latest"))
+            .selectExpr(
+                *[quote(c) if c in keys else f"__latest.{quote(c)} AS {quote(c)}" for c in df.columns]
+            )
         )
     if strategy == "max_by":
         out_struct = F.struct(*[F.col(c) for c in df.columns])

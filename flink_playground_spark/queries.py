@@ -909,7 +909,8 @@ def streaming_changelog_dedup(spark, sf_dir):
     winner changed (and +I for keys first seen) — every op carries the
     full before/after row, so the oracle reconstructs the exact
     changelog from the parity split in SQL. Per-batch state IO is
-    bucket-proportional (streaming.state_store)."""
+    bucket-proportional and the log is exactly-once
+    (streaming.txn_state)."""
     from flink_playground_spark.streaming.changelog import keep_latest_changelog_stream
     from flink_playground_spark.streaming.runners import replay_events_waves
 
@@ -975,7 +976,7 @@ def streaming_outer_join_changelog(spark, sf_dir):
     split makes every op SQL-reconstructible: the oracle rebuilds the
     exact log from the two keep-latest views. Per-batch work is
     touched-bucket-proportional; only affected probe rows are re-joined
-    (left-semi against touched keys)."""
+    (left-semi against the keys whose kept dim row changed)."""
     from flink_playground_spark.streaming.changelog import outer_join_changelog_stream
     from flink_playground_spark.streaming.runners import replay_events_waves
 

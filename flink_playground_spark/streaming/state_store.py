@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_playground_spark.operators.dedup import dedup_latest
+from flink_playground_spark.streaming.txn_state import bucket_writer_tasks
 
 BUCKET_COL = "__bucket"
 
@@ -149,11 +150,14 @@ class BucketedKeyState:
         ).withColumn(BUCKET_COL, self._bucket())
         cols = [c for c in merged.columns if c != BUCKET_COL]
         # cluster by bucket before the partitioned write (round 14, guide
-        # §6): one writer task and one file per touched bucket, instead of
-        # every shuffle partition emitting a file per bucket it holds (and
-        # locally, instead of one AQE-coalesced task writing all buckets
-        # serially).
-        merged = merged.repartition(max(len(touched), 1), F.col(BUCKET_COL))
+        # §6): each bucket lands in exactly one writer task, so one file
+        # per touched bucket, instead of every shuffle partition emitting
+        # a file per bucket it holds (and locally, instead of one
+        # AQE-coalesced task writing all buckets serially). Tasks are
+        # capped at the core count.
+        merged = merged.repartition(
+            bucket_writer_tasks(spark, touched), F.col(BUCKET_COL)
+        )
         # Dynamic overwrite replaces only the partitions present in
         # `merged` (= the touched buckets); other buckets' files survive.
         (
@@ -210,9 +214,9 @@ class BucketedKeyState:
             .agg(*agg_cols)
             .select(*cols)
             .withColumn(BUCKET_COL, self._bucket())
-            # one writer task / one file per touched bucket (see
-            # merge_keep_latest)
-            .repartition(max(len(touched), 1), F.col(BUCKET_COL))
+            # one file per touched bucket, tasks capped at the core
+            # count (see merge_keep_latest)
+            .repartition(bucket_writer_tasks(spark, touched), F.col(BUCKET_COL))
         )
         (
             merged.write.mode("overwrite")
@@ -285,9 +289,9 @@ class BucketedKeyState:
             .drop(op_col)
             .select(*out_cols)
             .withColumn(BUCKET_COL, self._bucket())
-            # one writer task / one file per touched bucket (see
-            # merge_keep_latest)
-            .repartition(max(len(touched), 1), F.col(BUCKET_COL))
+            # one file per touched bucket, tasks capped at the core
+            # count (see merge_keep_latest)
+            .repartition(bucket_writer_tasks(spark, touched), F.col(BUCKET_COL))
         )
         (
             merged.write.mode("overwrite")

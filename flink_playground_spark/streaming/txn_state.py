@@ -16,8 +16,12 @@ Layout::
     path/t<txn>/__bucket=<k>/...   immutable, never overwritten
     path/manifest.json             {"writers": {"<writer_id>": n, ...},
                                     "txn": t,
-                                    "buckets": {"3": 7, ...}}
-                                   (bucket -> txn of its current version)
+                                    "buckets": {"3": 7, ...},
+                                    "n_buckets": 16,
+                                    "schema": {<StructType JSON>}}
+                                   (bucket -> txn of its current version;
+                                   schema = the committed state columns,
+                                   so reads skip parquet schema inference)
 
 Batch ids are only monotonic WITHIN one checkpointed streaming query —
 a different query (or a restarted one with a fresh checkpoint) starts
@@ -41,6 +45,10 @@ Merge protocol for writer ``w``, batch ``b``:
    OLD manifest and reproduces the same merge; orphan files from the
    failed attempt are shadowed, then garbage-collectable by ``vacuum``.
 
+A batch whose columns differ from the committed schema is refused with
+a ``ValueError`` before anything is written: the store never widens or
+null-fills its schema silently.
+
 On a cluster the same protocol works on any store with atomic
 single-object replace (every object store has PUT) — it is the
 single-writer core of what table formats call a transaction log.
@@ -52,14 +60,24 @@ import json
 import os
 import shutil
 from collections.abc import Sequence
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+from pyspark.util import inheritable_thread_target
 
 from flink_playground_spark.operators.dedup import dedup_latest
+from flink_playground_spark.sqltext import quote
 
 BUCKET_COL = "__bucket"
+
+
+def bucket_writer_tasks(spark: SparkSession, touched: Sequence[int]) -> int:
+    """Task count of a bucket-clustered write: one per touched bucket,
+    at most one per core."""
+    return max(1, min(len(touched), spark.sparkContext.defaultParallelism))
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -135,7 +153,8 @@ class TransactionalKeyState:
         os.replace(tmp, f"{self.path}/manifest.json")  # the commit point
 
     def _bucket(self) -> F.Column:
-        return F.pmod(F.xxhash64(*self.keys), F.lit(self.n_buckets)).cast("int")
+        keys = ", ".join(quote(k) for k in self.keys)
+        return F.expr(f"CAST(pmod(xxhash64({keys}), {int(self.n_buckets)}) AS INT)")
 
     def _bucket_paths(self, manifest: dict, buckets=None) -> list[str]:
         return [
@@ -149,8 +168,28 @@ class TransactionalKeyState:
         if not paths:
             return None
         # explicit leaf dirs: no partition discovery, no bucket column —
-        # and only COMMITTED files are reachable, orphans are invisible
-        return spark.read.parquet(*paths)
+        # and only COMMITTED files are reachable, orphans are invisible.
+        # The committed schema skips the footer-inference job; manifests
+        # written before it was recorded still read through inference.
+        reader = spark.read
+        if "schema" in manifest:
+            reader = reader.schema(StructType.fromJson(manifest["schema"]))
+        return reader.parquet(*paths)
+
+    def _check_columns(self, manifest: dict, cols: Sequence[str]) -> None:
+        """Refuse a batch whose columns differ from the committed state's
+        (from the first commit that records a schema on): unioning it in
+        would null-fill (or drop) columns silently."""
+        if "schema" not in manifest:
+            return
+        committed = StructType.fromJson(manifest["schema"]).names
+        missing = [c for c in committed if c not in cols]
+        extra = [c for c in cols if c not in committed]
+        if missing or extra:
+            raise ValueError(
+                f"batch columns differ from the committed state schema at "
+                f"{self.path}: missing {missing}, unexpected {extra}"
+            )
 
     # -- merges ------------------------------------------------------------
     def merge_aggregate(
@@ -167,7 +206,10 @@ class TransactionalKeyState:
             writer_id,
             batch_id,
             partials,
-            lambda base, cols: base.groupBy(*self.keys).agg(*agg_cols).select(*cols),
+            lambda base, cols: base.groupBy(*self.keys, BUCKET_COL)
+            .agg(*agg_cols)
+            .select(*cols, BUCKET_COL),
+            by_bucket=True,
         )
 
     def merge_keep_latest(
@@ -177,14 +219,28 @@ class TransactionalKeyState:
         batch: DataFrame,
         order_col: str,
         tiebreakers: Sequence[str] = (),
+        on_write=None,
     ) -> bool:
         """Keep-latest upsert, exactly once (idempotent anyway; the skip
-        makes replays free instead of merely harmless)."""
+        makes replays free instead of merely harmless).
+
+        ``on_write(old, batch)`` runs in a second thread beside the
+        bucket write, and both finish before the manifest commit: ``old``
+        is the touched buckets' committed rows (immutable files, or None
+        before the first commit) and ``batch`` the cached wave. A side
+        output it writes idempotently (e.g. a per-batch changelog
+        directory in overwrite mode) commits exactly once with the state:
+        a replay either is skipped or rewrites the same output. If either
+        write fails, nothing is committed."""
         return self._merge(
             writer_id,
             batch_id,
             batch,
-            lambda base, cols: dedup_latest(base, self.keys, order_col, tiebreakers).select(*cols),
+            lambda base, cols: dedup_latest(
+                base, [*self.keys, BUCKET_COL], order_col, tiebreakers
+            ),
+            on_write,
+            by_bucket=True,
         )
 
     def merge_transform(
@@ -200,7 +256,21 @@ class TransactionalKeyState:
         state and must reproduce the same result."""
         return self._merge(writer_id, batch_id, batch, combine)
 
-    def _merge(self, writer_id: str, batch_id: int, batch: DataFrame, combine) -> bool:
+    def _merge(
+        self,
+        writer_id: str,
+        batch_id: int,
+        batch: DataFrame,
+        combine,
+        on_write=None,
+        by_bucket: bool = False,
+    ) -> bool:
+        """Exactly-once merge of ``batch`` into the touched buckets.
+        ``combine(base, cols)`` maps old ∪ batch rows to the buckets' new
+        contents. With ``by_bucket`` it receives ``base`` with the bucket
+        column, already hash-clustered on it, and groups by keys plus
+        bucket, so the merge and the bucket-clustered write share one
+        shuffle; otherwise it sees plain rows and the write re-clusters."""
         # ENFORCE the single-writer protocol rather than assuming it: two
         # concurrent merges would both read manifest M and the second
         # commit would silently drop the first's bucket pointers. An
@@ -208,9 +278,17 @@ class TransactionalKeyState:
         # overlap a loud error instead (ConcurrentWriteError), which a
         # scheduler-level retry can handle.
         with _writer_lock(self.path):
-            return self._merge_locked(writer_id, batch_id, batch, combine)
+            return self._merge_locked(writer_id, batch_id, batch, combine, on_write, by_bucket)
 
-    def _merge_locked(self, writer_id: str, batch_id: int, batch: DataFrame, combine) -> bool:
+    def _merge_locked(
+        self,
+        writer_id: str,
+        batch_id: int,
+        batch: DataFrame,
+        combine,
+        on_write,
+        by_bucket: bool,
+    ) -> bool:
         manifest = self._manifest()
         last = manifest["writers"].get(writer_id)
         if last is not None and batch_id <= last:
@@ -218,8 +296,10 @@ class TransactionalKeyState:
         txn = manifest["txn"] + 1
         spark = batch.sparkSession
         cols = batch.columns
+        self._check_columns(manifest, cols)
         # the wave is read TWICE (touched-bucket discovery, then the
-        # merge write) — persist it so the second pass reads the cached
+        # merge write; a third time by an ``on_write`` side output) —
+        # persist it so the later passes read the cached
         # wave instead of recomputing the caller's pre-aggregation from
         # the source (wave-sized, bounded by the micro-batch). The
         # discovery rides the cache materialization as an OBSERVATION
@@ -240,29 +320,56 @@ class TransactionalKeyState:
             touched = sorted(int(b) for b in obs.get["b"])
             old = self._read_buckets(spark, manifest, set(touched))
             base = (
-                tagged.drop(BUCKET_COL)
+                tagged
                 if old is None
-                else old.unionByName(tagged.drop(BUCKET_COL))
+                else old.withColumn(BUCKET_COL, self._bucket()).unionByName(tagged)
             )
-            merged = combine(base, cols).withColumn(BUCKET_COL, self._bucket())
             # cluster by bucket before the partitioned write (round 14,
             # guide §6): without it every shuffle partition holding a
             # bucket's rows emits its own file — up to partitions ×
             # touched-buckets small files per txn at scale — and locally
             # AQE coalesced the tiny merge output to ONE task that wrote
-            # every bucket's file serially. One task per touched bucket
-            # = one file per touched bucket per txn, writers in parallel.
-            merged = merged.repartition(max(len(touched), 1), F.col(BUCKET_COL))
-            # brand-new immutable directory; nothing existing is touched
-            merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(
-                f"{self.path}/t{txn}"
-            )
+            # every bucket's file serially. Hash partitioning on the
+            # bucket puts each bucket in exactly one task, so there is
+            # one file per touched bucket per txn; the task count is
+            # capped at the core count, since more writer tasks than
+            # cores only add launch overhead.
+            tasks = bucket_writer_tasks(spark, touched)
+            if by_bucket:
+                merged = combine(base.repartition(tasks, F.col(BUCKET_COL)), cols)
+            else:
+                merged = (
+                    combine(base.drop(BUCKET_COL), cols)
+                    .withColumn(BUCKET_COL, self._bucket())
+                    .repartition(tasks, F.col(BUCKET_COL))
+                )
+            schema = StructType([f for f in merged.schema.fields if f.name != BUCKET_COL])
+
+            def write_state() -> None:
+                # brand-new immutable directory; nothing existing is touched
+                merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(
+                    f"{self.path}/t{txn}"
+                )
+
+            if on_write is None:
+                write_state()
+            else:
+                # the side output reads only the cached wave and immutable
+                # committed files, so its job runs beside the state write
+                # instead of after it; both land before the commit
+                with ThreadPoolExecutor(1) as pool:
+                    side = pool.submit(
+                        inheritable_thread_target(spark)(on_write), old, tagged.drop(BUCKET_COL)
+                    )
+                    write_state()
+                    side.result()
         finally:
             tagged.unpersist()
         for b in touched:
             manifest["buckets"][str(b)] = txn
         manifest["writers"][writer_id] = batch_id
         manifest["txn"] = txn
+        manifest["schema"] = schema.jsonValue()
         self._commit(manifest)
         if self.retain_txns:
             # steady-state retention: shadowed versions older than the

@@ -3,7 +3,8 @@
 Replays the reference's upsert fixture — four rows for iso='a'
 (``WithStateTtlJob.java:62-77``, comment at :75: "Without this
 restriction the join will produce four rows for 'a'") — and asserts the
-exact Flink row-kind sequence, plus the bucketed-state IO property.
+exact Flink row-kind sequence, plus the bucketed-state IO property,
+exactly-once ops across a crash, and no leaked cached RDDs.
 """
 
 import glob
@@ -21,47 +22,67 @@ from flink_playground_spark.streaming.changelog import (
 from flink_playground_spark.streaming.state_store import BucketedKeyState
 
 
+# the reference fixture: four upserts of iso='a', one per wave, and the
+# changelog Flink prints for them
+FIXTURE_SCHEMA = "iso string, capital string, seq long"
+FIXTURE_WAVES = [
+    [("a", "a", 1)],
+    [("a", "b", 2)],
+    [("a", "c", 3)],
+    [("a", "d", 4)],
+]
+FIXTURE_LOG = [
+    (0, "+I", "a", "a"),
+    (1, "+U", "a", "b"),
+    (1, "-U", "a", "a"),
+    (2, "+U", "a", "c"),
+    (2, "-U", "a", "b"),
+    (3, "+U", "a", "d"),
+    (3, "-U", "a", "c"),
+]
+
+
+def _add_wave(spark, src, i, rows, schema=FIXTURE_SCHEMA):
+    """Wave ``i`` as one parquet file in ``src``, ordered by mtime."""
+    part = tempfile.mkdtemp(prefix="fps_clwave_")
+    spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(part)
+    dst = f"{src}/wave{i}.parquet"
+    shutil.copy(glob.glob(f"{part}/*.parquet")[0], dst)
+    os.utime(dst, (1_000_000_000 + i * 60, 1_000_000_000 + i * 60))
+
+
 def _wave_stream(spark, rows_per_wave, schema):
     """One parquet file per wave, drained one file per micro-batch."""
-    work = tempfile.mkdtemp(prefix="fps_clsrc_")
-    src = f"{work}/src"
+    src = f"{tempfile.mkdtemp(prefix='fps_clsrc_')}/src"
     os.makedirs(src)
     for i, rows in enumerate(rows_per_wave):
-        part = f"{work}/w{i}"
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(part)
-        dst = f"{src}/wave{i}.parquet"
-        shutil.copy(glob.glob(f"{part}/*.parquet")[0], dst)
-        os.utime(dst, (1_000_000_000 + i * 60, 1_000_000_000 + i * 60))
-    first = spark.read.parquet(f"{work}/w0")
-    return (
-        spark.readStream.schema(first.schema).option("maxFilesPerTrigger", "1").parquet(src)
+        _add_wave(spark, src, i, rows, schema)
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
+
+
+def _checkpointed_log(spark, src, work):
+    """One checkpointed drain of the fixture waves present in ``src``."""
+    stream = (
+        spark.readStream.schema(FIXTURE_SCHEMA).option("maxFilesPerTrigger", "1").parquet(src)
     )
+    return keep_latest_changelog_stream(
+        stream, "iso", "seq", n_buckets=4, work_dir=work, checkpoint=True
+    )
+
+
+def _ops(log):
+    return [
+        (r["batch_id"], r["op"], r["iso"], r["capital"])
+        for r in log.orderBy("batch_id", "op").collect()
+    ]
 
 
 def test_flink_fixture_changelog_sequence(spark):
     """+I(a,a); -U(a,a)+U(a,b); -U(a,b)+U(a,c); -U(a,c)+U(a,d) — the
     changelog Flink prints for the PK'd countries view."""
-    waves = [
-        [("a", "a", 1)],
-        [("a", "b", 2)],
-        [("a", "c", 3)],
-        [("a", "d", 4)],
-    ]
-    stream = _wave_stream(spark, waves, "iso string, capital string, seq long")
-    log = keep_latest_changelog_stream(stream, "iso", "seq", n_buckets=4)
-    got = [
-        (r["batch_id"], r["op"], r["iso"], r["capital"])
-        for r in log.orderBy("batch_id", "op").collect()
-    ]
-    assert got == [
-        (0, "+I", "a", "a"),
-        (1, "+U", "a", "b"),
-        (1, "-U", "a", "a"),
-        (2, "+U", "a", "c"),
-        (2, "-U", "a", "b"),
-        (3, "+U", "a", "d"),
-        (3, "-U", "a", "c"),
-    ]
+    stream = _wave_stream(spark, FIXTURE_WAVES, FIXTURE_SCHEMA)
+    got = _ops(keep_latest_changelog_stream(stream, "iso", "seq", n_buckets=4))
+    assert got == FIXTURE_LOG
     # final upsert state = keep-latest oracle: exactly one row, capital 'd'
     final = {}
     for b, op, iso, cap in got:
@@ -194,57 +215,16 @@ def test_changelog_restart_resumes_from_checkpoint(spark, tmp_path):
     waves arrive — the combined log must equal the uninterrupted 4-wave
     sequence (state reattaches, batch numbering continues, no re-emission
     of already-logged ops)."""
-    import glob as g
-
     src = str(tmp_path / "src")
     os.makedirs(src)
     work = str(tmp_path / "work")
-    all_waves = [
-        [("a", "a", 1)],
-        [("a", "b", 2)],
-        [("a", "c", 3)],
-        [("a", "d", 4)],
-    ]
-
-    def add_wave(i, rows):
-        part = str(tmp_path / f"w{i}")
-        spark.createDataFrame(rows, "iso string, capital string, seq long").coalesce(
-            1
-        ).write.mode("overwrite").parquet(part)
-        dst = f"{src}/wave{i}.parquet"
-        shutil.copy(g.glob(f"{part}/*.parquet")[0], dst)
-        os.utime(dst, (1_000_000_000 + i * 60, 1_000_000_000 + i * 60))
-
-    def run():
-        first = spark.createDataFrame([], "iso string, capital string, seq long")
-        stream = (
-            spark.readStream.schema(first.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        return keep_latest_changelog_stream(
-            stream, "iso", "seq", n_buckets=4, work_dir=work, checkpoint=True
-        )
-
-    add_wave(0, all_waves[0])
-    add_wave(1, all_waves[1])
-    run().collect()  # first run: waves 0-1, then "crash"
-    add_wave(2, all_waves[2])
-    add_wave(3, all_waves[3])
-    log = run()  # relaunch: must consume only waves 2-3
-    got = [
-        (r["batch_id"], r["op"], r["iso"], r["capital"])
-        for r in log.orderBy("batch_id", "op").collect()
-    ]
-    assert got == [
-        (0, "+I", "a", "a"),
-        (1, "+U", "a", "b"),
-        (1, "-U", "a", "a"),
-        (2, "+U", "a", "c"),
-        (2, "-U", "a", "b"),
-        (3, "+U", "a", "d"),
-        (3, "-U", "a", "c"),
-    ]
+    for i in (0, 1):
+        _add_wave(spark, src, i, FIXTURE_WAVES[i])
+    _checkpointed_log(spark, src, work).collect()  # first run: waves 0-1, then "crash"
+    for i in (2, 3):
+        _add_wave(spark, src, i, FIXTURE_WAVES[i])
+    # relaunch: must consume only waves 2-3
+    assert _ops(_checkpointed_log(spark, src, work)) == FIXTURE_LOG
 
 
 def test_state_read_roundtrip(spark, tmp_path):
@@ -335,3 +315,46 @@ def test_outer_join_changelog_colliding_column_names(spark):
         (2, "+U", "y", 2),
         (2, "-U", "x", 1),
     ]
+
+
+def test_changelog_exactly_once_across_crash_before_commit(spark, tmp_path, monkeypatch):
+    """The fold dies after batch 2's ops are written and before its state
+    commit. The relaunch (same work_dir, checkpoint=True) replays batch 2
+    against the old state and rewrites the same ops directory, so the log
+    equals the uninterrupted run's: no op is lost or duplicated."""
+    from flink_playground_spark.streaming.txn_state import TransactionalKeyState
+
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    for i, rows in enumerate(FIXTURE_WAVES):
+        _add_wave(spark, src, i, rows)
+    work = str(tmp_path / "work")
+
+    commit = TransactionalKeyState._commit
+    calls = []
+
+    def crash_on_third_commit(self, manifest):
+        calls.append(manifest["txn"])
+        if len(calls) == 3:
+            raise RuntimeError("crash before the state commit")
+        commit(self, manifest)
+
+    monkeypatch.setattr(TransactionalKeyState, "_commit", crash_on_third_commit)
+    with pytest.raises(Exception, match="crash before the state commit"):
+        _checkpointed_log(spark, src, work)
+    # batch 2's ops were written ahead of the failed commit
+    assert glob.glob(f"{work}/ops/*/b2/*.parquet")
+    monkeypatch.undo()
+
+    assert _ops(_checkpointed_log(spark, src, work)) == FIXTURE_LOG
+
+
+def test_changelog_stream_leaks_no_cached_rdds(spark):
+    """Draining the changelog leaves no persisted RDD behind (the old
+    path leaked one localCheckpoint per state read)."""
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    stream = _wave_stream(spark, FIXTURE_WAVES, FIXTURE_SCHEMA)
+    log = keep_latest_changelog_stream(stream, "iso", "seq", n_buckets=4)
+    assert log.count() == len(FIXTURE_LOG)
+    assert jsc.getPersistentRDDs().size() <= before

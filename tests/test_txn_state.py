@@ -288,3 +288,72 @@ def test_rebucket_on_empty_state_just_commits_count(spark, tmp_path):
     df = spark.createDataFrame([(1, 2)], "k long, n long")
     assert again.merge_aggregate("w", 0, df, [F.sum("n").alias("n")]) is True
     assert again.n_buckets == 8
+
+
+def test_schema_drift_raises_before_anything_is_written(spark, tmp_path):
+    """A batch whose columns differ from the committed state schema is
+    refused with a ValueError naming the columns, and neither the
+    manifest nor the data directories change: drift must not null-fill
+    silently."""
+    import os
+
+    import pytest
+
+    st = TransactionalKeyState(str(tmp_path / "drift"), ["k"], n_buckets=4)
+    first = spark.createDataFrame([("a", 1, "x"), ("b", 2, "y")], "k string, seq long, p string")
+    assert st.merge_keep_latest("w", 0, first, "seq") is True
+    manifest = (tmp_path / "drift" / "manifest.json").read_text()
+    assert json.loads(manifest)["schema"]["fields"][0]["name"] == "k"
+    dirs = sorted(os.listdir(tmp_path / "drift"))
+
+    extra = spark.createDataFrame([("a", 3, "z", 1.5)], "k string, seq long, p string, score double")
+    with pytest.raises(ValueError, match="score"):
+        st.merge_keep_latest("w", 1, extra, "seq")
+    missing = spark.createDataFrame([("a", 3)], "k string, seq long")
+    with pytest.raises(ValueError, match="'p'"):
+        st.merge_keep_latest("w", 1, missing, "seq")
+
+    assert (tmp_path / "drift" / "manifest.json").read_text() == manifest
+    assert sorted(os.listdir(tmp_path / "drift")) == dirs
+    assert {(r.k, r.seq, r.p) for r in st.read(spark).collect()} == {("a", 1, "x"), ("b", 2, "y")}
+
+
+def test_manifest_without_schema_still_reads(spark, tmp_path):
+    """State committed before the manifest kept a schema reads through
+    parquet inference, and the next commit records the schema."""
+    path = tmp_path / "legacy"
+    st = TransactionalKeyState(str(path), ["k"], n_buckets=4)
+    df = spark.createDataFrame([("a", 1), ("b", 2)], "k string, n long")
+    st.merge_aggregate("w", 0, df, [F.sum("n").alias("n")])
+    man = json.loads((path / "manifest.json").read_text())
+    del man["schema"]
+    (path / "manifest.json").write_text(json.dumps(man))
+
+    assert {(r.k, r.n) for r in st.read(spark).collect()} == {("a", 1), ("b", 2)}
+    assert st.merge_aggregate("w", 1, df, [F.sum("n").alias("n")]) is True
+    assert "schema" in json.loads((path / "manifest.json").read_text())
+    assert {(r.k, r.n) for r in st.read(spark).collect()} == {("a", 2), ("b", 4)}
+
+
+def test_bucket_write_capped_at_cores_keeps_one_file_per_bucket(spark, tmp_path):
+    """A merge touching more buckets than the session has cores runs at
+    most one writer task per core, and still writes exactly one parquet
+    file per touched bucket under its t<txn>/ directory."""
+    import os
+
+    n_buckets = 16
+    assert spark.sparkContext.defaultParallelism < n_buckets
+    st = TransactionalKeyState(str(tmp_path / "cap"), ["k"], n_buckets=n_buckets)
+    df = spark.range(2000).select(
+        F.col("id").cast("string").alias("k"), (F.col("id") % 7).alias("n")
+    )
+    assert st.merge_aggregate("w", 0, df, [F.sum("n").alias("n")]) is True
+    man = json.loads((tmp_path / "cap" / "manifest.json").read_text())
+    assert len(man["buckets"]) == n_buckets
+    tdir = tmp_path / "cap" / f"t{man['txn']}"
+    buckets = [d for d in os.listdir(tdir) if d.startswith("__bucket=")]
+    assert len(buckets) == n_buckets
+    for b in buckets:
+        files = [f for f in os.listdir(tdir / b) if f.endswith(".parquet")]
+        assert len(files) == 1, (b, files)
+    assert st.read(spark).count() == 2000
