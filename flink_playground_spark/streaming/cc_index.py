@@ -320,13 +320,3 @@ class StreamingDupClusters:
         as the other streaming indexes."""
         return {"mapping": self._state.metrics()}
 
-
-def state_bytes(workdir: str) -> int:
-    """Committed mapping-ledger bytes (test hook for per-wave write IO)."""
-    import glob
-    import os
-
-    return sum(
-        os.path.getsize(p)
-        for p in glob.glob(f"{workdir}/mapping/d*/**/*.parquet", recursive=True)
-    )

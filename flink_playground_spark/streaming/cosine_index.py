@@ -7,15 +7,11 @@ The batch query (queries.embedding_neardup_lsh) answers "which vector
 pairs in this corpus sit at cosine >= threshold" via hyperplane-LSH
 bucket collisions + exact cosine re-scoring. This index answers the
 pipeline question — *as embedding batches arrive, which of them
-near-duplicate anything embedded so far* — with the same per-wave
-protocol as the other four families: replay probe before any write,
-``AppendDeltaState`` ledgers, one-wave-per-doc guard (cross-wave AND
-intra-wave) with raise/quarantine, ``since_batch`` pair tags, bucket
-cap + quantified overflow skip, surgical ``forget``, and the
-deletion-vector ``update`` verb (+U). Every qualifying pair is emitted
-exactly once, in the wave of its later member, so the drained pair set
-equals the batch answer (embedding_neardup_lsh's bit-exact Python
-oracle re-checks exactly that in the parity queries).
+near-duplicate anything embedded so far* — with the per-wave protocol
+of ``wave_index.WaveIndex``. Every qualifying pair is emitted exactly
+once, in the wave of its later member, so the drained pair set equals
+the batch answer (embedding_neardup_lsh's bit-exact Python oracle
+re-checks exactly that in the parity queries).
 
 Per wave: vectors hash through the SAME ``similarity.lsh_buckets``
 expression the batch path uses (deterministic xxhash64-derived
@@ -33,36 +29,24 @@ it reads the wave's vectors plus the state vectors of candidate docs
 only (one semi-join). A doc with a NULL or empty embedding hashes to
 no bucket and stores nothing — it can never pair, so its invisibility
 to the guard is harmless (same contract as the MinHash index's
-zero-shingle docs). Append order pairs → bands → vectors means a
-wave's own rows can never self-flag on a crash redelivery.
+zero-shingle docs); a doc updated to one is excised.
 
 Banding recall: identical to the batch operator's — a pair whose
 vectors collide in none of the ``tables`` hash tables is missed by
 BOTH sides equally (stated per-query, as for MinHash/SimHash).
-
-Reference intent: the changelog/upsert semantics the reference
-exercises everywhere (WithStateTtlJob.java:73-77 PK upsert;
-WithDeduplicateJoinJob.java:88-104 keep-latest), applied to
-embedding-level near-dup state.
 """
 
 from __future__ import annotations
 
-import glob
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flink_playground_spark.functions.similarity import cosine, lsh_buckets
-from flink_playground_spark.streaming.phash_index import (
-    IntraWaveConflict,
-    OneWavePerDocViolation,
-    _sum_ledger_col,
+from flink_playground_spark.streaming.wave_index import (
+    BandedWaveIndex,
+    Ledger,
+    _with_candidates,
 )
-from flink_playground_spark.streaming.txn_state import AppendDeltaState
-
-_PAIR_COLS = ("id_a", "id_b", "sim")
 
 # the batch query's own defaults (queries.embedding_neardup_lsh)
 DEFAULT_TABLES = 8
@@ -70,13 +54,21 @@ DEFAULT_PLANES = 4
 DEFAULT_THRESHOLD = 0.4
 
 
-class StreamingCosineLSHIndex:
+class StreamingCosineLSHIndex(BandedWaveIndex):
     """Feed ``ingest`` one wave of (doc, embedding) rows at a time;
     read ``pairs`` for every (id_a, id_b, sim) with exact cosine >=
     threshold emitted so far. Implements the shared streaming-index
-    surface (ingest/update/committed/pairs_for_batch/pairs/
-    wave_doc_ids/forget/ops_metrics), so it composes into
+    surface (``WaveIndex``), so it composes into
     StreamingNearDupPipeline."""
+
+    _LEDGERS = (
+        Ledger("bands", "bands", ("table", "bucket", "doc"), ("since_batch",)),
+        Ledger("vectors", "vecs", ("doc",), ("vec", "since_batch")),
+    )
+    _SCORE = ("sim", "double")
+    _CONTENT = "xxhash64(vec)"
+    _PAYLOAD = "embedding"
+    _BAND = "table"
 
     def __init__(
         self,
@@ -94,439 +86,47 @@ class StreamingCosineLSHIndex:
         corpora with degenerate embedding clusters (N identical
         vectors occupy each of their buckets N-deep) — crossings are
         loud and quantified exactly like the other families."""
-        if on_conflict not in ("error", "quarantine"):
-            raise ValueError(f"on_conflict must be error|quarantine, got {on_conflict}")
-        self.workdir = workdir
+        super().__init__(workdir, on_conflict, max_bucket)
         self.id_col, self.vec_col = id_col, vec_col
         self.tables, self.planes = tables, planes
         self.threshold = threshold
-        self.max_bucket = max_bucket
-        self.on_conflict = on_conflict
-        self._bands = AppendDeltaState(
-            f"{workdir}/bands", keys=["table", "bucket", "doc"], tomb_match=[["doc"]]
-        )
-        self._vecs = AppendDeltaState(
-            f"{workdir}/vectors", keys=["doc"], tomb_match=[["doc"]]
-        )
-        self._pairs = AppendDeltaState(
-            f"{workdir}/pairs", keys=["id_a", "id_b"], tomb_match=[["id_a"], ["id_b"]]
-        )
-        self._overflow = AppendDeltaState(
-            f"{workdir}/bucket_overflow", keys=["table", "bucket"]
-        )
-        self._quarantine = AppendDeltaState(f"{workdir}/quarantine", keys=["doc"])
-        self._ovf_skip = AppendDeltaState(
-            f"{workdir}/overflow_skipped", keys=["table", "bucket"]
-        )
 
-    # -- internals ---------------------------------------------------------
-
-    def _wave(self, docs: DataFrame) -> DataFrame:
-        """The wave as (doc, vec), checkpointed — the caller's lineage
-        (often an upstream embedding pass) is computed exactly once;
-        every guard and join below reads the checkpoint."""
+    def _source(self, docs: DataFrame) -> DataFrame:
         return docs.select(
             F.col(self.id_col).alias("doc"), F.col(self.vec_col).alias("vec")
         ).localCheckpoint(eager=True)
 
-    def _guard_intra_wave(self, wave: DataFrame, batch_id: int) -> DataFrame:
-        """Enforce one-embedding-per-doc WITHIN a wave (the r12 ADVICE
-        contract all families carry): a doc id delivered twice in ONE
-        batch with two DIFFERENT vectors would store an arbitrary one
-        of them — every later sim against that doc quietly wrong, and
-        invisible to the cross-wave guard (nothing committed yet).
-        Detected with one wave-sized aggregate over hashed vectors;
-        exact duplicates of the same (doc, vec) row are harmless and
-        pass. Same raise/quarantine contract; a conflicted doc is
-        dropped WHOLE — a conflicted wave cannot say which generation
-        is current, that is what ``update`` waves are for."""
-        bad = (
-            wave.groupBy("doc")
-            .agg(F.count_distinct(F.xxhash64("vec")).alias("n"))
-            .filter(F.col("n") > 1)
-            .select("doc")
-            .localCheckpoint(eager=True)
-        )
-        if bad.isEmpty():
-            return wave
-        if self.on_conflict == "error":
-            sample = [r["doc"] for r in bad.limit(5).collect()]
-            raise IntraWaveConflict(
-                f"wave {batch_id} carries >1 distinct embedding for the "
-                f"same doc id (sample: {sample}) — resolve upstream "
-                "(keep-latest per doc) or construct the index with "
-                "on_conflict='quarantine'"
-            )
-        self._quarantine.append(
-            bad.withColumn("since_batch", F.lit(batch_id)),
-            writer_id="quarantine_intra",
-            batch_id=batch_id,
-            agg_cols=[F.min("since_batch").alias("since_batch")],
-        )
-        return wave.join(F.broadcast(bad), "doc", "left_anti")
-
-    def _guard_one_wave_per_doc(self, wave: DataFrame, batch_id: int) -> DataFrame:
-        """Anti-probe the wave's doc ids against the committed vector
-        state (the commit point, appended LAST — so a crash-redelivered
-        wave can never self-flag). Same raise/quarantine contract as
-        the other families."""
-        spark = wave.sparkSession
-        seen = self._vecs.read(spark)
-        if seen is None:
-            return wave
-        bad = (
-            seen.join(F.broadcast(wave.select("doc").distinct()), "doc", "left_semi")
-            .select("doc")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        if bad.isEmpty():
-            return wave
-        if self.on_conflict == "error":
-            sample = [r["doc"] for r in bad.limit(5).collect()]
-            raise OneWavePerDocViolation(
-                f"wave {batch_id} re-delivers already-committed doc ids "
-                f"(sample: {sample}) — one-wave-per-doc violated; fold "
-                "changed docs through update() or construct the index "
-                "with on_conflict='quarantine'"
-            )
-        self._quarantine.append(
-            bad.withColumn("since_batch", F.lit(batch_id)),
-            writer_id="quarantine",
-            batch_id=batch_id,
-            agg_cols=[F.min("since_batch").alias("since_batch")],
-        )
-        return wave.join(F.broadcast(bad), "doc", "left_anti")
-
-    def _band(self, wave_vecs: DataFrame) -> DataFrame:
-        """The wave's (table, bucket, doc) band rows through the SAME
-        lsh_buckets expression as the batch path, checkpointed (the
-        vector payload is dropped — band rows stay ~24 B)."""
-        return (
+    def _prepare(self, wave: DataFrame) -> dict:
+        """Band rows through the SAME lsh_buckets expression as the
+        batch path, checkpointed (the vector payload is dropped — band
+        rows stay ~24 B)."""
+        wave_vecs = wave.dropDuplicates(["doc"])
+        banded = (
             lsh_buckets(wave_vecs, "doc", "vec", self.tables, self.planes)
             .select("table", "bucket", F.col("vid").alias("doc"))
             .localCheckpoint(eager=True)
         )
+        return {
+            "docs": wave_vecs.select("doc").distinct(),
+            "bands": banded,
+            # a null/empty-embedding doc hashes to no bucket: it stores
+            # nothing and can never pair (module docstring)
+            "vectors": wave_vecs.join(
+                F.broadcast(banded.select("doc").distinct()), "doc", "left_semi"
+            ),
+        }
 
-    def _cap_and_count(
-        self, banded: DataFrame, prior: DataFrame | None, batch_id: int
-    ) -> tuple[DataFrame, DataFrame | None]:
-        """The shared bucket-cap protocol on (table, bucket) keys:
-        accumulated distinct-doc occupancy over TOUCHED buckets only,
-        newly-crossed buckets appended to the overflow ledger, the
-        swallowed wave rows SUM-counted, both sides anti-joined
-        against the full overflow set."""
-        spark = banded.sparkSession
-        if self.max_bucket is None:
-            return banded, prior
-        occ_src = banded.select("table", "bucket", "doc")
-        if prior is not None:
-            occ_src = occ_src.unionByName(prior.select("table", "bucket", "doc"))
-        over = (
-            occ_src.groupBy("table", "bucket")
-            .agg(F.count_distinct("doc").alias("n"))
-            .filter(F.col("n") > self.max_bucket)
-            .select("table", "bucket")
-        )
-        known = self._overflow.read(spark)
-        known = known.select("table", "bucket").distinct() if known is not None else None
-        if known is not None:
-            over = over.join(known, ["table", "bucket"], "left_anti")
-        new_over = over.localCheckpoint(eager=True)
-        if not new_over.isEmpty():
-            self._overflow.append(
-                new_over.withColumn("since_batch", F.lit(batch_id)),
-                writer_id="overflow",
-                batch_id=batch_id,
-                agg_cols=[F.min("since_batch").alias("since_batch")],
-            )
-            full = self._overflow.read(spark).select("table", "bucket").distinct()
-        else:
-            full = known
-        if full is None:
-            return banded, prior
-        skipped = (
-            banded.join(F.broadcast(full), ["table", "bucket"], "left_semi")
-            .groupBy("table", "bucket")
-            .agg(F.count(F.lit(1)).alias("n_rows"))
-            .localCheckpoint(eager=True)
-        )
-        if not skipped.isEmpty():
-            self._ovf_skip.append(
-                skipped,
-                writer_id="ovf_skip",
-                batch_id=batch_id,
-                agg_cols=[F.sum("n_rows").alias("n_rows")],
-            )
-        banded = banded.join(F.broadcast(full), ["table", "bucket"], "left_anti")
-        if prior is not None:
-            prior = prior.join(F.broadcast(full), ["table", "bucket"], "left_anti")
-        return banded, prior
-
-    def _wave_pairs(
-        self,
-        spark: SparkSession,
-        wave_vecs: DataFrame,
-        banded: DataFrame,
-        prior: DataFrame | None,
-        dead_docs: DataFrame | None = None,
-    ) -> DataFrame:
-        """The wave's exactly-re-scored pairs: banded candidates
-        (within-wave + wave×state) joined to their vectors — the
-        wave's own plus the STATE vectors of candidate docs only (one
-        semi-join; the vector ledger is never scanned whole) — and
-        re-scored with the batch path's cosine expression.
-        ``dead_docs``: doc ids whose STORED vector is stale (an update
-        wave's excision set) — their content is represented by
-        ``wave_vecs`` alone."""
-        a, b = banded.alias("a"), banded.alias("b")
-        cand = a.join(
-            b,
-            (F.col("a.table") == F.col("b.table"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        ).select(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
-        idx = wave_vecs.select("doc", "vec")
-        if prior is not None:
-            p = prior.alias("p")
-            cross = a.join(
-                p,
-                (F.col("a.table") == F.col("p.table"))
-                & (F.col("a.bucket") == F.col("p.bucket"))
-                & (F.col("a.doc") != F.col("p.doc")),
-            ).select(
-                F.least("a.doc", "p.doc").alias("id_a"),
-                F.greatest("a.doc", "p.doc").alias("id_b"),
-            )
-            cand = cand.unionByName(cross)
-            cand_docs = (
-                cand.select(F.col("id_a").alias("doc"))
-                .unionByName(cand.select(F.col("id_b").alias("doc")))
-                .distinct()
-            )
-            state_v = self._vecs.read(spark)
-            if dead_docs is not None:
-                state_v = state_v.join(F.broadcast(dead_docs), "doc", "left_anti")
-            idx = idx.unionByName(
-                state_v.select("doc", "vec").join(cand_docs, "doc", "left_semi")
-            )
+    def _verify(self, w: dict, cand: DataFrame, dead: DataFrame | None, cross: bool) -> DataFrame:
+        idx = w["vectors"].select("doc", "vec")
+        if cross:
+            state = self._live_state(idx.sparkSession, dead).select("doc", "vec")
+            idx = _with_candidates(idx, state, cand)
         return (
             cand.distinct()
             .join(idx.select(F.col("doc").alias("id_a"), F.col("vec").alias("va")), "id_a")
             .join(idx.select(F.col("doc").alias("id_b"), F.col("vec").alias("vb")), "id_b")
             .withColumn("sim", F.round(cosine(F.col("va"), F.col("vb")), 6))
             .filter(F.col("sim") >= self.threshold)
-            .select(*_PAIR_COLS)
+            .select("id_a", "id_b", "sim")
             .distinct()
         )
-
-    def _append_all(
-        self, pairs: DataFrame, banded: DataFrame, wave_vecs: DataFrame, batch_id: int
-    ) -> None:
-        """Commit one wave: pairs → bands → vectors, the vector ledger
-        (the replay probe's key) LAST."""
-        self._pairs.append(
-            pairs.withColumn("since_batch", F.lit(batch_id)),
-            writer_id="pairs",
-            batch_id=batch_id,
-            agg_cols=[
-                F.min("sim").alias("sim"),
-                F.min("since_batch").alias("since_batch"),
-            ],
-        )
-        self._bands.append(
-            banded.withColumn("since_batch", F.lit(batch_id)),
-            writer_id="bands",
-            batch_id=batch_id,
-            agg_cols=[F.min("since_batch").alias("since_batch")],
-        )
-        self._vecs.append(
-            wave_vecs.withColumn("since_batch", F.lit(batch_id)),
-            writer_id="vecs",
-            batch_id=batch_id,
-            agg_cols=[
-                F.min("vec").alias("vec"),
-                F.min("since_batch").alias("since_batch"),
-            ],
-        )
-
-    # -- API ----------------------------------------------------------------
-
-    def ingest(self, docs: DataFrame, batch_id: int) -> None:
-        """Fold one wave of (id_col, vec_col) embeddings: hash through
-        the batch path's hyperplanes, join against touched state
-        buckets only, re-score candidates exactly, emit this wave's
-        pairs, append the wave's state. One-wave-per-doc is ENFORCED
-        both ACROSS waves (probe vs the committed vector ledger) and
-        WITHIN the wave (two distinct vectors for one doc id), raise
-        or quarantine per ``on_conflict``; redelivery of the same
-        batch_id is probed against the vector ledger (the commit
-        point) before any write."""
-        spark = docs.sparkSession
-        if self._vecs.committed("vecs", batch_id):
-            return  # replay of a committed wave: skipped before ANY write
-        wave = self._wave(docs)
-        wave = self._guard_intra_wave(wave, batch_id)
-        wave_vecs = wave.dropDuplicates(["doc"])
-        wave_vecs = self._guard_one_wave_per_doc(wave_vecs, batch_id)
-        banded = self._band(wave_vecs)
-        # a null/empty-embedding doc hashes to no bucket: it stores
-        # nothing and can never pair (module docstring)
-        wave_vecs = wave_vecs.join(
-            F.broadcast(banded.select("doc").distinct()), "doc", "left_semi"
-        )
-        touched = banded.select("table", "bucket").distinct()
-        prior = self._bands.read(spark)
-        if prior is not None:
-            prior = prior.join(F.broadcast(touched), ["table", "bucket"], "left_semi")
-        banded, prior = self._cap_and_count(banded, prior, batch_id)
-        pairs = self._wave_pairs(spark, wave_vecs, banded, prior)
-        self._append_all(pairs, banded, wave_vecs, batch_id)
-
-    def update(self, docs: DataFrame, batch_id: int) -> None:
-        """Fold one wave of CHANGED docs — the one-call changed-doc
-        path (+U) the one-wave-per-doc guard otherwise refuses: each
-        doc's new embedding REPLACES its committed vector/bands, stale
-        pairs are retracted, new pairs are emitted, all under ONE
-        batch id. Upsert semantics: an uncommitted doc id is simply
-        inserted. Same crash protocol as the other families — one
-        atomic replay-marked deletion-vector ``upsert`` per ledger,
-        sequenced pairs → bands → vectors with the commit-point ledger
-        LAST, so a crash between ledgers redelivers and converges
-        without ever leaving a doc absent. A doc updated to a
-        null/empty embedding is excised and stores nothing (it can
-        never pair — same invisibility contract as ``ingest``). Cost:
-        pair generation incremental like ``ingest``; per-wave ledger
-        write IO ∝ WAVE rows (merge-on-read tombstones, settled at the
-        next compaction)."""
-        spark = docs.sparkSession
-        if self._vecs.committed("vecs", batch_id):
-            return  # whole update already committed
-        wave = self._wave(docs)
-        wave = self._guard_intra_wave(wave, batch_id)
-        # excision set from the guarded wave: a doc updated to a
-        # null/empty embedding still gets its old state excised
-        upd = wave.select("doc").distinct().localCheckpoint(eager=True)
-        wave_vecs = wave.dropDuplicates(["doc"])
-        banded = self._band(wave_vecs)
-        wave_vecs = wave_vecs.join(
-            F.broadcast(banded.select("doc").distinct()), "doc", "left_semi"
-        )
-        touched = banded.select("table", "bucket").distinct()
-        prior = self._bands.read(spark)
-        if prior is not None:
-            # the updated docs' OLD bands are dead: excluded from
-            # candidates (their new rows pair via the wave side)
-            prior = prior.join(F.broadcast(upd), "doc", "left_anti").join(
-                F.broadcast(touched), ["table", "bucket"], "left_semi"
-            )
-        banded, prior = self._cap_and_count(banded, prior, batch_id)
-        pairs = self._wave_pairs(spark, wave_vecs, banded, prior, dead_docs=upd)
-        self._pairs.upsert(
-            upd,
-            pairs.withColumn("since_batch", F.lit(batch_id)),
-            writer_id="pairs",
-            batch_id=batch_id,
-            agg_cols=[
-                F.min("sim").alias("sim"),
-                F.min("since_batch").alias("since_batch"),
-            ],
-        )
-        self._bands.upsert(
-            upd,
-            banded.withColumn("since_batch", F.lit(batch_id)),
-            writer_id="bands",
-            batch_id=batch_id,
-            agg_cols=[F.min("since_batch").alias("since_batch")],
-        )
-        self._vecs.upsert(
-            upd,
-            wave_vecs.withColumn("since_batch", F.lit(batch_id)),
-            writer_id="vecs",
-            batch_id=batch_id,
-            agg_cols=[
-                F.min("vec").alias("vec"),
-                F.min("since_batch").alias("since_batch"),
-            ],
-        )
-
-    def wave_doc_ids(self, wave: DataFrame) -> DataFrame:
-        """The doc ids a wave carries, as a single-column ``doc``
-        DataFrame — the composed pipeline derives an update wave's
-        excision set through this, schema-agnostically."""
-        return wave.select(F.col(self.id_col).alias("doc")).distinct()
-
-    def committed(self, batch_id: int) -> bool:
-        """True when ``batch_id`` is fully ingested (vector ledger =
-        the wave's commit point) — the composed pipeline's crash probe."""
-        return self._vecs.committed("vecs", batch_id)
-
-    def pairs_for_batch(self, spark: SparkSession, batch_id: int) -> DataFrame:
-        """Exactly the pairs wave ``batch_id`` emitted (crash-recovery
-        read for the composed pipeline — see StreamingPhashIndex)."""
-        out = self._pairs.read(spark)
-        if out is None:
-            return spark.createDataFrame([], "id_a long, id_b long, sim double")
-        return (
-            out.filter(F.col("since_batch") == batch_id)
-            .groupBy("id_a", "id_b")
-            .agg(F.min("sim").alias("sim"))
-            .select(*_PAIR_COLS)
-        )
-
-    def pairs(self, spark: SparkSession) -> DataFrame:
-        """Every near-dup pair emitted so far (drained == the batch
-        LSH answer under the bucket-cap contract), folded by the
-        declared keys so reads are deterministic."""
-        out = self._pairs.read(spark)
-        if out is None:
-            return spark.createDataFrame([], "id_a long, id_b long, sim double")
-        return (
-            out.groupBy("id_a", "id_b")
-            .agg(F.min("sim").alias("sim"))
-            .select(*_PAIR_COLS)
-        )
-
-    def overflow_buckets(self, spark: SparkSession) -> DataFrame:
-        """The loud ledger: (table, bucket) excluded from candidate joins."""
-        out = self._overflow.read(spark)
-        if out is None:
-            return spark.createDataFrame([], "table int, bucket long")
-        return out.select("table", "bucket").distinct()
-
-    def forget(self, spark: SparkSession, docs) -> dict:
-        """Retention / takedown: every ledger row is a raw per-doc
-        fact, so deletion is surgical — bands, vector, pairs and
-        quarantine rows go; the replay ledger stays (deletes must not
-        resurrect data); overflowed buckets stay excluded (same
-        rationale as the other families)."""
-        ids = sorted(set(docs))
-        out = {
-            "bands_removed": self._bands.prune(spark, F.col("doc").isin(ids)),
-            "vecs_removed": self._vecs.prune(spark, F.col("doc").isin(ids)),
-            "pairs_removed": self._pairs.prune(
-                spark, F.col("id_a").isin(ids) | F.col("id_b").isin(ids)
-            ),
-        }
-        self._quarantine.prune(spark, F.col("doc").isin(ids))
-        return out
-
-    def ops_metrics(self) -> dict:
-        """Day-2 snapshot of every ledger (file-level, no Spark
-        session) — the same surface as the other streaming indexes."""
-        return {
-            "bands": self._bands.metrics(),
-            "vectors": self._vecs.metrics(),
-            "pairs": self._pairs.metrics(),
-            "overflow": self._overflow.metrics(),
-            "quarantine": self._quarantine.metrics(),
-            "overflow_rows_skipped": _sum_ledger_col(self._ovf_skip, "n_rows"),
-        }
-
-
-def state_bytes(workdir: str) -> int:
-    """Committed band-ledger bytes (test hook for per-wave write IO)."""
-    return sum(
-        os.path.getsize(p)
-        for p in glob.glob(f"{workdir}/bands/d*/**/*.parquet", recursive=True)
-    )

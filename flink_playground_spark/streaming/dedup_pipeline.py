@@ -4,9 +4,7 @@ in ONE per-wave fold — the composition a training-data pipeline
 actually runs inside ``foreachBatch`` (r11 verdict Next #1).
 
 The pieces existed separately: the streaming pair indexes
-(StreamingPhashIndex / StreamingHammingIndex for image+audio 64-bit
-fingerprints, StreamingFrameSetIndex for video frame-hash sets,
-streaming/neardup.py for MinHash text) emit PAIRS per wave, and
+(``wave_index.WaveIndex`` and its families) emit PAIRS per wave, and
 StreamingDupClusters folds pair waves into the CLUSTER mapping dedup
 acts on. What was missing is the composed operator — and the crash
 points composition creates: a wave's work now spans TWO independent
@@ -73,13 +71,9 @@ from flink_playground_spark.streaming.txn_state import AppendDeltaState
 
 class StreamingNearDupPipeline:
     """Compose any per-wave pair index with the incremental cluster
-    fold. ``index`` must expose the shared streaming-index surface:
-    ``ingest(df, batch_id)``, ``update(df, batch_id)``,
-    ``committed(batch_id)``, ``pairs_for_batch(spark, batch_id)``,
-    ``pairs(spark)``, ``wave_doc_ids(df)``, ``forget(spark, docs)``
-    and ``ops_metrics()`` — which StreamingPhashIndex/
-    StreamingHammingIndex, StreamingFrameSetIndex and
-    StreamingMinHashIndex all do."""
+    fold. ``index`` is a ``wave_index.WaveIndex`` (the contract:
+    ``ingest``/``update``/``committed``/``pairs_for_batch``/``pairs``/
+    ``wave_doc_ids``/``forget``/``ops_metrics``)."""
 
     def __init__(self, workdir: str, index):
         self.index = index
@@ -125,8 +119,8 @@ class StreamingNearDupPipeline:
         1. whole-wave replay probe on the CLUSTER ledger (the
            composition's commit point, same as ``ingest``);
         2. ``index.update(wave, b)`` — per-ledger atomic deletion-
-           vector upserts, replay-marked, commit-point ledger last (see
-           StreamingPhashIndex.update's crash protocol): stale
+           vector upserts, replay-marked, commit-point ledger last (the
+           protocol in wave_index.py): stale
            pairs retracted, new pairs emitted under ``since_batch=b``;
         3. the wave's new pairs recovered from the pair ledger (the
            crash-between-ledgers path reads them back exactly like

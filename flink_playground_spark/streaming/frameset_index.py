@@ -31,51 +31,66 @@ rows), candidates come from prefix⋈prefix joins against ONLY the state
 rows whose shingles the wave's prefixes touch (semi-join prune), and
 exact Jaccard verification (dedupe.verify_pairs) reads full sets just
 for the candidate docs. State and emitted pairs are ``AppendDeltaState``
-ledgers — per-wave write IO ∝ wave rows, atomic manifest commits,
-replay probed before any write (same crash protocol as the phash
-index). Precondition, also shared AND ENFORCED (r12): each doc's FULL
-signature arrives in exactly one wave — a violating wave raises
+ledgers under the per-wave protocol of ``wave_index.WaveIndex`` (the
+grams ledger is the commit point). Precondition, ENFORCED: each doc's
+FULL signature arrives in exactly one wave — a violating wave raises
 ``OneWavePerDocViolation`` or quarantines the doc per ``on_conflict``,
 never silently folds two conflicting ``(n_sh, rk)`` generations.
+
+Guard scope: the grams ARE per-doc raw facts and the commit point, so
+no separate docs ledger is needed; zero-shingle docs store no rows and
+are invisible to the guard by construction — and harmless, they can
+never seed a pair. Only CROSS-wave redelivery is detectable: a doc id
+whose rows within ONE wave mix two frame-hash generations cannot be
+told apart — the input is already exploded (doc, shingle) set rows,
+and one set is indistinguishable from the union of two (unlike the
+other families, whose per-doc payloads make an intra-wave conflict
+visible). Callers must emit each doc's frame set atomically into its
+wave.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from flink_playground_spark.functions.dedupe import verify_pairs
-from flink_playground_spark.streaming.phash_index import OneWavePerDocViolation
-from flink_playground_spark.streaming.txn_state import AppendDeltaState
-
-_GRAM_COLS = ("doc", "n_sh", "shingle", "rk")
+from flink_playground_spark.streaming.wave_index import Ledger, WaveIndex, _with_candidates
 
 
-class StreamingFrameSetIndex:
+class StreamingFrameSetIndex(WaveIndex):
     """Feed ``ingest`` one wave of (doc, shingle) distinct frame-hash
     rows at a time; read ``pairs`` for every (id_a, id_b, jaccard) with
     exact set-Jaccard >= threshold emitted so far."""
+
+    _LEDGERS = (Ledger("grams", "grams", ("doc", "shingle"), ("n_sh", "rk")),)
+    _SCORE = ("jaccard", "double")
 
     def __init__(self, workdir: str, threshold: float = 0.8, on_conflict: str = "error"):
         """``on_conflict``: the one-wave-per-doc guard's reaction —
         ``"error"`` raises ``OneWavePerDocViolation`` (default),
         ``"quarantine"`` routes the conflicting doc's rows whole to a
-        quarantine ledger surfaced in ``ops_metrics`` (same contract as
-        StreamingPhashIndex)."""
-        if on_conflict not in ("error", "quarantine"):
-            raise ValueError(f"on_conflict must be error|quarantine, got {on_conflict}")
-        self.workdir = workdir
+        quarantine ledger surfaced in ``ops_metrics``."""
+        super().__init__(workdir, on_conflict)
         self.threshold = threshold
-        self.on_conflict = on_conflict
-        self._grams = AppendDeltaState(
-            f"{workdir}/grams", keys=["doc", "shingle"], tomb_match=[["doc"]]
-        )
-        self._pairs = AppendDeltaState(
-            f"{workdir}/pairs", keys=["id_a", "id_b"], tomb_match=[["id_a"], ["id_b"]]
-        )
-        self._quarantine = AppendDeltaState(f"{workdir}/quarantine", keys=["doc"])
 
-    # -- internals ---------------------------------------------------------
+    def _source(self, grams: DataFrame) -> DataFrame:
+        """Rank each doc's distinct shingles by value, checkpointed;
+        n_sh/rk are per-doc, so dropping a quarantined doc's rows leaves
+        the survivors' prefixes untouched."""
+        g = grams.select("doc", "shingle").distinct()
+        counts = g.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
+        return (
+            g.join(counts, "doc")
+            .withColumn(
+                "rk", F.row_number().over(Window.partitionBy("doc").orderBy("shingle"))
+            )
+            .select("doc", "n_sh", "shingle", "rk")
+            .localCheckpoint(eager=True)
+        )
+
+    def _prepare(self, wave: DataFrame) -> dict:
+        return {"docs": wave.select("doc").distinct(), "grams": wave}
 
     def _prefix(self, grams: DataFrame) -> DataFrame:
         """Prefix rows under the streaming-stable value order: the first
@@ -113,85 +128,12 @@ class StreamingFrameSetIndex:
             sel = [F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b")]
         return a.alias("a").join(b.alias("b"), cond).select(*sel).distinct()
 
-    def _guard_one_wave_per_doc(self, wave: DataFrame, batch_id: int) -> DataFrame:
-        """Enforce the one-wave-per-doc precondition loudly: anti-probe
-        the wave's doc ids against the committed gram state (grams here
-        ARE per-doc raw facts, and they are the wave's commit point, so
-        — unlike the phash index — no separate docs ledger is needed: a
-        wave's own rows can only appear after its commit, at which point
-        the whole ingest is replay-skipped). Zero-shingle docs store no
-        rows and carry no signature, so they are invisible to the guard
-        by construction — and harmless, they can never seed a pair.
-
-        Enforcement scope: CROSS-wave redelivery only. A doc id whose
-        rows within ONE wave mix two frame-hash generations is
-        undetectable here by construction — the input is already
-        exploded (doc, shingle) set rows, and one set is
-        indistinguishable from the union of two (unlike the phash/
-        minhash indexes, whose per-doc scalar payloads make an
-        intra-wave conflict visible; r12 ADVICE). Callers must emit
-        each doc's frame set atomically into its wave."""
-        spark = wave.sparkSession
-        state = self._grams.read(spark)
-        if state is None:
-            return wave
-        bad = (
-            state.join(F.broadcast(wave.select("doc").distinct()), "doc", "left_semi")
-            .select("doc")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        if bad.isEmpty():
-            return wave
-        if self.on_conflict == "error":
-            sample = [r["doc"] for r in bad.limit(5).collect()]
-            raise OneWavePerDocViolation(
-                f"wave {batch_id} re-delivers already-committed doc ids "
-                f"(sample: {sample}) — one-wave-per-doc violated; re-ingest "
-                "updated docs into a fresh index or construct the index "
-                "with on_conflict='quarantine'"
-            )
-        self._quarantine.append(
-            bad.withColumn("since_batch", F.lit(batch_id)),
-            writer_id="quarantine",
-            batch_id=batch_id,
-            agg_cols=[F.min("since_batch").alias("since_batch")],
-        )
-        return wave.join(F.broadcast(bad), "doc", "left_anti")
-
-    # -- API ----------------------------------------------------------------
-
-    def ingest(self, grams: DataFrame, batch_id: int) -> None:
-        """Fold one wave of (doc, shingle) rows: emit every pair the wave
-        completes, then append the wave's rows. Precondition, ENFORCED:
-        a doc's full distinct-shingle set arrives in EXACTLY ONE wave —
-        the guard raises or quarantines per ``on_conflict`` (same
-        contract as StreamingPhashIndex.ingest). Redelivery of the same
-        batch_id is probed against the grams ledger (the wave's commit
-        point) before any write."""
-        spark = grams.sparkSession
-        if self._grams.committed("grams", batch_id):
-            return
-        from pyspark.sql import Window
-
-        g = grams.select("doc", "shingle").distinct()
-        counts = g.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
-        wave = (
-            g.join(counts, "doc")
-            .withColumn(
-                "rk", F.row_number().over(Window.partitionBy("doc").orderBy("shingle"))
-            )
-            .select(*_GRAM_COLS)
-            .localCheckpoint(eager=True)
-        )
-        # guard AFTER the checkpoint (caller lineage runs once); n_sh/rk
-        # are per-doc, so dropping a quarantined doc's rows leaves the
-        # survivors' prefixes untouched
-        wave = self._guard_one_wave_per_doc(wave, batch_id)
+    def _wave_pairs(self, w: dict, batch_id: int, dead: DataFrame | None) -> DataFrame:
+        wave = w["grams"]
         wave_prefix = self._prefix(wave)
         cand = self._cand_join(wave_prefix, wave_prefix, cross_state=False)
         idx = wave
-        state = self._grams.read(spark)
+        state = self._live_state(wave.sparkSession, dead)
         if state is not None:
             # only state rows in shingles the wave's prefixes touch can
             # seed a candidate; only candidate docs' full sets are read
@@ -204,176 +146,5 @@ class StreamingFrameSetIndex:
             cand = cand.unionByName(
                 self._cand_join(wave_prefix, state_prefix, cross_state=True)
             ).distinct()
-            cand_docs = (
-                cand.select(F.col("id_a").alias("doc"))
-                .unionByName(cand.select(F.col("id_b").alias("doc")))
-                .distinct()
-            )
-            idx = wave.unionByName(
-                state.join(cand_docs, "doc", "left_semi")
-            )
-        pairs = verify_pairs(idx.select("doc", "n_sh", "shingle"), cand, self.threshold)
-        self._pairs.append(
-            # since_batch: the pipeline's per-wave recovery tag (each
-            # pair is emitted in exactly one wave — min-fold stable)
-            pairs.withColumn("since_batch", F.lit(batch_id)),
-            writer_id="pairs",
-            batch_id=batch_id,
-            agg_cols=[
-                F.min("jaccard").alias("jaccard"),
-                F.min("since_batch").alias("since_batch"),
-            ],
-        )
-        self._grams.append(
-            wave,
-            writer_id="grams",
-            batch_id=batch_id,
-            agg_cols=[F.min("n_sh").alias("n_sh"), F.min("rk").alias("rk")],
-        )
-
-    def update(self, grams: DataFrame, batch_id: int) -> None:
-        """Fold one wave of CHANGED docs — the one-call changed-doc
-        path (+U) the one-wave-per-doc guard otherwise refuses: each
-        doc's new frame-hash set REPLACES its committed grams, stale
-        pairs are retracted, new pairs are emitted, all under ONE batch
-        id. Upsert semantics: an uncommitted doc id is simply inserted.
-        Same crash protocol as StreamingPhashIndex.update — one atomic
-        replay-marked deletion-vector ``upsert`` per ledger, pairs
-        first, the grams ledger (the replay probe's key) LAST, so a
-        crash between the two redelivers and converges without ever
-        leaving a doc absent. Cost: pair generation incremental like
-        ``ingest``; per-wave ledger write IO ∝ WAVE rows
-        (merge-on-read; tombstones settle at the next compaction)."""
-        spark = grams.sparkSession
-        if self._grams.committed("grams", batch_id):
-            return  # whole update already committed
-        from pyspark.sql import Window
-
-        g = grams.select("doc", "shingle").distinct()
-        counts = g.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
-        wave = (
-            g.join(counts, "doc")
-            .withColumn(
-                "rk", F.row_number().over(Window.partitionBy("doc").orderBy("shingle"))
-            )
-            .select(*_GRAM_COLS)
-            .localCheckpoint(eager=True)
-        )
-        upd = wave.select("doc").distinct().localCheckpoint(eager=True)
-        wave_prefix = self._prefix(wave)
-        cand = self._cand_join(wave_prefix, wave_prefix, cross_state=False)
-        idx = wave
-        state = self._grams.read(spark)
-        if state is not None:
-            # the updated docs' OLD grams are dead everywhere below:
-            # their new rows pair via the wave side
-            state = state.join(F.broadcast(upd), "doc", "left_anti")
-            touched = wave_prefix.select("shingle").distinct()
-            state_prefix = self._prefix(state).join(
-                F.broadcast(touched), "shingle", "left_semi"
-            )
-            cand = cand.unionByName(
-                self._cand_join(wave_prefix, state_prefix, cross_state=True)
-            ).distinct()
-            cand_docs = (
-                cand.select(F.col("id_a").alias("doc"))
-                .unionByName(cand.select(F.col("id_b").alias("doc")))
-                .distinct()
-            )
-            idx = wave.unionByName(state.join(cand_docs, "doc", "left_semi"))
-        pairs = verify_pairs(idx.select("doc", "n_sh", "shingle"), cand, self.threshold)
-        self._pairs.upsert(
-            upd,
-            pairs.withColumn("since_batch", F.lit(batch_id)),
-            writer_id="pairs",
-            batch_id=batch_id,
-            agg_cols=[
-                F.min("jaccard").alias("jaccard"),
-                F.min("since_batch").alias("since_batch"),
-            ],
-        )
-        self._grams.upsert(
-            upd,
-            wave,
-            writer_id="grams",
-            batch_id=batch_id,
-            agg_cols=[F.min("n_sh").alias("n_sh"), F.min("rk").alias("rk")],
-        )
-
-    def wave_doc_ids(self, wave: DataFrame) -> DataFrame:
-        """The doc ids a wave carries, as a single-column ``doc``
-        DataFrame — the composed pipeline derives an update wave's
-        excision set through this, schema-agnostically."""
-        return wave.select("doc").distinct()
-
-    def pairs(self, spark: SparkSession) -> DataFrame:
-        """Every near-dup pair emitted so far (drained == the batch
-        answer under the one-wave-per-doc precondition), folded by the
-        declared keys so reads are deterministic."""
-        out = self._pairs.read(spark)
-        if out is None:
-            return spark.createDataFrame([], "id_a long, id_b long, jaccard double")
-        return (
-            out.groupBy("id_a", "id_b")
-            .agg(F.min("jaccard").alias("jaccard"))
-            .select("id_a", "id_b", "jaccard")
-        )
-
-
-    def committed(self, batch_id: int) -> bool:
-        """True when ``batch_id`` is fully ingested (grams ledger = the
-        wave's commit point) — the composed pipeline's crash probe."""
-        return self._grams.committed("grams", batch_id)
-
-    def pairs_for_batch(self, spark: SparkSession, batch_id: int) -> DataFrame:
-        """Exactly the pairs wave ``batch_id`` emitted (crash-recovery
-        read for the composed pipeline — see StreamingPhashIndex)."""
-        out = self._pairs.read(spark)
-        if out is None:
-            return spark.createDataFrame([], "id_a long, id_b long, jaccard double")
-        return (
-            out.filter(F.col("since_batch") == batch_id)
-            .groupBy("id_a", "id_b")
-            .agg(F.min("jaccard").alias("jaccard"))
-            .select("id_a", "id_b", "jaccard")
-        )
-
-    def ops_metrics(self) -> dict:
-        """Day-2 snapshot of the ledgers (file-level, no Spark session)
-        — same surface as StreamingPhashIndex.ops_metrics; alert on
-        ``quarantine.rows > 0`` (one-wave-per-doc violations routed
-        aside, never folded)."""
-        return {
-            "grams": self._grams.metrics(),
-            "pairs": self._pairs.metrics(),
-            "quarantine": self._quarantine.metrics(),
-        }
-
-    def forget(self, spark: SparkSession, docs) -> dict:
-        """Retention / takedown: remove a doc cohort's gram rows and
-        every pair referencing it — same contract and caveats as
-        StreamingPhashIndex.forget (rows here are raw per-doc facts, so
-        deletion is surgical; the replay ledger still skips the
-        original waves; the quarantine entry goes too, so a later
-        re-introduction of a fully-excised doc is legal fresh data)."""
-        ids = sorted(set(docs))
-        out = {
-            "grams_removed": self._grams.prune(spark, F.col("doc").isin(ids)),
-            "pairs_removed": self._pairs.prune(
-                spark, F.col("id_a").isin(ids) | F.col("id_b").isin(ids)
-            ),
-        }
-        self._quarantine.prune(spark, F.col("doc").isin(ids))
-        return out
-
-
-def state_bytes(workdir: str) -> int:
-    """Total bytes of committed gram-state deltas (test hook for the
-    per-wave write-IO contract)."""
-    import glob
-    import os
-
-    return sum(
-        os.path.getsize(p)
-        for p in glob.glob(f"{workdir}/grams/d*/**/*.parquet", recursive=True)
-    )
+            idx = _with_candidates(wave, state, cand)
+        return verify_pairs(idx.select("doc", "n_sh", "shingle"), cand, self.threshold)

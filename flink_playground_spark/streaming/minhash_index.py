@@ -8,22 +8,24 @@ exact-dup class registry, no ``committed``/``pairs_for_batch``/
 ``forget`` surface — so text pairs could not feed the composed
 pipeline (dedup_pipeline.py), and takedown could not be surgical (a
 class registry folds doc identity into rep identity). This index is
-the contract-complete counterpart: the same per-wave protocol as
-StreamingPhashIndex (replay probe before any write, AppendDeltaState
-ledgers, one-wave-per-doc guard with raise/quarantine, since_batch
-pair tags, overflow cap + quantified divergence, surgical forget), with
-MinHash banding for candidates and EXACT shingle-Jaccard verification.
+the contract-complete counterpart: the per-wave protocol of
+``wave_index.WaveIndex``, with MinHash banding for candidates and EXACT
+shingle-Jaccard verification.
 
 Per wave: texts shingle (dedupe.shingle_index — 8-byte hashed 3-grams
 + per-doc counts), sign (k MIN-aggregates in one codegen'd hash
 aggregation), band (xxhash64 over signature slices), and join ONLY
 against state bands in the buckets the wave touches; candidates verify
 exactly (dedupe.verify_pairs) over the wave's shingles plus the state
-shingles of candidate docs only. Every qualifying pair is emitted once,
-in the wave of its later member — the drained pair set equals the
-batch banding answer, which equals the exact-Jaccard pair set the
+shingles of candidate docs only. The drained pair set equals the batch
+banding answer, which equals the exact-Jaccard pair set the
 recursive-CTE DuckDB oracle computes (the same oracle batch
 dedup_clusters is green against).
+
+The intra-wave guard runs on the RAW wave (hashed texts): a doc id
+delivered twice in one batch with two different texts would have both
+texts' grams silently merged by ``shingle_index`` into one doc, and the
+union of grams is indistinguishable after shingling.
 
 Design choice vs streaming/neardup.py: NO exact-duplicate class
 collapse. Every doc is signed and banded individually, which makes
@@ -42,13 +44,14 @@ ledger), pairs. The SHINGLE ledger is the wave's commit point and the
 guard's seen-docs source (overflow exclusion never removes shingle
 rows, so even a fully-overflowed doc stays visible to the guard;
 zero-shingle docs store nothing and can never pair, so their
-invisibility is harmless). Append order pairs → bands → shingles means
-a wave's own rows can never self-flag on a crash-redelivery.
+invisibility is harmless). A doc updated to a text with NO shingles is
+excised and stores nothing. The shingle ledger is corpus-sized, which
+is why ``update``'s merge-on-read excision matters most here.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flink_playground_spark.functions.dedupe import (
@@ -58,22 +61,27 @@ from flink_playground_spark.functions.dedupe import (
     shingle_index,
     verify_pairs,
 )
-from flink_playground_spark.streaming.phash_index import (
-    IntraWaveConflict,
-    OneWavePerDocViolation,
-    _sum_ledger_col,
+from flink_playground_spark.streaming.wave_index import (
+    BandedWaveIndex,
+    Ledger,
+    _with_candidates,
 )
-from flink_playground_spark.streaming.txn_state import AppendDeltaState
-
-_PAIR_COLS = ("id_a", "id_b", "jaccard")
 
 
-class StreamingMinHashIndex:
+class StreamingMinHashIndex(BandedWaveIndex):
     """Feed ``ingest`` one wave of (doc, text) rows at a time; read
     ``pairs`` for every (id_a, id_b, jaccard) with exact shingle-Jaccard
     >= threshold emitted so far. Implements the shared streaming-index
-    surface (ingest/committed/pairs_for_batch/pairs/forget/ops_metrics),
-    so it composes into StreamingNearDupPipeline."""
+    surface (``WaveIndex``), so it composes into
+    StreamingNearDupPipeline."""
+
+    _LEDGERS = (
+        Ledger("bands", "bands", ("band", "bucket", "doc"), ("since_batch",)),
+        Ledger("shingles", "shingles", ("doc", "shingle"), ("n_sh",)),
+    )
+    _SCORE = ("jaccard", "double")
+    _CONTENT = "xxhash64(text)"
+    _PAYLOAD = "text"
 
     def __init__(
         self,
@@ -87,424 +95,30 @@ class StreamingMinHashIndex:
         max_bucket: int | None = DEFAULT_MAX_BUCKET,
         on_conflict: str = "error",
     ):
-        if on_conflict not in ("error", "quarantine"):
-            raise ValueError(f"on_conflict must be error|quarantine, got {on_conflict}")
         if k % bands:
             raise ValueError(f"k={k} must divide into bands={bands}")
-        self.workdir = workdir
+        super().__init__(workdir, on_conflict, max_bucket)
         self.id_col, self.text_col = id_col, text_col
         self.k, self.bands, self.n = k, bands, n
         self.threshold = threshold
-        self.max_bucket = max_bucket
-        self.on_conflict = on_conflict
-        self._bands = AppendDeltaState(
-            f"{workdir}/bands", keys=["band", "bucket", "doc"], tomb_match=[["doc"]]
-        )
-        self._shingles = AppendDeltaState(
-            f"{workdir}/shingles", keys=["doc", "shingle"], tomb_match=[["doc"]]
-        )
-        self._pairs = AppendDeltaState(
-            f"{workdir}/pairs", keys=["id_a", "id_b"], tomb_match=[["id_a"], ["id_b"]]
-        )
-        self._overflow = AppendDeltaState(
-            f"{workdir}/bucket_overflow", keys=["band", "bucket"]
-        )
-        self._quarantine = AppendDeltaState(f"{workdir}/quarantine", keys=["doc"])
-        self._ovf_skip = AppendDeltaState(
-            f"{workdir}/overflow_skipped", keys=["band", "bucket"]
-        )
 
-    # -- internals ---------------------------------------------------------
+    def _source(self, docs: DataFrame) -> DataFrame:
+        return docs.select(F.col(self.id_col).alias("doc"), F.col(self.text_col).alias("text"))
 
-    def _guard_intra_wave(self, docs: DataFrame, batch_id: int) -> DataFrame:
-        """Enforce one-text-per-doc WITHIN a wave (r12 ADVICE): a doc id
-        delivered twice in ONE batch with two DIFFERENT texts would have
-        both texts' grams silently merged by ``shingle_index`` into one
-        doc — the stored shingle set and every later Jaccard quietly
-        wrong, and invisible to the cross-wave guard (nothing committed
-        yet). Detected on the RAW wave (one extra wave-sized aggregate —
-        the union of grams is indistinguishable after shingling), hashed
-        so full texts never ride the conflict check. Same raise/
-        quarantine contract; a conflicted doc is dropped WHOLE — a
-        conflicted wave cannot say which generation is current, that is
-        what ``update`` waves are for. Exact duplicates of the same
-        (doc, text) row are harmless (distinct grams) and pass."""
-        bad = (
-            docs.groupBy(F.col(self.id_col).alias("doc"))
-            .agg(F.count_distinct(F.xxhash64(self.text_col)).alias("n"))
-            .filter(F.col("n") > 1)
-            .select("doc")
-            .localCheckpoint(eager=True)
-        )
-        if bad.isEmpty():
-            return docs
-        if self.on_conflict == "error":
-            sample = [r["doc"] for r in bad.limit(5).collect()]
-            raise IntraWaveConflict(
-                f"wave {batch_id} carries >1 distinct text for the same "
-                f"doc id (sample: {sample}) — resolve upstream "
-                "(keep-latest per doc) or construct the index with "
-                "on_conflict='quarantine'"
-            )
-        self._quarantine.append(
-            bad.withColumn("since_batch", F.lit(batch_id)),
-            writer_id="quarantine_intra",
-            batch_id=batch_id,
-            agg_cols=[F.min("since_batch").alias("since_batch")],
-        )
-        return docs.join(
-            F.broadcast(bad.withColumnRenamed("doc", self.id_col)), self.id_col, "left_anti"
-        )
-
-    def _guard_one_wave_per_doc(self, wave: DataFrame, batch_id: int) -> DataFrame:
-        """Anti-probe the wave's doc ids against the committed shingle
-        state (the commit point, appended LAST — so a crash-redelivered
-        wave can never self-flag). Same raise/quarantine contract as
-        the other indexes."""
-        spark = wave.sparkSession
-        seen = self._shingles.read(spark)
-        if seen is None:
-            return wave
-        bad = (
-            seen.join(F.broadcast(wave.select("doc").distinct()), "doc", "left_semi")
-            .select("doc")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        if bad.isEmpty():
-            return wave
-        if self.on_conflict == "error":
-            sample = [r["doc"] for r in bad.limit(5).collect()]
-            raise OneWavePerDocViolation(
-                f"wave {batch_id} re-delivers already-committed doc ids "
-                f"(sample: {sample}) — one-wave-per-doc violated; re-ingest "
-                "updated docs into a fresh index or construct the index "
-                "with on_conflict='quarantine'"
-            )
-        self._quarantine.append(
-            bad.withColumn("since_batch", F.lit(batch_id)),
-            writer_id="quarantine",
-            batch_id=batch_id,
-            agg_cols=[F.min("since_batch").alias("since_batch")],
-        )
-        return wave.join(F.broadcast(bad), "doc", "left_anti")
-
-    def _cap_and_count(
-        self, banded: DataFrame, prior: DataFrame | None, batch_id: int
-    ) -> tuple[DataFrame, DataFrame | None]:
-        """The phash index's bucket-cap protocol on MinHash buckets:
-        accumulated distinct-doc occupancy over TOUCHED buckets only,
-        newly-crossed buckets appended to the overflow ledger, the
-        swallowed wave rows SUM-counted, and both sides anti-joined
-        against the full overflow set."""
-        spark = banded.sparkSession
-        if self.max_bucket is None:
-            return banded, prior
-        occ_src = banded.select("band", "bucket", "doc")
-        if prior is not None:
-            occ_src = occ_src.unionByName(prior.select("band", "bucket", "doc"))
-        over = (
-            occ_src.groupBy("band", "bucket")
-            .agg(F.count_distinct("doc").alias("n"))
-            .filter(F.col("n") > self.max_bucket)
-            .select("band", "bucket")
-        )
-        known = self._overflow.read(spark)
-        known = known.select("band", "bucket").distinct() if known is not None else None
-        if known is not None:
-            over = over.join(known, ["band", "bucket"], "left_anti")
-        new_over = over.localCheckpoint(eager=True)
-        if not new_over.isEmpty():
-            self._overflow.append(
-                new_over.withColumn("since_batch", F.lit(batch_id)),
-                writer_id="overflow",
-                batch_id=batch_id,
-                agg_cols=[F.min("since_batch").alias("since_batch")],
-            )
-            full = self._overflow.read(spark).select("band", "bucket").distinct()
-        else:
-            full = known
-        if full is None:
-            return banded, prior
-        skipped = (
-            banded.join(F.broadcast(full), ["band", "bucket"], "left_semi")
-            .groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("n_rows"))
-            .localCheckpoint(eager=True)
-        )
-        if not skipped.isEmpty():
-            self._ovf_skip.append(
-                skipped,
-                writer_id="ovf_skip",
-                batch_id=batch_id,
-                agg_cols=[F.sum("n_rows").alias("n_rows")],
-            )
-        banded = banded.join(F.broadcast(full), ["band", "bucket"], "left_anti")
-        if prior is not None:
-            prior = prior.join(F.broadcast(full), ["band", "bucket"], "left_anti")
-        return banded, prior
-
-    def _shingle_band(self, docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-        """One wave's token pipeline: shingle (checkpointed — every read
-        below hits it), sign, band (checkpointed)."""
-        wave_sh = shingle_index(
-            docs.select(F.col(self.id_col), F.col(self.text_col)),
-            self.id_col,
-            self.text_col,
-            self.n,
-        ).localCheckpoint(eager=True)
+    def _prepare(self, docs: DataFrame) -> dict:
+        """Shingle (checkpointed — every read below hits it), sign, band
+        (checkpointed)."""
+        wave_sh = shingle_index(docs, "doc", "text", self.n).localCheckpoint(eager=True)
         sigs = minhash_signatures(None, "doc", None, self.k, self.n, index=wave_sh)
         banded = _band_signatures(sigs, self.bands, self.k // self.bands).localCheckpoint(
             eager=True
         )
-        return wave_sh, banded
+        return {"docs": wave_sh.select("doc").distinct(), "bands": banded, "shingles": wave_sh}
 
-    def _wave_pairs(
-        self,
-        spark: SparkSession,
-        wave_sh: DataFrame,
-        banded: DataFrame,
-        prior: DataFrame | None,
-        dead_docs: DataFrame | None = None,
-    ) -> DataFrame:
-        """The wave's exactly-verified pairs: banded candidates (within-
-        wave + wave×state) verified over the wave's shingles plus the
-        state shingles of candidate docs only. ``dead_docs``: doc ids
-        whose STORED shingles are stale (an update wave's excision set)
-        — their content is represented by ``wave_sh`` alone."""
-        a, b = banded.alias("a"), banded.alias("b")
-        cand = a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        ).select(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
-        idx = wave_sh
-        if prior is not None:
-            p = prior.alias("p")
-            cross = a.join(
-                p,
-                (F.col("a.band") == F.col("p.band"))
-                & (F.col("a.bucket") == F.col("p.bucket"))
-                & (F.col("a.doc") != F.col("p.doc")),
-            ).select(
-                F.least("a.doc", "p.doc").alias("id_a"),
-                F.greatest("a.doc", "p.doc").alias("id_b"),
-            )
-            cand = cand.unionByName(cross)
-            cand_docs = (
-                cand.select(F.col("id_a").alias("doc"))
-                .unionByName(cand.select(F.col("id_b").alias("doc")))
-                .distinct()
-            )
-            state_sh = self._shingles.read(spark)
-            if dead_docs is not None:
-                state_sh = state_sh.join(F.broadcast(dead_docs), "doc", "left_anti")
-            # verification reads ONLY candidate docs' stored shingles
-            idx = wave_sh.unionByName(state_sh.join(cand_docs, "doc", "left_semi"))
+    def _verify(self, w: dict, cand: DataFrame, dead: DataFrame | None, cross: bool) -> DataFrame:
+        idx = w["shingles"]
+        if cross:
+            idx = _with_candidates(idx, self._live_state(idx.sparkSession, dead), cand)
         return verify_pairs(
             idx.select("doc", "n_sh", "shingle"), cand.distinct(), self.threshold
         )
-
-    # -- API ----------------------------------------------------------------
-
-    def ingest(self, docs: DataFrame, batch_id: int) -> None:
-        """Fold one wave of (id_col, text_col) documents: shingle, sign,
-        band, join against touched state buckets, verify exactly, emit
-        this wave's pairs, append the wave's state. One-wave-per-doc is
-        ENFORCED both ACROSS waves (probe vs committed shingle state)
-        and WITHIN the wave (two distinct texts for one doc id — r12
-        ADVICE), raise or quarantine per ``on_conflict``; redelivery of
-        the same batch_id is probed against the shingle ledger (the
-        commit point) before any write. The intra-wave check is one
-        extra aggregate over the raw wave (hashed texts)."""
-        spark = docs.sparkSession
-        if self._shingles.committed("shingles", batch_id):
-            return  # replay of a committed wave: skipped before ANY write
-        docs = self._guard_intra_wave(docs, batch_id)
-        wave_sh, banded = self._shingle_band(docs)
-        wave_sh = self._guard_one_wave_per_doc(wave_sh, batch_id)
-        banded = banded.join(
-            F.broadcast(wave_sh.select("doc").distinct()), "doc", "left_semi"
-        )
-        touched = banded.select("band", "bucket").distinct()
-        prior = self._bands.read(spark)
-        if prior is not None:
-            prior = prior.join(F.broadcast(touched), ["band", "bucket"], "left_semi")
-        banded, prior = self._cap_and_count(banded, prior, batch_id)
-        pairs = self._wave_pairs(spark, wave_sh, banded, prior)
-        self._pairs.append(
-            pairs.withColumn("since_batch", F.lit(batch_id)),
-            writer_id="pairs",
-            batch_id=batch_id,
-            agg_cols=[
-                F.min("jaccard").alias("jaccard"),
-                F.min("since_batch").alias("since_batch"),
-            ],
-        )
-        self._bands.append(
-            banded.withColumn("since_batch", F.lit(batch_id)),
-            writer_id="bands",
-            batch_id=batch_id,
-            agg_cols=[F.min("since_batch").alias("since_batch")],
-        )
-        self._shingles.append(
-            wave_sh,
-            writer_id="shingles",
-            batch_id=batch_id,
-            agg_cols=[F.min("n_sh").alias("n_sh")],
-        )
-
-    def update(self, docs: DataFrame, batch_id: int) -> None:
-        """Fold one wave of CHANGED docs — the one-call changed-doc
-        path (+U) the one-wave-per-doc guard otherwise refuses: each
-        doc's new text REPLACES its committed shingles/bands, stale
-        pairs are retracted, new pairs are emitted, all under ONE batch
-        id. Upsert semantics: an uncommitted doc id is simply inserted.
-        Same crash protocol as StreamingPhashIndex.update — one atomic
-        replay-marked deletion-vector ``upsert`` per ledger, sequenced
-        pairs → bands → shingles with the commit-point ledger LAST, so
-        a crash between ledgers redelivers and converges without ever
-        leaving a doc absent. A doc updated to a text with NO shingles
-        is excised and stores nothing (it can never pair; same
-        zero-shingle invisibility the guard documents). Intra-wave
-        conflicts (two texts, one doc, one wave) raise or quarantine as
-        in ``ingest``. Cost: pair generation incremental like
-        ``ingest``; per-wave ledger write IO ∝ WAVE rows (merge-on-read
-        — crucial here, the shingle ledger is corpus-sized and a
-        rewrite-based excision would pay the whole corpus per wave;
-        tombstones settle at the next compaction instead)."""
-        spark = docs.sparkSession
-        if self._shingles.committed("shingles", batch_id):
-            return  # whole update already committed
-        docs = self._guard_intra_wave(docs, batch_id)
-        # excision set from the RAW wave: a doc updated to a zero-
-        # shingle text still gets its old state excised
-        upd = (
-            docs.select(F.col(self.id_col).alias("doc"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        wave_sh, banded = self._shingle_band(docs)
-        touched = banded.select("band", "bucket").distinct()
-        prior = self._bands.read(spark)
-        if prior is not None:
-            # the updated docs' OLD bands are dead: excluded from
-            # candidates (their new rows pair via the wave side)
-            prior = prior.join(F.broadcast(upd), "doc", "left_anti").join(
-                F.broadcast(touched), ["band", "bucket"], "left_semi"
-            )
-        banded, prior = self._cap_and_count(banded, prior, batch_id)
-        pairs = self._wave_pairs(spark, wave_sh, banded, prior, dead_docs=upd)
-        self._pairs.upsert(
-            upd,
-            pairs.withColumn("since_batch", F.lit(batch_id)),
-            writer_id="pairs",
-            batch_id=batch_id,
-            agg_cols=[
-                F.min("jaccard").alias("jaccard"),
-                F.min("since_batch").alias("since_batch"),
-            ],
-        )
-        self._bands.upsert(
-            upd,
-            banded.withColumn("since_batch", F.lit(batch_id)),
-            writer_id="bands",
-            batch_id=batch_id,
-            agg_cols=[F.min("since_batch").alias("since_batch")],
-        )
-        self._shingles.upsert(
-            upd,
-            wave_sh,
-            writer_id="shingles",
-            batch_id=batch_id,
-            agg_cols=[F.min("n_sh").alias("n_sh")],
-        )
-
-    def wave_doc_ids(self, wave: DataFrame) -> DataFrame:
-        """The doc ids a wave carries, as a single-column ``doc``
-        DataFrame — the composed pipeline derives an update wave's
-        excision set through this, schema-agnostically."""
-        return wave.select(F.col(self.id_col).alias("doc")).distinct()
-
-    def committed(self, batch_id: int) -> bool:
-        """True when ``batch_id`` is fully ingested (shingle ledger =
-        the wave's commit point) — the composed pipeline's crash probe."""
-        return self._shingles.committed("shingles", batch_id)
-
-    def pairs_for_batch(self, spark: SparkSession, batch_id: int) -> DataFrame:
-        """Exactly the pairs wave ``batch_id`` emitted (crash-recovery
-        read for the composed pipeline — see StreamingPhashIndex)."""
-        out = self._pairs.read(spark)
-        if out is None:
-            return spark.createDataFrame([], "id_a long, id_b long, jaccard double")
-        return (
-            out.filter(F.col("since_batch") == batch_id)
-            .groupBy("id_a", "id_b")
-            .agg(F.min("jaccard").alias("jaccard"))
-            .select(*_PAIR_COLS)
-        )
-
-    def pairs(self, spark: SparkSession) -> DataFrame:
-        """Every near-dup pair emitted so far (drained == the batch
-        banding answer under the bucket-cap contract), folded by the
-        declared keys so reads are deterministic."""
-        out = self._pairs.read(spark)
-        if out is None:
-            return spark.createDataFrame([], "id_a long, id_b long, jaccard double")
-        return (
-            out.groupBy("id_a", "id_b")
-            .agg(F.min("jaccard").alias("jaccard"))
-            .select(*_PAIR_COLS)
-        )
-
-    def overflow_buckets(self, spark: SparkSession) -> DataFrame:
-        """The loud ledger: (band, bucket) excluded from candidate joins."""
-        out = self._overflow.read(spark)
-        if out is None:
-            return spark.createDataFrame([], "band int, bucket long")
-        return out.select("band", "bucket").distinct()
-
-    def forget(self, spark: SparkSession, docs) -> dict:
-        """Retention / takedown — and the reason this index skips the
-        rep-class collapse: every ledger row is a raw per-doc fact, so
-        deletion is surgical (a class registry would fold doc identity
-        into rep identity and make deletes approximate). Docs + pairs +
-        bands + shingles + quarantine rows go; the replay ledger stays
-        (deletes must not resurrect data); overflowed buckets stay
-        excluded (same rationale as StreamingPhashIndex.forget)."""
-        ids = sorted(set(docs))
-        out = {
-            "bands_removed": self._bands.prune(spark, F.col("doc").isin(ids)),
-            "shingles_removed": self._shingles.prune(spark, F.col("doc").isin(ids)),
-            "pairs_removed": self._pairs.prune(
-                spark, F.col("id_a").isin(ids) | F.col("id_b").isin(ids)
-            ),
-        }
-        self._quarantine.prune(spark, F.col("doc").isin(ids))
-        return out
-
-    def ops_metrics(self) -> dict:
-        """Day-2 snapshot of every ledger (file-level, no Spark session)
-        — the same surface as the other streaming indexes. Alert on
-        ``overflow.rows > 0`` / ``quarantine.rows > 0``;
-        ``overflow_rows_skipped`` quantifies post-crossing losses."""
-        return {
-            "bands": self._bands.metrics(),
-            "shingles": self._shingles.metrics(),
-            "pairs": self._pairs.metrics(),
-            "overflow": self._overflow.metrics(),
-            "quarantine": self._quarantine.metrics(),
-            "overflow_rows_skipped": _sum_ledger_col(self._ovf_skip, "n_rows"),
-        }
-
-
-def state_bytes(workdir: str) -> int:
-    """Committed band-ledger bytes (test hook for per-wave write IO)."""
-    import glob
-    import os
-
-    return sum(
-        os.path.getsize(p)
-        for p in glob.glob(f"{workdir}/bands/d*/**/*.parquet", recursive=True)
-    )

@@ -5,8 +5,12 @@ write IO ∝ touched mass (mirrors the other streaming-index test files)."""
 from __future__ import annotations
 
 import tempfile
+from functools import partial
 
-from flink_playground_spark.streaming.cc_index import StreamingDupClusters, state_bytes
+from flink_playground_spark.streaming.cc_index import StreamingDupClusters
+from flink_playground_spark.streaming.wave_index import state_bytes as ledger_bytes
+
+state_bytes = partial(ledger_bytes, ledger="mapping")
 
 
 def _edges(spark, pairs):

@@ -7,13 +7,14 @@ composition — the EMBEDDING member of the streaming index family
 from __future__ import annotations
 
 import tempfile
+from functools import partial
 
 from pyspark.sql import functions as F
 
-from flink_playground_spark.streaming.cosine_index import (
-    StreamingCosineLSHIndex,
-    state_bytes,
-)
+from flink_playground_spark.streaming.cosine_index import StreamingCosineLSHIndex
+from flink_playground_spark.streaming.wave_index import state_bytes as ledger_bytes
+
+state_bytes = partial(ledger_bytes, ledger="bands")
 
 VECS = [
     (1, [1.0, 0.0, 0.0, 0.0]),

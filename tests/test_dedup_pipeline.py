@@ -7,16 +7,15 @@ append-only on both ledgers, and cascades takedown through both stages
 from __future__ import annotations
 
 import tempfile
+from functools import partial
 
-from flink_playground_spark.streaming.cc_index import (
-    state_bytes as cc_state_bytes,
-)
 from flink_playground_spark.streaming.dedup_pipeline import StreamingNearDupPipeline
 from flink_playground_spark.streaming.frameset_index import StreamingFrameSetIndex
-from flink_playground_spark.streaming.phash_index import (
-    StreamingHammingIndex,
-    state_bytes as band_state_bytes,
-)
+from flink_playground_spark.streaming.phash_index import StreamingHammingIndex
+from flink_playground_spark.streaming.wave_index import state_bytes
+
+cc_state_bytes = partial(state_bytes, ledger="mapping")
+band_state_bytes = partial(state_bytes, ledger="bands")
 
 
 def _fp(spark, rows):

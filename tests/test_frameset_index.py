@@ -5,11 +5,12 @@ streaming multimodal dedup family (mirrors test_phash_index.py)."""
 from __future__ import annotations
 
 import tempfile
+from functools import partial
 
-from flink_playground_spark.streaming.frameset_index import (
-    StreamingFrameSetIndex,
-    state_bytes,
-)
+from flink_playground_spark.streaming.frameset_index import StreamingFrameSetIndex
+from flink_playground_spark.streaming.wave_index import state_bytes as ledger_bytes
+
+state_bytes = partial(ledger_bytes, ledger="grams")
 
 
 def _grams(spark, sets):

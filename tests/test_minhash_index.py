@@ -6,13 +6,14 @@ the streaming index family (mirrors test_phash_index.py)."""
 from __future__ import annotations
 
 import tempfile
+from functools import partial
 
 from pyspark.sql import functions as F
 
-from flink_playground_spark.streaming.minhash_index import (
-    StreamingMinHashIndex,
-    state_bytes,
-)
+from flink_playground_spark.streaming.minhash_index import StreamingMinHashIndex
+from flink_playground_spark.streaming.wave_index import state_bytes as ledger_bytes
+
+state_bytes = partial(ledger_bytes, ledger="bands")
 
 TEXTS = [
     (1, "the quick brown fox jumps over the lazy dog again and again today"),

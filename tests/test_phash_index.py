@@ -4,13 +4,14 @@ append-only per-wave write IO, loud bucket overflow."""
 from __future__ import annotations
 
 import tempfile
+from functools import partial
 
 from pyspark.sql import functions as F
 
-from flink_playground_spark.streaming.phash_index import (
-    StreamingPhashIndex,
-    state_bytes,
-)
+from flink_playground_spark.streaming.phash_index import StreamingPhashIndex
+from flink_playground_spark.streaming.wave_index import state_bytes as ledger_bytes
+
+state_bytes = partial(ledger_bytes, ledger="bands")
 
 
 def _fp(spark, rows):

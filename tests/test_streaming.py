@@ -84,37 +84,6 @@ def test_datagen_batch_deterministic(spark):
     assert all(len(r.iso) == 2 for r in a)
 
 
-def test_stateful_v2_gated_or_working(spark, sf_dir):
-    """The v2 operator either runs (protobuf present) or raises the
-    documented capability error — never a cryptic worker crash."""
-    import pytest
-
-    from flink_playground_spark.streaming.stateful_v2 import (
-        ROCKSDB_PROVIDER,
-        dedup_latest_stream_v2,
-        stateful_v2_available,
-    )
-
-    stream = replay_events_stream(spark, sf_dir).select("event_id", "ts", "user_id", "value")
-    if not stateful_v2_available():
-        with pytest.raises(ModuleNotFoundError, match="protobuf"):
-            dedup_latest_stream_v2(stream, "user_id", "ts", ("event_id",))
-        return
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    latest = dedup_latest_stream_v2(stream, "user_id", "ts", ("event_id",))
-    got = run_to_memory(latest, "update")
-    final = dedup_latest(got, "user_id", "ts", tiebreakers=("event_id",))
-    from flink_playground_spark.sources.tables import load_table
-
-    batch = dedup_latest(
-        load_table(spark, sf_dir, "events").select("event_id", "ts", "user_id", "value"),
-        "user_id",
-        "ts",
-        tiebreakers=("event_id",),
-    )
-    assert sorted(map(tuple, final.collect())) == sorted(map(tuple, batch.collect()))
-
-
 def test_insert_into_streaming_table(spark, sf_dir, tmp_path):
     """S7: INSERT INTO — continuous insert into a catalog table."""
     from flink_playground_spark.sinks import insert_into

@@ -91,8 +91,12 @@ def test_update_equals_batch_rebuild_on_post_update_corpus(spark, tmp_path):
     }
     assert wave3 == {(1, 99), (2, 99), (3, 20)}  # (1,2) predates the wave
 
-    from flink_playground_spark.streaming.cc_index import state_bytes as cc_bytes
-    from flink_playground_spark.streaming.phash_index import state_bytes as band_bytes
+    from functools import partial
+
+    from flink_playground_spark.streaming.wave_index import state_bytes
+
+    cc_bytes = partial(state_bytes, ledger="mapping")
+    band_bytes = partial(state_bytes, ledger="bands")
 
     before = (band_bytes(str(tmp_path / "p/idx")), cc_bytes(str(tmp_path / "p/clusters")))
     pipe.update(_fp(spark, _UPD), batch_id=3)  # replay: full skip
