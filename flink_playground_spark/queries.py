@@ -1730,10 +1730,8 @@ def streaming_minhash_neardup(spark, sf_dir):
     candidates are verified exactly. Every qualifying pair is emitted in
     the batch where its later member arrives — so the drained stream
     equals the batch answer, and the batch SQL is the oracle."""
-    from flink_playground_spark.streaming.neardup import (
-        replay_documents_stream,
-        streaming_neardup,
-    )
+    from flink_playground_spark.streaming.minhash_index import streaming_neardup
+    from flink_playground_spark.streaming.runners import replay_documents_stream
 
     stream = replay_documents_stream(spark, sf_dir)  # 2 micro-batches
     return streaming_neardup(stream, threshold=0.8)

@@ -25,10 +25,6 @@ production deployment would front this with a watermark-delayed sort
 
 from __future__ import annotations
 
-import glob
-import os
-import shutil
-import tempfile
 from collections.abc import Iterator, Sequence
 
 import pandas as pd
@@ -170,39 +166,27 @@ def funnel_stream(
     )
 
 
-def replay_events_stream_timeordered(
-    spark: SparkSession, sf_dir: str, waves: int = 3, files_per_batch: int = 1
-) -> DataFrame:
+def replay_events_stream_timeordered(spark: SparkSession, sf_dir: str, waves: int = 3) -> DataFrame:
     """events replayed as a stream in event-time order: the table is split
     into ``waves`` contiguous time ranges (ntile over ts), one file per
-    micro-batch, mtimes pinned strictly increasing so the file source
-    drains them in order."""
+    micro-batch (``runners.replay_waves``)."""
     from flink_playground_spark.sources.tables import load_table
+    from flink_playground_spark.streaming.runners import replay_waves
 
-    work = tempfile.mkdtemp(prefix="fps_evsrc_")
     ev = load_table(spark, sf_dir, "events")
     bounds = ev.selectExpr(
         f"percentile_approx(unix_micros(cast(ts as timestamp)), array({','.join(str((i + 1) / waves) for i in range(waves - 1))}), 10000) p"
     ).collect()[0]["p"] if waves > 1 else []
-    src = f"{work}/src"
-    os.makedirs(src)
     tsd = F.unix_micros(F.col("ts").cast("timestamp"))
+    conds = []
     for i in range(waves):
         cond = F.lit(True)
         if i > 0:
             cond = cond & (tsd > bounds[i - 1])
         if i < waves - 1:
             cond = cond & (tsd <= bounds[i])
-        part = f"{work}/w{i}"
-        ev.filter(cond).coalesce(1).write.mode("overwrite").parquet(part)
-        dst = f"{src}/wave{i}.parquet"
-        shutil.copy(glob.glob(f"{part}/*.parquet")[0], dst)
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-    return (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", str(files_per_batch))
-        .parquet(src)
-    )
+        conds.append(cond)
+    return replay_waves(ev, conds)
 
 
 def funnel_txn_wave(

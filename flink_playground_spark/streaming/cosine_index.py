@@ -92,19 +92,19 @@ class StreamingCosineLSHIndex(BandedWaveIndex):
         self.threshold = threshold
 
     def _source(self, docs: DataFrame) -> DataFrame:
-        return docs.select(
-            F.col(self.id_col).alias("doc"), F.col(self.vec_col).alias("vec")
-        ).localCheckpoint(eager=True)
+        return self._pin(
+            docs.select(F.col(self.id_col).alias("doc"), F.col(self.vec_col).alias("vec"))
+        )
 
     def _prepare(self, wave: DataFrame) -> dict:
         """Band rows through the SAME lsh_buckets expression as the
         batch path, checkpointed (the vector payload is dropped — band
         rows stay ~24 B)."""
         wave_vecs = wave.dropDuplicates(["doc"])
-        banded = (
-            lsh_buckets(wave_vecs, "doc", "vec", self.tables, self.planes)
-            .select("table", "bucket", F.col("vid").alias("doc"))
-            .localCheckpoint(eager=True)
+        banded = self._pin(
+            lsh_buckets(wave_vecs, "doc", "vec", self.tables, self.planes).select(
+                "table", "bucket", F.col("vid").alias("doc")
+            )
         )
         return {
             "docs": wave_vecs.select("doc").distinct(),

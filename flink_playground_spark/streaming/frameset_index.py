@@ -80,13 +80,12 @@ class StreamingFrameSetIndex(WaveIndex):
         the survivors' prefixes untouched."""
         g = grams.select("doc", "shingle").distinct()
         counts = g.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
-        return (
+        return self._pin(
             g.join(counts, "doc")
             .withColumn(
                 "rk", F.row_number().over(Window.partitionBy("doc").orderBy("shingle"))
             )
             .select("doc", "n_sh", "shingle", "rk")
-            .localCheckpoint(eager=True)
         )
 
     def _prepare(self, wave: DataFrame) -> dict:

@@ -6,7 +6,7 @@ audio_fingerprint_neardup) answer "which pairs in this corpus sit
 within Hamming 3". This index answers the pipeline question: *as media
 batches arrive, which of them duplicate anything seen so far* — the
 streaming counterpart the text families already have
-(streaming/neardup.py for MinHash, substring_dedup.py for exact
+(minhash_index.py for MinHash, substring_dedup.py for exact
 substrings). The index never sees pixels or PCM: callers hash upstream
 (multimodal.perceptual_hash, multimodal.audio_fingerprint) and feed
 (doc, sh) 64-bit fingerprints, so ONE index implementation serves every
@@ -83,7 +83,7 @@ class StreamingPhashIndex(BandedWaveIndex):
     def _source(self, fp: DataFrame) -> DataFrame:
         # the 48B/doc banded rows carry ``sh``, so every guard and join
         # reads this checkpoint, never the caller's lineage
-        return simhash_chunks(fp.select("doc", "sh")).localCheckpoint(eager=True)
+        return self._pin(simhash_chunks(fp.select("doc", "sh")))
 
     def _prepare(self, banded: DataFrame) -> dict:
         docs = banded.select("doc").distinct()

@@ -10,12 +10,21 @@ for real, then terminates deterministically.
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
+import tempfile
 import uuid
+from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_playground_spark.sources.tables import _ensure_nanos_conf, normalize_events_ts
+from flink_playground_spark.sources.tables import (
+    _ensure_nanos_conf,
+    load_table,
+    normalize_events_ts,
+)
 
 
 def replay_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -36,36 +45,41 @@ def replay_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_events_ts(raw)
 
 
-def replay_events_waves(spark: SparkSession, sf_dir: str, waves: int = 2) -> DataFrame:
-    """The ``events`` table as a stream of ``waves`` deterministic
-    micro-batches: wave i carries the rows with ``event_id % waves == i``
-    (one file per wave, ``maxFilesPerTrigger=1``). The parity split is
-    what lets an oracle reconstruct each batch's contents in SQL."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from flink_playground_spark.sources.tables import load_table
-
-    work = tempfile.mkdtemp(prefix="fps_evsrc_")
-    events = load_table(spark, sf_dir, "events")
+def replay_waves(table: DataFrame, waves: Sequence[Column]) -> DataFrame:
+    """``table`` as a file stream of one micro-batch per filter in
+    ``waves``: each wave's rows land in one parquet file, copied into the
+    source directory with strictly increasing mtimes, which pin the file
+    source's batch order (``maxFilesPerTrigger=1``)."""
+    work = tempfile.mkdtemp(prefix="fps_wavesrc_")
     src = f"{work}/src"
     os.makedirs(src)
-    for i in range(waves):
+    for i, cond in enumerate(waves):
         part = f"{work}/w{i}"
-        events.filter(F.col("event_id") % waves == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(part)
+        table.filter(cond).coalesce(1).write.mode("overwrite").parquet(part)
         dst = f"{src}/wave{i}.parquet"
         shutil.copy(glob.glob(f"{part}/*.parquet")[0], dst)
-        # strictly increasing mtimes pin the file-source batch order
         os.utime(dst, (1_000_000_000 + i * 60, 1_000_000_000 + i * 60))
     return (
-        spark.readStream.schema(events.schema)
+        table.sparkSession.readStream.schema(table.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
+
+
+def replay_events_waves(spark: SparkSession, sf_dir: str, waves: int = 2) -> DataFrame:
+    """The ``events`` table as a stream of ``waves`` deterministic
+    micro-batches: wave i carries the rows with ``event_id % waves == i``.
+    The parity split is what lets an oracle reconstruct each batch's
+    contents in SQL."""
+    events = load_table(spark, sf_dir, "events")
+    return replay_waves(events, [F.col("event_id") % waves == i for i in range(waves)])
+
+
+def replay_documents_stream(spark: SparkSession, sf_dir: str, waves: int = 2) -> DataFrame:
+    """The ``documents`` table as a stream of ``waves`` micro-batches:
+    wave i carries the docs with ``doc_id % waves == i``."""
+    docs = load_table(spark, sf_dir, "documents")
+    return replay_waves(docs, [F.col("doc_id") % waves == i for i in range(waves)])
 
 
 def run_to_memory(df: DataFrame, output_mode: str, query_name: str | None = None) -> DataFrame:

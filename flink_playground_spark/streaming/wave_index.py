@@ -16,7 +16,8 @@ Protocol of ``ingest`` / ``update`` for one wave ``batch_id``:
    one written) already holds ``batch_id``, the whole wave is skipped.
 2. Prepare: the caller's lineage is checkpointed once (often a full
    media-hash or embedding pass); every guard and join reads the
-   checkpoint.
+   checkpoint. Every checkpoint a wave takes (``_pin``) is released
+   when its fold ends, committed or raised.
 3. Guards. Within the wave, one doc id carrying two distinct payloads
    would fold two content generations into one stored identity — the
    cross-wave guard cannot see it (nothing is committed yet). Across
@@ -126,6 +127,14 @@ def state_bytes(workdir: str, ledger: str) -> int:
     )
 
 
+def _release(df: DataFrame) -> None:
+    """Drop the blocks of a local checkpoint nothing reads again —
+    ``RDD.unpersist`` without its warning that a local checkpoint cannot
+    be recomputed once unpersisted."""
+    rdd = df._jdf.queryExecution().logical().rdd()
+    df.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd.id(), False)
+
+
 def _tag(df: DataFrame, batch_id: int) -> DataFrame:
     return df.withColumn("since_batch", F.lit(batch_id))
 
@@ -187,6 +196,7 @@ class WaveIndex:
             f"{workdir}/pairs", keys=["id_a", "id_b"], tomb_match=[["id_a"], ["id_b"]]
         )
         self._quarantine = AppendDeltaState(f"{workdir}/quarantine", keys=["doc"])
+        self._pinned: list[DataFrame] = []  # the current wave's checkpoints
 
     # -- family kernel -------------------------------------------------------
 
@@ -213,6 +223,13 @@ class WaveIndex:
         raise NotImplementedError
 
     # -- protocol ------------------------------------------------------------
+
+    def _pin(self, df: DataFrame) -> DataFrame:
+        """Eager local checkpoint of a wave-scoped frame; ``_fold``
+        releases it once the wave ends, committed or raised."""
+        out = df.localCheckpoint(eager=True)
+        self._pinned.append(out)
+        return out
 
     def _commit_ledger(self) -> AppendDeltaState:
         return getattr(self, f"_{self._LEDGERS[-1].writer}")
@@ -252,12 +269,11 @@ class WaveIndex:
         wave-sized aggregate over the (hashed) payload."""
         if self._CONTENT is None:
             return src
-        bad = (
+        bad = self._pin(
             src.groupBy("doc")
             .agg(F.count_distinct(F.expr(self._CONTENT)).alias("n"))
             .filter(F.col("n") > 1)
             .select("doc")
-            .localCheckpoint(eager=True)
         )
         msg = f"carries >1 distinct {self._PAYLOAD} for the same doc id"
         fix = "resolve upstream (keep-latest per doc)"
@@ -270,11 +286,8 @@ class WaveIndex:
         seen = self._seen_docs(w["docs"].sparkSession, batch_id)
         if seen is None:
             return w
-        bad = (
-            seen.join(F.broadcast(w["docs"]), "doc", "left_semi")
-            .select("doc")
-            .distinct()
-            .localCheckpoint(eager=True)
+        bad = self._pin(
+            seen.join(F.broadcast(w["docs"]), "doc", "left_semi").select("doc").distinct()
         )
         msg = "re-delivers already-committed doc ids — one-wave-per-doc violated"
         fix = "fold changed docs through update()"
@@ -283,11 +296,19 @@ class WaveIndex:
     def _fold(self, wave: DataFrame, batch_id: int, update: bool) -> None:
         if self.committed(batch_id):
             return  # replay of a committed wave: skipped before ANY write
+        try:
+            self._fold_wave(wave, batch_id, update)
+        finally:
+            for df in self._pinned:
+                _release(df)
+            self._pinned.clear()
+
+    def _fold_wave(self, wave: DataFrame, batch_id: int, update: bool) -> None:
         src = self._guard_intra_wave(self._source(wave), batch_id)
         # update's excision set: every doc the (guarded) wave carries,
         # taken before preparation so a doc whose new content stores
         # nothing still loses its old state
-        dead = src.select("doc").distinct().localCheckpoint(eager=True) if update else None
+        dead = self._pin(src.select("doc").distinct()) if update else None
         w = self._prepare(src)
         if not update:
             w = self._guard_one_wave_per_doc(w, batch_id)
@@ -445,7 +466,7 @@ class BandedWaveIndex(WaveIndex):
         # list, not data): checkpointing it costs one tiny job and lets
         # the healthy path — nothing overflowed, nothing known — skip
         # the ledger append and both exclusion joins outright
-        new_over = over.localCheckpoint(eager=True)
+        new_over = self._pin(over)
         if not new_over.isEmpty():
             # one immutable delta — atomic manifest commit, replay-
             # skipped, never rewriting (or even reading) the recorded
@@ -463,11 +484,10 @@ class BandedWaveIndex(WaveIndex):
         # quantify the divergence: the wave rows each overflowed bucket
         # swallows AFTER its crossing; appended only on the (degenerate)
         # overflow path — the clean path pays nothing
-        skipped = (
+        skipped = self._pin(
             banded.join(F.broadcast(known), key, "left_semi")
             .groupBy(*key)
             .agg(F.count(F.lit(1)).alias("n_rows"))
-            .localCheckpoint(eager=True)
         )
         if not skipped.isEmpty():
             self._ovf_skip.append(

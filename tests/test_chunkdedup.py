@@ -11,7 +11,7 @@ from flink_playground_spark.streaming.chunkdedup import streaming_chunk_dedup
 # rotation-safe lookup: driver-gate rotation moves entries between the
 # registries without changing what these tests pin
 ALL_QUERIES = {**REGISTRY, **EXTRA_REGISTRY}
-from flink_playground_spark.streaming.neardup import replay_documents_stream
+from flink_playground_spark.streaming.runners import replay_documents_stream
 
 
 def _rows(pdf):

@@ -161,29 +161,18 @@ def test_simhash_tokenless_identical_docs_never_pair(spark):
 
 
 def test_streaming_matches_batch_with_exact_dup_waves(spark, tmp_path):
-    """Exact-dup classes spread over 3 micro-batches: within-class pairs,
-    new-class fan-out (case 3) and old-rep-pair x late member (case 4)
-    all fire; the drained stream equals the batch answer exactly."""
-    import glob
-    import shutil
-
-    from flink_playground_spark.streaming.neardup import streaming_neardup
+    """An exact-dup class spread over 3 micro-batches: within-class
+    pairs, a late class member pairing with earlier near-dups, and a
+    no-shingle class all come out of the drained stream exactly as in
+    the batch answer."""
+    from flink_playground_spark.streaming.minhash_index import streaming_neardup
+    from flink_playground_spark.streaming.runners import replay_waves
 
     rows = [(i, BOILER) for i in (3, 4, 5, 6, 7)]  # class across all waves
     rows += [(9, BASE), (12, BASE), (17, BASE)]  # 17 arrives after (9,10) pairs
     rows += [(10, NEAR), (11, FAR), (13, "hi"), (14, "hi")]
     docs = from_rows(spark, rows, ["doc_id", "text"], [int, str])
-    src = tmp_path / "src"
-    src.mkdir()
-    for i in range(3):
-        part = str(tmp_path / f"w{i}")
-        docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode("overwrite").parquet(part)
-        shutil.copy(glob.glob(f"{part}/*.parquet")[0], str(src / f"wave{i}.parquet"))
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
+    stream = replay_waves(docs, [F.col("doc_id") % 3 == i for i in range(3)])
     got = {
         (r.id_a, r.id_b, r.jaccard)
         for r in streaming_neardup(
@@ -195,7 +184,7 @@ def test_streaming_matches_batch_with_exact_dup_waves(spark, tmp_path):
         for r in minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.5).collect()
     }
     assert got == want
-    assert (10, 17) in {(a, b) for a, b, _ in got}  # case-4 late fan-out
+    assert (10, 17) in {(a, b) for a, b, _ in got}  # late class member
     assert (9, 12, 1.0) in got  # within-class exact pair
     assert not any({13, 14} & {a, b} for a, b, _ in got)  # no-shingle class
 

@@ -3,29 +3,41 @@
 The judge's round-1 top defect was that streaming_neardup re-ran the
 full-corpus exact Jaccard self-join every micro-batch. These tests pin
 the fix: (a) a multi-wave replay still equals the batch answer exactly,
-(b) per-batch wall time stays flat as the corpus accumulates."""
+(b) per-batch verification work does not grow with the corpus."""
 
 from __future__ import annotations
+
+import re
 
 import pytest
 
 from flink_playground_spark.functions.dedupe import ngram_jaccard_pairs
 from flink_playground_spark.sources.tables import load_table
-from flink_playground_spark.streaming.neardup import (
-    replay_documents_stream,
-    streaming_neardup,
-)
+from flink_playground_spark.streaming import minhash_index
+from flink_playground_spark.streaming.minhash_index import streaming_neardup
+from flink_playground_spark.streaming.runners import replay_documents_stream
 
 SF = "/root/testdata/sf0.01"
 
 
 @pytest.fixture(scope="module")
 def four_wave_result(spark):
-    stream = replay_documents_stream(spark, SF, waves=4)
-    metrics: list[dict] = []
-    pairs = streaming_neardup(stream, threshold=0.8, batch_metrics=metrics)
-    got = {(r.id_a, r.id_b, r.jaccard) for r in pairs.collect()}
-    return got, metrics
+    """The drained pairs, plus each wave's VERIFIED candidate set,
+    recorded by wrapping the index's ``verify_pairs`` (collecting the
+    candidates costs one extra job per wave, so only tests do it)."""
+    cands: list[set] = []
+    verify = minhash_index.verify_pairs
+
+    def recording(idx, cand, threshold):
+        cands.append({(r.id_a, r.id_b) for r in cand.collect()})
+        return verify(idx, cand, threshold)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(minhash_index, "verify_pairs", recording)
+        stream = replay_documents_stream(spark, SF, waves=4)
+        pairs = streaming_neardup(stream, threshold=0.8)
+        got = {(r.id_a, r.id_b, r.jaccard) for r in pairs.collect()}
+    return got, cands
 
 
 def test_four_wave_stream_equals_batch(spark, four_wave_result):
@@ -43,24 +55,37 @@ def test_per_batch_work_does_not_grow(four_wave_result):
     wall-clock-ratio version went red under unrelated 32-core host load
     — a gate that reds for reasons other than the code trains people to
     ignore red). The testable signature of candidate-only verification:
-    every rep-level candidate pair is verified in EXACTLY ONE batch (the
-    one where its later member arrives), so the per-batch verified-
-    candidate sets are pairwise disjoint. The round-1 full-recompute
-    design re-verified the whole accumulated corpus every batch — its
-    sets would overlap massively (batch 4 ⊇ batches 1-3)."""
-    _, metrics = four_wave_result
-    assert len(metrics) == 4
-    assert all(m["n_new_docs"] > 0 for m in metrics)
-    assert any(m["cand_pairs"] for m in metrics), "no candidates verified at all"
+    every candidate pair is verified in EXACTLY ONE batch (the one where
+    its later member arrives), so the per-batch verified-candidate sets
+    are pairwise disjoint. The round-1 full-recompute design re-verified
+    the whole accumulated corpus every batch — its sets would overlap
+    massively (batch 4 ⊇ batches 1-3)."""
+    _, cands = four_wave_result
+    assert len(cands) == 4
+    assert any(cands), "no candidates verified at all"
     seen: set = set()
-    for i, m in enumerate(metrics):
-        overlap = seen & m["cand_pairs"]
+    for i, c in enumerate(cands):
+        overlap = seen & c
         assert not overlap, (
             f"batch {i} re-verified {len(overlap)} candidate pairs from "
             f"earlier batches (per-batch work grows with the corpus): "
             f"{sorted(overlap)[:5]}"
         )
-        seen |= m["cand_pairs"]
+        seen |= c
+
+
+def test_used_work_dir_is_refused(spark, tmp_path):
+    """The drain keeps no stream checkpoint, so its batch ids restart at
+    0: on a work_dir holding index state, the replay probe would skip a
+    fresh run's waves as already committed. The drain refuses it before
+    starting the stream."""
+    work = tmp_path / "work"
+    minhash_index.StreamingMinHashIndex(str(work)).ingest(
+        spark.createDataFrame([(1, "a b c d")], "doc_id long, text string"), 0
+    )
+    stream = spark.readStream.format("rate").load()
+    with pytest.raises(ValueError, match=re.escape(str(work))):
+        streaming_neardup(stream, work_dir=str(work))
 
 
 def test_streaming_decontamination_matches_batch(spark, sf_dir, tmp_path):

@@ -82,7 +82,10 @@ def test_replay_guard_and_crash_at_commit_point(spark, tmp_path, family):
     committed) redelivers to the uninterrupted run's pairs and ledger
     rows, its own crash remnants never making the guard self-flag;
     under "quarantine" the re-delivery is routed aside as one row while
-    the rest of its wave still folds."""
+    the rest of its wave still folds. No fold, committed or raised,
+    leaves a persisted RDD (its checkpoints) behind."""
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    held = set(persisted().keys())
     cls, mk, _, _ = FAMILIES[family]
     waves = _waves(family)
     ref = cls(str(tmp_path / "ref"))
@@ -116,3 +119,4 @@ def test_replay_guard_and_crash_at_commit_point(spark, tmp_path, family):
     idx.ingest(mk(spark, waves[2]), batch_id=2)
     assert idx.ops_metrics()["quarantine"]["rows"] == 1
     assert _pairs(spark, idx) == AFTER_TWO | {(4, 5)}
+    assert set(persisted().keys()) <= held
