@@ -6,9 +6,9 @@ temporal-join jobs answer "current version"; this answers "version as of
 any time" — without an interval join):
 
 1. CDC batches (upserts + deletes) are applied to the CURRENT-STATE
-   dimension with ``BucketedKeyState.merge_changes`` — latest change per
-   key wins, deletes drop keys, per-batch IO only touches affected
-   hash buckets (``streaming/state_store.py``);
+   dimension with ``TransactionalKeyState.merge_changes`` — latest change
+   per key wins, deletes drop keys, each batch commits exactly once and
+   its IO only touches affected hash buckets (``streaming/txn_state.py``);
 2. the accumulated changelog is collapsed into SCD2 validity intervals
    with ``scd2_build`` — one shuffle, consecutive unchanged states
    merged (``operators/scd.py``);
@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from flink_playground_spark import get_spark
 from flink_playground_spark.operators.scd import point_in_time_join, scd2_build
-from flink_playground_spark.streaming.state_store import BucketedKeyState
+from flink_playground_spark.streaming.txn_state import TransactionalKeyState
 
 
 def ts(s):
@@ -69,13 +69,13 @@ def main() -> None:
     work = tempfile.mkdtemp(prefix="scd2_wh_")
 
     # 1. CDC apply: current state, wave by wave
-    state = BucketedKeyState(f"{work}/dim_current", ["user_id"], n_buckets=4)
+    state = TransactionalKeyState(f"{work}/dim_current", ["user_id"], n_buckets=4)
     changelog_rows = []
     for i, wave in enumerate(CDC_WAVES, 1):
         batch = spark.createDataFrame(
             wave, "op string, user_id string, tier string, ts timestamp_ntz, seq long"
         )
-        state.merge_changes(batch, "op", "ts", tiebreakers=("seq",))
+        state.merge_changes("cdc", i, batch, "op", "ts", tiebreakers=("seq",))
         changelog_rows += wave
         print(f"-- after CDC wave {i}: current dimension state")
         state.read(spark).orderBy("user_id").show(truncate=False)

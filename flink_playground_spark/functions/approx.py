@@ -160,7 +160,8 @@ def hist_sketch(
     inside one aggregate call — it cannot be PERSISTED and merged with
     tomorrow's data, shipped between jobs, or folded into bucketed
     streaming state. A histogram relation can: merge = per-bin SUM
-    (``hist_merge`` or ``state_store.merge_aggregate`` keyed on bin).
+    (``hist_merge``, or ``TransactionalKeyState.merge_aggregate`` keyed
+    on bin).
     Values are clamped to [lo, hi]; rank error of any quantile read is
     bounded by the heaviest bin's mass.
     """

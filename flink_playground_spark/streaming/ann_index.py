@@ -8,8 +8,9 @@ lifecycles the way every production ANN deployment does:
   freeze — they are the index GEOMETRY, and changing them means
   reassigning everything, i.e. an offline rebuild, not an ingest;
 - ASSIGNMENTS stream: each arriving vector joins its nearest frozen
-  centroid and upserts into bucketed cell state (keep-latest on the
-  vector id — re-ingesting a vector moves it to its current cell).
+  centroid and upserts into the cells' ``TransactionalKeyState``
+  (keep-latest on the vector id, exactly once per wave — re-ingesting a
+  vector moves it to its current cell).
   Per-batch work ∝ wave × centroids; nothing re-reads old vectors.
 
 Queries probe ``nprobe`` cells against the CURRENT state — candidates
@@ -35,6 +36,11 @@ drift visible and the rebuild one call.
 
 from __future__ import annotations
 
+import os
+
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as papq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -43,7 +49,118 @@ from flink_playground_spark.functions.similarity import (
     ivf_assign,
     kmeans_centroids,
 )
-from flink_playground_spark.streaming.state_store import BucketedKeyState
+from flink_playground_spark.streaming.txn_state import TransactionalKeyState
+from flink_playground_spark.streaming.wave_index import release_checkpoint
+
+# the writer id of an index's state; its batch ids are drift-log waves
+_WRITER = "waves"
+
+
+class DriftLog:
+    """Per-wave fit log of a frozen-geometry index: one ``(wave, phase,
+    n, <metric>)`` row per wave, the metric being the wave's mean fit
+    error (IVF: cosine distance to the assigned centroid; PQ: squared
+    quantization error).
+
+    The wave number is also the state's batch id and keep-latest order
+    (``fold``), and the row is appended AFTER the state commit: a wave
+    re-ingested after a crash between the two finds its batch committed,
+    skips the merge, and writes its row once."""
+
+    def __init__(self, path: str, metric: str):
+        self.path = path
+        self.metric = metric
+        self._next: int | None = None  # counted from the log on reattach
+
+    def next_wave(self) -> int:
+        if self._next is None:
+            # one tiny file per wave, counted from the footers: no Spark job
+            self._next = (
+                ds.dataset(self.path, format="parquet").count_rows()
+                if os.path.isdir(self.path)
+                else 0
+            )
+        return self._next
+
+    def append(self, wave: int, phase: str, n: int, value: float | None) -> None:
+        """Write the wave's row in-process (pyarrow, no Spark job); one
+        file per wave, so a re-append rewrites the same row."""
+        os.makedirs(self.path, exist_ok=True)
+        papq.write_table(
+            pa.table(
+                {
+                    "wave": pa.array([wave], pa.int32()),
+                    "phase": pa.array([phase], pa.string()),
+                    "n": pa.array([n], pa.int64()),
+                    self.metric: pa.array([value], pa.float64()),
+                }
+            ),
+            f"{self.path}/wave-{wave:06d}.parquet",
+        )
+        self._next = wave + 1
+
+    def fold(self, state: TransactionalKeyState, rows: DataFrame, phase: str) -> None:
+        """Fold one checkpointed wave — keyed on ``vid``, with a per-row
+        ``err`` — into ``state`` (keep-latest, the wave number as batch
+        id and order) and into the log; the checkpoint is released when
+        the fold ends, committed or raised. One stats job, then the
+        state merge."""
+        try:
+            wave = self.next_wave()
+            r = rows.agg(F.count(F.lit(1)).alias("n"), F.avg("err").alias("e")).first()
+            state.merge_keep_latest(
+                _WRITER, wave, rows.drop("err").withColumn("__seq", F.lit(wave)), "__seq"
+            )
+            self.append(wave, phase, int(r["n"]), r["e"])
+        finally:
+            release_checkpoint(rows)
+
+    def drift_report(self, spark: SparkSession) -> DataFrame:
+        """Per-wave fit series: (wave, phase, n, <metric>, baseline,
+        ratio). ``baseline`` is the most recent train/retrain fit at or
+        before the wave — the geometry each wave was assigned under."""
+        # bounded global window: one row per wave; single_group pins the
+        # bound and silences the warning
+        from flink_playground_spark.operators.windows import single_group
+
+        m = (
+            Window.partitionBy(single_group("wave"))
+            .orderBy("wave")
+            .rowsBetween(Window.unboundedPreceding, 0)
+        )
+        base = F.last(
+            F.when(F.col("phase").isin("train", "retrain"), F.col(self.metric)),
+            ignorenulls=True,
+        ).over(m)
+        return (
+            spark.read.parquet(self.path)
+            .withColumn("baseline", base)
+            # try_divide: a perfectly-fit geometry has baseline 0.0 and
+            # under ANSI x/0 throws; NULL ratio is handled (and still
+            # triggers) in needs_retrain via the absolute floor
+            .withColumn("ratio", F.try_divide(F.col(self.metric), F.col("baseline")))
+        )
+
+    def needs_retrain(self, spark: SparkSession, threshold: float, min_delta: float) -> bool:
+        """True when the latest wave's fit error exceeds ``threshold`` ×
+        the current geometry's training fit AND the absolute degradation
+        exceeds ``min_delta`` (metric units). The floor keeps a snug
+        geometry (baseline ≈ 0, where held-out noise inflates the ratio)
+        from triggering a full rebuild over an immaterial absolute
+        change. One-row collect of a bounded (per-wave) log."""
+        last = self.drift_report(spark).orderBy(F.desc("wave")).limit(1).collect()
+        if not last or last[0]["baseline"] is None:
+            return False
+        r = last[0]
+        if r[self.metric] - r["baseline"] <= min_delta:
+            return False
+        # a perfectly-fit geometry (baseline 0.0 — Spark's /0 yields a
+        # NULL ratio, and an fp-epsilon-negative baseline flips its
+        # sign) must not mask drift: past the absolute floor, a
+        # degenerate baseline alone is staleness
+        if r["ratio"] is None or r["baseline"] <= 0:
+            return True
+        return r["ratio"] > threshold
 
 
 class StreamingIVFIndex:
@@ -58,99 +175,49 @@ class StreamingIVFIndex:
         kmeans_iters: int = 2,
         n_buckets: int = 8,
     ):
-        import os
-
         self.id_col = id_col
         self.vec_col = vec_col
         self.n_centroids = n_centroids
         self.kmeans_iters = kmeans_iters
         self.centroids_path = f"{path}/centroids"
-        self.metrics_path = f"{path}/metrics"
-        self.cells = BucketedKeyState(f"{path}/cells", ["vid"], n_buckets)
+        self.drift = DriftLog(f"{path}/metrics", "mean_drift")
+        self.cells = TransactionalKeyState(f"{path}/cells", ["vid"], n_buckets)
         self._trained = os.path.isdir(self.centroids_path)
-        self._wave = None  # lazily counted from the metrics log on reattach
 
     def _centroids(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.centroids_path)
 
-    def _next_wave(self, spark: SparkSession) -> int:
-        import os
-
-        if self._wave is None:
-            self._wave = (
-                spark.read.parquet(self.metrics_path).count()
-                if os.path.isdir(self.metrics_path)
-                else 0
+    def _fold(self, vectors: DataFrame, phase: str) -> None:
+        """Assign ``vectors`` to the current centroids — (vid, vec,
+        centroid_id) plus the fit error — and fold them into the cells
+        and the drift log; one assignment pass feeds both."""
+        assigned = (
+            ivf_assign(
+                vectors, self._centroids(vectors.sparkSession), self.id_col, self.vec_col,
+                nprobe=1, keep_sim=True,
             )
-        w, self._wave = self._wave, self._wave + 1
-        return w
-
-    def _record(self, assigned: DataFrame, phase: str, wave: int) -> None:
-        """Append one (wave, phase, n, mean_drift) row: the wave's mean
-        cosine DISTANCE to its assigned centroid. One tiny aggregate of
-        the assignment DataFrame the caller already computed."""
-        m = assigned.agg(
-            F.count("*").alias("n"),
-            F.avg(1.0 - F.col("csim")).alias("mean_drift"),
-        ).select(
-            F.lit(wave).alias("wave"),
-            F.lit(phase).alias("phase"),
-            "n",
-            "mean_drift",
+            .withColumn("err", 1.0 - F.col("csim"))
+            .drop("csim")
+            .localCheckpoint(eager=True)
         )
-        m.coalesce(1).write.mode("append").parquet(self.metrics_path)
+        self.drift.fold(self.cells, assigned, phase)
 
     def ingest(self, batch: DataFrame) -> None:
         """Assign a vector wave to frozen centroids and upsert the cells.
         The first wave also trains (then freezes) the centroids. Every
         wave appends its fit to the drift log."""
-        spark = batch.sparkSession
         first = not self._trained
         if first:
             kmeans_centroids(
                 batch, self.id_col, self.vec_col, self.n_centroids, self.kmeans_iters
             ).write.mode("overwrite").parquet(self.centroids_path)
             self._trained = True
-        assigned = ivf_assign(
-            batch, self._centroids(spark), self.id_col, self.vec_col, nprobe=1,
-            keep_sim=True,
-        ).localCheckpoint(eager=True)  # one assignment pass feeds state AND metrics
-        self._record(assigned, "train" if first else "ingest", self._next_wave(spark))
-        # (vid, vec, centroid_id); __seq lets keep-latest resolve
-        # re-ingestion deterministically (later merge wins)
-        import time
-
-        stamped = assigned.drop("csim").withColumn(
-            "__seq", F.lit(int(time.time() * 1e6))
-        )
-        # fold-only: the IVF index never diffs its state
-        self.cells.merge_keep_latest(stamped, "__seq", return_contents=False)
+        self._fold(batch, "train" if first else "ingest")
 
     def drift_report(self, spark: SparkSession) -> DataFrame:
-        """Per-wave fit series: (wave, phase, n, mean_drift, baseline,
-        ratio). ``baseline`` is the most recent train/retrain fit at or
-        before the wave — the geometry each wave was assigned under."""
-        # bounded global window: one metrics row per ingest wave;
-        # single_group pins the bound and silences the warning
-        from flink_playground_spark.operators.windows import single_group
-
-        m = (
-            Window.partitionBy(single_group("wave"))
-            .orderBy("wave")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        base = F.last(
-            F.when(F.col("phase").isin("train", "retrain"), F.col("mean_drift")),
-            ignorenulls=True,
-        ).over(m)
-        return (
-            spark.read.parquet(self.metrics_path)
-            .withColumn("baseline", base)
-            # try_divide: a perfectly-fit geometry has baseline 0.0 and
-            # under ANSI x/0 throws; NULL ratio is handled (and still
-            # triggers) in needs_retrain via the absolute floor
-            .withColumn("ratio", F.try_divide(F.col("mean_drift"), F.col("baseline")))
-        )
+        """Per-wave fit series (``DriftLog.drift_report``); the metric is
+        ``mean_drift``, the mean cosine distance to the assigned centroid."""
+        return self.drift.drift_report(spark)
 
     def needs_retrain(
         self,
@@ -158,28 +225,8 @@ class StreamingIVFIndex:
         threshold: float = 1.5,
         min_delta: float = 0.05,
     ) -> bool:
-        """True when the latest wave's mean drift exceeds ``threshold`` ×
-        the current geometry's training fit AND the absolute degradation
-        exceeds ``min_delta`` (cosine-distance units). The floor keeps a
-        snug geometry (baseline ≈ 0, where held-out noise inflates the
-        ratio) from triggering a full rebuild over an immaterial absolute
-        change. One-row collect of a bounded (per-wave) log."""
-        last = (
-            self.drift_report(spark).orderBy(F.desc("wave")).limit(1).collect()
-        )
-        if not last or last[0]["baseline"] is None:
-            return False
-        r = last[0]
-        delta = r["mean_drift"] - r["baseline"]
-        if delta <= min_delta:
-            return False
-        # a perfectly-fit geometry (baseline 0.0 — Spark's /0 yields a
-        # NULL ratio, and an fp-epsilon-negative baseline flips its
-        # sign) must not mask drift: past the absolute floor, a
-        # degenerate baseline alone is staleness
-        if r["ratio"] is None or r["baseline"] <= 0:
-            return True
-        return r["ratio"] > threshold
+        """``DriftLog.needs_retrain`` in cosine-distance units."""
+        return self.drift.needs_retrain(spark, threshold, min_delta)
 
     def retrain(self, spark: SparkSession) -> None:
         """Offline geometry rebuild: Lloyd over the CURRENT state, swap
@@ -195,18 +242,7 @@ class StreamingIVFIndex:
         kmeans_centroids(
             corpus, self.id_col, self.vec_col, self.n_centroids, self.kmeans_iters
         ).write.mode("overwrite").parquet(self.centroids_path)
-        assigned = ivf_assign(
-            corpus, self._centroids(spark), self.id_col, self.vec_col, nprobe=1,
-            keep_sim=True,
-        ).localCheckpoint(eager=True)
-        self._record(assigned, "retrain", self._next_wave(spark))
-        import time
-
-        stamped = assigned.drop("csim").withColumn(
-            "__seq", F.lit(int(time.time() * 1e6))
-        )
-        # fold-only: the IVF index never diffs its state
-        self.cells.merge_keep_latest(stamped, "__seq", return_contents=False)
+        self._fold(corpus, "retrain")
 
     def query(
         self, spark: SparkSession, queries: DataFrame, k: int = 5, nprobe: int = 4

@@ -12,8 +12,9 @@ Design:
   (they change only when the benchmark does) — a small parquet that
   broadcasts into every batch's overlap join;
 - each micro-batch shingles ONLY its own documents (work ∝ batch) and
-  semi-joins the eval shingles; hits accumulate in a bucketed state so
-  the running contamination ledger is queryable at any time;
+  semi-joins the eval shingles; hits accumulate in a
+  ``TransactionalKeyState`` ledger, exactly once per wave, so the
+  running contamination ledger is queryable at any time;
 - per-batch cost is flat in stream history: nothing ever re-scans
   previously ingested documents (the property the round-1 streaming
   near-dup lacked and round 2 fixed — same contract here from day one).
@@ -25,7 +26,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_playground_spark.functions.dedupe import shingle_index
-from flink_playground_spark.streaming.state_store import BucketedKeyState
+from flink_playground_spark.streaming.txn_state import TransactionalKeyState
+
+_WRITER = "decontam"
 
 
 class StreamingDecontaminator:
@@ -44,7 +47,7 @@ class StreamingDecontaminator:
         self.text_col = text_col
         self.n = n
         self.eval_path = f"{path}/eval_shingles"
-        self.ledger = BucketedKeyState(f"{path}/ledger", [id_col], n_buckets)
+        self.ledger = TransactionalKeyState(f"{path}/ledger", [id_col], n_buckets)
         # benchmark shingles: computed once, persisted, reused every batch
         (
             shingle_index(eval_df, id_col, text_col, n)
@@ -56,7 +59,9 @@ class StreamingDecontaminator:
 
     def apply_batch(self, batch: DataFrame) -> DataFrame:
         """Shingle the batch, overlap against the persisted eval shingles,
-        fold hits into the ledger; returns this batch's flagged docs."""
+        fold hits into the ledger; returns this batch's flagged docs. The
+        wave commits as the ledger's next unseen batch id, so re-applying
+        a wave whose commit failed folds it once."""
         spark = batch.sparkSession
         ev = F.broadcast(spark.read.parquet(self.eval_path))
         hits = (
@@ -69,7 +74,8 @@ class StreamingDecontaminator:
         )
         # append-only ingestion: each doc arrives once, so keep-latest on
         # the doc id is a plain upsert of its overlap count
-        self.ledger.merge_keep_latest(hits, "n_overlap")
+        batch_id = self.ledger._manifest()["writers"].get(_WRITER, -1) + 1
+        self.ledger.merge_keep_latest(_WRITER, batch_id, hits, "n_overlap")
         return hits
 
     def read(self, spark: SparkSession) -> DataFrame | None:

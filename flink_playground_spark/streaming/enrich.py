@@ -8,22 +8,27 @@ faithful-and-simpler mapping (SURVEY §7.4) is ``foreachBatch``: per
 micro-batch, fold the batch into a compacted keep-latest dim state, then
 join the probe side against the refreshed snapshot.
 
-State is the key-bucketed parquet store (streaming.state_store): each
-micro-batch reads and dynamically overwrites ONLY the hash buckets its
-keys touch, so per-batch IO is proportional to touched buckets — not to
-total state (round 1 rewrote the whole state directory every batch). On
-a cluster the same layout is a Delta/Iceberg MERGE INTO over a
-bucket-partitioned table. The state is O(distinct keys), not O(stream).
+State is ``TransactionalKeyState`` (streaming.txn_state): each
+micro-batch reads ONLY the hash buckets its keys touch and commits their
+new versions in one manifest replace, so per-batch IO is proportional to
+touched buckets — not to total state. On a cluster the same layout is a
+Delta/Iceberg MERGE INTO over a bucket-partitioned table. The state is
+O(distinct keys), not O(stream).
+
+The drain keeps no stream checkpoint, so its epoch ids restart at 0 on
+every call: each call folds under a fresh writer id, and a reused
+``state_dir`` takes the new epochs as new data, not replays.
 """
 
 from __future__ import annotations
 
 import tempfile
+import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
-from flink_playground_spark.streaming.state_store import BucketedKeyState
+from flink_playground_spark.streaming.txn_state import TransactionalKeyState
 
 
 def enrichment_join_stream(
@@ -44,10 +49,11 @@ def enrichment_join_stream(
     """
     spark = probe.sparkSession
     state_dir = state_dir or tempfile.mkdtemp(prefix="fps_dim_state_")
-    state = BucketedKeyState(f"{state_dir}/latest", list(dim_keys), n_buckets=16)
+    state = TransactionalKeyState(f"{state_dir}/latest", list(dim_keys), n_buckets=16)
+    writer = f"enrich-{uuid.uuid4().hex}"
 
     def fold_batch(batch: DataFrame, epoch_id: int) -> None:
-        state.merge_keep_latest(batch, dim_order_col, dim_tiebreakers)
+        state.merge_keep_latest(writer, epoch_id, batch, dim_order_col, dim_tiebreakers)
 
     q = dim_stream.writeStream.foreachBatch(fold_batch).trigger(availableNow=True).start()
     q.awaitTermination()

@@ -17,9 +17,8 @@ deployment separates:
   subspaces, book dict cached driver-side and shipped in the task
   closure) and upserts keep-latest on the vector id, so re-ingesting a
   vector moves it to its current codes. Per-batch work ∝ wave × (m·k);
-  nothing re-reads old vectors, the book parquet is read at most once
-  per process (reattach), and the state merge skips the changelog
-  read-back (fold-only).
+  nothing re-reads old vectors, and the book parquet is read at most
+  once per process (reattach).
 
 Queries score by asymmetric distance computation against the CURRENT
 code state (``pq_adc_topk`` — the same serving math as the batch
@@ -28,21 +27,21 @@ code state (``pq_adc_topk`` — the same serving math as the batch
 STALENESS: frozen codebooks degrade when the ingest distribution
 drifts — quantization error (the winning codeword's squared L2, which
 the encode pass computes anyway) creeps up with no error anywhere.
-Each ingest records the wave's mean error; ``drift_report`` /
-``needs_retrain`` mirror the IVF index's fit-ratio contract.
+Each ingest records the wave's mean error in the same ``DriftLog`` as
+the IVF index, with the same fit-ratio contract.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from flink_playground_spark.functions.similarity import (
     pq_adc_topk,
     pq_encode_rows,
     pq_train,
 )
-from flink_playground_spark.streaming.state_store import BucketedKeyState
+from flink_playground_spark.streaming.ann_index import DriftLog
+from flink_playground_spark.streaming.txn_state import TransactionalKeyState
 
 
 class StreamingPQIndex:
@@ -65,10 +64,9 @@ class StreamingPQIndex:
         self.vec_col = vec_col
         self.dim, self.m, self.n_codes, self.iters = dim, m, n_codes, iters
         self.book_path = f"{path}/book"
-        self.metrics_path = f"{path}/metrics"
-        self.codes = BucketedKeyState(f"{path}/codes", ["vid"], n_buckets)
+        self.drift = DriftLog(f"{path}/metrics", "mean_err")
+        self.codes = TransactionalKeyState(f"{path}/codes", ["vid"], n_buckets)
         self._trained = os.path.isdir(self.book_path)
-        self._wave = None
         # the frozen geometry is BOUNDED (m × n_codes entries) and
         # immutable between (re)trains, so it lives driver-side for the
         # index's lifetime: the parquet copy is the durable/reattach
@@ -95,22 +93,6 @@ class StreamingPQIndex:
             "sub int, code int, codeword array<double>",
         )
 
-    def _next_wave(self, spark: SparkSession) -> int:
-        import os
-
-        if self._wave is None:
-            # reattach: count metric rows without a Spark job (the log
-            # is one tiny file per wave, arrow-readable)
-            import pyarrow.dataset as ds
-
-            self._wave = (
-                ds.dataset(self.metrics_path, format="parquet").count_rows()
-                if os.path.isdir(self.metrics_path)
-                else 0
-            )
-        w, self._wave = self._wave, self._wave + 1
-        return w
-
     def _set_book(
         self, spark: SparkSession, book_df: DataFrame, book_dict: dict | None = None
     ) -> None:
@@ -119,8 +101,8 @@ class StreamingPQIndex:
         pq_train when available (it holds the book driver-side across
         Lloyd rounds), else collected from the bounded local relation.
 
-        The durable parquet copy is written DRIVER-SIDE (pyarrow, same
-        pattern as _write_metric): the geometry is m × n_codes tiny
+        The durable parquet copy is written in-process by pyarrow, as
+        the drift log's rows are: the geometry is m × n_codes tiny
         rows, and the former ``book_df.write.parquet`` cost a ~0.7s
         Spark job per index build (round-13 profile) to move a few KB."""
         import os
@@ -151,69 +133,23 @@ class StreamingPQIndex:
         )
         self._trained = True
 
-    def _encode_wave(self, batch: DataFrame, book: dict) -> DataFrame:
-        """(vid, codes, err): codes keep-latest payload + the wave's
-        per-vector quantization error (Σ over subspaces of the winning
-        codeword's squared L2) from the SAME encode pass — ONE
-        zero-shuffle Arrow stage (pq_encode_rows: all m subspaces per
-        batch, no explode, no (vid)-keyed re-assembly exchange), codes
-        bit-identical to the exploded batch encoder."""
-        return pq_encode_rows(
-            batch, book, self.id_col, self.vec_col, self.dim, self.m, keep_err=True
+    def _fold(self, vectors: DataFrame, phase: str) -> None:
+        """Encode ``vectors`` against the current book and fold the codes
+        into state and the drift log. The encode is ONE zero-shuffle
+        Arrow stage (``pq_encode_rows``: all m subspaces per batch, no
+        explode, no (vid)-keyed re-assembly exchange; codes bit-identical
+        to the exploded batch encoder) that also yields each vector's
+        quantization error (Σ over subspaces of the winning codeword's
+        squared L2) as ``err``. LAZY checkpoint: the drift log's stats
+        job both executes the encode pass and materializes the
+        checkpoint blocks, so the wave costs no separate materialization
+        job; the state merge then reads the checkpointed rows, never
+        re-encoding."""
+        encoded = pq_encode_rows(
+            vectors, self._book(vectors.sparkSession), self.id_col, self.vec_col,
+            self.dim, self.m, keep_err=True,
         )
-
-    def _write_metric(
-        self, wave: int, phase: str, n: int, mean_err: float | None
-    ) -> None:
-        """Append one drift-log row DRIVER-SIDE (pyarrow, no Spark job —
-        the row is literally four scalars; Spark still reads the dir).
-        Schema matches the former DataFrame write: wave int32 (lit(int)),
-        phase string, n int64 (count), mean_err float64."""
-        import os
-
-        import pyarrow as pa
-        import pyarrow.parquet as papq
-
-        os.makedirs(self.metrics_path, exist_ok=True)
-        papq.write_table(
-            pa.table(
-                {
-                    "wave": pa.array([wave], pa.int32()),
-                    "phase": pa.array([phase], pa.string()),
-                    "n": pa.array([n], pa.int64()),
-                    "mean_err": pa.array([mean_err], pa.float64()),
-                }
-            ),
-            f"{self.metrics_path}/wave-{wave:06d}-{phase}.parquet",
-        )
-
-    def _fold_wave(self, spark: SparkSession, encoded: DataFrame, phase: str) -> None:
-        """Fold one checkpointed encode pass into state + drift log with
-        the minimum job count: ONE collect of per-bucket (count, Σerr)
-        yields the wave metrics AND the touched buckets (so the merge
-        skips its discovery job), the metric row lands driver-side, and
-        the state merge is fold-only (the PQ index never diffs state) —
-        three Spark jobs per wave total, encode included."""
-        import time
-
-        rows = sorted(
-            encoded.groupBy(self.codes._bucket().alias("b"))
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("err").alias("s"))
-            .collect(),
-            key=lambda r: r["b"],
-        )
-        n = int(sum(r["n"] for r in rows))
-        mean = (sum(float(r["s"]) for r in rows) / n) if n else None
-        self._write_metric(self._next_wave(spark), phase, n, mean)
-        stamped = encoded.drop("err").withColumn(
-            "__seq", F.lit(int(time.time() * 1e6))
-        )
-        self.codes.merge_keep_latest(
-            stamped,
-            "__seq",
-            return_contents=False,
-            _touched=[int(r["b"]) for r in rows],
-        )
+        self.drift.fold(self.codes, encoded.localCheckpoint(eager=False), phase)
 
     def ingest(self, batch: DataFrame) -> None:
         """Encode a vector wave against the frozen codebooks and upsert
@@ -227,36 +163,12 @@ class StreamingPQIndex:
                 self.n_codes, self.iters, _return_book_dict=True,
             )
             self._set_book(spark, bdf, bdict)
-        # LAZY checkpoint: _fold_wave's stats collect is the action that
-        # both executes the encode pass and materializes the checkpoint
-        # blocks, so the wave costs no separate materialization job; the
-        # state merge then reads the checkpointed rows, never re-encoding
-        encoded = self._encode_wave(batch, self._book(spark)).localCheckpoint(
-            eager=False
-        )
-        self._fold_wave(spark, encoded, "train" if first else "ingest")
+        self._fold(batch, "train" if first else "ingest")
 
     def drift_report(self, spark: SparkSession) -> DataFrame:
-        """(wave, phase, n, mean_err, baseline, ratio) — baseline is the
-        most recent train/retrain fit at or before the wave."""
-        # bounded global window: one metrics row per ingest wave;
-        # single_group pins the bound and silences the warning
-        from flink_playground_spark.operators.windows import single_group
-
-        w = (
-            Window.partitionBy(single_group("wave"))
-            .orderBy("wave")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        base = F.last(
-            F.when(F.col("phase").isin("train", "retrain"), F.col("mean_err")),
-            ignorenulls=True,
-        ).over(w)
-        return (
-            spark.read.parquet(self.metrics_path)
-            .withColumn("baseline", base)
-            .withColumn("ratio", F.try_divide(F.col("mean_err"), F.col("baseline")))
-        )
+        """Per-wave fit series (``DriftLog.drift_report``); the metric is
+        ``mean_err``, the mean squared quantization error."""
+        return self.drift.drift_report(spark)
 
     def needs_retrain(
         self,
@@ -264,17 +176,8 @@ class StreamingPQIndex:
         threshold: float = 1.5,
         min_delta: float = 0.05,
     ) -> bool:
-        """Same contract as StreamingIVFIndex.needs_retrain, in
-        quantization-error units."""
-        last = self.drift_report(spark).orderBy(F.desc("wave")).limit(1).collect()
-        if not last or last[0]["baseline"] is None:
-            return False
-        r = last[0]
-        if r["mean_err"] - r["baseline"] <= min_delta:
-            return False
-        if r["ratio"] is None or r["baseline"] <= 0:
-            return True
-        return r["ratio"] > threshold
+        """``DriftLog.needs_retrain`` in quantization-error units."""
+        return self.drift.needs_retrain(spark, threshold, min_delta)
 
     def retrain(self, spark: SparkSession, corpus: DataFrame) -> None:
         """Offline geometry rebuild from a CALLER-SUPPLIED training
@@ -288,10 +191,7 @@ class StreamingPQIndex:
             self.n_codes, self.iters, _return_book_dict=True,
         )
         self._set_book(spark, bdf, bdict)
-        encoded = self._encode_wave(corpus, self._book(spark)).localCheckpoint(
-            eager=False
-        )  # lazy: materialized by _fold_wave's stats collect (see ingest)
-        self._fold_wave(spark, encoded, "retrain")
+        self._fold(corpus, "retrain")
 
     def query(self, spark: SparkSession, queries: DataFrame, k: int = 5) -> DataFrame:
         """Approximate top-k neighbors of each query vector from the

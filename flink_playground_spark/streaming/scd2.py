@@ -3,8 +3,10 @@
 Batch ``scd2_build`` (operators/scd.py) derives validity intervals from
 the full changelog; this maintainer keeps the SCD2 table current as
 changes arrive in micro-batches, with per-batch IO proportional to the
-buckets the batch touches — the same contract as the other foreachBatch
-state (streaming/state_store.py).
+buckets the batch touches — the same IO contract as the keyed
+foreachBatch state (streaming/txn_state.py). Unlike that store, this
+maintainer rewrites its buckets by dynamic partition overwrite: not
+atomic across buckets, and no replay ledger.
 
 Why the state is the RAW changelog, not the intervals: intervals are a
 LOSSY collapse (consecutive equal states merge). With history A@1, A@5
@@ -31,7 +33,7 @@ from pyspark.sql import functions as F
 
 from flink_playground_spark.operators.dedup import dedup_latest
 from flink_playground_spark.operators.scd import scd2_build
-from flink_playground_spark.streaming.state_store import BUCKET_COL
+from flink_playground_spark.streaming.txn_state import BUCKET_COL
 
 
 class Scd2Maintainer:

@@ -19,15 +19,15 @@ Round-10 redesign, closing the round-9 verdict's one scale flaw:
 - **Ingest is write-only** (``AppendDeltaState.append``): a wave's
   partials land in a brand-new immutable delta dir; prior state is
   never read OR rewritten, so per-wave bytes written ∝ wave grams (the
-  old ``BucketedKeyState.merge_aggregate`` rewrote the entire
-  accumulated ledger every wave, because gram hashes touch every
+  bucketed ``merge_aggregate`` a keyed store offers would rewrite the
+  entire accumulated ledger every wave, because gram hashes touch every
   bucket — per-wave IO ∝ total corpus). Bucket partitioning is dropped
   on purpose: there is no keyed point-lookup to prune for (``firsts``
   always folds the whole ledger), and hash keys spray every bucket
   anyway — the LSM delta-file shape is the right layout. Compaction
   every ``compact_every`` appends bounds read fan-in; replay-delivered
   waves are skipped via the writers map (exactly-once under
-  foreachBatch's at-least-once, which the old ledger was NOT).
+  foreachBatch's at-least-once).
 - **Exactness is restored at rewrite time by a residual raw-gram
   phase** (the batch operator's own hash-prune argument): the ledger's
   per-hash counts are a PRUNE — a hash with total count 1 is provably a

@@ -1,13 +1,13 @@
 """Transactional bucketed state: exactly-once foreachBatch merges.
 
-``BucketedKeyState`` (state_store.py) is correct under at-most-once
-batch delivery, but foreachBatch is AT-LEAST-ONCE: if the job dies
-after the state write and before Spark commits the batch's offsets to
-the checkpoint, the batch REPLAYS. Keep-latest merges absorb a replay
-(idempotent); aggregate merges DOUBLE-COUNT it — the one correctness
-hole in the plain store.
+The one keyed-state primitive of the streaming folds (keep-latest,
+mergeable aggregates, CDC apply, arbitrary transitions). foreachBatch is
+AT-LEAST-ONCE: if the job dies after the state write and before Spark
+commits the batch's offsets to the checkpoint, the batch REPLAYS.
+Keep-latest merges would absorb a replay (idempotent); aggregate merges
+would DOUBLE-COUNT it.
 
-This store closes it with the snapshot-manifest technique
+This store makes every merge exactly-once with the snapshot-manifest technique
 (operators/snapshots.py): data files are immutable and versioned, and a
 single atomic manifest replace is the commit point.
 
@@ -18,8 +18,12 @@ Layout::
                                     "txn": t,
                                     "buckets": {"3": 7, ...},
                                     "n_buckets": 16,
+                                    "keys": ["k", ...],
                                     "schema": {<StructType JSON>}}
                                    (bucket -> txn of its current version;
+                                   keys = the bucketing keys, checked on
+                                   every manifest read so a reattach with
+                                   other keys cannot mis-route them;
                                    schema = the committed state columns,
                                    so reads skip parquet schema inference)
 
@@ -41,7 +45,8 @@ Merge protocol for writer ``w``, batch ``b``:
    directory: nothing is overwritten, a crash mid-write leaves only
    orphans);
 4. atomically replace the manifest pointing the touched buckets at the
-   new txn and recording ``writers[w] = b`` — the commit. A crash before (4) replays the batch against the
+   new txn (a touched bucket the merge left empty leaves the manifest)
+   and recording ``writers[w] = b`` — the commit. A crash before (4) replays the batch against the
    OLD manifest and reproduces the same merge; orphan files from the
    failed attempt are shadowed, then garbage-collectable by ``vacuum``.
 
@@ -143,10 +148,19 @@ class TransactionalKeyState:
         # manifests (pre-rescale feature) carry no count; the constructor
         # value stands for those.
         self.n_buckets = manifest.get("n_buckets", self.n_buckets)
+        # the keys are not adoptable like the count: other keys hash the
+        # same rows into other buckets. Manifests written before keys
+        # were recorded skip the check until their next commit.
+        if manifest.get("keys", self.keys) != self.keys:
+            raise ValueError(
+                f"keyed state at {self.path} is bucketed on {manifest['keys']}; "
+                f"reattaching with keys {self.keys} would mis-route them"
+            )
         return manifest
 
     def _commit(self, manifest: dict) -> None:
         manifest["n_buckets"] = self.n_buckets
+        manifest["keys"] = self.keys
         tmp = f"{self.path}/manifest.json.tmp"
         with open(tmp, "w") as fh:
             json.dump(manifest, fh)
@@ -175,6 +189,16 @@ class TransactionalKeyState:
         if "schema" in manifest:
             reader = reader.schema(StructType.fromJson(manifest["schema"]))
         return reader.parquet(*paths)
+
+    def _written_buckets(self, txn: int) -> set[int]:
+        """Buckets a txn's write produced (directory listing: metadata,
+        not a Spark job)."""
+        tdir = f"{self.path}/t{txn}"
+        if not os.path.isdir(tdir):
+            return set()
+        return {
+            int(d.split("=")[1]) for d in os.listdir(tdir) if d.startswith(f"{BUCKET_COL}=")
+        }
 
     def _check_columns(self, manifest: dict, cols: Sequence[str]) -> None:
         """Refuse a batch whose columns differ from the committed state's
@@ -240,6 +264,33 @@ class TransactionalKeyState:
                 base, [*self.keys, BUCKET_COL], order_col, tiebreakers
             ),
             on_write,
+            by_bucket=True,
+        )
+
+    def merge_changes(
+        self,
+        writer_id: str,
+        batch_id: int,
+        changes: DataFrame,
+        op_col: str,
+        order_col: str,
+        tiebreakers: Sequence[str] = (),
+    ) -> bool:
+        """CDC apply — the file-level ``MERGE INTO`` — exactly once per
+        (writer, batch): the LATEST change per key (by ``order_col`` +
+        ``tiebreakers``, the stored row competing at its own order
+        value) decides; a winner whose ``op_col`` is ``'D'`` deletes the
+        key, any other op upserts it. So a delete-then-reinsert inside
+        one batch resolves to the reinsert and vice versa. The state
+        keeps ``op_col`` (the winning op); a bucket whose last key is
+        deleted leaves the manifest."""
+        return self._merge(
+            writer_id,
+            batch_id,
+            changes,
+            lambda base, cols: dedup_latest(
+                base, [*self.keys, BUCKET_COL], order_col, tiebreakers
+            ).filter(F.col(op_col) != "D"),
             by_bucket=True,
         )
 
@@ -365,8 +416,15 @@ class TransactionalKeyState:
                     side.result()
         finally:
             tagged.unpersist()
+        # a touched bucket the combine left empty (a CDC delete of its
+        # last key, a transition that drops its rows) has no directory
+        # under t<txn>: it leaves the manifest, as in ``prune``
+        written = self._written_buckets(txn)
         for b in touched:
-            manifest["buckets"][str(b)] = txn
+            if b in written:
+                manifest["buckets"][str(b)] = txn
+            else:
+                manifest["buckets"].pop(str(b), None)
         manifest["writers"][writer_id] = batch_id
         manifest["txn"] = txn
         manifest["schema"] = schema.jsonValue()
@@ -477,12 +535,7 @@ class TransactionalKeyState:
             tagged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(
                 f"{self.path}/t{txn}"
             )
-            written = [
-                int(d.split("=")[1])
-                for d in os.listdir(f"{self.path}/t{txn}")
-                if d.startswith(f"{BUCKET_COL}=")
-            ]
-            manifest["buckets"] = {str(b): txn for b in written}
+            manifest["buckets"] = {str(b): txn for b in self._written_buckets(txn)}
             manifest["txn"] = txn
             self._commit(manifest)
             if self.retain_txns:
@@ -552,7 +605,7 @@ class AppendDeltaState:
     - replay-safe exactly like ``TransactionalKeyState``: the
       ``writers`` map skips re-delivered (writer, batch) pairs BEFORE
       any write — an at-least-once foreachBatch redelivery cannot
-      double-count (the plain BucketedKeyState ledger could).
+      double-count.
 
     Layout::
 

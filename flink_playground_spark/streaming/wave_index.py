@@ -127,7 +127,7 @@ def state_bytes(workdir: str, ledger: str) -> int:
     )
 
 
-def _release(df: DataFrame) -> None:
+def release_checkpoint(df: DataFrame) -> None:
     """Drop the blocks of a local checkpoint nothing reads again —
     ``RDD.unpersist`` without its warning that a local checkpoint cannot
     be recomputed once unpersisted."""
@@ -300,7 +300,7 @@ class WaveIndex:
             self._fold_wave(wave, batch_id, update)
         finally:
             for df in self._pinned:
-                _release(df)
+                release_checkpoint(df)
             self._pinned.clear()
 
     def _fold_wave(self, wave: DataFrame, batch_id: int, update: bool) -> None:

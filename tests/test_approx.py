@@ -169,7 +169,7 @@ def test_hist_sketch_mergeable_and_streaming_state(spark, sf_dir, tmp_path):
     batch sketch — persistent streaming percentiles."""
     from flink_playground_spark.functions.approx import hist_merge, hist_sketch
     from flink_playground_spark.sources.tables import load_table
-    from flink_playground_spark.streaming.state_store import BucketedKeyState
+    from flink_playground_spark.streaming.txn_state import TransactionalKeyState
 
     events = load_table(spark, sf_dir, "events")
     lo, hi, n_bins = 0.0, 20.0, 64
@@ -185,10 +185,10 @@ def test_hist_sketch_mergeable_and_streaming_state(spark, sf_dir, tmp_path):
     }
     assert merged == direct
 
-    st = BucketedKeyState(str(tmp_path / "hist_state"), ["bin"], n_buckets=4)
-    for wave in (a, b):
+    st = TransactionalKeyState(str(tmp_path / "hist_state"), ["bin"], n_buckets=4)
+    for i, wave in enumerate((a, b)):
         st.merge_aggregate(
-            hist_sketch(wave, "value", lo, hi, n_bins), [F.sum("cnt").alias("cnt")]
+            "hist", i, hist_sketch(wave, "value", lo, hi, n_bins), [F.sum("cnt").alias("cnt")]
         )
     stateful = {r.bin: r.cnt for r in st.read(spark).collect()}
     assert stateful == direct
@@ -202,7 +202,7 @@ def test_streaming_hll_distinct_state(spark, sf_dir, tmp_path):
     bytes) — mergeable-sketch state as the streaming distinct-count
     path."""
     from flink_playground_spark.sources.tables import load_table
-    from flink_playground_spark.streaming.state_store import BucketedKeyState
+    from flink_playground_spark.streaming.txn_state import TransactionalKeyState
 
     events = load_table(spark, sf_dir, "events")
     want = {
@@ -212,13 +212,13 @@ def test_streaming_hll_distinct_state(spark, sf_dir, tmp_path):
         .collect()
     }
 
-    st = BucketedKeyState(str(tmp_path / "hll"), ["event_type"], n_buckets=4)
+    st = TransactionalKeyState(str(tmp_path / "hll"), ["event_type"], n_buckets=4)
     for w in range(3):
         wave = events.filter(F.col("event_id") % 3 == w)
         partials = wave.groupBy("event_type").agg(
             F.hll_sketch_agg("user_id", F.lit(12)).alias("sk")
         )
-        st.merge_aggregate(partials, [F.hll_union_agg("sk").alias("sk")])
+        st.merge_aggregate("hll", w, partials, [F.hll_union_agg("sk").alias("sk")])
 
     got = {
         r.event_type: r.d

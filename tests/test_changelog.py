@@ -19,7 +19,7 @@ from flink_playground_spark.streaming.changelog import (
     changelog_ops,
     keep_latest_changelog_stream,
 )
-from flink_playground_spark.streaming.state_store import BucketedKeyState
+from flink_playground_spark.streaming.txn_state import TransactionalKeyState
 
 
 # the reference fixture: four upserts of iso='a', one per wave, and the
@@ -116,38 +116,43 @@ def test_changelog_ops_delete(spark):
 
 def test_bucketed_state_leaves_untouched_buckets_alone(spark, tmp_path):
     """Merging a batch that touches one bucket must not rewrite the
-    parquet files of other buckets (per-batch IO ∝ touched buckets)."""
+    parquet files of other buckets (per-batch IO ∝ touched buckets):
+    untouched buckets keep their manifest entry and their files."""
+    import json
+
     path = str(tmp_path / "state")
-    st = BucketedKeyState(path, ["k"], n_buckets=8)
+    st = TransactionalKeyState(path, ["k"], n_buckets=8)
     seed = spark.createDataFrame(
         [(f"k{i}", i, f"v{i}") for i in range(64)], "k string, seq long, payload string"
     )
-    st.merge_keep_latest(seed, "seq")
-    before = {
-        f: os.path.getmtime(f) for f in glob.glob(f"{path}/__bucket=*/*.parquet")
-    }
-    assert len({os.path.dirname(f) for f in before}) > 1  # multiple buckets exist
+    st.merge_keep_latest("w", 0, seed, "seq")
+
+    def manifest():
+        with open(f"{path}/manifest.json") as fh:
+            return json.load(fh)["buckets"]
+
+    before_manifest = manifest()
+    assert len(before_manifest) > 1  # multiple buckets exist
+    before = {f: os.path.getmtime(f) for f in glob.glob(f"{path}/t*/__bucket=*/*.parquet")}
 
     one = spark.createDataFrame([("k0", 100, "updated")], "k string, seq long, payload string")
-    old_t, new_t = st.merge_keep_latest(one, "seq")
+    assert st.merge_keep_latest("w", 1, one, "seq")
     bucket_of_k0 = spark.range(1).select(
         F.pmod(F.xxhash64(F.lit("k0")), F.lit(8)).cast("int").alias("b")
     ).collect()[0]["b"]
-    after = {f: os.path.getmtime(f) for f in glob.glob(f"{path}/__bucket=*/*.parquet")}
-    untouched_dirs = {
-        os.path.dirname(f)
-        for f in before
-        if os.path.basename(os.path.dirname(f)) != f"__bucket={bucket_of_k0}"
+    after_manifest = manifest()
+    untouched = {b: v for b, v in before_manifest.items() if b != str(bucket_of_k0)}
+    assert untouched, "expected untouched buckets"
+    assert {b: after_manifest[b] for b in untouched} == untouched
+    assert after_manifest[str(bucket_of_k0)] != before_manifest[str(bucket_of_k0)]
+    after = {f: os.path.getmtime(f) for f in glob.glob(f"{path}/t*/__bucket=*/*.parquet")}
+    surviving = {
+        f for f in before if os.path.basename(os.path.dirname(f)) != f"__bucket={bucket_of_k0}"
     }
-    surviving = {f for f in before if os.path.dirname(f) in untouched_dirs}
-    assert surviving, "expected untouched buckets"
     for f in surviving:
         assert f in after and after[f] == before[f], f"untouched bucket rewritten: {f}"
-    # and the diff is confined to the touched bucket
-    assert {r["k"] for r in old_t.collect()} <= {f"k{i}" for i in range(64)}
-    assert ("k0", 100, "updated") in {
-        (r["k"], r["seq"], r["payload"]) for r in new_t.collect()
-    }
+    state = {(r["k"], r["seq"], r["payload"]) for r in st.read(spark).collect()}
+    assert ("k0", 100, "updated") in state and len(state) == 64
 
 
 def test_outer_join_changelog_reference_fixture(spark):
@@ -228,9 +233,11 @@ def test_changelog_restart_resumes_from_checkpoint(spark, tmp_path):
 
 
 def test_state_read_roundtrip(spark, tmp_path):
-    st = BucketedKeyState(str(tmp_path / "s"), ["k"], n_buckets=4)
+    st = TransactionalKeyState(str(tmp_path / "s"), ["k"], n_buckets=4)
     assert st.read(spark) is None
     st.merge_keep_latest(
+        "w",
+        0,
         spark.createDataFrame([("a", 1, "x"), ("a", 2, "y")], "k string, seq long, p string"),
         "seq",
     )
@@ -275,19 +282,21 @@ def test_changelog_ops_reconstruct_property(spark):
 
 
 def test_bucketed_state_refuses_layout_mismatch(spark, tmp_path):
-    """Reattaching to on-disk state with a different bucket count (or
-    key set) would silently mis-route keys — it must refuse loudly."""
+    """Reattaching to on-disk state with a different key set would
+    silently mis-route keys — it must refuse loudly. A different bucket
+    count is adopted from the committed manifest instead."""
     path = str(tmp_path / "s")
-    st = BucketedKeyState(path, ["k"], n_buckets=8)
+    st = TransactionalKeyState(path, ["k"], n_buckets=8)
     st.merge_keep_latest(
-        spark.createDataFrame([("a", 1, "x")], "k string, seq long, p string"), "seq"
+        "w", 0, spark.createDataFrame([("a", 1, "x")], "k string, seq long, p string"), "seq"
     )
     with pytest.raises(ValueError, match="mis-route"):
-        BucketedKeyState(path, ["k"], n_buckets=16)
-    with pytest.raises(ValueError, match="mis-route"):
-        BucketedKeyState(path, ["other"], n_buckets=8)
+        TransactionalKeyState(path, ["other"], n_buckets=8).read(spark)
+    other_count = TransactionalKeyState(path, ["k"], n_buckets=16)
+    assert {(r["k"], r["seq"]) for r in other_count.read(spark).collect()} == {("a", 1)}
+    assert other_count.n_buckets == 8
     # same layout reattaches fine
-    st2 = BucketedKeyState(path, ["k"], n_buckets=8)
+    st2 = TransactionalKeyState(path, ["k"], n_buckets=8)
     assert {(r["k"], r["seq"]) for r in st2.read(spark).collect()} == {("a", 1)}
 
 

@@ -3,6 +3,7 @@ bucketed."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from flink_playground_spark.queries import EXTRA_REGISTRY, REGISTRY
@@ -66,26 +67,32 @@ def test_streaming_chunk_dedup_state_reattach(spark, sf_dir, tmp_path):
 
 
 def test_merge_changes_cdc_apply(spark, tmp_path):
-    """CDC apply on bucketed state: upserts, deletes, delete-then-
-    reinsert ordering, stale rows, and the fully-emptied-bucket case
-    where dynamic overwrite alone would leave stale files."""
-    import os
+    """CDC apply on transactional state: upserts, deletes, delete-then-
+    reinsert ordering, stale rows, and a wave that deletes every key of
+    one bucket — the bucket must leave the manifest (no txn directory
+    holds its rows) while the untouched buckets keep their entries."""
+    import json
 
-    from flink_playground_spark.streaming.state_store import BucketedKeyState
+    from flink_playground_spark.streaming.txn_state import TransactionalKeyState
 
     path = str(tmp_path / "cdc_state")
-    st = BucketedKeyState(path, ["k"], n_buckets=4)
+    st = TransactionalKeyState(path, ["k"], n_buckets=4)
+    waves = iter(range(100))
 
     def apply(rows):
         df = spark.createDataFrame(rows, "op string, k long, v string, ver long")
-        return st.merge_changes(df, "op", "ver")
+        return st.merge_changes("cdc", next(waves), df, "op", "ver")
+
+    def buckets():
+        with open(f"{path}/manifest.json") as fh:
+            return json.load(fh)["buckets"]
 
     # wave 1: plain inserts
     apply([("U", k, f"v{k}", 1) for k in range(8)])
     assert {(r.k, r.v) for r in st.read(spark).collect()} == {(k, f"v{k}") for k in range(8)}
 
     # wave 2: update 0, delete 1, stale update of 2 (ver 0 loses to stored
-    # ver 1), delete-then-reinsert 3, insert-then-delete 4... within batch
+    # ver 1), delete-then-reinsert 3, insert-then-delete 9 within batch
     apply(
         [
             ("U", 0, "v0b", 2),
@@ -101,10 +108,7 @@ def test_merge_changes_cdc_apply(spark, tmp_path):
     want = {(0, "v0b"), (2, "v2"), (3, "back"), (4, "v4"), (5, "v5"), (6, "v6"), (7, "v7")}
     assert got == want
 
-    # wave 3: delete EVERY key of one bucket — its partition dir must
-    # disappear, not keep stale files
-    from pyspark.sql import functions as F
-
+    # wave 3: delete EVERY key of one bucket
     bucket_of = {
         r.k: r.b
         for r in spark.createDataFrame([(k,) for k in range(10)], "k long")
@@ -113,63 +117,73 @@ def test_merge_changes_cdc_apply(spark, tmp_path):
     }
     target = bucket_of[0]
     victims = [k for k, _ in want if bucket_of[k] == target]
-    mtimes_before = {
-        d: os.path.getmtime(f"{path}/{d}") for d in os.listdir(path) if d.startswith("__bucket=")
-    }
-    apply([("D", k, None, 10) for k in victims])
-    assert not os.path.isdir(f"{path}/__bucket={target}")
+    before = buckets()
+    assert str(target) in before
+    assert apply([("D", k, None, 10) for k in victims])
+    after = buckets()
+    assert str(target) not in after
+    assert after == {b: v for b, v in before.items() if b != str(target)}
     got = {(r.k, r.v) for r in st.read(spark).collect()}
     assert got == {(k, v) for k, v in want if bucket_of[k] != target}
-    # untouched buckets' files were not rewritten
-    for d, m in mtimes_before.items():
-        if d != f"__bucket={target}" and os.path.isdir(f"{path}/{d}"):
-            assert os.path.getmtime(f"{path}/{d}") == m, f"{d} was rewritten"
 
     # reattach: a new instance sees the same state
-    st2 = BucketedKeyState(path, ["k"], n_buckets=4)
+    st2 = TransactionalKeyState(path, ["k"], n_buckets=4)
     assert {(r.k, r.v) for r in st2.read(spark).collect()} == got
 
 
-def test_bucketed_state_schema_evolution(spark, tmp_path):
-    """Additive schema evolution on keep-latest state: a later wave may
-    carry a new column (old rows read as null) and an even later wave
-    may omit it again (retained values survive) — the merged schema is
-    the union, nothing is dropped."""
-    from flink_playground_spark.streaming.state_store import BucketedKeyState
+def _listing(path):
+    import os
 
-    st = BucketedKeyState(str(tmp_path / "evo"), ["k"], n_buckets=4)
-    st.merge_keep_latest(
-        spark.createDataFrame([(1, "a", 1), (2, "b", 1)], "k long, v string, ts long"),
-        "ts",
+    return sorted(
+        (os.path.relpath(os.path.join(d, f), path), os.path.getsize(os.path.join(d, f)))
+        for d, _, files in os.walk(path)
+        for f in files
     )
-    # wave 2 ADDS `quality`
+
+
+def test_bucketed_state_schema_evolution(spark, tmp_path):
+    """Schema drift on keep-latest state is refused loudly: a later wave
+    that adds a column, or omits a committed one, raises a ValueError
+    naming it before anything is written — the store never null-fills
+    or drops a column silently."""
+    from flink_playground_spark.streaming.txn_state import TransactionalKeyState
+
+    path = str(tmp_path / "evo")
+    st = TransactionalKeyState(path, ["k"], n_buckets=4)
     st.merge_keep_latest(
+        "w",
+        0,
         spark.createDataFrame(
-            [(2, "b2", 2, 0.9), (3, "c", 2, 0.5)],
-            "k long, v string, ts long, quality double",
+            [(1, "a", 1, 0.9), (2, "b", 1, 0.5)], "k long, v string, ts long, quality double"
         ),
         "ts",
     )
-    got = {r.k: (r.v, r.quality) for r in st.read(spark).collect()}
-    assert got == {1: ("a", None), 2: ("b2", 0.9), 3: ("c", 0.5)}
-    # wave 3 OMITS `quality` again: existing values survive, the new row
-    # takes null
-    st.merge_keep_latest(
-        spark.createDataFrame([(4, "d", 3)], "k long, v string, ts long"), "ts"
+    listing = _listing(path)
+    added = spark.createDataFrame(
+        [(2, "b2", 2, 0.9, "x")], "k long, v string, ts long, quality double, src string"
     )
+    with pytest.raises(ValueError, match="src"):
+        st.merge_keep_latest("w", 1, added, "ts")
+    omitted = spark.createDataFrame([(4, "d", 3)], "k long, v string, ts long")
+    with pytest.raises(ValueError, match="quality"):
+        st.merge_keep_latest("w", 1, omitted, "ts")
+    assert _listing(path) == listing
     got = {r.k: (r.v, r.quality) for r in st.read(spark).collect()}
-    assert got == {1: ("a", None), 2: ("b2", 0.9), 3: ("c", 0.5), 4: ("d", None)}
+    assert got == {1: ("a", 0.9), 2: ("b", 0.5)}
 
 
 def test_merge_changes_schema_evolution_keeps_state_columns(spark, tmp_path):
-    """Additive schema evolution on CDC state (r2 ADVICE): a column added
-    by an earlier wave must survive a later wave that omits it — out_cols
-    is the union of stored-state and batch columns, like the sibling
-    merges."""
-    from flink_playground_spark.streaming.state_store import BucketedKeyState
+    """Schema drift on CDC state is refused loudly: a wave that omits a
+    committed column (or adds one) raises a ValueError naming it, the
+    stored columns and rows stay as committed, and the directory listing
+    is unchanged."""
+    from flink_playground_spark.streaming.txn_state import TransactionalKeyState
 
-    st = BucketedKeyState(str(tmp_path / "cdc_evo"), ["k"], n_buckets=4)
+    path = str(tmp_path / "cdc_evo")
+    st = TransactionalKeyState(path, ["k"], n_buckets=4)
     st.merge_changes(
+        "cdc",
+        0,
         spark.createDataFrame(
             [("U", 1, "a", 1, 0.9), ("U", 2, "b", 1, 0.5)],
             "op string, k long, v string, ver long, quality double",
@@ -177,29 +191,23 @@ def test_merge_changes_schema_evolution_keeps_state_columns(spark, tmp_path):
         "op",
         "ver",
     )
-    # later wave OMITS `quality`: stored values must survive, the new
-    # row takes null, key 2's update nulls-but-keeps the column
-    st.merge_changes(
-        spark.createDataFrame(
-            [("U", 2, "b2", 2), ("U", 3, "c", 2), ("D", 1, None, 2)],
-            "op string, k long, v string, ver long",
-        ),
-        "op",
-        "ver",
+    listing = _listing(path)
+    omitted = spark.createDataFrame(
+        [("U", 2, "b2", 2), ("U", 3, "c", 2), ("D", 1, None, 2)],
+        "op string, k long, v string, ver long",
     )
-    got = {r.k: (r.v, r.quality) for r in st.read(spark).collect()}
-    assert got == {2: ("b2", None), 3: ("c", None)}
-    # and a re-adding wave restores values for its rows
-    st.merge_changes(
-        spark.createDataFrame(
-            [("U", 3, "c2", 3, 0.7)],
-            "op string, k long, v string, ver long, quality double",
-        ),
-        "op",
-        "ver",
+    with pytest.raises(ValueError, match="quality"):
+        st.merge_changes("cdc", 1, omitted, "op", "ver")
+    added = spark.createDataFrame(
+        [("U", 3, "c", 2, 0.7, "x")],
+        "op string, k long, v string, ver long, quality double, src string",
     )
+    with pytest.raises(ValueError, match="src"):
+        st.merge_changes("cdc", 1, added, "op", "ver")
+    assert _listing(path) == listing
     got = {r.k: (r.v, r.quality) for r in st.read(spark).collect()}
-    assert got == {2: ("b2", None), 3: ("c2", 0.7)}
+    assert got == {1: ("a", 0.9), 2: ("b", 0.5)}
+
 
 
 def test_exact_substring_dedup_offset_shifted_golden(spark):

@@ -154,10 +154,14 @@ def test_streaming_ivf_index_recall_and_exact_sims(spark, tmp_path):
 
     emb = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
     idx = StreamingIVFIndex(str(tmp_path / "ivf"), n_centroids=16, kmeans_iters=2)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    held = set(persisted().keys())
     for w in range(3):
         idx.ingest(emb.filter(F.col("vec_id") % 3 == w))
     # re-ingest one wave: keep-latest state, no duplicate neighbors
     idx.ingest(emb.filter(F.col("vec_id") % 3 == 0))
+    # every wave's assignment checkpoint is released when its fold ends
+    assert set(persisted().keys()) <= held
     assert idx.cells.read(spark).groupBy("vid").count().filter("count > 1").count() == 0
 
     queries = emb.filter(F.col("vec_id") < 20)
@@ -235,7 +239,10 @@ def test_streaming_ivf_drift_detection_and_retrain(spark, tmp_path):
         return len(exact & approx) / len(exact)
 
     stale_recall = recall()
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    held = set(persisted().keys())
     idx.retrain(spark)
+    assert set(persisted().keys()) <= held
     fresh = idx.drift_report(spark).orderBy(F.desc("wave")).first()
     assert fresh["phase"] == "retrain" and fresh["ratio"] == 1.0
     assert not idx.needs_retrain(spark, threshold=1.5)
@@ -425,9 +432,13 @@ def test_streaming_pq_index_matches_frozen_book_batch(spark, tmp_path):
 
     emb = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
     idx = StreamingPQIndex(str(tmp_path / "pq"))
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    held = set(persisted().keys())
     for w in range(3):
         idx.ingest(emb.filter(F.col("vec_id") % 3 == w))
     idx.ingest(emb.filter(F.col("vec_id") % 3 == 0))  # re-ingest: keep-latest
+    # every wave's encode checkpoint is released when its fold ends
+    assert set(persisted().keys()) <= held
     state = idx.codes.read(spark)
     assert state.groupBy("vid").count().filter("count > 1").count() == 0
     assert state.count() == emb.count()
@@ -458,4 +469,77 @@ def test_streaming_pq_index_matches_frozen_book_batch(spark, tmp_path):
 
     # rebuild from a caller-supplied corpus resets the baseline
     idx.retrain(spark, shifted)
+    assert set(persisted().keys()) <= held
     assert not idx.needs_retrain(spark, threshold=1.5)
+
+
+@pytest.mark.parametrize("family", ["decontam", "ivf", "pq"])
+def test_crash_after_state_commit_reingests_once(spark, tmp_path, family):
+    """A fault on a non-first wave between the state commit and the
+    drift-log append (the decontaminator keeps no drift log: there the
+    fault is inside the manifest commit), then a restarted index
+    re-ingests the same wave: state rows, drift-log rows and the state's
+    committed txn count equal an uninterrupted run's — the committed
+    merge is skipped, not folded twice."""
+    from pyspark.sql import functions as F
+
+    from flink_playground_spark.streaming.ann_index import DriftLog, StreamingIVFIndex
+    from flink_playground_spark.streaming.decontam import StreamingDecontaminator
+    from flink_playground_spark.streaming.pq_index import StreamingPQIndex
+    from flink_playground_spark.streaming.txn_state import TransactionalKeyState
+
+    if family == "decontam":
+        docs = load_table(spark, SF, "documents")
+        eval_df = docs.filter(F.col("doc_id") % 37 == 0)
+        rows, key = docs.filter(F.col("doc_id") % 37 != 0), "doc_id"
+
+        def make(path):
+            return StreamingDecontaminator(path, eval_df, "doc_id", "text", n=3)
+
+        ingest, state, fault = "apply_batch", "ledger", (TransactionalKeyState, "_commit")
+    else:
+        rows, key = load_table(spark, SF, "embeddings"), "vec_id"
+        if family == "ivf":
+
+            def make(path):
+                return StreamingIVFIndex(path, n_centroids=8, kmeans_iters=1)
+
+            state = "cells"
+        else:
+            make, state = StreamingPQIndex, "codes"
+        ingest, fault = "ingest", (DriftLog, "append")
+    waves = [rows.filter(F.col(key) % 3 == w) for w in range(3)]
+
+    def outcome(idx):
+        st = getattr(idx, state)
+        drift = [] if family == "decontam" else spark.read.parquet(idx.drift.path).collect()
+        return sorted(st.read(spark).collect()), st._manifest()["txn"], sorted(drift)
+
+    clean = make(str(tmp_path / "clean"))
+    for wave in waves:
+        getattr(clean, ingest)(wave)
+
+    cls, name = fault
+    real = getattr(cls, name)
+    calls = []
+
+    def faulty(self, *args):
+        calls.append(name)
+        if len(calls) == 2:  # wave 1
+            raise RuntimeError("injected fault")
+        return real(self, *args)
+
+    path = str(tmp_path / "crashed")
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(cls, name, faulty)
+        idx = make(path)
+        getattr(idx, ingest)(waves[0])
+        with pytest.raises(RuntimeError, match="injected fault"):
+            getattr(idx, ingest)(waves[1])
+    idx = make(path)  # the restarted process reattaches
+    for wave in waves[1:]:
+        getattr(idx, ingest)(wave)
+    got, want = outcome(idx), outcome(clean)
+    assert got[:2] == want[:2]
+    assert [r[:3] for r in got[2]] == [r[:3] for r in want[2]]
+    assert [r[3] for r in got[2]] == pytest.approx([r[3] for r in want[2]], rel=1e-12)
