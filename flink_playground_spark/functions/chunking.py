@@ -33,17 +33,18 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from flink_playground_spark.sqltext import quote, string
+
 
 def positional_tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, pos, term) with 1-based positions over the whitespace split;
     empty tokens dropped AFTER enumeration so positions are stable."""
     return (
-        df.select(
-            id_col,
-            F.posexplode(F.split(F.trim(F.col(text_col)), " ")).alias("pos0", "term"),
+        df.selectExpr(
+            quote(id_col), f"posexplode(split(trim({quote(text_col)}), ' ')) AS (pos0, term)"
         )
-        .withColumn("pos", (F.col("pos0") + 1).cast("bigint"))
-        .filter(F.col("term") != "")
+        .withColumn("pos", F.expr("CAST(pos0 + 1 AS BIGINT)"))
+        .filter("term != ''")
         .drop("pos0")
     )
 
@@ -66,9 +67,11 @@ def _chunked_tokens(
     df: DataFrame, id_col: str, text_col: str, boundary_prefix: str = "0"
 ) -> DataFrame:
     toks = positional_tokens(df, id_col, text_col)
-    is_boundary = F.md5(F.col("term").cast("binary")).startswith(boundary_prefix)
-    w = Window.partitionBy(id_col).orderBy("pos").rowsBetween(Window.unboundedPreceding, 0)
-    return toks.withColumn("chunk_id", F.sum(is_boundary.cast("int")).over(w).cast("bigint"))
+    is_boundary = f"startswith(md5(CAST(term AS BINARY)), {string(boundary_prefix)})"
+    w = f"PARTITION BY {quote(id_col)} ORDER BY pos ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+    return toks.withColumn(
+        "chunk_id", F.expr(f"CAST(sum(CAST({is_boundary} AS INT)) OVER ({w}) AS BIGINT)")
+    )
 
 
 def chunk_fingerprints(
@@ -81,15 +84,10 @@ def chunk_fingerprints(
     aggregate — no second window), so the collect is bounded by the
     boundary rate, never by document or corpus size."""
     chunked = _chunked_tokens(df, id_col, text_col, boundary_prefix)
-    text = F.array_join(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "term"))), lambda s: s["term"]
-        ),
-        " ",
-    )
+    text = "array_join(transform(array_sort(collect_list(struct(pos, term))), s -> s.term), ' ')"
     return chunked.groupBy(id_col, "chunk_id").agg(
-        F.md5(text.cast("binary")).alias("chunk_fp"),
-        F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
+        F.expr(f"md5(CAST({text} AS BINARY)) AS chunk_fp"),
+        F.expr("CAST(count(1) AS BIGINT) AS n_tokens"),
     )
 
 

@@ -23,10 +23,11 @@ the per-row path.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from flink_playground_spark.functions.text import fingerprint, tokens
+from flink_playground_spark.functions.text import fingerprint, fingerprint_sql, tokens, tokens_sql
+from flink_playground_spark.sqltext import double, quote
 
 
 def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -68,35 +69,30 @@ def shingle_index(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> Data
     gram subtree TWICE (one execution per branch) and paid two more
     exchanges; ``n_sh`` over the deduped frame equals the old
     count_distinct by construction."""
-    from pyspark.sql import Window
-
     from flink_playground_spark.functions.similarity import _spread
 
-    # _spread before tokenize/explode (round 14, guide §2.5): the
-    # split+posexplode fan-out otherwise runs on the scan's partition
-    # count — locally one split, one core (~0.4s of the LSH build's lead
-    # stage). The lead window's exchange on doc follows either way; a
-    # no-op at real scale.
+    # _spread before tokenize/explode (guide §2.5): the split+posexplode
+    # fan-out otherwise runs on the scan's partition count — locally one
+    # split, one core. The decision reads the plan's sources and never
+    # runs the plan, so a frame built on a persisted relation (the LSH
+    # path's representatives) is not computed twice. The lead window's
+    # exchange on doc follows either way; a no-op at real scale.
     toks = _spread(
-        df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("__t")), "doc"
-    ).select("doc", F.posexplode(tokens("__t")).alias("j", "tok"))
-    w = Window.partitionBy("doc").orderBy("j")
+        df.selectExpr(f"{quote(id_col)} AS doc", f"{quote(text_col)} AS __t"), "doc"
+    ).selectExpr("doc", f"posexplode({tokens_sql('__t')}) AS (j, tok)")
     # materialize every lead BEFORE filtering — window exprs in a
     # post-filter projection would re-evaluate over the filtered frame
-    with_leads = toks.select(
-        "doc", "tok", *[F.lead("tok", i).over(w).alias(f"__t{i}") for i in range(1, n)]
+    with_leads = toks.selectExpr(
+        "doc",
+        "tok",
+        *[f"lead(tok, {i}) OVER (PARTITION BY doc ORDER BY j) AS __t{i}" for i in range(1, n)],
     )
-    grams = (
-        with_leads.filter(F.col(f"__t{n-1}").isNotNull())
-        .select(
-            "doc",
-            F.xxhash64(F.concat_ws(" ", "tok", *[f"__t{i}" for i in range(1, n)])).alias("shingle"),
-        )
+    gram = ", ".join(["tok"] + [f"__t{i}" for i in range(1, n)])
+    grams = with_leads.filter(f"__t{n-1} IS NOT NULL").selectExpr(
+        "doc", f"xxhash64(concat_ws(' ', {gram})) AS shingle"
     )
-    return (
-        grams.dropDuplicates(["doc", "shingle"])
-        .withColumn("n_sh", F.count(F.lit(1)).over(Window.partitionBy("doc")))
-        .select("doc", "n_sh", "shingle")
+    return grams.dropDuplicates(["doc", "shingle"]).selectExpr(
+        "doc", "count(1) OVER (PARTITION BY doc) AS n_sh", "shingle"
     )
 
 
@@ -111,24 +107,23 @@ def verify_pairs(idx: DataFrame, cand: DataFrame, threshold: float) -> DataFrame
     corpus. A candidate pair sharing zero shingles simply drops out of the
     intersection aggregate (Jaccard 0 < threshold).
     """
-    ia = idx.select(F.col("doc").alias("id_a"), F.col("n_sh").alias("n_a"), "shingle")
-    ib = idx.select(F.col("doc").alias("id_b"), F.col("n_sh").alias("n_b"), "shingle")
+    ia = idx.selectExpr("doc AS id_a", "n_sh AS n_a", "shingle")
+    ib = idx.selectExpr("doc AS id_b", "n_sh AS n_b", "shingle")
     inter = (
         cand.select("id_a", "id_b")
         .join(ia, "id_a")
         .join(ib, ["id_b", "shingle"])
         .groupBy("id_a", "id_b")
-        .agg(
-            F.count(F.lit(1)).alias("inter"),
-            F.first("n_a").alias("n_a"),
-            F.first("n_b").alias("n_b"),
-        )
+        .agg(F.expr("count(1) AS inter"), F.expr("first(n_a) AS n_a"), F.expr("first(n_b) AS n_b"))
     )
-    jac = inter.withColumn(
-        "jaccard",
-        F.round(F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")), 6),
-    )
-    return jac.filter(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
+    return _jaccard_at_least(inter, threshold)
+
+
+def _jaccard_at_least(inter: DataFrame, threshold: float) -> DataFrame:
+    """``(id_a, id_b, inter, n_a, n_b)`` -> ``(id_a, id_b, jaccard)`` for
+    pairs with Jaccard (rounded to 6) at least ``threshold``."""
+    jac = inter.withColumn("jaccard", F.expr("round(inter / (n_a + n_b - inter), 6)"))
+    return jac.filter(f"jaccard >= {double(threshold)}").select("id_a", "id_b", "jaccard")
 
 
 def prefix_filter_candidates(idx: DataFrame, threshold: float) -> DataFrame:
@@ -202,29 +197,24 @@ def _all_pairs_jaccard(idx: DataFrame, threshold: float) -> DataFrame:
     per-doc distinct counts. The size filter (min >= t*max) is pushed
     into the join condition. Right shape when the threshold is low
     enough that prefix filtering would keep ~the whole index anyway."""
-    a, b = idx.alias("a"), idx.alias("b")
     inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc") < F.col("b.doc"))
-            & (
-                F.least("a.n_sh", "b.n_sh")
-                >= threshold * F.greatest("a.n_sh", "b.n_sh") - F.lit(1e-9)
+        idx.alias("a")
+        .join(
+            idx.alias("b"),
+            F.expr(
+                "a.shingle = b.shingle AND a.doc < b.doc"
+                " AND least(a.n_sh, b.n_sh) >= greatest(a.n_sh, b.n_sh)"
+                f" * {double(threshold)} - {double(1e-9)}"
             ),
         )
-        .groupBy(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
+        .groupBy(F.expr("a.doc AS id_a"), F.expr("b.doc AS id_b"))
         .agg(
-            F.count(F.lit(1)).alias("inter"),
-            F.first("a.n_sh").alias("n_a"),
-            F.first("b.n_sh").alias("n_b"),
+            F.expr("count(1) AS inter"),
+            F.expr("first(a.n_sh) AS n_a"),
+            F.expr("first(b.n_sh) AS n_b"),
         )
     )
-    jac = inter.withColumn(
-        "jaccard",
-        F.round(F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")), 6),
-    )
-    return jac.filter(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
+    return _jaccard_at_least(inter, threshold)
 
 
 def ngram_jaccard_pairs(
@@ -282,10 +272,11 @@ def minhash_signatures(
     hash inputs — and the signatures — are bit-identical (pinned by
     test_minhash_expr_string_parity)."""
     idx = index if index is not None else shingle_index(df, id_col, text_col, n)
-    # _spread: the K×rows hash work is the kernel's CPU, and a
-    # checkpointed/coalesced index arrives in a handful of partitions
-    # locally — partial aggregation would run K×|index| hashes on 2-3
-    # cores. A no-op at real scale (partitions already ≥ parallelism).
+    # _spread: the K×rows hash work is the kernel's CPU. A checkpointed
+    # index counts its RDD's partitions (read, not run), and one that
+    # arrives in fewer partitions than cores — partial aggregation would
+    # run K×|index| hashes on 2-3 of them — is spread. A no-op at real
+    # scale (partitions already ≥ parallelism).
     from flink_playground_spark.functions.similarity import _spread
 
     idx = _spread(idx, "doc")
@@ -312,11 +303,8 @@ def exact_dup_members(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     representative per class. This is the degenerate-bucket guard: an
     m-member boilerplate class previously agreed on EVERY band and
     emitted 32·m²/2 candidate rows; collapsed, it contributes one doc."""
-    from pyspark.sql import Window
-
-    fp = df.select(F.col(id_col).alias("doc"), fingerprint(text_col).alias("fp"))
-    w = Window.partitionBy("fp")
-    return fp.select("doc", F.min("doc").over(w).alias("rep"))
+    fp = df.selectExpr(f"{quote(id_col)} AS doc", f"{fingerprint_sql(quote(text_col))} AS fp")
+    return fp.selectExpr("doc", "min(doc) OVER (PARTITION BY fp) AS rep")
 
 
 def lsh_band_candidates(
@@ -335,11 +323,9 @@ def lsh_band_candidates(
         guarded.alias("a")
         .join(
             guarded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc") < F.col("b.doc")),
+            F.expr("a.band = b.band AND a.bucket = b.bucket AND a.doc < b.doc"),
         )
-        .select(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
+        .selectExpr("a.doc AS id_a", "b.doc AS id_b")
         .distinct()
     )
 
@@ -352,27 +338,21 @@ def lsh_bucket_overflow(
     non-empty means recall was deliberately traded for survival and the
     listed buckets need a closer look (usually near-identical boilerplate
     that exact-collapse could not merge)."""
-    sizes = banded.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("bucket_size"))
+    sizes = banded.groupBy("band", "bucket").agg(F.expr("count(1) AS bucket_size"))
     if max_bucket is None:
-        return sizes.filter(F.lit(False))
-    return sizes.filter(F.col("bucket_size") > max_bucket)
+        return sizes.filter("false")
+    return sizes.filter(f"bucket_size > {int(max_bucket)}")
 
 
 def _band_signatures(sigs: DataFrame, bands: int, rows: int) -> DataFrame:
     """(doc, sig) -> (doc, band, bucket): each band's signature slice is
     folded to a 64-bit bucket key."""
-    return sigs.select(
+    bucket = f"xxhash64(array_join(slice(sig, b * {int(rows)} + 1, {int(rows)}), ','))"
+    return sigs.selectExpr(
         "doc",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.xxhash64(F.array_join(F.slice("sig", b * rows + 1, rows), ",")).alias("bucket"),
-                ),
-            )
-        ).alias("bb"),
-    ).select("doc", "bb.band", "bb.bucket")
+        f"explode(transform(sequence(0, {int(bands) - 1}),"
+        f" b -> struct(b AS band, {bucket} AS bucket))) AS bb",
+    ).selectExpr("doc", "bb.band", "bb.bucket")
 
 
 def _lsh_rep_pairs(
@@ -423,7 +403,7 @@ def _lsh_rep_pairs(
     connected_components' own edge checkpoint is the materialization) —
     one fewer action; multi-branch consumers keep the default."""
     members = exact_dup_members(df, id_col, text_col).persist()
-    rep_ids = members.filter(F.col("doc") == F.col("rep")).select(F.col("rep").alias(id_col))
+    rep_ids = members.filter("doc = rep").selectExpr(f"rep AS {quote(id_col)}")
     reps_df = df.join(rep_ids, id_col, "left_semi")
     idx = shingle_index(reps_df, id_col, text_col, n).localCheckpoint(eager=True)
     sigs = minhash_signatures(reps_df, id_col, text_col, k, n, index=idx)
@@ -594,26 +574,18 @@ def attach_cluster_members(
     with the same skew bound the groupBy had (class/cluster size).
     A doc participates iff its class has >=2 members (within-class
     pairs at Jaccard 1.0) or its rep near-dups another class."""
-    from pyspark.sql import Window
-
-    have_sh = idx.select(F.col("doc").alias("rep")).distinct()
+    have_sh = idx.selectExpr("doc AS rep").distinct()
     mem_ok = members.join(have_sh, "rep", "left_semi")
     expanded = (
-        mem_ok.withColumn(
-            "__csz", F.count(F.lit(1)).over(Window.partitionBy("rep"))
-        )
+        mem_ok.withColumn("__csz", F.expr("count(1) OVER (PARTITION BY rep)"))
         .join(comp, "rep", "left")
-        .filter((F.col("__csz") > 1) | F.col("comp").isNotNull())
-        .select("doc", F.coalesce("comp", F.col("rep")).alias("cluster_id"))
+        .filter("__csz > 1 OR comp IS NOT NULL")
+        .selectExpr("doc", "coalesce(comp, rep) AS cluster_id")
     )
     return expanded.withColumn(
-        "cluster_size",
-        F.count(F.lit(1)).over(Window.partitionBy("cluster_id")).cast("long"),
-    ).select(
-        F.col("doc").alias("doc_id"),
-        "cluster_id",
-        "cluster_size",
-        (F.col("doc") == F.col("cluster_id")).alias("is_canonical"),
+        "cluster_size", F.expr("CAST(count(1) OVER (PARTITION BY cluster_id) AS BIGINT)")
+    ).selectExpr(
+        "doc AS doc_id", "cluster_id", "cluster_size", "doc = cluster_id AS is_canonical"
     )
 
 
@@ -841,8 +813,8 @@ def exact_substring_spans(
     cand = (
         pos.select(h("__g").alias("__gh"))
         .groupBy("__gh")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .filter(F.col("__c") > 1)
+        .agg(F.expr("count(1) AS __c"))
+        .filter("__c > 1")
         .select("__gh")
     )
     pos_c = (
@@ -871,15 +843,14 @@ def exact_substring_spans(
     # point is the cand pass's per-hash counts (already computed), which
     # an operator can threshold to divert pathological grams, not a
     # blanket two-level rewrite that taxes every healthy corpus.
-    wg = Window.partitionBy("__g")
     dup = (
-        pos_c.withColumn("__f", F.min(F.struct("__d", "__p")).over(wg))
-        .withColumn("__n", F.count(F.lit(1)).over(wg))
-        .filter(
-            (F.col("__n") > 1)
-            & ((F.col("__d") != F.col("__f.__d")) | (F.col("__p") != F.col("__f.__p")))
+        pos_c.selectExpr(
+            "*",
+            "min(struct(__d, __p)) OVER (PARTITION BY __g) AS __f",
+            "count(1) OVER (PARTITION BY __g) AS __n",
         )
-        .select("__d", F.col("__p").alias("__s"), (F.col("__p") + min_len).alias("__e"))
+        .filter("__n > 1 AND (__d != __f.__d OR __p != __f.__p)")
+        .selectExpr("__d", "__p AS __s", f"__p + {int(min_len)} AS __e")
     )
     return _merge_spans(dup, id_col)
 
@@ -890,19 +861,18 @@ def _gram_positions(df: DataFrame, id_col: str, text_col: str, min_len: int) -> 
 
     The input is ``_spread`` so the explode+substring fan-out (the
     operator's CPU) parallelizes even when the scan is one tiny local
-    split — a no-op at real scale (similarity.py ``_spread``)."""
+    split. The decision reads the scan's split count off the plan
+    without running it; a no-op at real scale (similarity.py
+    ``_spread``)."""
     from flink_playground_spark.functions.similarity import _spread
 
+    L = int(min_len)
     t = _spread(
-        df.select(F.col(id_col).alias("__d"), F.col(text_col).alias("__t")), "__d"
-    ).filter(F.length("__t") >= min_len)
-    return t.select(
-        "__d",
-        F.explode(
-            F.sequence(F.lit(1), F.length("__t") - F.lit(min_len) + F.lit(1))
-        ).alias("__p"),
-        "__t",
-    ).select("__d", "__p", F.expr(f"substring(__t, __p, {int(min_len)})").alias("__g"))
+        df.selectExpr(f"{quote(id_col)} AS __d", f"{quote(text_col)} AS __t"), "__d"
+    ).filter(f"length(__t) >= {L}")
+    return t.selectExpr(
+        "__d", f"explode(sequence(1, length(__t) - {L} + 1)) AS __p", "__t"
+    ).selectExpr("__d", "__p", f"substring(__t, __p, {L}) AS __g")
 
 
 def _spans_against_firsts(
@@ -927,22 +897,17 @@ def _merge_spans(dup: DataFrame, id_col: str) -> DataFrame:
     maximal per-document spans — the shared tail of the batch operator
     (dup from the candidate-window pass) and the streaming ledger (dup
     from state joins)."""
-    w_order = Window.partitionBy("__d").orderBy("__s", "__e")
-    w_prev = w_order.rowsBetween(Window.unboundedPreceding, -1)
-    seg = (
-        dup.withColumn(
-            "__new",
-            (F.col("__s") > F.coalesce(F.max("__e").over(w_prev), F.lit(-1))).cast("int"),
-        )
-        .withColumn("__seg", F.sum("__new").over(w_order.rowsBetween(Window.unboundedPreceding, 0)))
-    )
+    w = "OVER (PARTITION BY __d ORDER BY __s, __e ROWS BETWEEN UNBOUNDED PRECEDING AND"
+    seg = dup.withColumn(
+        "__new", F.expr(f"CAST(__s > coalesce(max(__e) {w} 1 PRECEDING), -1) AS INT)")
+    ).withColumn("__seg", F.expr(f"sum(__new) {w} CURRENT ROW)"))
     return (
         seg.groupBy("__d", "__seg")
-        .agg(F.min("__s").alias("span_start"), F.max("__e").alias("span_end"))
-        .select(
-            F.col("__d").alias(id_col),
-            F.col("span_start").cast("long"),
-            F.col("span_end").cast("long"),
+        .agg(F.expr("min(__s) AS span_start"), F.expr("max(__e) AS span_end"))
+        .selectExpr(
+            f"__d AS {quote(id_col)}",
+            "CAST(span_start AS BIGINT) AS span_start",
+            "CAST(span_end AS BIGINT) AS span_end",
         )
     )
 
@@ -985,38 +950,26 @@ def rebuild_without_spans(
     exclusive CHARACTER offsets — excised: one left join against the
     per-document span list and a single JVM fold (see
     exact_substring_dedup). Output ``(id, text, removed_chars)``."""
-    spans = (
-        span_rows
-        .groupBy(id_col)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("span_start", "span_end"))
-            ).alias("__spans")
-        )
+    spans = span_rows.groupBy(id_col).agg(
+        F.expr("array_sort(collect_list(struct(span_start, span_end))) AS __spans")
     )
-    rebuilt = F.expr(
+    rebuilt = (
         # left fold over the sorted spans: carry (next kept start, acc);
         # finish = acc + tail from the last span end
         "aggregate(__spans, named_struct('p', 1L, 'acc', ''), "
         " (st, sp) -> named_struct("
         "   'p', sp.span_end, "
-        "   'acc', concat(st.acc, substring({t}, st.p, int(sp.span_start - st.p)))), "
-        " st -> concat(st.acc, substring({t}, st.p, int(length({t}) + 1 - st.p))))".format(
-            t="__orig"
-        )
+        "   'acc', concat(st.acc, substring(__orig, st.p, int(sp.span_start - st.p)))), "
+        " st -> concat(st.acc, substring(__orig, st.p, int(length(__orig) + 1 - st.p))))"
     )
     out = (
-        df.select(F.col(id_col), F.col(text_col).alias("__orig"))
+        df.selectExpr(quote(id_col), f"{quote(text_col)} AS __orig")
         .join(spans, id_col, "left")
-        .withColumn(
-            "__clean",
-            F.when(F.col("__spans").isNull(), F.col("__orig")).otherwise(rebuilt),
-        )
+        .withColumn("__clean", F.expr(f"CASE WHEN __spans IS NULL THEN __orig ELSE {rebuilt} END"))
     )
-    return out.select(
-        id_col,
-        F.col("__clean").alias(text_col),
-        (F.coalesce(F.length("__orig"), F.lit(0)) - F.coalesce(F.length("__clean"), F.lit(0)))
-        .cast("long")
-        .alias("removed_chars"),
+    return out.selectExpr(
+        quote(id_col),
+        f"__clean AS {quote(text_col)}",
+        "CAST(coalesce(length(__orig), 0) - coalesce(length(__clean), 0) AS BIGINT)"
+        " AS removed_chars",
     )

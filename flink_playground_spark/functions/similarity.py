@@ -161,20 +161,63 @@ def brute_force_topk(
     return pruned.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
+def _source_partitions(df: DataFrame) -> int:
+    """Partitions the widest source of ``df`` is read in, taken from its
+    analyzed plan without planning or running it (no Spark job, a few
+    py4j calls):
+
+    - a checkpoint or other RDD-backed relation (``LogicalRDD``): its
+      RDD's partition count, exact;
+    - a file relation: Spark's file-split rule — each split is at most
+      ``max(openCostInBytes, (bytes + files * openCost) / minPartitionNum)``
+      bytes, capped at ``maxPartitionBytes``, and every file is at least
+      one split;
+    - any other source (in-memory rows, ranges, non-file relations): 0,
+      unknown.
+
+    Shuffles inside the plan do not count: under AQE their partition
+    count is only known once they run, and what they coalesce to tracks
+    the bytes the sources hold, so the sources decide."""
+    jss = df.sparkSession._jsparkSession
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    widest = 0
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        kind = leaf.nodeName()
+        rel = leaf.relation() if kind == "LogicalRelation" else None
+        if kind == "LogicalRDD":
+            n = leaf.rdd().getNumPartitions()
+        elif rel is not None and rel.getClass().getSimpleName() == "HadoopFsRelation":
+            loc = rel.location()
+            size, files = loc.sizeInBytes(), len(loc.inputFiles())
+            conf = jss.sessionState().conf()
+            open_cost = conf.filesOpenCostInBytes()
+            min_parts = conf.filesMinPartitionNum()
+            par = min_parts.get() if min_parts.isDefined() else jss.leafNodeDefaultParallelism()
+            per_core = (size + files * open_cost) // par
+            split = min(conf.filesMaxPartitionBytes(), max(open_cost, per_core))
+            n = max(files, -(-size // split))
+        else:
+            n = 0
+        widest = max(widest, n)
+    return widest
+
+
 def _spread(df: DataFrame, *cols: str) -> DataFrame:
-    """Parallelism guard for iterative/scoring inputs: when the scan has
-    fewer partitions than the session's parallelism (locally: one small
-    parquet file = one split = one task serializing all the interpreted
-    HOF scoring), spread it across the cores once, hashed on ``cols``.
-    At real scale the input's splits already exceed parallelism and this
-    is a NO-OP — it never adds an exchange to a 100 TB scan. The explicit
-    partition count keeps AQE's coalescer from folding the tiny local
-    relation back into one partition."""
-    sc = df.sparkSession.sparkContext
-    n = sc.defaultParallelism
-    if df.rdd.getNumPartitions() >= n:
+    """Parallelism guard for CPU-heavy kernels: when the input's sources
+    are read in fewer partitions than the session's parallelism (locally:
+    one small parquet file = one split = one task serializing the whole
+    fan-out), spread the input across the cores once, hashed on ``cols``.
+
+    The decision reads the analyzed plan (``_source_partitions``); it
+    never runs the plan. At real scale a scan's splits already exceed
+    the parallelism and this is a NO-OP — it never adds an exchange to a
+    100 TB scan. The explicit partition count keeps AQE's coalescer from
+    folding the tiny local relation back into one partition."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    if _source_partitions(df) >= n:
         return df
-    return df.repartition(n, *[F.col(c) for c in cols]) if cols else df.repartition(n)
+    return df.repartition(n, *cols) if cols else df.repartition(n)
 
 
 def _materialize_no_wscg(df: DataFrame) -> DataFrame:

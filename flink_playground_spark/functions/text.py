@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from flink_playground_spark.sqltext import string
+
 # Tokenization shared by all text ops (and mirrored verbatim in the SQL
 # oracles): lowercase alphanumeric runs.
 TOKEN_RE = "[a-z0-9]+"
@@ -33,6 +35,11 @@ def tokens(text_col: str | Column) -> Column:
     """Lowercase alphanumeric tokens (array<string>)."""
     c = F.col(text_col) if isinstance(text_col, str) else text_col
     return F.regexp_extract_all(F.lower(c), F.lit(TOKEN_RE), 0)
+
+
+def tokens_sql(text_sql: str) -> str:
+    """SQL text of ``tokens`` over the SQL expression ``text_sql``."""
+    return f"regexp_extract_all(lower({text_sql}), {string(TOKEN_RE)}, 0)"
 
 
 def token_count(text_col: str | Column) -> Column:
@@ -111,8 +118,16 @@ def lang_id(text_col: str | Column) -> Column:
     return F.when(best["s"] > 0, best["lang"]).otherwise(F.lit("und"))
 
 
+_WS_RE = r"\s+"
+
+
 def fingerprint(text_col: str | Column) -> Column:
     """Document fingerprint: md5 of whitespace-normalized lowercase text.
     (md5 is identical across engines — the oracle reproduces it.)"""
     c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return F.md5(F.regexp_replace(F.lower(F.trim(c)), r"\s+", " "))
+    return F.md5(F.regexp_replace(F.lower(F.trim(c)), _WS_RE, " "))
+
+
+def fingerprint_sql(text_sql: str) -> str:
+    """SQL text of ``fingerprint`` over the SQL expression ``text_sql``."""
+    return f"md5(regexp_replace(lower(trim({text_sql})), {string(_WS_RE)}, ' '))"

@@ -100,7 +100,11 @@ def _partition_union_find(e: DataFrame, nparts: int) -> DataFrame:
         nodes = list(parent)
         yield pd.DataFrame({"node": nodes, "label": [find(x) for x in nodes]})
 
-    cur = e.rdd.getNumPartitions()
+    from flink_playground_spark.functions.similarity import _source_partitions
+
+    # ``e`` is a checkpoint: its partition count is read off its RDD,
+    # without running a job
+    cur = _source_partitions(e)
     if cur > nparts:
         e = e.coalesce(nparts)  # narrow, no shuffle
     elif cur < nparts:

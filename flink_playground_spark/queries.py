@@ -3477,16 +3477,16 @@ def chunk_dedup(spark, sf_dir):
     from flink_playground_spark.functions.chunking import chunk_fingerprints
 
     docs = _t(spark, sf_dir, "documents")
-    fps = chunk_fingerprints(docs, "doc_id", "text").filter(F.col("n_tokens") >= 4)
+    fps = chunk_fingerprints(docs, "doc_id", "text").filter("n_tokens >= 4")
     return (
         fps.groupBy("chunk_fp")
         .agg(
-            F.first("n_tokens").alias("n_tokens"),
-            F.count(F.lit(1)).cast("bigint").alias("n_occurrences"),
-            F.count_distinct("doc_id").cast("bigint").alias("n_docs"),
-            F.min("doc_id").alias("canonical_doc"),
+            F.expr("first(n_tokens) AS n_tokens"),
+            F.expr("CAST(count(1) AS BIGINT) AS n_occurrences"),
+            F.expr("CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs"),
+            F.expr("min(doc_id) AS canonical_doc"),
         )
-        .filter(F.col("n_docs") >= 2)
+        .filter("n_docs >= 2")
     )
 
 

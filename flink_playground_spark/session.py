@@ -32,6 +32,16 @@ BUILD_CONF: dict[str, str] = {
     # Spark has no native type for; read as long and convert exactly
     # (sources.tables.load_events).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # MinHash signatures aggregate K=128 mins in one HashAggregate: its
+    # 129-field buffer is past the default limit of 100 fields, which
+    # drops the whole stage out of whole-stage codegen.
+    "spark.sql.codegen.maxFields": "200",
+    # Compiled-class cache of generated code (a static conf). The four
+    # near-dup kernels alone compile ~190 distinct classes; at the default
+    # of 100 entries, calling them in turn evicts every class before its
+    # next use, so each call recompiled all of its code (85 janino
+    # compiles per dedup_clusters call).
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 # Subset that is runtime-settable — applied defensively to externally
@@ -50,6 +60,8 @@ RUNTIME_CONF: dict[str, str] = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # whole-stage codegen for the K=128 MinHash aggregate (see BUILD_CONF)
+    "spark.sql.codegen.maxFields": "200",
 }
 
 

@@ -24,6 +24,7 @@ from flink_playground_spark.sources.tables import (
     _ensure_nanos_conf,
     load_table,
     normalize_events_ts,
+    table_schema,
 )
 
 
@@ -33,9 +34,9 @@ def replay_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ensure_nanos_conf(spark)
     # The stream source needs an explicit schema; take the file's actual
     # footer schema (ts has been long-nanos or µs-timestamp across
-    # corpus generations) from a zero-cost batch read, then normalize ts
-    # exactly like the batch loader.
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    # corpus generations) through the batch loader's schema reuse, then
+    # normalize ts exactly like the batch loader.
+    raw_schema = table_schema(spark, f"{sf_dir}/events.parquet")
     # the file source requires a directory; filter to the events file
     raw = (
         spark.readStream.schema(raw_schema)

@@ -8,12 +8,16 @@ Runs each query (construction + noop materialization, the bench
 protocol) in a session with ``spark.eventLog.enabled``, then parses the
 event log: per-job wall clock, the job's first line of description, and
 the DRIVER GAPS between jobs (py4j expression construction, Catalyst
-analysis, manifest IO — everything that is not a Spark job). The last
-rep of each query is reported (warm: codegen/file-listing one-time
-costs land in rep 1).
+analysis, manifest IO — everything that is not a Spark job). It also
+measures the plan build directly: ``build_s`` is the wall time spent in
+the query function before the materializing action (eager checkpoints
+inside it included), ``py4j_calls`` the Python-to-JVM round trips made
+in that time. The last rep of each query is reported (warm:
+codegen/file-listing one-time costs land in rep 1).
 
 Output: one human block per query + one JSON line per query with
-``{"query", "wall_s", "job_s", "gap_s", "n_jobs", "jobs": [...]}``.
+``{"query", "wall_s", "build_s", "py4j_calls", "job_s", "gap_s",
+"n_jobs"}``.
 """
 
 from __future__ import annotations
@@ -30,6 +34,24 @@ sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 from pyspark.sql import SparkSession
 
 from flink_playground_spark.session import BUILD_CONF, tune
+
+
+class _Py4jCalls:
+    """Counts Python-to-JVM round trips: every py4j command goes through
+    ``GatewayClient.send_command`` (the pinned-thread ``JavaClient``
+    inherits it)."""
+
+    def __init__(self) -> None:
+        from py4j.java_gateway import GatewayClient
+
+        self.n = 0
+        send = GatewayClient.send_command
+
+        def counted(client, *args, **kwargs):
+            self.n += 1
+            return send(client, *args, **kwargs)
+
+        GatewayClient.send_command = counted
 
 
 def _get_spark_with_eventlog(log_dir: str) -> SparkSession:
@@ -147,6 +169,7 @@ def main() -> None:
     from flink_playground_spark.queries import EXTRA_REGISTRY, REGISTRY
 
     allq = {**REGISTRY, **EXTRA_REGISTRY}
+    calls = _Py4jCalls()
     results = []
     for name in args:
         q = allq[name]
@@ -154,19 +177,22 @@ def main() -> None:
         for _ in range(reps):
             t0 = time.time() * 1000
             w0 = time.perf_counter()
-            q.spark_fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+            calls.n = 0
+            df = q.spark_fn(spark, sf_dir)
+            build, n_calls = time.perf_counter() - w0, calls.n
+            df.write.mode("overwrite").format("noop").save()
             wall = time.perf_counter() - w0
             t1 = time.time() * 1000
         # flush the event log by stopping later; for parse-now, the log
         # file is line-buffered via the JSON sink — rotate by restarting
-        results.append((name, t0, t1, wall))
+        results.append((name, t0, t1, wall, build, n_calls))
     spark.stop()  # flush event log
 
-    for name, t0, t1, wall in results:
+    for name, t0, t1, wall, build, n_calls in results:
         jobs = _parse_jobs(log_dir, t0, t1)
         job_s = round(sum(j["dur_s"] for j in jobs), 3)
-        print(f"\n=== {name}: wall {wall:.3f}s, {len(jobs)} jobs, "
-              f"job time {job_s}s, driver gap {wall - job_s:.3f}s ===")
+        print(f"\n=== {name}: wall {wall:.3f}s, build {build:.3f}s in {n_calls} py4j calls, "
+              f"{len(jobs)} jobs, job time {job_s}s, driver gap {wall - job_s:.3f}s ===")
         prev_end = t0
         for j in jobs:
             gap = (j["sub_ms"] - prev_end) / 1000.0
@@ -178,7 +204,8 @@ def main() -> None:
                     print(f"        stage {s['stage']:>4} {s['dur_s']:7.3f}s "
                           f"{s['n_tasks']:>4}t  {s['name']}")
         print(json.dumps({
-            "query": name, "wall_s": round(wall, 3), "job_s": job_s,
+            "query": name, "wall_s": round(wall, 3), "build_s": round(build, 3),
+            "py4j_calls": n_calls, "job_s": job_s,
             "gap_s": round(wall - job_s, 3), "n_jobs": len(jobs),
         }))
 
