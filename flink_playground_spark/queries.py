@@ -832,18 +832,18 @@ SELECT event_id, ts, user_id, event_type, value FROM (
 )
 def streaming_dedup_latest(spark, sf_dir):
     """Streaming keep-latest dedup (the Flink Deduplicate operator,
-    WithDeduplicateJoinJob.java:89-97) via applyInPandasWithState; the
-    update-mode changelog is compacted to its final table (toChangelogStream
-    → table materialization, T6)."""
-    from flink_playground_spark.streaming.runners import replay_events_stream, run_to_memory
-    from flink_playground_spark.streaming.stateful import dedup_latest_stream
+    WithDeduplicateJoinJob.java:89-97): the event stream drains through
+    the transactional keep-latest state (``keep_latest_changelog_stream``),
+    and the changelog's ``+I``/``+U`` rows are compacted to the final
+    table (toChangelogStream → table materialization, T6)."""
+    from flink_playground_spark.streaming.changelog import keep_latest_changelog_stream
+    from flink_playground_spark.streaming.runners import replay_events_stream
 
-    stream = replay_events_stream(spark, sf_dir).select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    latest = dedup_latest_stream(stream, "user_id", "ts", tiebreakers=("event_id",))
-    changelog = run_to_memory(latest, "update")
-    return dedup_latest(changelog, "user_id", "ts", tiebreakers=("event_id",))
+    cols = ["event_id", "ts", "user_id", "event_type", "value"]
+    stream = replay_events_stream(spark, sf_dir).select(*cols)
+    log = keep_latest_changelog_stream(stream, "user_id", "ts", tiebreakers=("event_id",))
+    upserts = log.filter(F.col("op").isin("+I", "+U")).select(*cols)
+    return dedup_latest(upserts, "user_id", "ts", tiebreakers=("event_id",))
 
 
 @register(

@@ -243,9 +243,11 @@ class StreamingDupClusters:
         id may BE the label of its surviving co-members — removing the
         min member raises the component minimum, which an append-only
         min-fold can never express. So the touched components are
-        recomputed and the ledger is REWRITTEN in one transaction
-        (AppendDeltaState.rewrite — atomic: a crash leaves either the
-        old mapping or the new one, never label-less survivors).
+        recomputed and relabelled by ONE deletion-vector ``upsert``: the
+        touched members' old rows are tombstoned and the new labels land
+        in the same manifest commit (a crash leaves either the old
+        mapping or the new one, never label-less survivors). Write IO ∝
+        touched-component mass, like ``update``.
 
         ``surviving_edges``: the pair set with the cohort's pairs
         already removed — exactly what the pair indexes' ``forget``
@@ -258,9 +260,10 @@ class StreamingDupClusters:
         excision (no surviving edge) leave the mapping entirely — the
         'isolated docs never enter the graph' convention.
 
-        Replay stays safe: ``rewrite`` never touches the writers map,
-        so the cohort's ORIGINAL waves remain skipped (a delete must
-        not resurrect data through the at-least-once path)."""
+        Replay stays safe: the relabel carries no writer mark and leaves
+        the writers map untouched, so the cohort's ORIGINAL waves remain
+        skipped (a delete must not resurrect data through the
+        at-least-once path)."""
         ids = sorted(set(docs))
         cur = self.mapping(spark)
         if not ids:
@@ -311,7 +314,7 @@ class StreamingDupClusters:
             if edges is not None
             else None
         )
-        self._state.rewrite(spark, drop_keys=member_nodes, add=new_map)
+        self._state.upsert(member_nodes, new_map, agg_cols=self._agg())
         n_victims = members.filter(F.col("node").isin(ids)).count()
         return {"forgotten": n_victims, "touched_members": n_members - n_victims}
 

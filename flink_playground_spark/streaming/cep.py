@@ -21,6 +21,14 @@ Ordering contract: events must arrive non-decreasing in event time per
 key across micro-batches (the replay helper splits by time range). A
 production deployment would front this with a watermark-delayed sort
 (``streaming/runners.py`` patterns); the operator itself is agnostic.
+
+This is the one substrate for the streaming funnel and the contiguity
+matcher. The chain state rides Spark's state store, so a query restarted
+from its checkpoint resumes its open chains; into a file sink its
+emissions are exactly once (pinned by
+``tests/test_checkpoint_recovery.py``). There is no processing-time
+TTL: a chain leaves state by completing or by passing ``within_ms``, and
+the contiguity matcher's state is k-1 rows per key.
 """
 
 from __future__ import annotations
@@ -43,7 +51,6 @@ def funnel_stream(
     pattern: Sequence[str],
     within_ms: int,
     id_col: str,
-    ttl_ms: int | None = None,
     emit_timeouts: bool = False,
 ) -> DataFrame:
     """Streaming skip-till-next-match funnel: emit one row per completed
@@ -89,16 +96,10 @@ def funnel_stream(
             T.StructField("steps_us", T.ArrayType(T.ArrayType(T.LongType()))),
         ]
     )
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout if ttl_ms else GroupStateTimeout.NoTimeout
-    )
 
     def detect(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
         ids: list = []
         steps: list[list[int]] = []
         if state.exists:
@@ -141,8 +142,6 @@ def funnel_stream(
                     steps.append([int(t)])
         if ids:
             state.update((ids, steps))
-            if ttl_ms:
-                state.setTimeoutDuration(ttl_ms)
         elif state.exists:
             state.remove()
         if done or expired:
@@ -162,7 +161,7 @@ def funnel_stream(
             yield pd.DataFrame(rows)
 
     return df.groupBy(*keys).applyInPandasWithState(
-        detect, out_schema, state_schema, "append", timeout
+        detect, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )
 
 
@@ -189,136 +188,6 @@ def replay_events_stream_timeordered(spark: SparkSession, sf_dir: str, waves: in
     return replay_waves(ev, conds)
 
 
-def funnel_txn_wave(
-    state,
-    writer_id: str,
-    batch_id: int,
-    events: DataFrame,
-    keys: str | Sequence[str],
-    time_col: str,
-    symbol_col: str,
-    pattern: Sequence[str],
-    within_ms: int,
-    id_col: str,
-) -> bool:
-    """One exactly-once wave of the funnel over TRANSACTIONAL bucketed
-    state (``txn_state.TransactionalKeyState``) — the foreachBatch
-    deployment shape, where ``funnel_stream`` is the
-    applyInPandasWithState one.
-
-    State rows (one per chain, live or settled)::
-
-        keys..., start_id, steps_us array<long>, status
-        status: 'open' | 'done' | 'timeout'
-
-    Each wave unions the key's open chains with the wave's events
-    (encoded into the same schema with status='ev'), replays the exact
-    ``funnel_stream`` advance loop per key inside ``applyInPandas``, and
-    commits the resulting chain set back — completed and TIMED-OUT
-    chains stay in state as settled rows, so the query answer is a pure
-    read (``funnel_txn_results``) and replays are absorbed by the
-    writers ledger (returns False on a re-delivered batch). Because the
-    state lives in the transactional store, a mid-stream
-    ``state.rebucket(spark, n)`` rescale preserves open chains, settled
-    rows, AND the replay guard (pinned by test_cep).
-
-    Ordering contract matches ``funnel_stream``: per-key event times
-    non-decreasing across waves."""
-    keys = [keys] if isinstance(keys, str) else list(keys)
-    k = len(pattern)
-    if k < 2:
-        raise ValueError("funnel_txn_wave needs a pattern of length >= 2")
-    within_us = within_ms * 1000
-    pat = list(pattern)
-    key_names = list(keys)
-    tcol, scol, icol = time_col, symbol_col, id_col
-
-    encoded = events.select(
-        *key_names,
-        F.col(icol).alias("start_id"),
-        F.array(F.unix_micros(F.col(tcol).cast("timestamp"))).alias("steps_us"),
-        F.col(scol).alias("sym"),
-        F.lit("ev").alias("status"),
-    )
-    out_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in encoded.schema.fields
-    )
-
-    def advance(pdf: pd.DataFrame) -> pd.DataFrame:
-        settled = pdf[pdf["status"].isin(["done", "timeout"])]
-        opens = pdf[pdf["status"] == "open"]
-        ids = opens["start_id"].tolist()
-        steps = [list(s) for s in opens["steps_us"]]
-        evs = pdf[pdf["status"] == "ev"].copy()
-        evs["__t"] = [int(s[0]) for s in evs["steps_us"]]
-        evs = evs.sort_values(["__t", "start_id"])
-        done: list[tuple] = []
-        expired: list[tuple] = []
-        for t, sym, eid in zip(
-            evs["__t"].tolist(), evs["sym"].tolist(), evs["start_id"].tolist()
-        ):
-            live = [j for j in range(len(ids)) if steps[j][0] + within_us >= t]
-            if len(live) != len(ids):
-                dead = set(range(len(ids))) - set(live)
-                expired.extend((ids[j], steps[j]) for j in sorted(dead))
-                ids = [ids[j] for j in live]
-                steps = [steps[j] for j in live]
-            nxt_ids, nxt_steps = [], []
-            for sid, st in zip(ids, steps):
-                if sym == pat[len(st)] and t > st[-1]:
-                    st = st + [t]
-                    if len(st) == k:
-                        done.append((sid, st))
-                        continue
-                nxt_ids.append(sid)
-                nxt_steps.append(st)
-            ids, steps = nxt_ids, nxt_steps
-            if sym == pat[0]:
-                ids.append(eid)
-                steps.append([int(t)])
-        kvals = {c: (pdf[c].iloc[0] if len(pdf) else None) for c in key_names}
-        rows = [
-            {**kvals, "start_id": sid, "steps_us": st, "sym": None, "status": status}
-            for status, chains in (("done", done), ("timeout", expired), ("open", zip(ids, steps)))
-            for sid, st in chains
-        ]
-        out = pd.concat([settled, pd.DataFrame(rows, columns=pdf.columns)]) if rows else settled
-        return out[list(pdf.columns)]
-
-    def combine(base: DataFrame, cols: Sequence[str]) -> DataFrame:
-        return base.groupBy(*key_names).applyInPandas(advance, out_fields).select(*cols)
-
-    return state.merge_transform(writer_id, batch_id, encoded, combine)
-
-
-def funnel_txn_results(state, spark: SparkSession, n_steps: int) -> DataFrame:
-    """Settled chains from the transactional funnel state, decoded to
-    the ``funnel_stream(emit_timeouts=True)`` output shape: key cols,
-    ``start_id``, ``ts1..tsK`` (NULL beyond the matched prefix),
-    ``matched``, ``timed_out``. Open chains stay silent, exactly like
-    the streaming operator."""
-    st = state.read(spark)
-    if st is None:
-        raise ValueError("funnel state is empty")
-    settled = st.filter(F.col("status").isin("done", "timeout"))
-    cols = [c for c in st.columns if c not in ("steps_us", "sym", "status")]
-    sel = [F.col(c) for c in cols]
-    for i in range(1, n_steps + 1):
-        # try_element_at: 1-based, NULL past the matched prefix (plain
-        # element_at throws under ANSI). The cast chain is the exact
-        # inverse of the encode (ntz -> instant in session tz ->
-        # micros), so any single session round-trips the naive value
-        # regardless of its timezone.
-        sel.append(
-            F.timestamp_micros(F.try_element_at("steps_us", F.lit(i)))
-            .cast("timestamp_ntz")
-            .alias(f"ts{i}")
-        )
-    sel.append(F.size("steps_us").alias("matched"))
-    sel.append((F.col("status") == "timeout").alias("timed_out"))
-    return settled.select(*sel)
-
-
 def match_contiguous_stream(
     df: DataFrame,
     keys: str | Sequence[str],
@@ -326,7 +195,6 @@ def match_contiguous_stream(
     symbol_col: str,
     pattern: Sequence[str],
     id_col: str,
-    ttl_ms: int | None = None,
 ) -> DataFrame:
     """Streaming strict-contiguity matcher: ``pattern`` on k consecutive
     rows of each key's (time, id)-ordered stream, across micro-batch
@@ -354,16 +222,10 @@ def match_contiguous_stream(
             T.StructField("ids", T.ArrayType(df.schema[id_col].dataType)),
         ]
     )
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout if ttl_ms else GroupStateTimeout.NoTimeout
-    )
 
     def detect(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
         tail_t: list[int] = []
         tail_s: list[str] = []
         tail_i: list = []
@@ -396,11 +258,9 @@ def match_contiguous_stream(
         new_tail_i = rows_i[-(k - 1):] if len(rows_i) >= k - 1 else rows_i
         if new_tail_t:
             state.update((new_tail_t, new_tail_s, new_tail_i))
-            if ttl_ms:
-                state.setTimeoutDuration(ttl_ms)
         if out:
             yield pd.DataFrame(out)
 
     return df.groupBy(*keys).applyInPandasWithState(
-        detect, out_schema, state_schema, "append", timeout
+        detect, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )

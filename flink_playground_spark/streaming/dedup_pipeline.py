@@ -39,7 +39,7 @@ wave, not a new shuffle.
 Takedown composes too: ``forget(docs)`` prunes the pair index
 surgically (raw per-doc facts), then cascades into the cluster mapping
 with the SURVIVING pair set (``StreamingDupClusters.forget`` relabels
-exactly the touched components in one atomic rewrite) — wrapped in a
+exactly the touched components in one atomic upsert) — wrapped in a
 durable INTENT ledger (r12 ADVICE) because no wave redelivery retries
 a takedown: a crash between the two stages leaves a pending intent
 that ``resume_takedowns`` replays idempotently on restart.

@@ -300,11 +300,12 @@ class TransactionalKeyState:
         """Arbitrary keyed state transition, exactly once per (writer,
         batch): ``combine(base, cols)`` receives the union of the
         touched buckets' current rows and the batch rows (same schema)
-        and returns the buckets' NEW full contents. The CEP funnel's
-        chain-advance is this shape — neither an aggregate fold nor a
-        keep-latest. The transition must be deterministic: a crash
-        before the manifest commit replays the batch against the old
-        state and must reproduce the same result."""
+        and returns the buckets' NEW full contents. The SCD2 change
+        store's full-identity collapse is this shape — neither an
+        aggregate fold nor a keep-latest on the bucketing keys. The
+        transition must be deterministic: a crash before the manifest
+        commit replays the batch against the old state and must
+        reproduce the same result."""
         return self._merge(writer_id, batch_id, batch, combine)
 
     def _merge(
@@ -755,15 +756,13 @@ class AppendDeltaState:
         """Merge-on-read UPSERT in ONE atomic manifest commit: every
         data row matching ``drop`` on any ``tomb_match`` group (in
         deltas no newer than now) is dead, and ``add``'s rows are live
-        — the deletion-vector form of ``rewrite``. Write IO ∝ drop +
-        add rows, NEVER the ledger: ``drop`` lands as an immutable
-        tombstone delta (key tuple + ``__upto`` = the current seq
-        watermark) and ``add`` as a normal data delta, with the replay
-        mark in the same commit. This is what makes a per-wave doc
-        UPDATE affordable at corpus scale — the rewrite verb's one
-        honest weakness was cost ∝ live state per wave (r12 ADVICE
-        named it; every update docstring carried the 'batch your
-        waves' caveat). Readers apply tombstones on the fly
+        — the store's one replace verb. Write IO ∝ drop + add rows,
+        NEVER the ledger: ``drop`` lands as an immutable tombstone
+        delta (key tuple + ``__upto`` = the current seq watermark) and
+        ``add`` as a normal data delta, with the replay mark in the
+        same commit. This is what makes a per-wave doc UPDATE and a
+        takedown relabel affordable at corpus scale: neither rewrites
+        the live ledger. Readers apply tombstones on the fly
         (``read``'s anti-join, fan-in bounded by ``compact_every``);
         compaction — auto-triggered here once deltas OR tombstones
         reach ``compact_every`` when ``agg_cols`` is given — folds them
@@ -873,91 +872,6 @@ class AppendDeltaState:
             self._commit(manifest)
             self.vacuum()
             return removed
-
-    def rewrite(
-        self,
-        spark: SparkSession,
-        drop_keys: DataFrame | None = None,
-        add: DataFrame | None = None,
-        dropper=None,
-        writer_id: str | None = None,
-        batch_id: int | None = None,
-    ) -> int | None:
-        """Transactionally REPLACE ledger rows in one commit: drop every
-        row whose key tuple appears in ``drop_keys`` (a DataFrame with
-        exactly ``self.keys`` columns) — or, for drops a key tuple can't
-        express (e.g. "any pair row referencing a doc in this set"),
-        every row ``dropper`` removes (a callable current→kept, composed
-        of joins/filters, evaluated lazily inside the single rewrite
-        pass) — and append ``add``'s rows, as a SINGLE atomic manifest
-        replace. Returns rows dropped, or None when ``(writer_id,
-        batch_id)`` was already committed (replay skip).
-
-        This is the primitive a takedown CASCADE needs and two separate
-        prune+append transactions cannot provide: a crash between them
-        would leave surviving members with NO labels (prune landed) or
-        stale ones (append landed first). Here survivors ∪ additions
-        land in one fresh delta and the manifest points at it or at the
-        old state — never in between. The pass reads live state once
-        and doubles as a compaction. The removed-row count rides the
-        SAME pass as two Observations (before/after the drop), not
-        extra ledger scans. Pass ``writer_id``+``batch_id`` to make the
-        rewrite exactly-once under at-least-once redelivery — the doc
-        UPDATE path needs this: the writer high-water mark lands in the
-        same atomic commit as the data, so a replayed update wave skips
-        instead of double-applying. Without them the writers ledger is
-        untouched (takedowns must not resurrect data through the
-        at-least-once path). Same raw-facts caveat as ``prune``: only
-        legal on ledgers whose dropped rows are not folded into
-        aggregates that must be un-counted.
-
-        Cost ∝ live ledger state (one read + one write), like every
-        maintenance pass here — fine for audited takedowns and
-        batched update waves; a per-doc dribble of updates should be
-        batched upstream (the LSM evolution, not wired, is deletion
-        vectors: append tombstones, fold at read, apply at compaction)."""
-        with _writer_lock(self.path):
-            manifest = self._manifest()
-            if writer_id is not None and batch_id is not None:
-                last = manifest["writers"].get(writer_id)
-                if last is not None and batch_id <= last:
-                    return None  # replay of a committed rewrite: skip
-            cur = self._read_live(spark, manifest)
-            kept = cur
-            obs_in = obs_out = None
-            if cur is not None and (drop_keys is not None or dropper is not None):
-                from pyspark.sql import Observation
-
-                obs_in, obs_out = Observation(), Observation()
-                base = cur.observe(obs_in, F.count(F.lit(1)).alias("n"))
-                kept = (
-                    dropper(base)
-                    if dropper is not None
-                    else base.join(drop_keys.select(*self.keys), self.keys, "left_anti")
-                )
-                kept = kept.observe(obs_out, F.count(F.lit(1)).alias("n"))
-            out = kept
-            if add is not None:
-                add = add.select(*(kept.columns if kept is not None else add.columns))
-                out = add if kept is None else kept.unionByName(add)
-            if out is not None:
-                seq = manifest["seq"] + 1
-                out.write.mode("overwrite").parquet(f"{self.path}/d{seq}")
-                manifest["deltas"] = [seq]
-                manifest["tombs"] = []  # full rewrite settles any pending vectors
-                manifest["seq"] = seq
-            if writer_id is not None and batch_id is not None:
-                # even a no-op rewrite must advance the replay mark —
-                # the commit-point probe of a multi-ledger update keys
-                # on it, and "nothing to write" is a committed outcome
-                manifest["writers"][writer_id] = batch_id
-            elif out is None:
-                return 0  # nothing read, nothing written, nothing to mark
-            self._commit(manifest)
-            self.vacuum()
-            if obs_in is not None:
-                return int(obs_in.get["n"]) - int(obs_out.get["n"])
-            return 0
 
     def metrics(self) -> dict:
         """Day-2 operational snapshot, file-level (no Spark session):

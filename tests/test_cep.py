@@ -175,7 +175,9 @@ def _drain(spark, out, name):
 
 def test_funnel_stream_equals_batch(spark, sf_dir):
     """3-wave event-time-ordered replay: the stateful streaming funnel
-    emits exactly the batch operator's completed chains."""
+    emits exactly the batch operator's completed chains. With the
+    timed-out side output on, its completed rows are still exactly
+    those, and some real chains time out."""
     from flink_playground_spark.sources.tables import load_table
     from flink_playground_spark.streaming.cep import (
         funnel_stream,
@@ -183,11 +185,19 @@ def test_funnel_stream_equals_batch(spark, sf_dir):
     )
 
     stream = replay_events_stream_timeordered(spark, sf_dir, waves=3)
-    out = funnel_stream(
-        stream, "user_id", "ts", "event_type", ["view", "click", "purchase"],
-        within_ms=48 * 3600 * 1000, id_col="event_id",
-    )
-    got = {tuple(r) for r in _drain(spark, out, "cep_stream_parity").collect()}
+    cols = ["user_id", "start_id", "ts1", "ts2", "ts3"]
+
+    def drain(emit_timeouts):
+        out = funnel_stream(
+            stream, "user_id", "ts", "event_type", ["view", "click", "purchase"],
+            within_ms=48 * 3600 * 1000, id_col="event_id", emit_timeouts=emit_timeouts,
+        )
+        return _drain(spark, out, f"cep_stream_parity_{emit_timeouts}".lower())
+
+    got = {tuple(r) for r in drain(False).collect()}
+    with_timeouts = drain(True)
+    done = {tuple(r) for r in with_timeouts.filter(~F.col("timed_out")).select(*cols).collect()}
+    assert with_timeouts.filter(F.col("timed_out")).count() > 0
     ev = load_table(spark, sf_dir, "events")
     et = F.col("event_type")
     want = {
@@ -195,9 +205,10 @@ def test_funnel_stream_equals_batch(spark, sf_dir):
         for r in funnel(
             ev, "user_id", "ts", [et == "view", et == "click", et == "purchase"],
             "INTERVAL 48 HOURS", start_cols=[F.col("event_id").alias("start_id")],
-        ).select("user_id", "start_id", "ts1", "ts2", "ts3").collect()
+        ).select(*cols).collect()
     }
     assert got == want and len(want) > 0
+    assert done == want
 
 
 def test_funnel_stream_state_across_batches(spark, tmp_path):
@@ -350,75 +361,3 @@ def test_funnel_stream_timeout_side_output(spark, tmp_path):
     r2 = rows[2]
     assert (r2["timed_out"], r2["matched"], r2["start_id"]) == (True, 2, 200)
     assert r2["ts1"].minute == 0 and r2["ts2"].minute == 5 and r2["ts3"] is None
-
-
-def test_funnel_txn_timeouts_survive_rescale(spark, sf_dir, tmp_path):
-    """Exactly-once CEP over TRANSACTIONAL bucketed state, rescaled
-    mid-stream: 3 event-time waves of the real events table through
-    funnel_txn_wave, with state.rebucket() between waves 2 and 3. The
-    settled output (completed + timed-out chains) must equal the
-    no-rescale run, the completed subset must equal the batch funnel,
-    and a pre-rescale wave redelivered after the rescale must be a
-    no-op (replay ledger survives the rescale txn)."""
-    from flink_playground_spark.sources.tables import load_table
-    from flink_playground_spark.streaming.cep import (
-        funnel_txn_results,
-        funnel_txn_wave,
-    )
-    from flink_playground_spark.streaming.txn_state import TransactionalKeyState
-
-    ev = load_table(spark, sf_dir, "events")
-    bounds = ev.selectExpr(
-        "percentile_approx(unix_micros(cast(ts as timestamp)), array(0.3333, 0.6667), 10000) p"
-    ).collect()[0]["p"]
-    tsd = F.unix_micros(F.col("ts").cast("timestamp"))
-    waves = [
-        ev.filter(tsd <= bounds[0]),
-        ev.filter((tsd > bounds[0]) & (tsd <= bounds[1])),
-        ev.filter(tsd > bounds[1]),
-    ]
-    args = dict(
-        keys="user_id", time_col="ts", symbol_col="event_type",
-        pattern=["view", "click", "purchase"],
-        within_ms=48 * 3600 * 1000, id_col="event_id",
-    )
-
-    def run(path, rescale_after=None):
-        st = TransactionalKeyState(path, ["user_id"], n_buckets=4)
-        for i, w in enumerate(waves):
-            assert funnel_txn_wave(st, "cep", i, w, **args) is True
-            if rescale_after == i:
-                assert st.rebucket(spark, 16) is True
-        return st
-
-    st_r = run(str(tmp_path / "rescaled"), rescale_after=1)
-    assert st_r.n_buckets == 16
-    st_p = run(str(tmp_path / "plain"))
-
-    def settled(st):
-        return {
-            tuple(r)
-            for r in funnel_txn_results(st, spark, n_steps=3)
-            .select("user_id", "start_id", "ts1", "ts2", "ts3", "matched", "timed_out")
-            .collect()
-        }
-
-    got_r, got_p = settled(st_r), settled(st_p)
-    assert got_r == got_p and len(got_r) > 0
-
-    # completed subset == the batch operator's answer
-    et = F.col("event_type")
-    want_done = {
-        tuple(r) + (3, False)
-        for r in funnel(
-            ev, "user_id", "ts", [et == "view", et == "click", et == "purchase"],
-            "INTERVAL 48 HOURS", start_cols=[F.col("event_id").alias("start_id")],
-        ).select("user_id", "start_id", "ts1", "ts2", "ts3").collect()
-    }
-    assert {t for t in got_r if not t[-1]} == want_done
-    # and some chains genuinely timed out (the side output is exercised)
-    assert any(t[-1] for t in got_r)
-
-    # a pre-rescale wave redelivered AFTER the rescale is still skipped
-    assert funnel_txn_wave(st_r, "cep", 1, waves[1], **args) is False
-    assert settled(st_r) == got_p

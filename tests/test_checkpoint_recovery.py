@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from flink_playground_spark.operators.dedup import dedup_latest
 from flink_playground_spark.sources.tables import load_table
-from flink_playground_spark.streaming.stateful import dedup_latest_stream
+from flink_playground_spark.streaming.changelog import keep_latest_changelog_stream
 
 
 def _drain(stream_df, checkpoint, out_dir):
@@ -41,32 +41,37 @@ def test_keep_latest_survives_restart(spark, sf_dir, tmp_path):
     for f in (tmp_path / "w1").glob("*.parquet"):
         shutil.copy(f, src / "wave1.parquet")
 
-    checkpoint = str(tmp_path / "ckpt")
-    out_dir = str(tmp_path / "out")
-    stream = spark.readStream.schema(events.schema).parquet(str(src))
-    latest = dedup_latest_stream(stream, "user_id", "ts", tiebreakers=("event_id",), output_mode="append")
+    work = str(tmp_path / "work")
 
-    _drain(latest, checkpoint, out_dir)
-    n_after_wave1 = spark.read.parquet(out_dir).count()
-    assert n_after_wave1 > 0
+    def run():
+        stream = spark.readStream.schema(events.schema).parquet(str(src))
+        return keep_latest_changelog_stream(
+            stream, "user_id", "ts", tiebreakers=("event_id",), work_dir=work, checkpoint=True
+        )
 
-    # second wave lands; restart the SAME query from the checkpoint
+    rows_wave1 = run().collect()
+    assert rows_wave1
+
+    # second wave lands; relaunch the SAME query from its checkpoint
     for f in (tmp_path / "w2").glob("*.parquet"):
         shutil.copy(f, src / "wave2.parquet")
-    stream2 = spark.readStream.schema(events.schema).parquet(str(src))
-    latest2 = dedup_latest_stream(stream2, "user_id", "ts", tiebreakers=("event_id",), output_mode="append")
-    _drain(latest2, checkpoint, out_dir)
+    log = run()
 
-    # changelog emissions across both runs, compacted = batch dedup over ALL
-    emissions = spark.read.parquet(out_dir)
-    got = dedup_latest(emissions, "user_id", "ts", tiebreakers=("event_id",))
+    # the changelog across both runs, compacted = batch dedup over ALL
+    upserts = log.filter(F.col("op").isin("+I", "+U")).select(*events.columns)
+    got = dedup_latest(upserts, "user_id", "ts", tiebreakers=("event_id",))
     want = dedup_latest(events, "user_id", "ts", tiebreakers=("event_id",))
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
     # recovery resumed from state rather than reprocessing wave 1: the
-    # second run emitted at most one row per key, and the wave-1 output
-    # was not rewritten
-    assert emissions.count() <= n_after_wave1 + want.count()
+    # relaunch emitted no op for wave 1 (its batches' ops are unchanged
+    # and every later op is in a later batch), and each key was inserted
+    # once
+    last_wave1 = max(r["batch_id"] for r in rows_wave1)
+    rows = log.collect()
+    assert {tuple(r) for r in rows if r["batch_id"] <= last_wave1} == set(map(tuple, rows_wave1))
+    inserts = [r["user_id"] for r in rows if r["op"] == "+I"]
+    assert len(inserts) == len(set(inserts)) == want.count()
 
 
 def test_streaming_funnel_survives_restart(spark, sf_dir, tmp_path):

@@ -101,54 +101,95 @@ def test_scd2_matches_interval_join(spark, scd, sf_dir):
     assert a == b
 
 
-def test_scd2_incremental_matches_batch(spark, sf_dir, tmp_path):
-    """Three changelog waves — the LAST one out of order (earlier ts than
-    already-applied changes, the boundary-resurrection case) — end in
-    exactly the intervals batch scd2_build derives from all changes; and
-    buckets untouched by a wave are not rewritten."""
-    import os
-
+def _scd2_waves(spark, sf_dir):
+    """signup/purchase changes of the events table and their three
+    waves: by ts order for waves 1-2, then wave 3 replays the MIDDLE
+    timestamps (out of order w.r.t. wave 2)."""
     from flink_playground_spark.sources.tables import load_table
-    from flink_playground_spark.streaming.scd2 import Scd2Maintainer
 
     events = load_table(spark, sf_dir, "events")
     changes = events.filter(F.col("event_type").isin("signup", "purchase")).select(
         "user_id", "ts", "event_id", F.col("event_type").alias("state")
     )
-    m = Scd2Maintainer(
-        str(tmp_path / "scd2"), ["user_id"], "ts", ["state"], "event_id", n_buckets=8
-    )
-    # wave split: by ts order for waves 1-2, then wave 3 replays MIDDLE
-    # timestamps (out of order w.r.t. wave 2)
     w = changes.withColumn(
         "__w",
         F.ntile(3).over(Window.orderBy("ts", "event_id")),
     ).localCheckpoint(eager=True)
-    for wave in (1, 3, 2):  # apply the middle third LAST -> out of order
-        m.apply_batch(w.filter(F.col("__w") == wave).drop("__w"))
+    # apply the middle third LAST -> out of order
+    return changes, [w.filter(F.col("__w") == i).drop("__w") for i in (1, 3, 2)]
 
-    got = {tuple(r) for r in m.read(spark).collect()}
+
+def _intervals(spark, m):
+    return {tuple(r) for r in m.read(spark).collect()}
+
+
+def test_scd2_incremental_matches_batch(spark, sf_dir, tmp_path):
+    """Three changelog waves — the LAST one out of order (earlier ts than
+    already-applied changes, the boundary-resurrection case) — end in
+    exactly the intervals batch scd2_build derives from all changes; and
+    buckets untouched by a wave keep their manifest txn."""
+    from flink_playground_spark.streaming.scd2 import Scd2Maintainer
+
+    changes, waves = _scd2_waves(spark, sf_dir)
+    m = Scd2Maintainer(
+        str(tmp_path / "scd2"), ["user_id"], "ts", ["state"], "event_id", n_buckets=8
+    )
+    for wave in waves:
+        m.apply_batch(wave)
+
     want = {
         tuple(r)
         for r in scd2_build(changes, ["user_id"], "ts", ["state"], "event_id").collect()
     }
-    assert got == want
+    assert _intervals(spark, m) == want
 
-    # IO contract: apply a single-key wave; other interval buckets' files
-    # must not be rewritten
+    # IO contract: apply a single-key wave; every other bucket keeps the
+    # version its manifest entry pointed at
     one = changes.orderBy("event_id").limit(1).collect()[0]
-    bucket_dirs = [d for d in os.listdir(m.intervals_path) if d.startswith("__bucket=")]
-    mtimes = {d: os.path.getmtime(f"{m.intervals_path}/{d}") for d in bucket_dirs}
+    before = dict(m.changes._manifest()["buckets"])
     late = spark.createDataFrame(
         [(one.user_id, one.ts, 10_000_000, "late-state")],
         "user_id long, ts timestamp_ntz, event_id long, state string",
     )
     m.apply_batch(late)
-    import pyspark.sql.functions as SF
-
-    target = f"__bucket={spark.range(1).select(SF.pmod(SF.xxhash64(SF.lit(one.user_id).cast('long')), SF.lit(8)).cast('int')).first()[0]}"
-    for d, t in mtimes.items():
-        if d != target:
-            assert os.path.getmtime(f"{m.intervals_path}/{d}") == t, f"{d} rewritten"
+    after = m.changes._manifest()["buckets"]
+    target = str(
+        spark.range(1)
+        .select(F.pmod(F.xxhash64(F.lit(one.user_id).cast("long")), F.lit(8)).cast("int"))
+        .first()[0]
+    )
+    assert after[target] != before[target]
+    assert {b: t for b, t in after.items() if b != target} == {
+        b: t for b, t in before.items() if b != target
+    }
     # and the late row took effect
     assert m.read(spark).filter(F.col("state") == "late-state").count() == 1
+
+
+def test_scd2_reapply_after_failed_commit(spark, sf_dir, tmp_path, monkeypatch):
+    """A batch whose state commit fails folds in once when re-applied:
+    the intervals equal an uninterrupted run's."""
+    from flink_playground_spark.streaming.scd2 import Scd2Maintainer
+    from flink_playground_spark.streaming.txn_state import TransactionalKeyState
+
+    _, waves = _scd2_waves(spark, sf_dir)
+    args = (["user_id"], "ts", ["state"], "event_id")
+    clean = Scd2Maintainer(str(tmp_path / "clean"), *args, n_buckets=8)
+    for wave in waves:
+        clean.apply_batch(wave)
+
+    m = Scd2Maintainer(str(tmp_path / "crash"), *args, n_buckets=8)
+    m.apply_batch(waves[0])
+    commit = TransactionalKeyState._commit
+
+    def crash(self, manifest):
+        raise RuntimeError("crash before the state commit")
+
+    monkeypatch.setattr(TransactionalKeyState, "_commit", crash)
+    with pytest.raises(RuntimeError, match="crash before the state commit"):
+        m.apply_batch(waves[1])
+    monkeypatch.setattr(TransactionalKeyState, "_commit", commit)
+    for wave in waves[1:]:
+        m.apply_batch(wave)
+    assert m.changes._manifest()["writers"] == {"scd2": 2}
+    assert _intervals(spark, m) == _intervals(spark, clean)

@@ -10,15 +10,16 @@ from pyspark.sql import functions as F
 
 from flink_playground_spark.operators.dedup import dedup_latest
 from flink_playground_spark.sources.datagen import TableDescriptor, datagen_batch
+from flink_playground_spark.streaming.changelog import keep_latest_changelog_stream
 from flink_playground_spark.streaming.runners import replay_events_stream, run_to_memory
-from flink_playground_spark.streaming.stateful import dedup_latest_stream
 
 
 def test_streaming_matches_batch_dedup(spark, sf_dir):
     """The streaming keep-latest operator converges to the batch dedup."""
-    stream = replay_events_stream(spark, sf_dir).select("event_id", "ts", "user_id", "value")
-    latest = dedup_latest_stream(stream, "user_id", "ts", tiebreakers=("event_id",))
-    got = run_to_memory(latest, "update")
+    cols = ["event_id", "ts", "user_id", "value"]
+    stream = replay_events_stream(spark, sf_dir).select(*cols)
+    log = keep_latest_changelog_stream(stream, "user_id", "ts", tiebreakers=("event_id",))
+    got = log.filter(F.col("op").isin("+I", "+U")).select(*cols)
     final = dedup_latest(got, "user_id", "ts", tiebreakers=("event_id",))
 
     from flink_playground_spark.sources.tables import load_table

@@ -1,11 +1,10 @@
 """Doc UPDATE (+U) on the streaming dedup surface (r12 verdict Next
 #1): the one-call changed-doc path on every index family and on the
-composed pipeline — atomic rewrite-based excision + re-ingest under ONE
-batch id, crash-pinned at each ledger boundary, drained state == a
+composed pipeline — atomic deletion-vector excision + re-ingest under
+ONE batch id, crash-pinned at each ledger boundary, drained state == a
 batch rebuild over the post-update corpus. Plus the r12 ADVICE items:
-the intra-wave conflict guard, the takedown intent ledger, the
-both-endpoint edge prune in the cluster relabel, and rewrite v2's
-replay marks / dropper / single-pass removed count."""
+the intra-wave conflict guard, the takedown intent ledger, and the
+both-endpoint edge prune in the cluster relabel."""
 
 from __future__ import annotations
 
@@ -107,7 +106,7 @@ def test_update_equals_batch_rebuild_on_post_update_corpus(spark, tmp_path):
 def test_update_can_raise_the_cluster_label(spark, tmp_path):
     """Updating the CANONICAL (minimum) doc out of its cluster must
     RAISE the survivors' label — the move the ingest min-fold can never
-    express and the reason update relabels via one atomic rewrite."""
+    express and the reason update relabels via one atomic upsert."""
     pipe = _ingested_pipe(spark, tmp_path)
     pipe.update(_fp(spark, _UPD), batch_id=3)
     pipe.update(_fp(spark, [(1, 0x123456789ABCDEF)]), batch_id=4)
@@ -374,34 +373,3 @@ def test_stacked_updates_converge_to_final_corpus(spark, tmp_path):
     final[3] = 0x0F0F
     batch_pairs, batch_comp = _batch_truth(spark, sorted(final.items()))
     assert _drain(spark, pipe) == (batch_pairs, batch_comp)
-
-
-def test_rewrite_v2_dropper_replay_and_count(spark, tmp_path):
-    """AppendDeltaState.rewrite: the dropper form, the single-pass
-    removed count, the replay mark landing in the same commit, and the
-    writer-mark-only commit when there is nothing to write."""
-    st = AppendDeltaState(str(tmp_path / "led"), keys=["k"])
-    st.append(spark.createDataFrame([(1, 10), (2, 20), (3, 30)], "k long, v long"))
-    add = spark.createDataFrame([(9, 90)], "k long, v long")
-    removed = st.rewrite(
-        spark,
-        dropper=lambda cur: cur.filter(~F.col("k").isin(1, 2)),
-        add=add,
-        writer_id="w",
-        batch_id=5,
-    )
-    assert removed == 2
-    assert {(r["k"], r["v"]) for r in st.read(spark).collect()} == {(3, 30), (9, 90)}
-    assert st.committed("w", 5)
-    # replay of the committed rewrite: skipped, signalled as None
-    assert st.rewrite(spark, dropper=lambda cur: cur.limit(0), writer_id="w", batch_id=5) is None
-    assert {(r["k"], r["v"]) for r in st.read(spark).collect()} == {(3, 30), (9, 90)}
-    # a later batch proceeds; key-tuple drop still works
-    drop = spark.createDataFrame([(9,)], "k long")
-    assert st.rewrite(spark, drop_keys=drop, writer_id="w", batch_id=6) == 1
-    assert {(r["k"], r["v"]) for r in st.read(spark).collect()} == {(3, 30)}
-    # nothing read, nothing written — the mark must still advance (a
-    # no-op update is a committed outcome for the replay probe)
-    fresh = AppendDeltaState(str(tmp_path / "led2"), keys=["k"])
-    assert fresh.rewrite(spark, writer_id="w", batch_id=1) == 0
-    assert fresh.committed("w", 1)
