@@ -19,8 +19,8 @@ Design:
   batch; the committed-batch-id skip makes the re-delivery a no-op
   instead of a double count — streaming/txn_state.py):
   only the hash buckets the batch's fingerprints touch are read and
-  dynamically overwritten, so state IO is O(batch fingerprints), while
-  total state grows with the corpus.
+  rewritten into a fresh ``t<txn>`` directory, so state IO is O(batch
+  fingerprints), while total state grows with the corpus.
 - The merge is exact because the aggregates are MERGEABLE given
   append-only ingestion (each document arrives in exactly one batch —
   the standard corpus-ingestion contract): occurrence counts and

@@ -21,15 +21,15 @@ buckets the wave touches; candidates re-score with the SAME
 ``similarity.cosine`` left-fold expression over the stored float32
 vectors, so streaming and batch sims are bit-identical doubles.
 
-State = three raw-fact ledgers: bands (tables rows/doc of
-(table, bucket, doc) — ~24 B each), vectors (the float32 embedding,
-once per doc — d×4 B; the wave's COMMIT POINT and the guard's
-seen-docs source), pairs. Verification never scans the vector ledger:
-it reads the wave's vectors plus the state vectors of candidate docs
-only (one semi-join). A doc with a NULL or empty embedding hashes to
-no bucket and stores nothing — it can never pair, so its invisibility
-to the guard is harmless (same contract as the MinHash index's
-zero-shingle docs); a doc updated to one is excised.
+State = three raw-fact ledgers: bands (tables rows/doc of (table,
+bucket, doc) — ~24 B each), vectors (the float32 embedding, once per
+doc — d×4 B; the guard's seen-docs source), pairs. Verification never
+scans the vector ledger: it reads the wave's vectors plus the state
+vectors of candidate docs only (one semi-join). A doc with a NULL or
+empty embedding hashes to no bucket and stores nothing — it can never
+pair, so its invisibility to the guard is harmless (same contract as
+the MinHash index's zero-shingle docs); a doc updated to one is
+excised.
 
 Banding recall: identical to the batch operator's — a pair whose
 vectors collide in none of the ``tables`` hash tables is missed by
@@ -62,8 +62,8 @@ class StreamingCosineLSHIndex(BandedWaveIndex):
     StreamingNearDupPipeline."""
 
     _LEDGERS = (
-        Ledger("bands", "bands", ("table", "bucket", "doc"), ("since_batch",)),
-        Ledger("vectors", "vecs", ("doc",), ("vec", "since_batch")),
+        Ledger("bands", ("table", "bucket", "doc"), ("since_batch",), "bands_removed"),
+        Ledger("vectors", ("doc",), ("vec", "since_batch"), "vecs_removed"),
     )
     _SCORE = ("sim", "double")
     _CONTENT = "xxhash64(vec)"

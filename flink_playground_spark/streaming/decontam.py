@@ -74,7 +74,7 @@ class StreamingDecontaminator:
         )
         # append-only ingestion: each doc arrives once, so keep-latest on
         # the doc id is a plain upsert of its overlap count
-        batch_id = self.ledger._manifest()["writers"].get(_WRITER, -1) + 1
+        batch_id = self.ledger.next_batch(_WRITER)
         self.ledger.merge_keep_latest(_WRITER, batch_id, hits, "n_overlap")
         return hits
 

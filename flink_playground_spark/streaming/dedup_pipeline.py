@@ -46,8 +46,8 @@ that ``resume_takedowns`` replays idempotently on restart.
 
 Updates compose as the third verb (r12 verdict Next #1): ``update
 (wave, b)`` is the one-call changed-doc path — per-index atomic
-deletion-vector upserts (excision + re-ingest in one manifest commit
-each, write IO ∝ wave) under ONE batch id, then a cluster relabel that
+deletion-vector upserts (excision + re-ingest in the index's one
+manifest commit, write IO ∝ wave) under ONE batch id, then a cluster relabel that
 handles both retracted and added edges, with the cluster upsert as the
 composition's commit point. The +I/+U/-D triple is the
 changelog contract the reference exercises everywhere
@@ -118,13 +118,13 @@ class StreamingNearDupPipeline:
 
         1. whole-wave replay probe on the CLUSTER ledger (the
            composition's commit point, same as ``ingest``);
-        2. ``index.update(wave, b)`` — per-ledger atomic deletion-
-           vector upserts, replay-marked, commit-point ledger last (the
-           protocol in wave_index.py): stale
-           pairs retracted, new pairs emitted under ``since_batch=b``;
-        3. the wave's new pairs recovered from the pair ledger (the
-           crash-between-ledgers path reads them back exactly like
-           ``ingest`` does);
+        2. ``index.update(wave, b)`` — deletion-vector upserts of every
+           index ledger in one replay-marked commit (the protocol in
+           wave_index.py): stale pairs retracted, new pairs emitted
+           under ``since_batch=b``;
+        3. the wave's new pairs recovered from the pair ledger (after a
+           crash between the index and cluster commits they are read
+           back exactly like ``ingest`` does);
         4. ``clusters.update(...)`` — relabel exactly the components
            the excision/addition touches, in one atomic upsert that
            is the composition's commit point. Removed edges can RAISE
@@ -235,21 +235,5 @@ class StreamingNearDupPipeline:
         """File-level pending-intent count (pyarrow over the two tiny
         ledgers, no Spark session — same discipline as every
         ops_metrics here): intent rows whose tid has no done marker."""
-        import pyarrow.dataset as ds
-
-        def _col(state: AppendDeltaState, col: str) -> list:
-            import os
-
-            vals: list = []
-            for s in state._manifest()["deltas"]:
-                d = f"{state.path}/d{s}"
-                if os.path.isdir(d) and any(
-                    f.endswith(".parquet") for f in os.listdir(d)
-                ):
-                    vals.extend(
-                        ds.dataset(d, format="parquet").to_table(columns=[col])[col].to_pylist()
-                    )
-            return vals
-
-        done = set(_col(self._intents_done, "tid"))
-        return sum(1 for t in _col(self._intents, "tid") if t not in done)
+        done = set(self._intents_done.column("tid"))
+        return sum(1 for t in self._intents.column("tid") if t not in done)

@@ -31,18 +31,18 @@ rows), candidates come from prefix⋈prefix joins against ONLY the state
 rows whose shingles the wave's prefixes touch (semi-join prune), and
 exact Jaccard verification (dedupe.verify_pairs) reads full sets just
 for the candidate docs. State and emitted pairs are ``AppendDeltaState``
-ledgers under the per-wave protocol of ``wave_index.WaveIndex`` (the
-grams ledger is the commit point). Precondition, ENFORCED: each doc's
-FULL signature arrives in exactly one wave — a violating wave raises
-``OneWavePerDocViolation`` or quarantines the doc per ``on_conflict``,
-never silently folds two conflicting ``(n_sh, rk)`` generations.
+ledgers under the per-wave protocol of ``wave_index.WaveIndex``.
+Precondition, ENFORCED: each doc's FULL signature arrives in exactly
+one wave — a violating wave raises ``OneWavePerDocViolation`` or
+quarantines the doc per ``on_conflict``, never silently folds two
+conflicting ``(n_sh, rk)`` generations.
 
-Guard scope: the grams ARE per-doc raw facts and the commit point, so
-no separate docs ledger is needed; zero-shingle docs store no rows and
-are invisible to the guard by construction — and harmless, they can
-never seed a pair. Only CROSS-wave redelivery is detectable: a doc id
-whose rows within ONE wave mix two frame-hash generations cannot be
-told apart — the input is already exploded (doc, shingle) set rows,
+Guard scope: the grams ARE per-doc raw facts and the guard's seen-docs
+source, so no separate docs ledger is needed; zero-shingle docs store
+no rows and are invisible to the guard by construction — and harmless,
+they can never seed a pair. Only CROSS-wave redelivery is detectable: a
+doc id whose rows within ONE wave mix two frame-hash generations cannot
+be told apart — the input is already exploded (doc, shingle) set rows,
 and one set is indistinguishable from the union of two (unlike the
 other families, whose per-doc payloads make an intra-wave conflict
 visible). Callers must emit each doc's frame set atomically into its
@@ -63,7 +63,7 @@ class StreamingFrameSetIndex(WaveIndex):
     rows at a time; read ``pairs`` for every (id_a, id_b, jaccard) with
     exact set-Jaccard >= threshold emitted so far."""
 
-    _LEDGERS = (Ledger("grams", "grams", ("doc", "shingle"), ("n_sh", "rk")),)
+    _LEDGERS = (Ledger("grams", ("doc", "shingle"), ("n_sh", "rk"), "grams_removed"),)
     _SCORE = ("jaccard", "double")
 
     def __init__(self, workdir: str, threshold: float = 0.8, on_conflict: str = "error"):

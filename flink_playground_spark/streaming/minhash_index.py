@@ -35,19 +35,19 @@ should collapse exact dups upstream (functions/dedupe.dedup_exact is
 one groupBy).
 
 State = three raw-fact ledgers: bands (~3 longs × bands/doc), shingles
-(∝ corpus distinct grams — the same LSM shape as the substring
-ledger), pairs. The SHINGLE ledger is the wave's commit point and the
-guard's seen-docs source (overflow exclusion never removes shingle
-rows, so even a fully-overflowed doc stays visible to the guard;
-zero-shingle docs store nothing and can never pair, so their
-invisibility is harmless). A doc updated to a text with NO shingles is
-excised and stores nothing. The shingle ledger is corpus-sized, which
-is why ``update``'s merge-on-read excision matters most here.
+(∝ corpus distinct grams — the same LSM shape as the substring ledger),
+pairs. The SHINGLE ledger is the guard's seen-docs source (overflow
+exclusion never removes shingle rows, so even a fully-overflowed doc
+stays visible to the guard; zero-shingle docs store nothing and can
+never pair, so their invisibility is harmless). A doc updated to a text
+with NO shingles is excised and stores nothing. The shingle ledger is
+corpus-sized, which is why ``update``'s merge-on-read excision matters
+most here.
 """
 
 from __future__ import annotations
 
-import glob
+import os
 import tempfile
 
 from pyspark.sql import DataFrame
@@ -75,8 +75,8 @@ class StreamingMinHashIndex(BandedWaveIndex):
     StreamingNearDupPipeline."""
 
     _LEDGERS = (
-        Ledger("bands", "bands", ("band", "bucket", "doc"), ("since_batch",)),
-        Ledger("shingles", "shingles", ("doc", "shingle"), ("n_sh",)),
+        Ledger("bands", ("band", "bucket", "doc"), ("since_batch",), "bands_removed"),
+        Ledger("shingles", ("doc", "shingle"), ("n_sh",), "shingles_removed"),
     )
     _SCORE = ("jaccard", "double")
     _CONTENT = "xxhash64(text)"
@@ -141,7 +141,7 @@ def streaming_neardup(
     ``OneWavePerDocViolation``. The drain keeps no stream checkpoint,
     so batch ids restart at 0 and an explicit ``work_dir`` that already
     holds index state is refused."""
-    if work_dir and glob.glob(f"{work_dir}/*/manifest.json"):
+    if work_dir and os.path.exists(f"{work_dir}/manifest.json"):
         raise ValueError(f"work_dir {work_dir} already holds index state")
     idx = StreamingMinHashIndex(
         work_dir or tempfile.mkdtemp(prefix="fps_neardup_"),

@@ -11,7 +11,7 @@ substrings). The index never sees pixels or PCM: callers hash upstream
 (multimodal.perceptual_hash, multimodal.audio_fingerprint) and feed
 (doc, sh) 64-bit fingerprints, so ONE index implementation serves every
 Hamming-fingerprint modality. The per-wave protocol (replay probe,
-guards, bucket cap, ledger order, ``update``, ``forget``) is
+guards, bucket cap, one commit, ``update``, ``forget``) is
 ``wave_index.WaveIndex``'s.
 
 Kernel: the wave's fingerprints band into 4 rows/doc
@@ -54,10 +54,10 @@ class StreamingPhashIndex(BandedWaveIndex):
     honest alias)."""
 
     _LEDGERS = (
-        # docs predate the overflow exclusion (module docstring); bands
-        # are the commit point
-        Ledger("docs", "docs", ("doc",), ("since_batch",), forget_stat=False),
-        Ledger("bands", "bands", ("band", "bucket", "doc"), ("sh",)),
+        # docs keeps a doc whose bands all overflowed visible to the
+        # guard (module docstring)
+        Ledger("docs", ("doc",), ("since_batch",), None),
+        Ledger("bands", ("band", "bucket", "doc"), ("sh",), "bands_removed"),
     )
     _SCORE = ("hamming", "int")
     _CONTENT = "sh"
@@ -89,20 +89,8 @@ class StreamingPhashIndex(BandedWaveIndex):
         docs = banded.select("doc").distinct()
         return {"docs": docs, "bands": banded}
 
-    def _seen_docs(self, spark: SparkSession, batch_id: int) -> DataFrame | None:
-        """A crash between the docs append and the bands commit leaves
-        THIS batch's own ids in the docs ledger; on redelivery those are
-        a replay remnant, not a conflict — filtered by since_batch <
-        batch_id (batch ids are monotone per the foreachBatch contract,
-        see AppendDeltaState.committed)."""
-        seen = self._docs.read(spark)
-        if seen is None:
-            return None
-        return (
-            seen.groupBy("doc")
-            .agg(F.min("since_batch").alias("since_batch"))
-            .filter(F.col("since_batch") < batch_id)
-        )
+    def _seen_docs(self, spark: SparkSession) -> DataFrame | None:
+        return self._docs.read(spark)
 
     def _verify(self, w: dict, cand: DataFrame, dead: DataFrame | None, cross: bool) -> DataFrame:
         ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))

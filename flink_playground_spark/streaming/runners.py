@@ -59,6 +59,7 @@ def replay_waves(table: DataFrame, waves: Sequence[Column]) -> DataFrame:
         table.filter(cond).coalesce(1).write.mode("overwrite").parquet(part)
         dst = f"{src}/wave{i}.parquet"
         shutil.copy(glob.glob(f"{part}/*.parquet")[0], dst)
+        shutil.rmtree(part)  # only src is read
         os.utime(dst, (1_000_000_000 + i * 60, 1_000_000_000 + i * 60))
     return (
         table.sparkSession.readStream.schema(table.schema)

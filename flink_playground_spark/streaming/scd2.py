@@ -56,7 +56,7 @@ class Scd2Maintainer:
         commits as the store's next unseen batch id for writer ``scd2``:
         re-applying a batch whose commit failed folds it once."""
         identity = [*self.keys, self.ts_col, self.tiebreaker]
-        batch_id = self.changes._manifest()["writers"].get(_WRITER, -1) + 1
+        batch_id = self.changes.next_batch(_WRITER)
         self.changes.merge_transform(
             _WRITER,
             batch_id,

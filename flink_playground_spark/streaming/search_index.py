@@ -69,10 +69,7 @@ class StreamingSearchIndex:
         double-count a replayed one; only the caller knows which wave
         this is, so the error says exactly what to do."""
         if batch_id is None:
-            p_next, d_next = (
-                st._manifest()["writers"].get(self.writer_id, -1) + 1
-                for st in (self.postings, self.doclen)
-            )
+            p_next, d_next = (st.next_batch(self.writer_id) for st in (self.postings, self.doclen))
             if p_next != d_next:
                 lag = min(p_next, d_next)
                 raise RuntimeError(

@@ -166,6 +166,13 @@ class TransactionalKeyState:
             json.dump(manifest, fh)
         os.replace(tmp, f"{self.path}/manifest.json")  # the commit point
 
+    def next_batch(self, writer_id: str) -> int:
+        """The batch id after ``writer_id``'s last committed one (0 for
+        a new writer): how a caller outside foreachBatch sequences its
+        own ids, so a batch whose commit failed re-applies under the
+        same id and folds once."""
+        return self._manifest()["writers"].get(writer_id, -1) + 1
+
     def _bucket(self) -> F.Column:
         keys = ", ".join(quote(k) for k in self.keys)
         return F.expr(f"CAST(pmod(xxhash64({keys}), {int(self.n_buckets)}) AS INT)")
@@ -608,16 +615,24 @@ class AppendDeltaState:
       any write — an at-least-once foreachBatch redelivery cannot
       double-count.
 
+    One directory is one transaction log: an instance is one named
+    ``ledger`` of it (``""``, the default, is the one-ledger store), and
+    ``commit_all`` / ``prune_all`` change several ledgers of the same
+    directory in ONE manifest replace carrying one replay mark — a wave
+    that spans ledgers is committed whole or not at all.
+
     Layout::
 
-        path/d<seq>/part-*.parquet   immutable, one dir per append/compaction
-        path/x<seq>/part-*.parquet   immutable DELETION VECTORS (tombstone
-                                     key tuples + __upto seq watermark) —
-                                     committed by ``upsert``, applied by
-                                     readers, settled+cleared at compaction
-        path/manifest.json           {"seq": n, "deltas": [seqs...],
-                                      "tombs": [seqs...],
-                                      "writers": {"w": batch, ...}}
+        path/[<ledger>/]d<seq>/*.parquet   immutable, one dir per delta
+        path/[<ledger>/]x<seq>/*.parquet   immutable DELETION VECTORS
+                                     (tombstone key tuples + __upto seq
+                                     watermark) — committed by ``upsert``,
+                                     applied by readers, settled+cleared
+                                     at compaction
+        path/manifest.json           {"seq": n, "writers": {"w": batch},
+                                      "deltas": [...], "tombs": [...]}
+                                     one-ledger store; a named ledger's
+                                     lists sit in "ledgers": {name: {...}}
 
     On a cluster this is the LSM shape every table format implements
     natively — append = commit a new file set, ``upsert`` = the
@@ -631,6 +646,7 @@ class AppendDeltaState:
         keys: Sequence[str],
         compact_every: int = 8,
         tomb_match: Sequence[Sequence[str]] | None = None,
+        ledger: str = "",
     ):
         """``tomb_match`` arms merge-on-read DELETION VECTORS (the
         ``upsert`` verb): a list of data-column groups, each the same
@@ -643,17 +659,28 @@ class AppendDeltaState:
         tombstones; a doc-keyed ledger passes ``[["doc"]]``. None
         (default) disables ``upsert``; every other verb is unchanged."""
         self.path = path
+        self.ledger = ledger
+        self.dir = f"{path}/{ledger}" if ledger else path
         self.keys = list(keys)
         self.compact_every = compact_every
         self.tomb_match = [list(g) for g in tomb_match] if tomb_match else None
-        os.makedirs(path, exist_ok=True)
+        os.makedirs(self.dir, exist_ok=True)
 
     def _manifest(self) -> dict:
         p = f"{self.path}/manifest.json"
         if not os.path.exists(p):
-            return {"seq": 0, "deltas": [], "writers": {}}
+            return {"seq": 0, "writers": {}}
         with open(p) as fh:
             return json.load(fh)
+
+    def _entry(self, manifest: dict) -> dict:
+        """This ledger's {"deltas", "tombs"} lists in ``manifest``."""
+        led = manifest
+        if self.ledger:
+            led = manifest.setdefault("ledgers", {}).setdefault(self.ledger, {})
+        led.setdefault("deltas", [])
+        led.setdefault("tombs", [])
+        return led
 
     def _commit(self, manifest: dict) -> None:
         tmp = f"{self.path}/manifest.json.tmp"
@@ -663,9 +690,9 @@ class AppendDeltaState:
 
     def committed(self, writer_id: str, batch_id: int) -> bool:
         """True when this (writer, batch) pair is already committed —
-        the replay probe a MULTI-ledger fold runs BEFORE its first
-        write, so a redelivered wave skips the whole ingest (every
-        side effect, not just this ledger's append).
+        the replay probe a fold runs BEFORE its first write, so a
+        redelivered wave skips the whole ingest (every side effect, not
+        just the ledger writes).
 
         Batch-id contract: ids must be MONOTONICALLY NON-DECREASING per
         writer — exactly what Structured Streaming's foreachBatch
@@ -691,22 +718,7 @@ class AppendDeltaState:
         pass both for exactly-once under at-least-once redelivery).
         ``agg_cols`` (the caller's fold) enables auto-compaction when the
         live-delta count reaches ``compact_every``."""
-        with _writer_lock(self.path):
-            manifest = self._manifest()
-            if writer_id is not None and batch_id is not None:
-                last = manifest["writers"].get(writer_id)
-                if last is not None and batch_id <= last:
-                    return False
-            seq = manifest["seq"] + 1
-            partials.write.mode("overwrite").parquet(f"{self.path}/d{seq}")
-            manifest["deltas"].append(seq)
-            manifest["seq"] = seq
-            if writer_id is not None and batch_id is not None:
-                manifest["writers"][writer_id] = batch_id
-            self._commit(manifest)
-            if agg_cols is not None and len(manifest["deltas"]) >= self.compact_every:
-                self._compact_locked(partials.sparkSession, manifest, agg_cols)
-            return True
+        return self.commit_all([(self, None, partials, agg_cols)], writer_id, batch_id)
 
     def read(self, spark: SparkSession) -> DataFrame | None:
         """Union of the live deltas (UNFOLDED partials — callers
@@ -717,24 +729,21 @@ class AppendDeltaState:
         return self._read_live(spark, self._manifest())
 
     def _read_live(self, spark: SparkSession, manifest: dict) -> DataFrame | None:
-        deltas = manifest["deltas"]
-        if not deltas:
+        led = self._entry(manifest)
+        if not led["deltas"]:
             return None
-        tombs = manifest.get("tombs", [])
-        if not tombs:
-            return spark.read.parquet(*[f"{self.path}/d{s}" for s in deltas])
+        if not led["tombs"]:
+            return spark.read.parquet(*[f"{self.dir}/d{s}" for s in led["deltas"]])
         # merge-on-read: tag each delta's rows with its seq (the union
         # fan-in is bounded by compact_every), then anti-join the
         # tombstone set per match group with the watermark condition —
         # rows appended AFTER a tombstone (seq > __upto) survive, which
         # is what lets one atomic upsert drop a key and re-add it.
         data = None
-        for s in deltas:
-            part = spark.read.parquet(f"{self.path}/d{s}").withColumn(
-                "__seq", F.lit(int(s))
-            )
+        for s in led["deltas"]:
+            part = spark.read.parquet(f"{self.dir}/d{s}").withColumn("__seq", F.lit(int(s)))
             data = part if data is None else data.unionByName(part)
-        tomb = spark.read.parquet(*[f"{self.path}/x{s}" for s in tombs])
+        tomb = spark.read.parquet(*[f"{self.dir}/x{s}" for s in led["tombs"]])
         tcols = [c for c in tomb.columns if c != "__upto"]
         for grp in self.tomb_match or [tcols]:
             d = data.alias("__d")
@@ -773,63 +782,78 @@ class AppendDeltaState:
         (writer, batch) — exactly-once under at-least-once redelivery."""
         if self.tomb_match is None:
             raise ValueError("upsert needs tomb_match declared at construction")
-        with _writer_lock(self.path):
-            manifest = self._manifest()
+        return self.commit_all([(self, drop, add, agg_cols)], writer_id, batch_id)
+
+    @staticmethod
+    def commit_all(writes, writer_id: str | None = None, batch_id: int | None = None) -> bool:
+        """Commit ``writes`` — ``(ledger, drop, add, agg_cols)`` tuples
+        over ledgers of ONE directory, each an ``upsert`` (``drop`` None:
+        an ``append``) — in one manifest replace with one replay mark.
+        Every delta lands in a fresh dir before the replace, so a crash
+        anywhere leaves the committed manifest untouched. A ledger whose
+        deltas or tombstones reach ``compact_every`` is folded by its
+        ``agg_cols`` inside the same commit. Returns False when
+        ``(writer_id, batch_id)`` was already committed."""
+        first = writes[0][0]
+        if any(st.path != first.path for st, *_ in writes):
+            raise ValueError("commit_all spans ledgers of one directory only")
+        with _writer_lock(first.path):
+            manifest = first._manifest()
             if writer_id is not None and batch_id is not None:
                 last = manifest["writers"].get(writer_id)
                 if last is not None and batch_id <= last:
-                    return False  # replay of a committed upsert: skip
-            spark = (drop if drop is not None else add).sparkSession
-            # a tombstone against an EMPTY ledger kills nothing — skip
-            # it (also avoids locking in a tombstone schema early)
-            if drop is not None and manifest["deltas"]:
-                upto = manifest["seq"]
-                s1 = manifest["seq"] + 1
-                drop.distinct().withColumn("__upto", F.lit(int(upto))).write.mode(
-                    "overwrite"
-                ).parquet(f"{self.path}/x{s1}")
-                manifest.setdefault("tombs", []).append(s1)
-                manifest["seq"] = s1
-            if add is not None:
-                s2 = manifest["seq"] + 1
-                add.write.mode("overwrite").parquet(f"{self.path}/d{s2}")
-                manifest["deltas"].append(s2)
-                manifest["seq"] = s2
+                    return False
+            upto = manifest["seq"]  # tombstones kill rows committed before this commit
+            for st, drop, add, _ in writes:
+                led = st._entry(manifest)
+                if drop is not None and led["deltas"]:
+                    # a tombstone against an EMPTY ledger kills nothing
+                    drop = drop.distinct().withColumn("__upto", F.lit(int(upto)))
+                    led["tombs"].append(st._write(manifest, drop, "x"))
+                if add is not None:
+                    led["deltas"].append(st._write(manifest, add, "d"))
+            folded = False
+            for st, drop, add, agg_cols in writes:
+                led = st._entry(manifest)
+                live = max(len(led["deltas"]), len(led["tombs"]))
+                if agg_cols is not None and live >= st.compact_every:
+                    spark = (add if add is not None else drop).sparkSession
+                    folded |= st._fold(spark, manifest, agg_cols)
             if writer_id is not None and batch_id is not None:
                 manifest["writers"][writer_id] = batch_id
-            self._commit(manifest)
-            if agg_cols is not None and (
-                len(manifest["deltas"]) >= self.compact_every
-                or len(manifest.get("tombs", [])) >= self.compact_every
-            ):
-                self._compact_locked(spark, manifest, agg_cols)
+            first._commit(manifest)
+            if folded:
+                first.vacuum()
             return True
+
+    def _write(self, manifest: dict, df: DataFrame, kind: str) -> int:
+        """Write ``df`` as this ledger's next ``d``/``x`` dir; its seq."""
+        seq = manifest["seq"] = manifest["seq"] + 1
+        df.write.mode("overwrite").parquet(f"{self.dir}/{kind}{seq}")
+        return seq
 
     def compact(self, spark: SparkSession, agg_cols: Sequence[F.Column]) -> bool:
         """Fold all live deltas into one (read fan-in back to 1). Crash-
         safe: the fold lands in a fresh dir and becomes visible only at
         the manifest commit. Returns False when already compact."""
         with _writer_lock(self.path):
-            return self._compact_locked(spark, self._manifest(), agg_cols)
+            manifest = self._manifest()
+            if not self._fold(spark, manifest, agg_cols):
+                return False
+            self._commit(manifest)
+            self.vacuum()
+            return True
 
-    def _compact_locked(
-        self, spark: SparkSession, manifest: dict, agg_cols: Sequence[F.Column]
-    ) -> bool:
-        if len(manifest["deltas"]) <= 1 and not manifest.get("tombs"):
+    def _fold(self, spark: SparkSession, manifest: dict, agg_cols: Sequence[F.Column]) -> bool:
+        """Stage this ledger's compaction into ``manifest`` (uncommitted)."""
+        led = self._entry(manifest)
+        if len(led["deltas"]) <= 1 and not led["tombs"]:
             return False
         # tombstones are applied PHYSICALLY here and cleared — the
         # merge-on-read debt is settled, reads go back to one scan
         cur = self._read_live(spark, manifest)
-        cols = cur.columns
-        seq = manifest["seq"] + 1
-        cur.groupBy(*self.keys).agg(*agg_cols).select(*cols).write.mode(
-            "overwrite"
-        ).parquet(f"{self.path}/d{seq}")
-        manifest["deltas"] = [seq]
-        manifest["tombs"] = []
-        manifest["seq"] = seq
-        self._commit(manifest)
-        self.vacuum()
+        folded = cur.groupBy(*self.keys).agg(*agg_cols).select(*cur.columns)
+        led["deltas"], led["tombs"] = [self._write(manifest, folded, "d")], []
         return True
 
     def prune(self, spark: SparkSession, predicate: F.Column) -> int:
@@ -851,27 +875,44 @@ class AppendDeltaState:
         is untouched — a replayed wave whose rows were since pruned is
         STILL skipped (retention must not resurrect data through the
         at-least-once path). Cost ∝ live state, a rare maintenance pass."""
-        with _writer_lock(self.path):
-            manifest = self._manifest()
-            if not manifest["deltas"]:
-                return 0
-            cur = self._read_live(spark, manifest)
-            # NULL predicate rows are KEPT (a delete must be affirmative)
-            pred = F.coalesce(predicate.cast("boolean"), F.lit(False))
-            agg = cur.select(
-                F.count(F.lit(1)).alias("total"), F.sum(pred.cast("long")).alias("hits")
-            ).first()
-            removed = int(agg["hits"] or 0)
-            if removed == 0 and not manifest.get("tombs"):
-                return 0
-            seq = manifest["seq"] + 1
-            cur.filter(~pred).write.mode("overwrite").parquet(f"{self.path}/d{seq}")
-            manifest["deltas"] = [seq]
-            manifest["tombs"] = []
-            manifest["seq"] = seq
-            self._commit(manifest)
-            self.vacuum()
+        return self.prune_all(spark, [(self, predicate)])[0]
+
+    @staticmethod
+    def prune_all(spark: SparkSession, prunes) -> list[int]:
+        """``prune`` over ``(ledger, predicate)`` pairs of ONE directory
+        in one manifest replace; rows removed per pair."""
+        first = prunes[0][0]
+        with _writer_lock(first.path):
+            manifest = first._manifest()
+            seq = manifest["seq"]
+            removed = [st._prune_staged(spark, manifest, pred) for st, pred in prunes]
+            if manifest["seq"] != seq:
+                first._commit(manifest)
+                first.vacuum()
             return removed
+
+    def _prune_staged(self, spark: SparkSession, manifest: dict, predicate: F.Column) -> int:
+        led = self._entry(manifest)
+        if not led["deltas"]:
+            return 0
+        cur = self._read_live(spark, manifest)
+        # NULL predicate rows are KEPT (a delete must be affirmative)
+        pred = F.coalesce(predicate.cast("boolean"), F.lit(False))
+        removed = int(cur.select(F.sum(pred.cast("long")).alias("hits")).first()["hits"] or 0)
+        if removed == 0 and not led["tombs"]:
+            return 0
+        led["deltas"], led["tombs"] = [self._write(manifest, cur.filter(~pred), "d")], []
+        return removed
+
+    def _files(self, kind: str, seqs) -> list[str]:
+        dirs = [f"{self.dir}/{kind}{s}" for s in seqs]
+        return [
+            os.path.join(d, f)
+            for d in dirs
+            if os.path.isdir(d)
+            for f in os.listdir(d)
+            if f.endswith(".parquet")
+        ]
 
     def metrics(self) -> dict:
         """Day-2 operational snapshot, file-level (no Spark session):
@@ -882,53 +923,52 @@ class AppendDeltaState:
         to alert on ledger growth before it becomes a problem."""
         import pyarrow.dataset as ds
 
-        def _files(dirs):
-            return [
-                p
-                for d in dirs
-                if os.path.isdir(d)
-                for p in (os.path.join(d, f) for f in os.listdir(d))
-                if p.endswith(".parquet")
-            ]
-
         manifest = self._manifest()
-        files = _files(f"{self.path}/d{s}" for s in manifest["deltas"])
-        tomb_files = _files(f"{self.path}/x{s}" for s in manifest.get("tombs", []))
-        rows = sum(ds.dataset(f, format="parquet").count_rows() for f in files)
+        led = self._entry(manifest)
+        files = self._files("d", led["deltas"])
         out = {
-            "live_deltas": len(manifest["deltas"]),
+            "live_deltas": len(led["deltas"]),
             "compact_every": self.compact_every,
             "seq": manifest["seq"],
             "files": len(files),
             "bytes": sum(os.path.getsize(f) for f in files),
             # physical rows: includes rows a pending deletion vector
             # has already killed logically (settled at compaction)
-            "rows": rows,
+            "rows": sum(ds.dataset(f, format="parquet").count_rows() for f in files),
             "writers": dict(manifest["writers"]),
         }
-        if manifest.get("tombs") or self.tomb_match is not None:
+        if led["tombs"] or self.tomb_match is not None:
             out["tombstones"] = {
-                "live": len(manifest.get("tombs", [])),
+                "live": len(led["tombs"]),
                 "rows": sum(
-                    ds.dataset(f, format="parquet").count_rows() for f in tomb_files
+                    ds.dataset(f, format="parquet").count_rows()
+                    for f in self._files("x", led["tombs"])
                 ),
             }
         return out
 
+    def column(self, col: str) -> list:
+        """Every live-delta value of ``col``, file-level (pyarrow, no
+        Spark session, pending deletion vectors NOT applied) — for the
+        small-by-design ledgers a ``metrics``-style counter sums over."""
+        import pyarrow.parquet as pq
+
+        files = self._files("d", self._entry(self._manifest())["deltas"])
+        return [v for f in files for v in pq.read_table(f, columns=[col])[col].to_pylist()]
+
     def vacuum(self) -> int:
-        """Delete delta/tombstone dirs the manifest no longer references
-        (shadowed by compaction, or orphans of crashed commits)."""
+        """Delete every ledger's delta/tombstone dirs the manifest no
+        longer references (shadowed by compaction, or orphans of crashed
+        commits)."""
         manifest = self._manifest()
-        live = {f"d{s}" for s in manifest["deltas"]} | {
-            f"x{s}" for s in manifest.get("tombs", [])
-        }
         removed = 0
-        for entry in os.listdir(self.path):
-            if (
-                entry[:1] in ("d", "x")
-                and entry[1:].isdigit()
-                and entry not in live
-            ):
-                shutil.rmtree(f"{self.path}/{entry}", ignore_errors=True)
-                removed += 1
+        for name, led in {"": manifest, **manifest.get("ledgers", {})}.items():
+            d = f"{self.path}/{name}" if name else self.path
+            live = {f"d{s}" for s in led.get("deltas", [])} | {
+                f"x{s}" for s in led.get("tombs", [])
+            }
+            for entry in os.listdir(d) if os.path.isdir(d) else ():
+                if entry[:1] in ("d", "x") and entry[1:].isdigit() and entry not in live:
+                    shutil.rmtree(f"{d}/{entry}", ignore_errors=True)
+                    removed += 1
         return removed

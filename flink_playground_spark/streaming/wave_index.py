@@ -12,8 +12,8 @@ data, never a branch on the family).
 
 Protocol of ``ingest`` / ``update`` for one wave ``batch_id``:
 
-1. Replay probe BEFORE any write: if the commit-point ledger (the LAST
-   one written) already holds ``batch_id``, the whole wave is skipped.
+1. Replay probe BEFORE any write: if the index's replay mark already
+   holds ``batch_id``, the whole wave is skipped.
 2. Prepare: the caller's lineage is checkpointed once (often a full
    media-hash or embedding pass); every guard and join reads the
    checkpoint. Every checkpoint a wave takes (``_pin``) is released
@@ -29,7 +29,7 @@ Protocol of ``ingest`` / ``update`` for one wave ``batch_id``:
    a conflicted wave cannot say which generation is current, that is
    what ``update`` waves are for.
 4. Bucket cap (banded families): buckets whose ACCUMULATED distinct-doc
-   count crosses ``max_bucket`` are appended to the overflow ledger and
+   count crosses ``max_bucket`` are staged to the overflow ledger and
    excluded from every later candidate join, and the wave rows they
    swallow after the crossing are SUM-counted
    (``ops_metrics()["overflow_rows_skipped"]``). drained == batch
@@ -42,38 +42,37 @@ Protocol of ``ingest`` / ``update`` for one wave ``batch_id``:
    the buckets the wave touches is read), verified exactly. Every pair
    is emitted once, in the wave of its later member, so the drained
    pair set equals the batch answer.
-6. Ledger writes, each an ``AppendDeltaState`` commit that skips itself
-   per (writer, batch): pairs first, tagged ``since_batch`` so a
-   composed pipeline (dedup_pipeline.py) can recover exactly this
-   wave's pairs after a crash between this commit and a downstream
-   one (min-fold safe: a pair is emitted in exactly one wave); then the
-   family's state ledgers, the commit point LAST. A crash anywhere
-   before the commit point redelivers the wave: its content is
-   recomputed deterministically, already-committed ledgers skip via
-   their replay marks, and the rest catch up — the wave's own rows can
-   never make the guard self-flag.
+6. One commit: every ledger's delta for the wave (quarantine,
+   overflow, pairs, the family's state ledgers) lands in a fresh
+   directory, then ONE manifest replace (``AppendDeltaState.commit_all``)
+   publishes them all with one replay mark for the index. A crash
+   anywhere before it leaves the committed state exactly as it was and
+   redelivers the wave. Pairs are tagged ``since_batch`` so a composed
+   pipeline (dedup_pipeline.py) can recover exactly this wave's pairs
+   after a crash between this commit and a downstream one (min-fold
+   safe: a pair is emitted in exactly one wave).
 
 ``ingest`` appends. ``update`` is the one-call changed-doc path (+U)
 the cross-wave guard otherwise refuses — the PK upsert of
 WithStateTtlJob.java:73-77 and the keep-latest dedup of
-WithDeduplicateJoinJob.java:88-104: each ledger write is ONE atomic
-``AppendDeltaState.upsert`` (a deletion-vector delta killing the wave
-docs' old rows, the new rows and the replay mark in one manifest
-commit), and the wave docs' old state is excluded from candidates and
-verification. It is one call, not ``forget`` + ``ingest``, because that
-pair leaves a crash window in which the doc has silently vanished; here
-every committed point holds either a doc's old generation or its new
-one. A doc id not yet committed is simply inserted. Per-wave write IO
-is ∝ WAVE rows for both verbs (merge-on-read: tombstones are applied by
-readers and settled at the next compaction, never a rewrite in the
-wave path).
+WithDeduplicateJoinJob.java:88-104: each ledger write is an upsert (a
+deletion-vector delta killing the wave docs' old rows beside the new
+rows, all ledgers in the wave's one commit), and the wave docs' old
+state is excluded from candidates and verification. It is one call,
+not ``forget`` + ``ingest``, because that pair leaves a crash window in
+which the doc has silently vanished; here every committed point holds
+either a doc's old generation or its new one. A doc id not yet
+committed is simply inserted. Per-wave write IO is ∝ WAVE rows for
+both verbs (merge-on-read: tombstones are applied by readers and
+settled at the next compaction, never a rewrite in the wave path).
 
-Every ledger row is a raw per-doc fact, so ``forget`` is surgical. The
-replay ledger still skips the original waves (deletes must not
-resurrect data), and overflowed buckets stay excluded (the cap records
-that a bucket WAS degenerate; un-crossing it would silently re-admit
-candidates recall already skipped — re-ingest survivors into a fresh
-index to reclaim such buckets).
+Every ledger row is a raw per-doc fact, so ``forget`` is surgical and
+prunes every ledger in one commit. The replay mark still skips the
+original waves (deletes must not resurrect data), and overflowed
+buckets stay excluded (the cap records that a bucket WAS degenerate;
+un-crossing it would silently re-admit candidates recall already
+skipped — re-ingest survivors into a fresh index to reclaim such
+buckets).
 """
 
 from __future__ import annotations
@@ -103,19 +102,7 @@ class IntraWaveConflict(ValueError):
     (or the doc quarantined whole) BEFORE any state write."""
 
 
-def _sum_ledger_col(state: AppendDeltaState, col: str) -> int:
-    """File-level SUM over one column of a (tiny, bounded-by-design)
-    ledger — no Spark session, same discipline as ``metrics()``."""
-    import pyarrow.compute as pc
-    import pyarrow.dataset as ds
-
-    total = 0
-    for s in state._manifest()["deltas"]:
-        d = f"{state.path}/d{s}"
-        if os.path.isdir(d) and any(f.endswith(".parquet") for f in os.listdir(d)):
-            v = pc.sum(ds.dataset(d, format="parquet").to_table(columns=[col])[col])
-            total += v.as_py() or 0
-    return total
+_WRITER = "wave"  # the index's one replay mark
 
 
 def state_bytes(workdir: str, ledger: str) -> int:
@@ -156,17 +143,17 @@ def _with_candidates(wave_rows: DataFrame, state: DataFrame, cand: DataFrame) ->
 
 class Ledger(NamedTuple):
     """One state ledger of a family, declared as class data. The ledger
-    lives in ``workdir/<name>``, is the instance attribute
-    ``_<writer>``, is keyed on ``keys`` with ``[["doc"]]`` deletion
-    vectors, and folds ``mins`` by MIN on compaction. A ``since_batch``
-    in ``mins`` tags the rows with the wave that wrote them. The
-    prepared wave's ``<name>`` frame is what it receives."""
+    lives in ``workdir/<name>``, is the instance attribute ``_<name>``,
+    is keyed on ``keys`` with ``[["doc"]]`` deletion vectors, and folds
+    ``mins`` by MIN on compaction. A ``since_batch`` in ``mins`` tags
+    the rows with the wave that wrote them. The prepared wave's
+    ``<name>`` frame is what it receives; ``forget()`` reports its
+    removed rows under ``forget_key`` (None: not reported)."""
 
     name: str
-    writer: str
     keys: tuple
     mins: tuple
-    forget_stat: bool = True  # report ``<writer>_removed`` from forget()
+    forget_key: str | None
 
 
 class WaveIndex:
@@ -176,7 +163,7 @@ class WaveIndex:
     docstring. Subclasses set the class data below and implement
     ``_source``, ``_prepare`` and ``_wave_pairs``."""
 
-    _LEDGERS: tuple  # state ledgers in write order, commit point last
+    _LEDGERS: tuple  # state ledgers; the last holds what verification reads
     _SCORE: tuple  # the pair ledger's score column and its type
     _CONTENT: str | None = None  # SQL over the source wave: per-doc payload
     _PAYLOAD = ""  # the payload's name in IntraWaveConflict messages
@@ -188,15 +175,14 @@ class WaveIndex:
         self.workdir = workdir
         self.on_conflict = on_conflict
         for led in self._LEDGERS:
-            state = AppendDeltaState(
-                f"{workdir}/{led.name}", keys=list(led.keys), tomb_match=[["doc"]]
-            )
-            setattr(self, f"_{led.writer}", state)
+            state = AppendDeltaState(workdir, led.keys, tomb_match=[["doc"]], ledger=led.name)
+            setattr(self, f"_{led.name}", state)
         self._pairs = AppendDeltaState(
-            f"{workdir}/pairs", keys=["id_a", "id_b"], tomb_match=[["id_a"], ["id_b"]]
+            workdir, ["id_a", "id_b"], tomb_match=[["id_a"], ["id_b"]], ledger="pairs"
         )
-        self._quarantine = AppendDeltaState(f"{workdir}/quarantine", keys=["doc"])
+        self._quarantine = AppendDeltaState(workdir, ["doc"], ledger="quarantine")
         self._pinned: list[DataFrame] = []  # the current wave's checkpoints
+        self._writes: list[tuple] = []  # the current wave's staged ledger writes
 
     # -- family kernel -------------------------------------------------------
 
@@ -210,11 +196,9 @@ class WaveIndex:
         name. Both guards drop a quarantined doc from every frame."""
         raise NotImplementedError
 
-    def _seen_docs(self, spark: SparkSession, batch_id: int) -> DataFrame | None:
-        """Doc ids committed by EARLIER waves. The commit-point ledger
-        serves: its rows land last, so a crash-redelivered wave never
-        finds its own."""
-        return self._commit_ledger().read(spark)
+    def _seen_docs(self, spark: SparkSession) -> DataFrame | None:
+        """Doc ids committed by earlier waves: the last ledger's."""
+        return self._last().read(spark)
 
     def _wave_pairs(self, w: dict, batch_id: int, dead: DataFrame | None) -> DataFrame:
         """The wave's verified (id_a, id_b, score) pairs. ``dead``: doc
@@ -231,20 +215,25 @@ class WaveIndex:
         self._pinned.append(out)
         return out
 
-    def _commit_ledger(self) -> AppendDeltaState:
-        return getattr(self, f"_{self._LEDGERS[-1].writer}")
+    def _stage(self, state: AppendDeltaState, rows: DataFrame, agg_cols: list, drop=None):
+        """Queue one ledger write (an upsert when ``drop`` is given) for
+        the wave's one commit."""
+        self._writes.append((state, drop, rows, agg_cols))
+
+    def _last(self) -> AppendDeltaState:
+        return getattr(self, f"_{self._LEDGERS[-1].name}")
 
     def _live_state(self, spark: SparkSession, dead: DataFrame | None) -> DataFrame | None:
-        """The commit-point ledger's rows minus the ``dead`` docs."""
-        state = self._commit_ledger().read(spark)
+        """The last ledger's rows minus the ``dead`` docs."""
+        state = self._last().read(spark)
         if state is not None and dead is not None:
             state = state.join(F.broadcast(dead), "doc", "left_anti")
         return state
 
-    def _refuse(self, w, bad: DataFrame, batch_id: int, exc: type, msg: str, fix: str, writer):
-        """Raise ``exc`` naming a sample of ``bad`` docs, or append them
-        to the quarantine ledger under ``writer`` and drop them from
-        ``w`` (one frame or a dict of frames)."""
+    def _refuse(self, w, bad: DataFrame, batch_id: int, exc: type, msg: str, fix: str):
+        """Raise ``exc`` naming a sample of ``bad`` docs, or stage them
+        to the quarantine ledger and drop them from ``w`` (one frame or
+        a dict of frames)."""
         if bad.isEmpty():
             return w
         if self.on_conflict == "error":
@@ -253,12 +242,7 @@ class WaveIndex:
                 f"wave {batch_id} {msg} (sample: {sample}) — {fix} or construct "
                 "the index with on_conflict='quarantine'"
             )
-        self._quarantine.append(
-            _tag(bad, batch_id),
-            writer_id=writer,
-            batch_id=batch_id,
-            agg_cols=_mins(["since_batch"]),
-        )
+        self._stage(self._quarantine, _tag(bad, batch_id), _mins(["since_batch"]))
         if isinstance(w, dict):
             return {k: v.join(F.broadcast(bad), "doc", "left_anti") for k, v in w.items()}
         return w.join(F.broadcast(bad), "doc", "left_anti")
@@ -277,13 +261,13 @@ class WaveIndex:
         )
         msg = f"carries >1 distinct {self._PAYLOAD} for the same doc id"
         fix = "resolve upstream (keep-latest per doc)"
-        return self._refuse(src, bad, batch_id, IntraWaveConflict, msg, fix, "quarantine_intra")
+        return self._refuse(src, bad, batch_id, IntraWaveConflict, msg, fix)
 
     def _guard_one_wave_per_doc(self, w: dict, batch_id: int) -> dict:
         """Anti-probe the wave's doc ids against ``_seen_docs`` (module
         docstring, step 3): one columnar scan of the seen frame per
         wave, semi-joined against the broadcast wave ids."""
-        seen = self._seen_docs(w["docs"].sparkSession, batch_id)
+        seen = self._seen_docs(w["docs"].sparkSession)
         if seen is None:
             return w
         bad = self._pin(
@@ -291,17 +275,19 @@ class WaveIndex:
         )
         msg = "re-delivers already-committed doc ids — one-wave-per-doc violated"
         fix = "fold changed docs through update()"
-        return self._refuse(w, bad, batch_id, OneWavePerDocViolation, msg, fix, "quarantine")
+        return self._refuse(w, bad, batch_id, OneWavePerDocViolation, msg, fix)
 
     def _fold(self, wave: DataFrame, batch_id: int, update: bool) -> None:
         if self.committed(batch_id):
             return  # replay of a committed wave: skipped before ANY write
         try:
             self._fold_wave(wave, batch_id, update)
+            AppendDeltaState.commit_all(self._writes, writer_id=_WRITER, batch_id=batch_id)
         finally:
             for df in self._pinned:
                 release_checkpoint(df)
             self._pinned.clear()
+            self._writes.clear()
 
     def _fold_wave(self, wave: DataFrame, batch_id: int, update: bool) -> None:
         src = self._guard_intra_wave(self._source(wave), batch_id)
@@ -313,16 +299,10 @@ class WaveIndex:
         if not update:
             w = self._guard_one_wave_per_doc(w, batch_id)
         pairs = _tag(self._wave_pairs(w, batch_id, dead), batch_id)
-        writes = [(self._pairs, "pairs", pairs, (self._SCORE[0], "since_batch"))]
+        self._stage(self._pairs, pairs, _mins([self._SCORE[0], "since_batch"]), dead)
         for led in self._LEDGERS:
             rows = _tag(w[led.name], batch_id) if "since_batch" in led.mins else w[led.name]
-            writes.append((getattr(self, f"_{led.writer}"), led.writer, rows, led.mins))
-        for state, writer, rows, mins in writes:
-            kw = dict(writer_id=writer, batch_id=batch_id, agg_cols=_mins(mins))
-            if dead is None:
-                state.append(rows, **kw)
-            else:
-                state.upsert(dead, rows, **kw)
+            self._stage(getattr(self, f"_{led.name}"), rows, _mins(led.mins), dead)
 
     # -- API -----------------------------------------------------------------
 
@@ -346,10 +326,10 @@ class WaveIndex:
         return wave.select(F.col(self.id_col).alias("doc")).distinct()
 
     def committed(self, batch_id: int) -> bool:
-        """True when ``batch_id`` is fully folded (the commit-point
-        ledger holds it). The composed pipeline uses this to tell
-        'index done, downstream not' apart from a whole-wave replay."""
-        return self._commit_ledger().committed(self._LEDGERS[-1].writer, batch_id)
+        """True when ``batch_id`` is folded (the index's replay mark
+        holds it). The composed pipeline uses this to tell 'index done,
+        downstream not' apart from a whole-wave replay."""
+        return self._pairs.committed(_WRITER, batch_id)
 
     def _read_pairs(self, spark: SparkSession, batch_id: int | None) -> DataFrame:
         score, typ = self._SCORE
@@ -388,15 +368,12 @@ class WaveIndex:
         a compaction). Caveats in the module docstring."""
         ids = sorted(set(docs))
         is_doc = F.col("doc").isin(ids)
-        out = {}
-        for led in self._LEDGERS:
-            n = getattr(self, f"_{led.writer}").prune(spark, is_doc)
-            if led.forget_stat:
-                out[f"{led.writer}_removed"] = n
-        out["pairs_removed"] = self._pairs.prune(
-            spark, F.col("id_a").isin(ids) | F.col("id_b").isin(ids)
-        )
-        self._quarantine.prune(spark, is_doc)
+        prunes = [(getattr(self, f"_{led.name}"), is_doc) for led in self._LEDGERS]
+        prunes.append((self._pairs, F.col("id_a").isin(ids) | F.col("id_b").isin(ids)))
+        prunes.append((self._quarantine, is_doc))
+        removed = AppendDeltaState.prune_all(spark, prunes)
+        out = {led.forget_key: n for led, n in zip(self._LEDGERS, removed) if led.forget_key}
+        out["pairs_removed"] = removed[len(self._LEDGERS)]
         return out
 
     def ops_metrics(self) -> dict:
@@ -405,7 +382,7 @@ class WaveIndex:
         ledger. Alert on ``quarantine.rows > 0`` (guard violations
         routed aside, never folded) and on live deltas nearing
         ``compact_every`` (read fan-in ceiling)."""
-        out = {led.name: getattr(self, f"_{led.writer}").metrics() for led in self._LEDGERS}
+        out = {led.name: getattr(self, f"_{led.name}").metrics() for led in self._LEDGERS}
         out["pairs"] = self._pairs.metrics()
         out["quarantine"] = self._quarantine.metrics()
         return out
@@ -424,8 +401,8 @@ class BandedWaveIndex(WaveIndex):
         super().__init__(workdir, on_conflict)
         self.max_bucket = max_bucket
         key = [self._BAND, "bucket"]
-        self._overflow = AppendDeltaState(f"{workdir}/bucket_overflow", keys=key)
-        self._ovf_skip = AppendDeltaState(f"{workdir}/overflow_skipped", keys=key)
+        self._overflow = AppendDeltaState(workdir, key, ledger="bucket_overflow")
+        self._ovf_skip = AppendDeltaState(workdir, key, ledger="overflow_skipped")
 
     def _verify(self, w: dict, cand: DataFrame, dead, cross: bool) -> DataFrame:
         """Exact scores for the candidate pairs; ``cross``: candidates
@@ -433,19 +410,18 @@ class BandedWaveIndex(WaveIndex):
         raise NotImplementedError
 
     def _overflow_set(self, spark: SparkSession) -> DataFrame | None:
-        """Committed overflow buckets, deduplicated (a bucket is appended
-        once — when it crosses the cap — but a crash-redo could legally
-        append it twice; the distinct absorbs that)."""
+        """Committed overflow buckets (each recorded once, in the wave
+        it crossed the cap)."""
         out = self._overflow.read(spark)
-        return None if out is None else out.select(self._BAND, "bucket").distinct()
+        return None if out is None else out.select(self._BAND, "bucket")
 
     def _cap_and_count(
         self, banded: DataFrame, prior: DataFrame | None, batch_id: int
     ) -> tuple[DataFrame, DataFrame | None]:
         """The bucket-cap protocol: accumulated distinct-doc occupancy
-        over TOUCHED buckets only, newly-crossed buckets appended to the
+        over TOUCHED buckets only, newly-crossed buckets staged to the
         overflow ledger, the swallowed wave rows SUM-counted, and both
-        sides anti-joined against the full set."""
+        sides anti-joined against the committed ∪ newly-crossed set."""
         if self.max_bucket is None:
             return banded, prior
         spark = banded.sparkSession
@@ -465,24 +441,22 @@ class BandedWaveIndex(WaveIndex):
         # the overflow set is BOUNDED BY DESIGN (the loud exception
         # list, not data): checkpointing it costs one tiny job and lets
         # the healthy path — nothing overflowed, nothing known — skip
-        # the ledger append and both exclusion joins outright
+        # the ledger write and both exclusion joins outright
         new_over = self._pin(over)
         if not new_over.isEmpty():
-            # one immutable delta — atomic manifest commit, replay-
-            # skipped, never rewriting (or even reading) the recorded
-            # set; the exclusion joins read committed executor-side
-            # state, so overflow rows never pass through the driver
-            self._overflow.append(
-                _tag(new_over, batch_id),
-                writer_id="overflow",
-                batch_id=batch_id,
-                agg_cols=_mins(["since_batch"]),
-            )
-            known = self._overflow_set(spark)
+            # one immutable delta in the wave's commit, never rewriting
+            # (or even reading) the recorded set; the exclusion joins
+            # read executor-side frames, so overflow rows never pass
+            # through the driver
+            self._stage(self._overflow, _tag(new_over, batch_id), _mins(["since_batch"]))
+            # pinned: the union of a committed scan and a checkpoint, joined
+            # back against the wave it derives from, fails Spark's
+            # constraint inference (Union.rewriteConstraints: key not found)
+            known = new_over if known is None else self._pin(known.unionByName(new_over))
         if known is None:
             return banded, prior
         # quantify the divergence: the wave rows each overflowed bucket
-        # swallows AFTER its crossing; appended only on the (degenerate)
+        # swallows AFTER its crossing; staged only on the (degenerate)
         # overflow path — the clean path pays nothing
         skipped = self._pin(
             banded.join(F.broadcast(known), key, "left_semi")
@@ -490,12 +464,7 @@ class BandedWaveIndex(WaveIndex):
             .agg(F.count(F.lit(1)).alias("n_rows"))
         )
         if not skipped.isEmpty():
-            self._ovf_skip.append(
-                skipped,
-                writer_id="ovf_skip",
-                batch_id=batch_id,
-                agg_cols=[F.sum("n_rows").alias("n_rows")],
-            )
+            self._stage(self._ovf_skip, skipped, [F.sum("n_rows").alias("n_rows")])
         banded = banded.join(F.broadcast(known), key, "left_anti")
         if prior is not None:
             prior = prior.join(F.broadcast(known), key, "left_anti")
@@ -566,5 +535,5 @@ class BandedWaveIndex(WaveIndex):
         fresh index (0 in any clean run)."""
         out = super().ops_metrics()
         out["overflow"] = self._overflow.metrics()
-        out["overflow_rows_skipped"] = _sum_ledger_col(self._ovf_skip, "n_rows")
+        out["overflow_rows_skipped"] = sum(self._ovf_skip.column("n_rows"))
         return out

@@ -24,6 +24,41 @@ def sf_dir():
     return SF_SMALL
 
 
+@pytest.fixture
+def crash_at(monkeypatch):
+    """``crash_at(point)`` makes the next ``AppendDeltaState`` commit die
+    at ``point``: ``"manifest"`` (its one manifest replace) or
+    ``"second_delta"`` (the second delta dir it writes).
+    ``monkeypatch.undo()`` disarms it."""
+    import os
+
+    from flink_playground_spark.streaming.txn_state import AppendDeltaState
+
+    def arm(point: str) -> None:
+        if point == "manifest":
+            replace = os.replace
+
+            def dies_at_replace(src, dst):
+                if str(dst).endswith("/manifest.json"):
+                    raise RuntimeError("simulated crash at the manifest replace")
+                return replace(src, dst)
+
+            monkeypatch.setattr(os, "replace", dies_at_replace)
+            return
+        assert point == "second_delta", point
+        write, calls = AppendDeltaState._write, []
+
+        def dies_at_second(self, manifest, df, kind):
+            calls.append(kind)
+            if len(calls) == 2:
+                raise RuntimeError("simulated crash at the second delta write")
+            return write(self, manifest, df, kind)
+
+        monkeypatch.setattr(AppendDeltaState, "_write", dies_at_second)
+
+    return arm
+
+
 # ---------------------------------------------------------------------------
 # Fast/slow gate split (round 14). The full suite takes ~33 min — past the
 # verify driver's budget, which truncated the round-13 run at ~60% and

@@ -391,6 +391,7 @@ def test_append_delta_steady_state_fan_in_bounded_long_stream(spark, tmp_path):
     cost) is bounded by the compaction knob, not by how many waves ever
     committed. Covers both AppendDeltaState users: the substring gram
     ledger and the phash band ledger."""
+    import json
     import time
 
     from flink_playground_spark.streaming.phash_index import StreamingPhashIndex
@@ -426,8 +427,9 @@ def test_append_delta_steady_state_fan_in_bounded_long_stream(spark, tmp_path):
         idx.ingest(
             spark.createDataFrame(rows, "doc long, sh long"), batch_id=w
         )
-        assert len(idx._bands._manifest()["deltas"]) <= 3, w
-        assert len(idx._pairs._manifest()["deltas"]) <= 3, w
+        ledgers = json.loads((tmp_path / "ph" / "manifest.json").read_text())["ledgers"]
+        assert len(ledgers["bands"]["deltas"]) <= 3, w
+        assert len(ledgers["pairs"]["deltas"]) <= 3, w
     assert idx.pairs(spark).count() >= 0
 
 

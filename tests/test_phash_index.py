@@ -6,6 +6,8 @@ from __future__ import annotations
 import tempfile
 from functools import partial
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from flink_playground_spark.streaming.phash_index import StreamingPhashIndex
@@ -93,6 +95,29 @@ def test_bucket_overflow_excluded_and_ledgered(spark):
     # a later arrival in the same buckets stays excluded
     idx.ingest(_fp(spark, [(99, 0x1234)]), batch_id=1)
     assert idx.pairs(spark).count() == 0
+
+
+@pytest.mark.parametrize("verb", ["ingest", "update"])
+def test_crossing_while_overflow_committed(spark, tmp_path, verb):
+    """A wave whose buckets cross the cap while earlier crossings are
+    already committed excludes the committed AND the newly-crossed
+    buckets (ingest and update waves alike), and counts what they
+    swallow."""
+    a, b = 0x0F0F, 1 << 40  # share their zero bands 1 and 3
+    idx = StreamingPhashIndex(str(tmp_path), on_conflict="quarantine", max_bucket=2)
+    idx.ingest(_fp(spark, [(1, a), (2, a)]), batch_id=0)
+    idx.ingest(_fp(spark, [(3, a), (4, b)]), batch_id=1)  # 3 docs: a's buckets cross
+    idx.ingest(_fp(spark, [(1, a), (5, b)]), batch_id=2)  # doc 1 quarantined
+    wave = [(6, b)] if verb == "ingest" else [(2, b)]
+    getattr(idx, verb)(_fp(spark, wave), batch_id=3)  # b's band-2 bucket crosses
+    pairs = {(r["id_a"], r["id_b"]) for r in idx.pairs(spark).collect()}
+    # (1, 3) and (2, 3) fell to a's crossing; an update retracts (1, 2)
+    assert pairs == ({(4, 5)} if verb == "update" else {(1, 2), (4, 5)}), pairs
+    # a's 4 buckets, then b's (band 0, 0) and (band 2, 0x100)
+    assert idx.overflow_buckets(spark).count() == 6
+    # wave 1: doc 3's 4 rows + doc 4's 2 zero bands; wave 2: doc 5's 2;
+    # wave 3: the wave doc's 4 rows
+    assert idx.ops_metrics()["overflow_rows_skipped"] == 12
 
 
 def _overflow_bytes(work):
@@ -237,13 +262,12 @@ def test_one_wave_per_doc_quarantine_mode_never_folds(spark):
     }
 
 
-def test_crash_at_commit_point_replays_guard_deterministically(spark):
-    """Crash protocol x guard interaction: a wave dies AT the bands
-    append (its commit point) AFTER the quarantine, pairs and docs
-    ledgers committed. Redelivery must (a) not mistake the wave's own
-    docs-ledger remnant for a conflict (since_batch == batch_id), (b)
-    re-quarantine the genuine violator without double-appending, and
-    (c) converge to the same state as an un-crashed run."""
+def test_crash_at_commit_point_replays_guard_deterministically(spark, crash_at, monkeypatch):
+    """Crash protocol x guard interaction: a wave dies AT its one
+    manifest replace, after every ledger's delta (the quarantine row
+    included) was written. Redelivery must (b) re-quarantine the
+    genuine violator exactly once and (c) converge to the same state as
+    an un-crashed run."""
     import pytest
 
     work = tempfile.mkdtemp(prefix="fps_phidx_cr_")
@@ -251,21 +275,15 @@ def test_crash_at_commit_point_replays_guard_deterministically(spark):
     idx.ingest(_fp(spark, [(1, 0x0F0F), (2, 0x0F0F)]), batch_id=0)
     wave1 = [(1, 0x00FF), (3, 0x00FF), (4, 0x00FF)]  # doc 1 violates
 
-    orig = idx._bands.append
-
-    def dies_at_commit(*a, **k):
-        raise RuntimeError("simulated crash at the wave's commit point")
-
-    idx._bands.append = dies_at_commit
-    with pytest.raises(RuntimeError, match="commit point"):
+    crash_at("manifest")
+    with pytest.raises(RuntimeError, match="simulated crash"):
         idx.ingest(_fp(spark, wave1), batch_id=1)
-    idx._bands.append = orig
-    assert not idx.committed(1)  # bands never landed: the wave replays
+    monkeypatch.undo()
+    assert not idx.committed(1)  # nothing landed: the wave replays
 
     idx.ingest(_fp(spark, wave1), batch_id=1)  # redelivery
     assert idx.committed(1)
-    # docs 3 and 4 (their docs-ledger rows were crash remnants, NOT
-    # conflicts) paired; doc 1 stayed quarantined, exactly once
+    # docs 3 and 4 paired; doc 1 stayed quarantined, exactly once
     assert {(r["id_a"], r["id_b"]) for r in idx.pairs(spark).collect()} == {
         (1, 2), (3, 4),
     }

@@ -116,28 +116,22 @@ def test_update_can_raise_the_cluster_label(spark, tmp_path):
     assert 1 not in comp and 1 not in comp.values()
 
 
-def test_update_crash_between_index_ledgers_converges(spark, tmp_path):
-    """Crash INSIDE the index update, after the pairs rewrite committed
-    but before docs/bands: redelivery of the same batch id skips the
-    committed rewrite via its replay mark, catches the rest up, and the
-    drained state equals the un-crashed run — at no committed point was
-    any doc absent from the index."""
+def test_update_crash_between_index_ledgers_converges(spark, tmp_path, crash_at, monkeypatch):
+    """Crash INSIDE the index update, at its one manifest replace after
+    every ledger's delta was written: nothing of the wave is committed
+    (no pairs, no docs), every base doc is still present, and
+    redelivery of the same batch id converges to the un-crashed run —
+    at no committed point was any doc absent from the index."""
     pipe = _ingested_pipe(spark, tmp_path)
     idx = pipe.index
-    orig = idx._docs.upsert
-
-    def boom(*a, **k):
-        raise RuntimeError("simulated crash after pairs upsert")
-
-    idx._docs.upsert = boom
+    crash_at("manifest")
     with pytest.raises(RuntimeError, match="simulated crash"):
         pipe.update(_fp(spark, _UPD), batch_id=3)
-    # pairs committed, docs/bands did not — the mid-update crash window
-    assert idx._pairs.committed("pairs", 3) and not idx.committed(3)
+    monkeypatch.undo()
+    assert idx.pairs_for_batch(spark, 3).count() == 0 and not idx.committed(3)
     # every base doc still present in SOME generation (nothing vanished)
     docs_now = {r["doc"] for r in idx._docs.read(spark).select("doc").collect()}
     assert {d for d, _ in _BASE} <= docs_now
-    idx._docs.upsert = orig
     pipe.update(_fp(spark, _UPD), batch_id=3)  # redelivery heals
     assert _drain(spark, pipe) == (_POST_PAIRS, _POST_COMP)
 

@@ -1,7 +1,7 @@
 """The shared per-wave protocol (streaming/wave_index.py) on all four
 streaming near-dup index families, on a handful of docs: a replayed
 wave writes nothing, a cross-wave re-delivery raises or is quarantined,
-and a crash at the commit point redelivers to the uninterrupted
+and a crash inside a wave's one commit redelivers to the uninterrupted
 result."""
 
 from __future__ import annotations
@@ -73,14 +73,25 @@ def _listing(root):
     )
 
 
-@pytest.mark.parametrize("family", sorted(FAMILIES))
-def test_replay_guard_and_crash_at_commit_point(spark, tmp_path, family):
+# the crash points of a wave's one commit; at the replace (the commit
+# point itself) a family's test keeps its bare id
+CRASHES = [
+    pytest.param(family, point, id=family if point == "manifest" else f"{family}-{point}")
+    for family in sorted(FAMILIES)
+    for point in ("manifest", "second_delta")
+]
+
+
+@pytest.mark.parametrize("family,point", CRASHES)
+def test_replay_guard_and_crash_at_commit_point(
+    spark, tmp_path, crash_at, monkeypatch, family, point
+):
     """Replaying a committed batch_id leaves the ledger directory
     listing unchanged; re-delivering a committed doc under a new
-    batch_id raises under on_conflict="error". A wave whose
-    commit-point write raises (every other ledger of the wave already
-    committed) redelivers to the uninterrupted run's pairs and ledger
-    rows, its own crash remnants never making the guard self-flag;
+    batch_id raises under on_conflict="error". A wave that dies inside
+    its one commit (at the second ledger's delta write, or at the
+    manifest replace) leaves the manifest byte-identical and redelivers
+    to the uninterrupted run's pairs and ledger rows, quarantine at 0;
     under "quarantine" the re-delivery is routed aside as one row while
     the rest of its wave still folds. No fold, committed or raised,
     leaves a persisted RDD (its checkpoints) behind."""
@@ -101,21 +112,19 @@ def test_replay_guard_and_crash_at_commit_point(spark, tmp_path, family):
 
     idx = cls(str(tmp_path / "crash"), on_conflict="quarantine")
     idx.ingest(mk(spark, waves[0]), batch_id=0)
-    commit = idx._commit_ledger()
-
-    def dies_at_commit(*a, **k):
-        raise RuntimeError("simulated crash at the wave's commit point")
-
-    commit.append = dies_at_commit
-    with pytest.raises(RuntimeError, match="commit point"):
+    manifest = (tmp_path / "crash" / "manifest.json").read_bytes()
+    crash_at(point)
+    with pytest.raises(RuntimeError, match="simulated crash"):
         idx.ingest(mk(spark, waves[1]), batch_id=1)
-    del commit.append
+    monkeypatch.undo()
     assert not idx.committed(1)
+    assert (tmp_path / "crash" / "manifest.json").read_bytes() == manifest
     idx.ingest(mk(spark, waves[1]), batch_id=1)  # redelivery
     assert idx.committed(1)
     assert _pairs(spark, idx) == AFTER_TWO
     rows = lambda i: {k: v["rows"] for k, v in i.ops_metrics().items() if isinstance(v, dict)}
-    assert rows(idx) == rows(ref)  # quarantine included: no self-flag
+    assert rows(idx) == rows(ref)
+    assert rows(idx)["quarantine"] == 0
     idx.ingest(mk(spark, waves[2]), batch_id=2)
     assert idx.ops_metrics()["quarantine"]["rows"] == 1
     assert _pairs(spark, idx) == AFTER_TWO | {(4, 5)}
