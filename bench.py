@@ -169,7 +169,7 @@ def _pipeline_wave_throughput(spark, sf_dir: str, only=None) -> dict:
 
     def run_hamming() -> float:
         work = tempfile.mkdtemp(prefix="bench_pipe_h_")
-        pipe = StreamingNearDupPipeline(work, StreamingHammingIndex(f"{work}/idx"))
+        pipe = StreamingNearDupPipeline(StreamingHammingIndex(f"{work}/idx"))
         ids = _spread(docs.select("doc_id"), "doc_id")
         t0 = time.perf_counter()
         for w in range(3):
@@ -187,7 +187,6 @@ def _pipeline_wave_throughput(spark, sf_dir: str, only=None) -> dict:
     def _minhash_pipe():
         work = tempfile.mkdtemp(prefix="bench_pipe_m_")
         return StreamingNearDupPipeline(
-            work,
             StreamingMinHashIndex(f"{work}/idx", k=128, bands=32, n=3, threshold=0.8),
         )
 

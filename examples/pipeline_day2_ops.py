@@ -20,8 +20,8 @@ loop this example runs end to end:
    pipeline (Hamming index + incremental clusters), and the video
    frameset index;
 7. TAKEDOWN — forget a canonical doc through BOTH pipeline stages and
-   verify the cascade relabeled its cluster — with the intent ledger
-   proving an interrupted cascade is detectable and resumable;
+   verify the cascade relabeled its cluster — both stages land in one
+   commit, so an interrupted takedown is simply repeated;
 8. UPDATE — the changed-doc flow an operator actually runs: detect
    drifted content via an exact-fingerprint mismatch, fold the changed
    docs through ``pipe.update`` (one batch id, atomic per-ledger
@@ -140,9 +140,7 @@ def main() -> None:
         StreamingNearDupPipeline,
     )
 
-    pipe = StreamingNearDupPipeline(
-        f"{work}/neardup_pipe", StreamingPhashIndex(f"{work}/neardup_pipe/idx")
-    )
+    pipe = StreamingNearDupPipeline(StreamingPhashIndex(f"{work}/neardup_pipe/idx"))
     small = docs.select("doc_id").filter(F.col("doc_id") < 120)
 
     def synth(batches):
@@ -193,11 +191,9 @@ def main() -> None:
     assert left.filter(
         (F.col("node") == victim) | (F.col("comp") == victim)
     ).count() == 0
-    # the cascade ran under an intent ledger: a crash between its two
-    # stages would leave a PENDING intent for resume_takedowns; healthy
-    # runs close every intent, and the dashboard metric proves it
-    assert pipe.pending_takedowns(spark).count() == 0
-    assert pipe.ops_metrics()["pending_takedowns"] == 0
+    # both stages landed in ONE manifest replace: a crash anywhere in
+    # the takedown leaves it wholly unapplied, and repeating it heals
+    assert fstats["clusters"]["forgotten"] == 1
 
     # 8. UPDATE — the changed-doc flow. Upstream re-extracted the
     # corpus and some docs' content DRIFTED. Detect them the way an
@@ -244,17 +240,17 @@ def main() -> None:
     print(f"doc 9 pairs before update: {sorted(before_pairs)}; after: {sorted(after_pairs)}")
     print(f"doc 9 cluster after update: {after.get(9)} (class 15..17 label: {after.get(16)})")
     # old class pairs retracted, new class joined, labels consistent —
-    # and the metrics stayed clean (no quarantine, nothing pending)
+    # and the metrics stayed clean (no quarantine)
     assert before_pairs == {(9, 10), (9, 11)} and after_pairs == {(9, 15), (9, 16), (9, 17)}
     assert after[9] == after[16] == after[15] == after[17] == 9  # min id is the label
     assert after[10] == after[11] == 10  # the old class relabeled without 9
     pm2 = pipe.ops_metrics()
-    assert pm2["index"]["quarantine"]["rows"] == 0 and pm2["pending_takedowns"] == 0
+    assert pm2["index"]["quarantine"]["rows"] == 0
 
     print(
         "day-2 loop complete: observe -> compact -> snapshot -> "
         "exactly-once agg -> rescale -> pipeline + index ops metrics -> "
-        "takedown (intent-closed) -> changed-doc update"
+        "takedown (one commit) -> changed-doc update"
     )
 
 

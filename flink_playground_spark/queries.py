@@ -5557,10 +5557,10 @@ def streaming_neardup_pipeline(spark, sf_dir):
     incremental duplicate clusters, fused in ONE per-wave fold
     (streaming/dedup_pipeline.py) — not the r11 shape that replayed
     batch-verified pairs in synthetic waves. Each wave is hashed (one
-    Arrow pass), banded against only the touched band state, its
-    verified pairs recovered from the pair ledger's since_batch tag,
-    and folded into the cluster mapping, all inside what foreachBatch
-    would run; the wave split (doc_id % 3) puts copies of each planted
+    Arrow pass), banded against only the touched band state, and its
+    verified pairs folded into the cluster mapping, both landing in the
+    index's one commit, all inside what foreachBatch would run; the
+    wave split (doc_id % 3) puts copies of each planted
     class in DIFFERENT waves so every pair AND every cluster merge
     crosses state. The drained mapping (+ size/canonical attach — two
     windows over the mapping, no joins) is value-checked bit-exactly
@@ -5588,7 +5588,7 @@ def streaming_neardup_pipeline(spark, sf_dir):
             yield pdf[["doc_id"]].assign(blob=blobs, media_format="image/ppm")
 
     work = tempfile.mkdtemp(prefix="fps_pipe_")
-    pipe = StreamingNearDupPipeline(work, StreamingHammingIndex(f"{work}/idx"))
+    pipe = StreamingNearDupPipeline(StreamingHammingIndex(f"{work}/idx"))
     docs = _spread(_t(spark, sf_dir, "documents").select("doc_id"), "doc_id")
     for w in range(3):
         wave = docs.filter(F.col("doc_id") % 3 == w).mapInPandas(synth, schema=out_schema)
@@ -5620,7 +5620,7 @@ def streaming_text_neardup_pipeline(spark, sf_dir):
     incremental clusters, fused per wave through the SAME
     StreamingNearDupPipeline fold as the image query
     (streaming/dedup_pipeline.py): the pipeline surface
-    (ingest/committed/pairs_for_batch/forget) is a contract all three
+    (ingest/update/committed/pairs/forget) is a contract all four
     index families implement, not a per-modality special case. The
     wave split (doc_id % 3) puts near-dup classes across waves, so
     pairs and cluster merges cross state. Unlike the image pipeline's
@@ -5641,7 +5641,7 @@ def streaming_text_neardup_pipeline(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     work = tempfile.mkdtemp(prefix="fps_txtpipe_")
     pipe = StreamingNearDupPipeline(
-        work, StreamingMinHashIndex(f"{work}/idx", k=128, bands=32, n=3, threshold=0.8)
+        StreamingMinHashIndex(f"{work}/idx", k=128, bands=32, n=3, threshold=0.8)
     )
     for w in range(3):
         pipe.ingest(docs.filter(F.col("doc_id") % 3 == w), batch_id=w)
@@ -5705,7 +5705,7 @@ def streaming_text_update_pipeline(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     work = tempfile.mkdtemp(prefix="fps_updpipe_")
     pipe = StreamingNearDupPipeline(
-        work, StreamingMinHashIndex(f"{work}/idx", k=128, bands=32, n=3, threshold=0.8)
+        StreamingMinHashIndex(f"{work}/idx", k=128, bands=32, n=3, threshold=0.8)
     )
     for w in range(3):
         pipe.ingest(docs.filter(F.col("doc_id") % 3 == w), batch_id=w)
@@ -5793,7 +5793,7 @@ def streaming_update_pipeline(spark, sf_dir):
         )
 
     work = tempfile.mkdtemp(prefix="fps_updimg_")
-    pipe = StreamingNearDupPipeline(work, StreamingHammingIndex(f"{work}/idx"))
+    pipe = StreamingNearDupPipeline(StreamingHammingIndex(f"{work}/idx"))
     docs = _spread(_t(spark, sf_dir, "documents").select("doc_id"), "doc_id")
     for w in range(3):
         wave = docs.filter(F.col("doc_id") % 3 == w).mapInPandas(synth, schema=out_schema)
@@ -5936,7 +5936,7 @@ def streaming_embedding_update_pipeline(spark, sf_dir):
 
     v = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     work = tempfile.mkdtemp(prefix="fps_updemb_")
-    pipe = StreamingNearDupPipeline(work, StreamingCosineLSHIndex(f"{work}/idx"))
+    pipe = StreamingNearDupPipeline(StreamingCosineLSHIndex(f"{work}/idx"))
     for w in range(3):
         pipe.ingest(v.filter(F.col("vec_id") % 3 == w), batch_id=w)
     src = v.select(F.col("vec_id").alias("sid"), F.col("embedding").alias("semb"))

@@ -29,9 +29,12 @@ the series; ``needs_retrain`` compares the latest wave's drift against
 the geometry's own training fit (ratio > threshold ⇒ stale);
 ``retrain`` is the explicit offline rebuild: re-run Lloyd over the
 CURRENT state, swap the geometry, reassign every stored vector once,
-and reset the fit baseline. The trigger is exposed, not automatic —
-rebuild cost is a capacity decision, the engine's job is to make the
-drift visible and the rebuild one call.
+and reset the fit baseline. Every (re)trained geometry lands in its own
+``centroids/w<wave>`` directory and is read only once its wave's cells
+commit (``committed_geometry``), so a crash never leaves cells beside
+centroids they were not assigned under. The trigger is exposed, not
+automatic — rebuild cost is a capacity decision, the engine's job is to
+make the drift visible and the rebuild one call.
 """
 
 from __future__ import annotations
@@ -54,6 +57,21 @@ from flink_playground_spark.streaming.wave_index import release_checkpoint
 
 # the writer id of an index's state; its batch ids are drift-log waves
 _WRITER = "waves"
+
+
+def committed_geometry(root: str, state: TransactionalKeyState) -> str | None:
+    """The newest ``root/w<wave>`` geometry whose wave ``state`` has
+    committed, or None. Each (re)train writes a fresh directory named
+    after the wave that trains it, so a geometry whose wave never
+    committed stays invisible beside the one the state was assigned
+    under (and is rewritten when that wave is redelivered)."""
+    last = state.next_batch(_WRITER) - 1
+    waves = [
+        int(d[1:])
+        for d in (os.listdir(root) if os.path.isdir(root) else ())
+        if d[:1] == "w" and d[1:].isdigit() and int(d[1:]) <= last
+    ]
+    return f"{root}/w{max(waves)}" if waves else None
 
 
 class DriftLog:
@@ -182,19 +200,24 @@ class StreamingIVFIndex:
         self.centroids_path = f"{path}/centroids"
         self.drift = DriftLog(f"{path}/metrics", "mean_drift")
         self.cells = TransactionalKeyState(f"{path}/cells", ["vid"], n_buckets)
-        self._trained = os.path.isdir(self.centroids_path)
 
-    def _centroids(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.centroids_path)
+    def _train(self, corpus: DataFrame) -> str:
+        """Train centroids over ``corpus`` into the directory of the wave
+        about to fold (``committed_geometry``); its path."""
+        out = f"{self.centroids_path}/w{self.drift.next_wave()}"
+        kmeans_centroids(
+            corpus, self.id_col, self.vec_col, self.n_centroids, self.kmeans_iters
+        ).write.mode("overwrite").parquet(out)
+        return out
 
-    def _fold(self, vectors: DataFrame, phase: str) -> None:
-        """Assign ``vectors`` to the current centroids — (vid, vec,
+    def _fold(self, vectors: DataFrame, phase: str, centroids: str) -> None:
+        """Assign ``vectors`` to the ``centroids`` — (vid, vec,
         centroid_id) plus the fit error — and fold them into the cells
         and the drift log; one assignment pass feeds both."""
         assigned = (
             ivf_assign(
-                vectors, self._centroids(vectors.sparkSession), self.id_col, self.vec_col,
-                nprobe=1, keep_sim=True,
+                vectors, vectors.sparkSession.read.parquet(centroids), self.id_col,
+                self.vec_col, nprobe=1, keep_sim=True,
             )
             .withColumn("err", 1.0 - F.col("csim"))
             .drop("csim")
@@ -206,13 +229,11 @@ class StreamingIVFIndex:
         """Assign a vector wave to frozen centroids and upsert the cells.
         The first wave also trains (then freezes) the centroids. Every
         wave appends its fit to the drift log."""
-        first = not self._trained
-        if first:
-            kmeans_centroids(
-                batch, self.id_col, self.vec_col, self.n_centroids, self.kmeans_iters
-            ).write.mode("overwrite").parquet(self.centroids_path)
-            self._trained = True
-        self._fold(batch, "train" if first else "ingest")
+        centroids = committed_geometry(self.centroids_path, self.cells)
+        if centroids is None:
+            self._fold(batch, "train", self._train(batch))
+        else:
+            self._fold(batch, "ingest", centroids)
 
     def drift_report(self, spark: SparkSession) -> DataFrame:
         """Per-wave fit series (``DriftLog.drift_report``); the metric is
@@ -239,10 +260,7 @@ class StreamingIVFIndex:
         corpus = state.select(
             F.col("vid").alias(self.id_col), F.col("vec").alias(self.vec_col)
         )
-        kmeans_centroids(
-            corpus, self.id_col, self.vec_col, self.n_centroids, self.kmeans_iters
-        ).write.mode("overwrite").parquet(self.centroids_path)
-        self._fold(corpus, "retrain")
+        self._fold(corpus, "retrain", self._train(corpus))
 
     def query(
         self, spark: SparkSession, queries: DataFrame, k: int = 5, nprobe: int = 4
@@ -250,9 +268,8 @@ class StreamingIVFIndex:
         """Approximate top-k neighbors from the current cell state; the
         returned sims are exact cosines of the candidates."""
         state = self.cells.read(spark)
-        probes = ivf_assign(
-            queries, self._centroids(spark), self.id_col, self.vec_col, nprobe=nprobe
-        )
+        centroids = spark.read.parquet(committed_geometry(self.centroids_path, self.cells))
+        probes = ivf_assign(queries, centroids, self.id_col, self.vec_col, nprobe=nprobe)
         cand = (
             probes.alias("q")
             .join(

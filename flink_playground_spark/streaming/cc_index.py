@@ -51,15 +51,23 @@ class StreamingDupClusters:
     """Feed ``ingest`` one wave of (u, v) near-dup edges at a time; read
     ``mapping`` for the current (node, comp) cluster assignment, comp =
     min node id of the component (the canonical-survivor rule every
-    batch cluster operator here uses)."""
+    batch cluster operator here uses).
+
+    The mapping is the ledger ``mapping`` of ``workdir``'s transaction
+    log, so it can share a directory (and a commit) with other ledgers:
+    each verb commits on its own under the replay mark ``"cc"``, and its
+    ``stage_*`` half returns the one ``AppendDeltaState.commit_all``
+    write instead — how the composed pipeline (dedup_pipeline.py) lands
+    the mapping in its index's wave commit."""
 
     def __init__(self, workdir: str, compact_every: int = 8):
         self.workdir = workdir
         self._state = AppendDeltaState(
-            f"{workdir}/mapping",
+            workdir,
             keys=["node"],
             compact_every=compact_every,
             tomb_match=[["node"]],
+            ledger="mapping",
         )
 
     @staticmethod
@@ -77,11 +85,6 @@ class StreamingDupClusters:
             return spark.createDataFrame([], "node long, comp long")
         return out.groupBy("node").agg(*self._agg())
 
-    def committed(self, batch_id: int) -> bool:
-        """True when ``batch_id`` is already folded into the mapping —
-        the composed pipeline's whole-wave replay probe."""
-        return self._state.committed("cc", batch_id)
-
     def ingest(self, edges: DataFrame, batch_id: int, src: str = "u", dst: str = "v") -> None:
         """Fold one wave of undirected edges. Replay of a committed
         batch_id is probed before any write. Batch ids must be
@@ -92,9 +95,12 @@ class StreamingDupClusters:
         CONTENT of waves may be permuted freely — the min-fold absorbs
         any interleaving of edges across re-sequenced waves (pinned by
         the out-of-order test)."""
+        if not self._state.committed("cc", batch_id):
+            AppendDeltaState.commit_all([self.stage_ingest(edges, src, dst)], "cc", batch_id)
+
+    def stage_ingest(self, edges: DataFrame, src: str = "u", dst: str = "v") -> tuple:
+        """``ingest``'s write, uncommitted."""
         spark = edges.sparkSession
-        if self._state.committed("cc", batch_id):
-            return
         e = (
             edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
             .filter(F.col("u").isNotNull() & F.col("v").isNotNull() & (F.col("u") != F.col("v")))
@@ -123,9 +129,7 @@ class StreamingDupClusters:
             )
             graph = e.unionByName(star)
         new_map = connected_components(graph, "u", "v").select("node", "comp")
-        self._state.append(
-            new_map, writer_id="cc", batch_id=batch_id, agg_cols=self._agg()
-        )
+        return (self._state, None, new_map, self._agg())
 
     def update(
         self,
@@ -171,8 +175,20 @@ class StreamingDupClusters:
         relabel now. Updated docs isolated by the update (no surviving
         edge) leave the mapping — the 'isolated docs never enter the
         graph' convention."""
-        if self._state.committed("cc", batch_id):
-            return
+        if not self._state.committed("cc", batch_id):
+            write = self.stage_update(spark, upd_docs, surviving_edges, src, dst, new_edges)
+            AppendDeltaState.commit_all([write], "cc", batch_id)
+
+    def stage_update(
+        self,
+        spark: SparkSession,
+        upd_docs: DataFrame,
+        surviving_edges: DataFrame,
+        src: str = "id_a",
+        dst: str = "id_b",
+        new_edges: DataFrame | None = None,
+    ) -> tuple:
+        """``update``'s write, uncommitted."""
         edges = (
             surviving_edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
             .filter(F.col("u").isNotNull() & F.col("v").isNotNull() & (F.col("u") != F.col("v")))
@@ -184,8 +200,8 @@ class StreamingDupClusters:
         # (their NEW neighbors, possibly in components previously
         # untouched by any updated doc — an update can MERGE clusters).
         # When the caller already knows the wave's new pairs
-        # (``new_edges`` — the composed pipeline passes
-        # index.pairs_for_batch), seed from those directly instead of
+        # (``new_edges`` — the composed pipeline passes the wave's
+        # staged pairs), seed from those directly instead of
         # scanning the full surviving set for updated-doc references:
         # every pair an update wave emits references a wave doc, so the
         # two derivations are equivalent and the explicit one is
@@ -224,9 +240,7 @@ class StreamingDupClusters:
         # rows are tombstoned (so labels can RAISE) and the new labels
         # land, with the replay mark, in the same manifest commit —
         # write IO ∝ touched-component mass, never the whole mapping
-        self._state.upsert(
-            scope, new_map, writer_id="cc", batch_id=batch_id, agg_cols=self._agg()
-        )
+        return (self._state, scope, new_map, self._agg())
 
     def forget(
         self,
@@ -249,12 +263,12 @@ class StreamingDupClusters:
         mapping or the new one, never label-less survivors). Write IO ∝
         touched-component mass, like ``update``.
 
-        ``surviving_edges``: the pair set with the cohort's pairs
-        already removed — exactly what the pair indexes' ``forget``
-        leaves behind (the composed pipeline passes ``index.pairs()``).
-        Any edge still referencing a forgotten doc is dropped here too,
-        so passing the pre-forget pair set is merely wasteful, not
-        wrong. Edges of UNTOUCHED components are pruned by a semi-join
+        ``surviving_edges``: the pair set with or without the cohort's
+        pairs — any edge referencing a forgotten doc is dropped here, so
+        the pre-forget pair set is as good as what the pair indexes'
+        ``forget`` leaves behind (the composed pipeline passes the
+        former: its index prune lands in the same commit). Edges of
+        UNTOUCHED components are pruned by a semi-join
         against the touched members before the CC solve — work ∝
         touched-component mass, like ingest. Survivors isolated by the
         excision (no surviving edge) leave the mapping entirely — the
@@ -264,10 +278,26 @@ class StreamingDupClusters:
         the writers map untouched, so the cohort's ORIGINAL waves remain
         skipped (a delete must not resurrect data through the
         at-least-once path)."""
+        write, stats = self.stage_forget(spark, docs, surviving_edges, src, dst)
+        if write is not None:
+            AppendDeltaState.commit_all([write])
+        return stats
+
+    def stage_forget(
+        self,
+        spark: SparkSession,
+        docs,
+        surviving_edges: DataFrame | None = None,
+        src: str = "id_a",
+        dst: str = "id_b",
+    ) -> tuple:
+        """``forget``'s write, uncommitted (None for a no-op), and its
+        stats."""
         ids = sorted(set(docs))
+        noop = {"forgotten": 0, "touched_members": 0}
         cur = self.mapping(spark)
         if not ids:
-            return {"forgotten": 0, "touched_members": 0}
+            return None, noop
         victims = cur.filter(F.col("node").isin(ids))
         touched = victims.select("comp").distinct()
         members = (
@@ -276,7 +306,7 @@ class StreamingDupClusters:
         )
         n_members = members.count()
         if n_members == 0:
-            return {"forgotten": 0, "touched_members": 0}  # no-op stays a no-op
+            return None, noop  # no-op stays a no-op
         member_nodes = members.select("node")
         edges = None
         if surviving_edges is not None:
@@ -291,14 +321,13 @@ class StreamingDupClusters:
                 .distinct()
                 .localCheckpoint(eager=True)
             )
-            # in steady state an edge touching a member has BOTH
-            # endpoints among the members (components are edge-closed at
-            # ingest), but in the documented crash window — index
-            # committed a wave's pairs, cluster ledger not yet — the
-            # pair set can reference a not-yet-ingested endpoint. Prune
-            # on the UNION of both endpoints so the relabel solve's
-            # input is well-defined regardless (r12 ADVICE): an edge is
-            # kept iff EITHER endpoint is a touched member, never
+            # when the edges are the ones this mapping was folded from,
+            # an edge touching a member has BOTH endpoints among the
+            # members (components are edge-closed at ingest), but a
+            # caller's pair set can reference an endpoint never
+            # ingested here. Prune on the UNION of both endpoints so the
+            # relabel solve's input is well-defined regardless: an edge
+            # is kept iff EITHER endpoint is a touched member, never
             # asymmetrically by which side happens to be the member.
             keep_u = edges.join(
                 F.broadcast(member_nodes.withColumnRenamed("node", "u")), "u", "left_semi"
@@ -314,9 +343,9 @@ class StreamingDupClusters:
             if edges is not None
             else None
         )
-        self._state.upsert(member_nodes, new_map, agg_cols=self._agg())
         n_victims = members.filter(F.col("node").isin(ids)).count()
-        return {"forgotten": n_victims, "touched_members": n_members - n_victims}
+        stats = {"forgotten": n_victims, "touched_members": n_members - n_victims}
+        return (self._state, member_nodes, new_map, self._agg()), stats
 
     def ops_metrics(self) -> dict:
         """Day-2 snapshot (file-level, no Spark session) — same surface

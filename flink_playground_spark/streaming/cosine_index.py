@@ -63,7 +63,7 @@ class StreamingCosineLSHIndex(BandedWaveIndex):
 
     _LEDGERS = (
         Ledger("bands", ("table", "bucket", "doc"), ("since_batch",), "bands_removed"),
-        Ledger("vectors", ("doc",), ("vec", "since_batch"), "vecs_removed"),
+        Ledger("vectors", ("doc",), ("vec",), "vecs_removed"),
     )
     _SCORE = ("sim", "double")
     _CONTENT = "xxhash64(vec)"

@@ -28,7 +28,9 @@ STALENESS: frozen codebooks degrade when the ingest distribution
 drifts — quantization error (the winning codeword's squared L2, which
 the encode pass computes anyway) creeps up with no error anywhere.
 Each ingest records the wave's mean error in the same ``DriftLog`` as
-the IVF index, with the same fit-ratio contract.
+the IVF index, with the same fit-ratio contract, and versions its book
+the same way: ``book/w<wave>``, read once that wave's codes commit
+(``ann_index.committed_geometry``).
 """
 
 from __future__ import annotations
@@ -40,7 +42,7 @@ from flink_playground_spark.functions.similarity import (
     pq_encode_rows,
     pq_train,
 )
-from flink_playground_spark.streaming.ann_index import DriftLog
+from flink_playground_spark.streaming.ann_index import DriftLog, committed_geometry
 from flink_playground_spark.streaming.txn_state import TransactionalKeyState
 
 
@@ -58,67 +60,62 @@ class StreamingPQIndex:
         iters: int = 2,
         n_buckets: int = 8,
     ):
-        import os
-
         self.id_col = id_col
         self.vec_col = vec_col
         self.dim, self.m, self.n_codes, self.iters = dim, m, n_codes, iters
         self.book_path = f"{path}/book"
         self.drift = DriftLog(f"{path}/metrics", "mean_err")
         self.codes = TransactionalKeyState(f"{path}/codes", ["vid"], n_buckets)
-        self._trained = os.path.isdir(self.book_path)
         # the frozen geometry is BOUNDED (m × n_codes entries) and
         # immutable between (re)trains, so it lives driver-side for the
         # index's lifetime: the parquet copy is the durable/reattach
-        # format, read at most ONCE per process — round 7 re-read and
-        # re-collected it on every ingest AND query, the largest
-        # orchestration cost on the bench board.
-        self._book_dict: dict | None = None
+        # format, read at most ONCE per process and version — round 7
+        # re-read and re-collected it on every ingest AND query, the
+        # largest orchestration cost on the bench board.
+        self._book_cache: tuple[str, dict] | None = None  # (path, book)
 
-    def _book(self, spark: SparkSession) -> dict:
-        """The frozen {(sub, code): codeword} book, cached driver-side;
-        falls back to one parquet read on reattach."""
-        if self._book_dict is None:
-            self._book_dict = {
+    def _book(self, spark: SparkSession) -> tuple[str, dict] | None:
+        """The committed (path, {(sub, code): codeword}) book, cached
+        driver-side; one parquet read on reattach. None before the
+        first train commits."""
+        path = committed_geometry(self.book_path, self.codes)
+        if path is not None and (self._book_cache is None or self._book_cache[0] != path):
+            self._book_cache = (path, {
                 (int(r["sub"]), int(r["code"])): [float(x) for x in r["codeword"]]
-                for r in spark.read.parquet(self.book_path).collect()
-            }
-        return self._book_dict
+                for r in spark.read.parquet(path).collect()
+            })
+        return None if path is None else self._book_cache
 
     def _book_df(self, spark: SparkSession) -> DataFrame:
         """The cached book as the bounded (sub, code, codeword) relation
         pq_adc_topk broadcasts — rebuilt from the dict, no parquet read."""
         return spark.createDataFrame(
-            [(s, c, cw) for (s, c), cw in sorted(self._book(spark).items())],
+            [(s, c, cw) for (s, c), cw in sorted(self._book(spark)[1].items())],
             "sub int, code int, codeword array<double>",
         )
 
-    def _set_book(
-        self, spark: SparkSession, book_df: DataFrame, book_dict: dict | None = None
-    ) -> None:
-        """Freeze a newly trained geometry: persist the durable parquet
-        copy and cache the driver-side dict — taken straight from
-        pq_train when available (it holds the book driver-side across
-        Lloyd rounds), else collected from the bounded local relation.
+    def _train(self, corpus: DataFrame) -> tuple[str, dict]:
+        """Train a book over ``corpus`` into the directory of the wave
+        about to fold (``committed_geometry``); its (path, book). The
+        driver-side book comes straight from pq_train (it holds the
+        book across Lloyd rounds).
 
         The durable parquet copy is written in-process by pyarrow, as
         the drift log's rows are: the geometry is m × n_codes tiny
         rows, and the former ``book_df.write.parquet`` cost a ~0.7s
         Spark job per index build (round-13 profile) to move a few KB."""
         import os
-        import shutil
 
         import pyarrow as pa
         import pyarrow.parquet as papq
 
-        self._book_dict = book_dict or {
-            (int(r["sub"]), int(r["code"])): [float(x) for x in r["codeword"]]
-            for r in book_df.collect()
-        }
-        rows = sorted(self._book_dict.items())
-        if os.path.isdir(self.book_path):
-            shutil.rmtree(self.book_path)  # overwrite semantics (retrain)
-        os.makedirs(self.book_path, exist_ok=True)
+        _, book = pq_train(
+            corpus, self.id_col, self.vec_col, self.dim, self.m,
+            self.n_codes, self.iters, _return_book_dict=True,
+        )
+        path = f"{self.book_path}/w{self.drift.next_wave()}"
+        rows = sorted(book.items())
+        os.makedirs(path, exist_ok=True)
         papq.write_table(
             pa.table(
                 {
@@ -129,12 +126,12 @@ class StreamingPQIndex:
                     ),
                 }
             ),
-            f"{self.book_path}/book.parquet",
+            f"{path}/book.parquet",
         )
-        self._trained = True
+        return path, book
 
-    def _fold(self, vectors: DataFrame, phase: str) -> None:
-        """Encode ``vectors`` against the current book and fold the codes
+    def _fold(self, vectors: DataFrame, phase: str, book: tuple[str, dict]) -> None:
+        """Encode ``vectors`` against ``book`` and fold the codes
         into state and the drift log. The encode is ONE zero-shuffle
         Arrow stage (``pq_encode_rows``: all m subspaces per batch, no
         explode, no (vid)-keyed re-assembly exchange; codes bit-identical
@@ -146,24 +143,20 @@ class StreamingPQIndex:
         job; the state merge then reads the checkpointed rows, never
         re-encoding."""
         encoded = pq_encode_rows(
-            vectors, self._book(vectors.sparkSession), self.id_col, self.vec_col,
-            self.dim, self.m, keep_err=True,
+            vectors, book[1], self.id_col, self.vec_col, self.dim, self.m, keep_err=True
         )
         self.drift.fold(self.codes, encoded.localCheckpoint(eager=False), phase)
+        self._book_cache = book  # committed with the fold
 
     def ingest(self, batch: DataFrame) -> None:
         """Encode a vector wave against the frozen codebooks and upsert
         the codes. The first wave also trains (then freezes) the book.
         Every wave appends its quantization error to the drift log."""
-        spark = batch.sparkSession
-        first = not self._trained
-        if first:
-            bdf, bdict = pq_train(
-                batch, self.id_col, self.vec_col, self.dim, self.m,
-                self.n_codes, self.iters, _return_book_dict=True,
-            )
-            self._set_book(spark, bdf, bdict)
-        self._fold(batch, "train" if first else "ingest")
+        book = self._book(batch.sparkSession)
+        if book is None:
+            self._fold(batch, "train", self._train(batch))
+        else:
+            self._fold(batch, "ingest", book)
 
     def drift_report(self, spark: SparkSession) -> DataFrame:
         """Per-wave fit series (``DriftLog.drift_report``); the metric is
@@ -186,12 +179,7 @@ class StreamingPQIndex:
         book and reset the fit baseline. Vectors not in ``corpus`` keep
         codes from the OLD geometry and should be re-ingested — the same
         caveat as any PQ index rebuild without stored raws."""
-        bdf, bdict = pq_train(
-            corpus, self.id_col, self.vec_col, self.dim, self.m,
-            self.n_codes, self.iters, _return_book_dict=True,
-        )
-        self._set_book(spark, bdf, bdict)
-        self._fold(corpus, "retrain")
+        self._fold(corpus, "retrain", self._train(corpus))
 
     def query(self, spark: SparkSession, queries: DataFrame, k: int = 5) -> DataFrame:
         """Approximate top-k neighbors of each query vector from the

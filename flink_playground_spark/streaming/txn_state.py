@@ -68,7 +68,7 @@ from collections.abc import Sequence
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from pyspark.util import inheritable_thread_target
@@ -617,9 +617,9 @@ class AppendDeltaState:
 
     One directory is one transaction log: an instance is one named
     ``ledger`` of it (``""``, the default, is the one-ledger store), and
-    ``commit_all`` / ``prune_all`` change several ledgers of the same
-    directory in ONE manifest replace carrying one replay mark — a wave
-    that spans ledgers is committed whole or not at all.
+    ``commit_all`` appends to, upserts and prunes several ledgers of the
+    same directory in ONE manifest replace carrying one replay mark — a
+    wave that spans ledgers is committed whole or not at all.
 
     Layout::
 
@@ -718,7 +718,7 @@ class AppendDeltaState:
         pass both for exactly-once under at-least-once redelivery).
         ``agg_cols`` (the caller's fold) enables auto-compaction when the
         live-delta count reaches ``compact_every``."""
-        return self.commit_all([(self, None, partials, agg_cols)], writer_id, batch_id)
+        return self.commit_all([(self, None, partials, agg_cols)], writer_id, batch_id) is not None
 
     def read(self, spark: SparkSession) -> DataFrame | None:
         """Union of the live deltas (UNFOLDED partials — callers
@@ -782,49 +782,61 @@ class AppendDeltaState:
         (writer, batch) — exactly-once under at-least-once redelivery."""
         if self.tomb_match is None:
             raise ValueError("upsert needs tomb_match declared at construction")
-        return self.commit_all([(self, drop, add, agg_cols)], writer_id, batch_id)
+        return self.commit_all([(self, drop, add, agg_cols)], writer_id, batch_id) is not None
 
     @staticmethod
-    def commit_all(writes, writer_id: str | None = None, batch_id: int | None = None) -> bool:
+    def commit_all(writes, writer_id: str | None = None, batch_id: int | None = None):
         """Commit ``writes`` — ``(ledger, drop, add, agg_cols)`` tuples
-        over ledgers of ONE directory, each an ``upsert`` (``drop`` None:
-        an ``append``) — in one manifest replace with one replay mark.
-        Every delta lands in a fresh dir before the replace, so a crash
-        anywhere leaves the committed manifest untouched. A ledger whose
-        deltas or tombstones reach ``compact_every`` is folded by its
-        ``agg_cols`` inside the same commit. Returns False when
-        ``(writer_id, batch_id)`` was already committed."""
+        over ledgers of ONE directory — in one manifest replace with one
+        replay mark. ``drop`` names the rows a write removes: None (an
+        ``append``), key tuples (a DataFrame: an ``upsert``'s deletion
+        vector) or a predicate (a Column: a ``prune``). Every delta lands
+        in a fresh dir before the replace, so a crash anywhere leaves the
+        committed manifest untouched. A ledger whose deltas or tombstones
+        reach ``compact_every`` is folded by its ``agg_cols`` inside the
+        same commit. Returns the rows each write pruned (0 for the
+        others), or None when ``(writer_id, batch_id)`` was already
+        committed."""
         first = writes[0][0]
         if any(st.path != first.path for st, *_ in writes):
             raise ValueError("commit_all spans ledgers of one directory only")
+        mark = writer_id is not None and batch_id is not None
         with _writer_lock(first.path):
             manifest = first._manifest()
-            if writer_id is not None and batch_id is not None:
-                last = manifest["writers"].get(writer_id)
-                if last is not None and batch_id <= last:
-                    return False
-            upto = manifest["seq"]  # tombstones kill rows committed before this commit
+            last = manifest["writers"].get(writer_id)
+            if mark and last is not None and batch_id <= last:
+                return None
+            # taken before any write: tombstones kill rows committed
+            # before this commit, never a delta it writes (a prune's too)
+            upto = manifest["seq"]
+            removed = []
+            # a prune or a compaction shadows live deltas: vacuum after
+            shadowed = False
             for st, drop, add, _ in writes:
                 led = st._entry(manifest)
-                if drop is not None and led["deltas"]:
+                pruned = 0
+                if isinstance(drop, Column):
+                    pruned = st._prune_staged(SparkSession.active(), manifest, drop)
+                    shadowed = True
+                elif drop is not None and led["deltas"]:
                     # a tombstone against an EMPTY ledger kills nothing
                     drop = drop.distinct().withColumn("__upto", F.lit(int(upto)))
                     led["tombs"].append(st._write(manifest, drop, "x"))
                 if add is not None:
                     led["deltas"].append(st._write(manifest, add, "d"))
-            folded = False
-            for st, drop, add, agg_cols in writes:
+                removed.append(pruned)
+            for st, _, _, agg_cols in writes:
                 led = st._entry(manifest)
                 live = max(len(led["deltas"]), len(led["tombs"]))
                 if agg_cols is not None and live >= st.compact_every:
-                    spark = (add if add is not None else drop).sparkSession
-                    folded |= st._fold(spark, manifest, agg_cols)
-            if writer_id is not None and batch_id is not None:
+                    shadowed |= st._fold(SparkSession.active(), manifest, agg_cols)
+            if mark:
                 manifest["writers"][writer_id] = batch_id
-            first._commit(manifest)
-            if folded:
+            if mark or manifest["seq"] != upto:
+                first._commit(manifest)
+            if shadowed:
                 first.vacuum()
-            return True
+            return removed
 
     def _write(self, manifest: dict, df: DataFrame, kind: str) -> int:
         """Write ``df`` as this ledger's next ``d``/``x`` dir; its seq."""
@@ -875,21 +887,7 @@ class AppendDeltaState:
         is untouched — a replayed wave whose rows were since pruned is
         STILL skipped (retention must not resurrect data through the
         at-least-once path). Cost ∝ live state, a rare maintenance pass."""
-        return self.prune_all(spark, [(self, predicate)])[0]
-
-    @staticmethod
-    def prune_all(spark: SparkSession, prunes) -> list[int]:
-        """``prune`` over ``(ledger, predicate)`` pairs of ONE directory
-        in one manifest replace; rows removed per pair."""
-        first = prunes[0][0]
-        with _writer_lock(first.path):
-            manifest = first._manifest()
-            seq = manifest["seq"]
-            removed = [st._prune_staged(spark, manifest, pred) for st, pred in prunes]
-            if manifest["seq"] != seq:
-                first._commit(manifest)
-                first.vacuum()
-            return removed
+        return self.commit_all([(self, predicate, None, None)])[0]
 
     def _prune_staged(self, spark: SparkSession, manifest: dict, predicate: F.Column) -> int:
         led = self._entry(manifest)

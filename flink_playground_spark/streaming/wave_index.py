@@ -43,14 +43,12 @@ Protocol of ``ingest`` / ``update`` for one wave ``batch_id``:
    is emitted once, in the wave of its later member, so the drained
    pair set equals the batch answer.
 6. One commit: every ledger's delta for the wave (quarantine,
-   overflow, pairs, the family's state ledgers) lands in a fresh
-   directory, then ONE manifest replace (``AppendDeltaState.commit_all``)
-   publishes them all with one replay mark for the index. A crash
-   anywhere before it leaves the committed state exactly as it was and
-   redelivers the wave. Pairs are tagged ``since_batch`` so a composed
-   pipeline (dedup_pipeline.py) can recover exactly this wave's pairs
-   after a crash between this commit and a downstream one (min-fold
-   safe: a pair is emitted in exactly one wave).
+   overflow, pairs, the family's state ledgers, and a composed
+   pipeline's cluster mapping) lands in a fresh directory, then ONE
+   manifest replace (``AppendDeltaState.commit_all``) publishes them
+   all with one replay mark for the index. A crash anywhere before it
+   leaves the committed state exactly as it was and redelivers the
+   wave.
 
 ``ingest`` appends. ``update`` is the one-call changed-doc path (+U)
 the cross-wave guard otherwise refuses — the PK upsert of
@@ -123,6 +121,8 @@ def release_checkpoint(df: DataFrame) -> None:
 
 
 def _tag(df: DataFrame, batch_id: int) -> DataFrame:
+    """``since_batch``: the MIN-folded column of a keys-only ledger, which
+    compaction's ``groupBy(keys).agg`` needs at least one of."""
     return df.withColumn("since_batch", F.lit(batch_id))
 
 
@@ -145,8 +145,8 @@ class Ledger(NamedTuple):
     """One state ledger of a family, declared as class data. The ledger
     lives in ``workdir/<name>``, is the instance attribute ``_<name>``,
     is keyed on ``keys`` with ``[["doc"]]`` deletion vectors, and folds
-    ``mins`` by MIN on compaction. A ``since_batch`` in ``mins`` tags
-    the rows with the wave that wrote them. The prepared wave's
+    ``mins`` by MIN on compaction; a keys-only ledger folds
+    ``since_batch`` (``_tag``). The prepared wave's
     ``<name>`` frame is what it receives; ``forget()`` reports its
     removed rows under ``forget_key`` (None: not reported)."""
 
@@ -158,16 +158,14 @@ class Ledger(NamedTuple):
 
 class WaveIndex:
     """The shared streaming-index surface (``ingest``/``update``/
-    ``committed``/``pairs``/``pairs_for_batch``/``wave_doc_ids``/
-    ``forget``/``ops_metrics``) over the protocol in the module
-    docstring. Subclasses set the class data below and implement
-    ``_source``, ``_prepare`` and ``_wave_pairs``."""
+    ``committed``/``pairs``/``forget``/``ops_metrics``) over the
+    protocol in the module docstring. Subclasses set the class data
+    below and implement ``_source``, ``_prepare`` and ``_wave_pairs``."""
 
     _LEDGERS: tuple  # state ledgers; the last holds what verification reads
     _SCORE: tuple  # the pair ledger's score column and its type
     _CONTENT: str | None = None  # SQL over the source wave: per-doc payload
     _PAYLOAD = ""  # the payload's name in IntraWaveConflict messages
-    id_col = "doc"  # the caller's doc-id column
 
     def __init__(self, workdir: str, on_conflict: str):
         if on_conflict not in ("error", "quarantine"):
@@ -277,11 +275,18 @@ class WaveIndex:
         fix = "fold changed docs through update()"
         return self._refuse(w, bad, batch_id, OneWavePerDocViolation, msg, fix)
 
-    def _fold(self, wave: DataFrame, batch_id: int, update: bool) -> None:
+    def _fold(self, wave: DataFrame, batch_id: int, update: bool, downstream=None) -> None:
+        """Fold one wave (module docstring). ``downstream(pairs, dead)``
+        returns one more ``commit_all`` write for the wave's commit — a
+        composed pipeline's stage over the wave's pairs."""
         if self.committed(batch_id):
             return  # replay of a committed wave: skipped before ANY write
         try:
-            self._fold_wave(wave, batch_id, update)
+            pairs, dead = self._fold_wave(wave, batch_id, update)
+            if downstream is not None:
+                pairs = self._pin(pairs)  # read by both the stage and the delta
+                self._writes.append(downstream(pairs, dead))
+            self._stage(self._pairs, pairs, _mins([self._SCORE[0]]), dead)
             AppendDeltaState.commit_all(self._writes, writer_id=_WRITER, batch_id=batch_id)
         finally:
             for df in self._pinned:
@@ -289,7 +294,9 @@ class WaveIndex:
             self._pinned.clear()
             self._writes.clear()
 
-    def _fold_wave(self, wave: DataFrame, batch_id: int, update: bool) -> None:
+    def _fold_wave(self, wave: DataFrame, batch_id: int, update: bool) -> tuple:
+        """Guard and prepare the wave and stage its family ledgers; its
+        verified pairs and the ``dead`` excision set (None on ingest)."""
         src = self._guard_intra_wave(self._source(wave), batch_id)
         # update's excision set: every doc the (guarded) wave carries,
         # taken before preparation so a doc whose new content stores
@@ -298,11 +305,11 @@ class WaveIndex:
         w = self._prepare(src)
         if not update:
             w = self._guard_one_wave_per_doc(w, batch_id)
-        pairs = _tag(self._wave_pairs(w, batch_id, dead), batch_id)
-        self._stage(self._pairs, pairs, _mins([self._SCORE[0], "since_batch"]), dead)
+        pairs = self._wave_pairs(w, batch_id, dead)
         for led in self._LEDGERS:
             rows = _tag(w[led.name], batch_id) if "since_batch" in led.mins else w[led.name]
             self._stage(getattr(self, f"_{led.name}"), rows, _mins(led.mins), dead)
+        return pairs, dead
 
     # -- API -----------------------------------------------------------------
 
@@ -319,44 +326,20 @@ class WaveIndex:
         retracted and its new pairs emitted (module docstring)."""
         self._fold(wave, batch_id, update=True)
 
-    def wave_doc_ids(self, wave: DataFrame) -> DataFrame:
-        """The doc ids a wave carries, as a single-column ``doc``
-        DataFrame — the composed pipeline derives an update wave's
-        excision set through this, schema-agnostically."""
-        return wave.select(F.col(self.id_col).alias("doc")).distinct()
-
     def committed(self, batch_id: int) -> bool:
         """True when ``batch_id`` is folded (the index's replay mark
-        holds it). The composed pipeline uses this to tell 'index done,
-        downstream not' apart from a whole-wave replay."""
+        holds it)."""
         return self._pairs.committed(_WRITER, batch_id)
-
-    def _read_pairs(self, spark: SparkSession, batch_id: int | None) -> DataFrame:
-        score, typ = self._SCORE
-        out = self._pairs.read(spark)
-        if out is None:
-            return spark.createDataFrame([], f"id_a long, id_b long, {score} {typ}")
-        if batch_id is not None:
-            out = out.filter(F.col("since_batch") == batch_id)
-        return (
-            out.groupBy("id_a", "id_b")
-            .agg(F.min(score).alias(score))
-            .select("id_a", "id_b", score)
-        )
 
     def pairs(self, spark: SparkSession) -> DataFrame:
         """Every near-dup pair emitted so far, folded by the declared
         (id_a, id_b) keys so reads are deterministic — one row per
         pair."""
-        return self._read_pairs(spark, None)
-
-    def pairs_for_batch(self, spark: SparkSession, batch_id: int) -> DataFrame:
-        """Exactly the pairs wave ``batch_id`` emitted (stable under
-        compaction's min-fold). The composed pipeline's crash recovery:
-        when the index committed a wave but a downstream ledger did
-        not, the wave's pairs are recovered here instead of being
-        recomputed — or lost."""
-        return self._read_pairs(spark, batch_id)
+        score, typ = self._SCORE
+        out = self._pairs.read(spark)
+        if out is None:
+            return spark.createDataFrame([], f"id_a long, id_b long, {score} {typ}")
+        return out.groupBy("id_a", "id_b").agg(F.min(score).alias(score))
 
     def forget(self, spark: SparkSession, docs) -> dict:
         """Retention / takedown: transactionally remove a doc cohort —
@@ -366,12 +349,18 @@ class WaveIndex:
         delete list an operator hands a retention job — deletes are an
         explicit, audited act). Cost ∝ live state (the pass doubles as
         a compaction). Caveats in the module docstring."""
+        return self._forget(docs)
+
+    def _forget(self, docs, also=()) -> dict:
+        """``forget``, committing the ``also`` writes in the same replace
+        (a composed pipeline's cluster relabel)."""
         ids = sorted(set(docs))
         is_doc = F.col("doc").isin(ids)
         prunes = [(getattr(self, f"_{led.name}"), is_doc) for led in self._LEDGERS]
         prunes.append((self._pairs, F.col("id_a").isin(ids) | F.col("id_b").isin(ids)))
         prunes.append((self._quarantine, is_doc))
-        removed = AppendDeltaState.prune_all(spark, prunes)
+        writes = [(st, pred, None, None) for st, pred in prunes] + list(also)
+        removed = AppendDeltaState.commit_all(writes)
         out = {led.forget_key: n for led, n in zip(self._LEDGERS, removed) if led.forget_key}
         out["pairs_removed"] = removed[len(self._LEDGERS)]
         return out

@@ -9,6 +9,7 @@ from __future__ import annotations
 import tempfile
 from functools import partial
 
+import pytest
 from pyspark.sql import functions as F
 
 from flink_playground_spark.streaming.cosine_index import StreamingCosineLSHIndex
@@ -197,13 +198,13 @@ def test_forget_is_surgical_without_resurrection(spark):
     }
 
 
-def test_update_retracts_stale_pairs_and_crash_heals(spark):
+def test_update_retracts_stale_pairs_and_crash_heals(spark, crash_at, monkeypatch):
     """The +U verb end to end: doc 3's vector moves from the e0 cluster
     to the e1 cluster — its stale pairs (1,3)/(2,3) are retracted, new
     pairs (3,4)/(3,5) emitted, drained == the batch answer over the
-    POST-update corpus; a crash between the index commit and the
-    cluster commit heals through the composed pipeline; a replayed
-    update writes nothing."""
+    POST-update corpus; a crash inside the composed pipeline's one
+    commit (index and cluster ledgers together) commits nothing and
+    heals on redelivery; a replayed update writes nothing."""
     from flink_playground_spark.streaming.dedup_pipeline import (
         StreamingNearDupPipeline,
     )
@@ -214,7 +215,7 @@ def test_update_retracts_stale_pairs_and_crash_heals(spark):
 
     work = tempfile.mkdtemp(prefix="fps_cosidx_u_")
     ci = StreamingCosineLSHIndex(f"{work}/idx")
-    pipe = StreamingNearDupPipeline(work, ci)
+    pipe = StreamingNearDupPipeline(ci)
     df = _vecs(spark, VECS)
     for w in range(3):
         pipe.ingest(df.filter(F.col("vec_id") % 3 == w), batch_id=w)
@@ -222,12 +223,16 @@ def test_update_retracts_stale_pairs_and_crash_heals(spark):
     assert comp == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4}, comp
 
     upd = _vecs(spark, [(3, [0.0, 1.0, 0.0, 0.0])])
-    # crash: the update reaches the index only, not the cluster ledger
-    ci.update(upd, batch_id=3)
-    assert ci.committed(3) and not pipe.clusters.committed(3)
+    crash_at("manifest")
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        pipe.update(upd, batch_id=3)
+    monkeypatch.undo()
+    assert not ci.committed(3)
+    comp = {r["node"]: r["comp"] for r in pipe.mapping(spark).collect()}
+    assert comp == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4}, comp
+    pipe.update(upd, batch_id=3)  # redelivery heals
     drained = {(r["id_a"], r["id_b"]): r["sim"] for r in ci.pairs(spark).collect()}
     assert drained == post_batch, drained
-    pipe.update(upd, batch_id=3)  # heals: recovers the wave's pairs + relabels
     comp = {r["node"]: r["comp"] for r in pipe.mapping(spark).collect()}
     # doc 3 left {1,2} (label stays 1) and joined {4,5} (merged label 3)
     assert comp == {1: 1, 2: 1, 3: 3, 4: 3, 5: 3}, comp

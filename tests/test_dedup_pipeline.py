@@ -1,13 +1,16 @@
 """StreamingNearDupPipeline contracts: the composed doc-waves →
-pair-index → cluster fold equals the batch answer, survives a crash
-BETWEEN the two ledgers' commit points, keeps per-wave write IO
-append-only on both ledgers, and cascades takedown through both stages
-(r11 verdict Next #1)."""
+pair-index → cluster fold equals the batch answer, lands every verb
+(ingest, update, forget) in ONE manifest replace and survives a crash
+inside it, keeps per-wave write IO append-only on both stages, and
+cascades takedown through both stages."""
 
 from __future__ import annotations
 
+import os
 import tempfile
 from functools import partial
+
+import pytest
 
 from flink_playground_spark.streaming.dedup_pipeline import StreamingNearDupPipeline
 from flink_playground_spark.streaming.frameset_index import StreamingFrameSetIndex
@@ -63,53 +66,27 @@ def test_drained_pipeline_equals_batch_pairs_and_clusters(spark):
     assert batch_comp == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
     work = tempfile.mkdtemp(prefix="fps_pipe_t_")
-    pipe = StreamingNearDupPipeline(work, StreamingHammingIndex(f"{work}/idx"))
+    pipe = StreamingNearDupPipeline(StreamingHammingIndex(f"{work}/idx"))
     for b, wave in enumerate(_WAVES):
         pipe.ingest(_fp(spark, wave), batch_id=b)
     assert _drain(spark, pipe) == (batch_pairs, batch_comp)
 
-    before = (band_state_bytes(f"{work}/idx"), cc_state_bytes(f"{work}/clusters"))
+    before = (band_state_bytes(f"{work}/idx"), cc_state_bytes(f"{work}/idx"))
     pipe.ingest(_fp(spark, _WAVES[1]), batch_id=1)
-    after = (band_state_bytes(f"{work}/idx"), cc_state_bytes(f"{work}/clusters"))
+    after = (band_state_bytes(f"{work}/idx"), cc_state_bytes(f"{work}/idx"))
     assert after == before
     assert _drain(spark, pipe) == (batch_pairs, batch_comp)
 
 
-def test_crash_between_index_and_cluster_commits_recovers(spark):
-    """THE crash point composition creates: the index committed wave 1
-    but the job died before the cluster ledger did. On redelivery the
-    index skips internally, the wave's pairs are recovered from the
-    pair ledger's since_batch tag (not recomputed, not lost), and the
-    cluster fold catches up — final state identical to the un-crashed
-    run."""
-    batch_pairs, batch_comp = _batch_truth(spark)
-    work = tempfile.mkdtemp(prefix="fps_pipe_c_")
-    idx = StreamingHammingIndex(f"{work}/idx")
-    pipe = StreamingNearDupPipeline(work, idx)
-    pipe.ingest(_fp(spark, _WAVES[0]), batch_id=0)
-    # simulate the crash: wave 1 reaches the index ledger ONLY
-    idx.ingest(_fp(spark, _WAVES[1]), batch_id=1)
-    assert idx.committed(1) and not pipe.clusters.committed(1)
-    # redelivery of wave 1 through the pipeline heals the gap
-    pipe.ingest(_fp(spark, _WAVES[1]), batch_id=1)
-    assert pipe.clusters.committed(1)
-    # the recovered mapping already reflects wave 1's pairs
-    comp = {r["node"]: r["comp"] for r in pipe.mapping(spark).collect()}
-    assert comp == {1: 1, 2: 1, 3: 1}, comp
-    pipe.ingest(_fp(spark, _WAVES[2]), batch_id=2)
-    assert _drain(spark, pipe) == (batch_pairs, batch_comp)
-
-
 def test_crash_before_any_commit_redelivers_cleanly(spark):
-    """The other crash point: nothing of wave 1 committed (both probes
-    false) — redelivery just runs the wave; and a wave whose pairs are
-    EMPTY still commits both ledgers (the cluster replay probe must
-    advance even with no edges)."""
+    """A wave whose pairs are EMPTY still commits (the replay mark must
+    advance even with no edges), and the next wave pairs against state
+    normally."""
     work = tempfile.mkdtemp(prefix="fps_pipe_c0_")
-    pipe = StreamingNearDupPipeline(work, StreamingHammingIndex(f"{work}/idx"))
+    pipe = StreamingNearDupPipeline(StreamingHammingIndex(f"{work}/idx"))
     # wave of one isolated doc: zero pairs, zero edges
     pipe.ingest(_fp(spark, [(20, 0x00FF00FF00FF00FF)]), batch_id=0)
-    assert pipe.index.committed(0) and pipe.clusters.committed(0)
+    assert pipe.index.committed(0)
     assert pipe.mapping(spark).count() == 0
     # next wave pairs against state normally
     pipe.ingest(_fp(spark, [(1, 0x0F0F), (2, 0x0F0F)]), batch_id=1)
@@ -122,14 +99,14 @@ def test_per_wave_write_io_appends_on_both_ledgers(spark):
     band ledger and the cluster mapping ledger — neither stage rewrites
     accumulated state inside the composed fold."""
     work = tempfile.mkdtemp(prefix="fps_pipe_io_")
-    pipe = StreamingNearDupPipeline(work, StreamingHammingIndex(f"{work}/idx"))
+    pipe = StreamingNearDupPipeline(StreamingHammingIndex(f"{work}/idx"))
     big = [(i, (i * 0x9E3779B97F4A7C15) % (1 << 63)) for i in range(60)]
     # plant one pair so the cluster ledger has mass
     big[1] = (1, big[0][1])
     pipe.ingest(_fp(spark, big), batch_id=0)
-    b0 = (band_state_bytes(f"{work}/idx"), cc_state_bytes(f"{work}/clusters"))
+    b0 = (band_state_bytes(f"{work}/idx"), cc_state_bytes(f"{work}/idx"))
     pipe.ingest(_fp(spark, [(1000, big[0][1] ^ 1)]), batch_id=1)
-    b1 = (band_state_bytes(f"{work}/idx"), cc_state_bytes(f"{work}/clusters"))
+    b1 = (band_state_bytes(f"{work}/idx"), cc_state_bytes(f"{work}/idx"))
     assert b1[0] > b0[0] and b1[1] > b0[1]
     assert b1[0] - b0[0] < b0[0] / 2, (b0, b1)
 
@@ -141,7 +118,7 @@ def test_forget_cascades_through_both_stages(spark):
     not even as a cluster label; untouched clusters untouched; unknown
     ids are a clean no-op."""
     work = tempfile.mkdtemp(prefix="fps_pipe_fg_")
-    pipe = StreamingNearDupPipeline(work, StreamingHammingIndex(f"{work}/idx"))
+    pipe = StreamingNearDupPipeline(StreamingHammingIndex(f"{work}/idx"))
     for b, wave in enumerate(_WAVES):
         pipe.ingest(_fp(spark, wave), batch_id=b)
     stats = pipe.forget(spark, [1])
@@ -159,8 +136,8 @@ def test_forget_cascades_through_both_stages(spark):
 
 def test_pipeline_is_index_agnostic_frameset(spark):
     """The same composed fold runs over the video frameset index — the
-    pipeline surface (ingest/committed/pairs_for_batch/forget) is the
-    shared streaming-index contract, not a Hamming special case."""
+    pipeline surface is the shared streaming-index contract, not a
+    Hamming special case."""
     def grams(sets):
         rows = [(doc, sh) for doc, shingles in sets for sh in shingles]
         return spark.createDataFrame(rows, "doc long, shingle long")
@@ -168,12 +145,71 @@ def test_pipeline_is_index_agnostic_frameset(spark):
     full = list(range(1, 11))
     near = list(range(1, 10)) + [13]  # J = 9/11 >= 0.8
     work = tempfile.mkdtemp(prefix="fps_pipe_fs_")
-    pipe = StreamingNearDupPipeline(
-        work, StreamingFrameSetIndex(f"{work}/idx", threshold=0.8)
-    )
+    pipe = StreamingNearDupPipeline(StreamingFrameSetIndex(f"{work}/idx", threshold=0.8))
     pipe.ingest(grams([(1, full)]), batch_id=0)
     pipe.ingest(grams([(2, full), (30, [99, 98, 97])]), batch_id=1)
     pipe.ingest(grams([(4, near)]), batch_id=2)
     pairs, comp = _drain(spark, pipe)
     assert pairs == {(1, 2), (1, 4), (2, 4)}
     assert comp == {1: 1, 2: 1, 4: 1}, comp
+
+
+# per verb: (waves ingested first, the call, the uncrashed run's drained
+# pairs and mapping). The update moves doc 3 from {1,2,3} to 20's
+# fingerprint (a retraction plus a merge), 11 out of its class, and
+# inserts 99 beside {1,2}; the forget takes out canonical doc 1.
+_UPD = [(3, 0x00FF00FF00FF00FF), (11, 0x5555AAAA5555AAAA), (99, 0x0F0E)]
+VERBS = {
+    "ingest": (
+        2,
+        lambda spark, pipe: pipe.ingest(_fp(spark, _WAVES[2]), batch_id=2),
+        ({(1, 2), (1, 3), (2, 3), (10, 11)}, {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}),
+    ),
+    "update": (
+        3,
+        lambda spark, pipe: pipe.update(_fp(spark, _UPD), batch_id=3),
+        ({(1, 2), (1, 99), (2, 99), (3, 20)}, {1: 1, 2: 1, 99: 1, 3: 3, 20: 3}),
+    ),
+    "forget": (
+        3,
+        lambda spark, pipe: pipe.forget(spark, [1]),
+        ({(2, 3), (10, 11)}, {2: 2, 3: 2, 10: 10, 11: 10}),
+    ),
+}
+
+
+@pytest.mark.parametrize("point", ["second_delta", "manifest"])
+@pytest.mark.parametrize("verb", sorted(VERBS))
+def test_one_commit_per_verb_survives_crash_inside_it(
+    spark, tmp_path, crash_at, monkeypatch, verb, point
+):
+    """Index and cluster ledgers share one manifest, so each pipeline
+    verb lands with ONE replace. A crash inside that commit (at its
+    second delta write, or at the replace) leaves manifest.json
+    byte-identical; the redelivered wave (the repeated forget) then
+    reaches the uncrashed run's pairs and mapping with exactly one
+    manifest replace."""
+    n_waves, call, want = VERBS[verb]
+    work = str(tmp_path / "p")
+    pipe = StreamingNearDupPipeline(StreamingHammingIndex(work))
+    for b in range(n_waves):
+        pipe.ingest(_fp(spark, _WAVES[b]), batch_id=b)
+    manifest = (tmp_path / "p" / "manifest.json").read_bytes()
+    crash_at(point)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        call(spark, pipe)
+    monkeypatch.undo()
+    assert (tmp_path / "p" / "manifest.json").read_bytes() == manifest
+
+    replaces, replace = [], os.replace
+
+    def counted(src, dst):
+        if str(dst).endswith("/manifest.json"):
+            replaces.append(dst)
+        return replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", counted)
+    call(spark, pipe)  # the redelivery
+    monkeypatch.undo()
+    assert replaces == [f"{work}/manifest.json"]
+    assert _drain(spark, pipe) == want

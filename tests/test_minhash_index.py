@@ -8,6 +8,7 @@ from __future__ import annotations
 import tempfile
 from functools import partial
 
+import pytest
 from pyspark.sql import functions as F
 
 from flink_playground_spark.streaming.minhash_index import StreamingMinHashIndex
@@ -158,24 +159,26 @@ def test_forget_is_surgical_without_resurrection(spark):
     }
 
 
-def test_pipeline_composition_with_crash_between_ledgers(spark):
+def test_pipeline_composition_with_crash_between_ledgers(spark, crash_at, monkeypatch):
     """The composed fold runs the text index through the SAME pipeline
-    as the image/video modalities, and heals the crash-between-ledgers
-    gap: the index committed wave 1 but the cluster ledger did not —
-    redelivery recovers the wave's pairs from the since_batch tag and
-    converges to the batch clusters."""
+    as the image/video modalities, and a crash between two ledgers'
+    deltas inside wave 1's one commit (index and cluster ledgers share
+    it) leaves nothing of the wave committed; redelivery converges to
+    the batch clusters."""
     from flink_playground_spark.streaming.dedup_pipeline import (
         StreamingNearDupPipeline,
     )
 
     work = tempfile.mkdtemp(prefix="fps_mhidx_p_")
     mh = StreamingMinHashIndex(f"{work}/idx")
-    pipe = StreamingNearDupPipeline(work, mh)
+    pipe = StreamingNearDupPipeline(mh)
     df = _docs(spark, TEXTS)
     pipe.ingest(df.filter(F.col("doc_id") % 3 == 0), batch_id=0)
-    # crash: wave 1 reaches the index only
-    mh.ingest(df.filter(F.col("doc_id") % 3 == 1), batch_id=1)
-    assert mh.committed(1) and not pipe.clusters.committed(1)
+    crash_at("second_delta")
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        pipe.ingest(df.filter(F.col("doc_id") % 3 == 1), batch_id=1)
+    monkeypatch.undo()
+    assert not mh.committed(1)
     pipe.ingest(df.filter(F.col("doc_id") % 3 == 1), batch_id=1)  # heals
     pipe.ingest(df.filter(F.col("doc_id") % 3 == 2), batch_id=2)
     comp = {r["node"]: r["comp"] for r in pipe.mapping(spark).collect()}

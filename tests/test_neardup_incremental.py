@@ -443,7 +443,7 @@ def test_streaming_pq_index_matches_frozen_book_batch(spark, tmp_path):
     assert state.groupBy("vid").count().filter("count > 1").count() == 0
     assert state.count() == emb.count()
 
-    book = spark.read.parquet(str(tmp_path / "pq" / "book"))
+    book = spark.read.parquet(str(tmp_path / "pq" / "book" / "w0"))  # trained by wave 0
     queries = emb.filter(F.col("vec_id") < 8)
     got = [tuple(r) for r in idx.query(spark, queries, k=5).collect()]
     want = [
@@ -543,3 +543,52 @@ def test_crash_after_state_commit_reingests_once(spark, tmp_path, family):
     assert got[:2] == want[:2]
     assert [r[:3] for r in got[2]] == [r[:3] for r in want[2]]
     assert [r[3] for r in got[2]] == pytest.approx([r[3] for r in want[2]], rel=1e-12)
+
+
+@pytest.mark.parametrize("family", ["ivf", "pq"])
+def test_crash_before_first_commit_retrains_geometry(spark, tmp_path, family):
+    """A fault in the FIRST wave after its geometry (IVF centroids, PQ
+    book) is written but before the state commits: the trained geometry
+    is not committed, so the restarted index trains again on the
+    redelivered wave and records it as the "train" wave (the baseline
+    ``needs_retrain`` compares against) — state and drift log equal an
+    uninterrupted run's."""
+    from pyspark.sql import functions as F
+
+    from flink_playground_spark.streaming.ann_index import StreamingIVFIndex
+    from flink_playground_spark.streaming.pq_index import StreamingPQIndex
+    from flink_playground_spark.streaming.txn_state import TransactionalKeyState
+
+    rows = load_table(spark, SF, "embeddings")
+    waves = [rows.filter(F.col("vec_id") % 2 == w) for w in range(2)]
+    if family == "ivf":
+
+        def make(path):
+            return StreamingIVFIndex(path, n_centroids=8, kmeans_iters=1)
+
+        state = "cells"
+    else:
+        make, state = StreamingPQIndex, "codes"
+
+    def outcome(idx):
+        drift = sorted(spark.read.parquet(idx.drift.path).collect())
+        return sorted(getattr(idx, state).read(spark).collect()), [r[:3] for r in drift]
+
+    clean = make(str(tmp_path / "clean"))
+    for wave in waves:
+        clean.ingest(wave)
+
+    def faulty(self, manifest):
+        raise RuntimeError("injected fault")
+
+    path = str(tmp_path / "crashed")
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(TransactionalKeyState, "_commit", faulty)
+        with pytest.raises(RuntimeError, match="injected fault"):
+            make(path).ingest(waves[0])
+    idx = make(path)  # the restarted process reattaches
+    for wave in waves:
+        idx.ingest(wave)
+    got = outcome(idx)
+    assert got == outcome(clean)
+    assert got[1][0][:2] == (0, "train")

@@ -2,9 +2,9 @@
 #1): the one-call changed-doc path on every index family and on the
 composed pipeline — atomic deletion-vector excision + re-ingest under
 ONE batch id, crash-pinned at each ledger boundary, drained state == a
-batch rebuild over the post-update corpus. Plus the r12 ADVICE items:
-the intra-wave conflict guard, the takedown intent ledger, and the
-both-endpoint edge prune in the cluster relabel."""
+batch rebuild over the post-update corpus. Plus the intra-wave
+conflict guard and the both-endpoint edge prune in the cluster
+relabel."""
 
 from __future__ import annotations
 
@@ -64,9 +64,7 @@ def _batch_truth(spark, rows):
 
 
 def _ingested_pipe(spark, tmp_path, name="p"):
-    pipe = StreamingNearDupPipeline(
-        str(tmp_path / name), StreamingHammingIndex(str(tmp_path / name / "idx"))
-    )
+    pipe = StreamingNearDupPipeline(StreamingHammingIndex(str(tmp_path / name / "idx")))
     for b, wave in enumerate(_WAVES):
         pipe.ingest(_fp(spark, wave), batch_id=b)
     return pipe
@@ -75,8 +73,7 @@ def _ingested_pipe(spark, tmp_path, name="p"):
 def test_update_equals_batch_rebuild_on_post_update_corpus(spark, tmp_path):
     """One update wave (retraction + cluster merge + fresh insert)
     drains to exactly the batch pair set AND cluster mapping over the
-    POST-update corpus; the wave's new pairs carry its since_batch tag;
-    replaying the committed update writes nothing."""
+    POST-update corpus; replaying the committed update writes nothing."""
     post = {d: s for d, s in _BASE} | {d: s for d, s in _UPD}
     batch_pairs, batch_comp = _batch_truth(spark, sorted(post.items()))
     assert (batch_pairs, batch_comp) == (_POST_PAIRS, _POST_COMP)
@@ -84,11 +81,6 @@ def test_update_equals_batch_rebuild_on_post_update_corpus(spark, tmp_path):
     pipe = _ingested_pipe(spark, tmp_path)
     pipe.update(_fp(spark, _UPD), batch_id=3)
     assert _drain(spark, pipe) == (_POST_PAIRS, _POST_COMP)
-    wave3 = {
-        (r["id_a"], r["id_b"])
-        for r in pipe.index.pairs_for_batch(spark, 3).collect()
-    }
-    assert wave3 == {(1, 99), (2, 99), (3, 20)}  # (1,2) predates the wave
 
     from functools import partial
 
@@ -97,9 +89,9 @@ def test_update_equals_batch_rebuild_on_post_update_corpus(spark, tmp_path):
     cc_bytes = partial(state_bytes, ledger="mapping")
     band_bytes = partial(state_bytes, ledger="bands")
 
-    before = (band_bytes(str(tmp_path / "p/idx")), cc_bytes(str(tmp_path / "p/clusters")))
+    before = (band_bytes(str(tmp_path / "p/idx")), cc_bytes(str(tmp_path / "p/idx")))
     pipe.update(_fp(spark, _UPD), batch_id=3)  # replay: full skip
-    assert (band_bytes(str(tmp_path / "p/idx")), cc_bytes(str(tmp_path / "p/clusters"))) == before
+    assert (band_bytes(str(tmp_path / "p/idx")), cc_bytes(str(tmp_path / "p/idx"))) == before
     assert _drain(spark, pipe) == (_POST_PAIRS, _POST_COMP)
 
 
@@ -124,29 +116,16 @@ def test_update_crash_between_index_ledgers_converges(spark, tmp_path, crash_at,
     at no committed point was any doc absent from the index."""
     pipe = _ingested_pipe(spark, tmp_path)
     idx = pipe.index
+    pairs_before = _drain(spark, pipe)[0]
     crash_at("manifest")
     with pytest.raises(RuntimeError, match="simulated crash"):
         pipe.update(_fp(spark, _UPD), batch_id=3)
     monkeypatch.undo()
-    assert idx.pairs_for_batch(spark, 3).count() == 0 and not idx.committed(3)
+    assert _drain(spark, pipe)[0] == pairs_before and not idx.committed(3)
     # every base doc still present in SOME generation (nothing vanished)
     docs_now = {r["doc"] for r in idx._docs.read(spark).select("doc").collect()}
     assert {d for d, _ in _BASE} <= docs_now
     pipe.update(_fp(spark, _UPD), batch_id=3)  # redelivery heals
-    assert _drain(spark, pipe) == (_POST_PAIRS, _POST_COMP)
-
-
-def test_update_crash_between_index_and_cluster_commits(spark, tmp_path):
-    """THE composition crash point, now for updates: the index fully
-    committed the update wave but the job died before the cluster
-    rewrite. Redelivery probes the cluster ledger, skips the index
-    internally, recovers the wave's pairs from their since_batch tag,
-    and the cluster relabel catches up."""
-    pipe = _ingested_pipe(spark, tmp_path)
-    pipe.index.update(_fp(spark, _UPD), batch_id=3)  # index only: the crash
-    assert pipe.index.committed(3) and not pipe.clusters.committed(3)
-    pipe.update(_fp(spark, _UPD), batch_id=3)  # redelivery through the pipeline
-    assert pipe.clusters.committed(3)
     assert _drain(spark, pipe) == (_POST_PAIRS, _POST_COMP)
 
 
@@ -160,7 +139,6 @@ def test_minhash_update_parity_and_conflict_guard(spark, tmp_path):
     c = "a third body of text sharing nothing with either corpus half"
     mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
     pipe = StreamingNearDupPipeline(
-        str(tmp_path / "txt"),
         StreamingMinHashIndex(str(tmp_path / "txt/idx"), k=64, bands=16, n=3, threshold=0.8),
     )
     pipe.ingest(mk([(1, a), (2, a)]), batch_id=0)
@@ -220,7 +198,7 @@ def test_frameset_update_parity(spark, tmp_path):
 
     full = list(range(1, 11))
     pipe = StreamingNearDupPipeline(
-        str(tmp_path / "fs"), StreamingFrameSetIndex(str(tmp_path / "fs/idx"), threshold=0.8)
+        StreamingFrameSetIndex(str(tmp_path / "fs/idx"), threshold=0.8)
     )
     pipe.ingest(grams([(1, full)]), batch_id=0)
     pipe.ingest(grams([(2, full), (4, full)]), batch_id=1)
@@ -231,42 +209,10 @@ def test_frameset_update_parity(spark, tmp_path):
     assert _drain(spark, pipe) == ({(1, 2), (1, 4), (2, 4)}, {1: 1, 2: 1, 4: 1})
 
 
-def test_takedown_intent_ledger_resumes_after_crash(spark, tmp_path):
-    """forget's crash window (r12 ADVICE): a cascade that dies between
-    the index prune and the cluster relabel leaves a durable PENDING
-    intent; ops_metrics counts it, resume_takedowns replays it
-    idempotently, and the final state equals an un-crashed takedown."""
-    pipe = _ingested_pipe(spark, tmp_path)
-    # healthy takedown: intent opens and closes, nothing pending
-    pipe.forget(spark, [20])
-    assert pipe.pending_takedowns(spark).count() == 0
-    assert pipe.ops_metrics()["pending_takedowns"] == 0
-
-    orig = pipe.clusters.forget
-
-    def boom(*a, **k):
-        raise RuntimeError("simulated crash between takedown stages")
-
-    pipe.clusters.forget = boom
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        pipe.forget(spark, [1])
-    pipe.clusters.forget = orig
-    pend = pipe.pending_takedowns(spark).collect()
-    assert {(r["tid"], r["doc"]) for r in pend} == {(2, 1)}
-    assert pipe.ops_metrics()["pending_takedowns"] == 1
-    # the half-applied state is detectable, then the resume heals it
-    resumed = pipe.resume_takedowns(spark)
-    assert set(resumed) == {2}
-    assert pipe.pending_takedowns(spark).count() == 0
-    pairs, comp = _drain(spark, pipe)
-    assert pairs == {(2, 3), (10, 11)}
-    assert comp == {2: 2, 3: 2, 10: 10, 11: 10}, comp
-
-
 def test_cc_forget_prunes_edges_on_both_endpoints(spark, tmp_path):
-    """r12 ADVICE: in the crash window the surviving pair set can
-    reference a not-yet-ingested endpoint; the relabel input must keep
-    such an edge regardless of WHICH side is the stored member."""
+    """A caller's surviving pair set can reference an endpoint never
+    ingested into the mapping; the relabel input must keep such an
+    edge regardless of WHICH side is the stored member."""
     for name, edge in [("u", (2, 7)), ("v", (7, 2))]:
         cc = StreamingDupClusters(str(tmp_path / f"cc_{name}"))
         cc.ingest(spark.createDataFrame([(1, 2)], "u long, v long"), batch_id=0)
@@ -320,9 +266,7 @@ def test_update_write_io_is_wave_sized(spark, tmp_path):
     ledgers AND the cluster mapping. Asserted in PHYSICAL ROWS (byte
     deltas at this scale are dominated by the per-file parquet floor)."""
     work = tmp_path / "io"
-    pipe = StreamingNearDupPipeline(
-        str(work), StreamingHammingIndex(str(work / "idx"))
-    )
+    pipe = StreamingNearDupPipeline(StreamingHammingIndex(str(work / "idx")))
     big = [(i, (i * 0x9E3779B97F4A7C15) % (1 << 63)) for i in range(60)]
     big[1] = (1, big[0][1])  # doc 0's class: {0, 1}
     for k in range(5, 25):  # 20 more planted classes: {10,11}, {12,13}, ...
