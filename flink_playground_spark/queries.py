@@ -26,7 +26,7 @@ from flink_playground_spark.operators.dedup import dedup_latest, pk_upsert_view
 from flink_playground_spark.operators.temporal import as_of_join, temporal_join
 from flink_playground_spark.operators.unnest import unnest_outer
 from flink_playground_spark.operators.windows import top_k_per_group, tumble_agg
-from flink_playground_spark.session import tune
+from flink_playground_spark.session import scratch_dir, tune
 from flink_playground_spark.sources.tables import load_table
 
 
@@ -1029,7 +1029,6 @@ def streaming_late_side_output(spark, sf_dir):
     TransactionalKeyState, so redelivered waves never double-count
     (streaming/late_data.py; allowed-lateness refinement is pinned by
     tests/test_late_data.py goldens)."""
-    import tempfile
 
     from flink_playground_spark.streaming.late_data import late_window_counts_stream
     from flink_playground_spark.streaming.runners import replay_events_waves
@@ -1038,7 +1037,7 @@ def streaming_late_side_output(spark, sf_dir):
         "event_id", "ts", "user_id", "event_type"
     )
     agg = late_window_counts_stream(
-        stream, tempfile.mkdtemp(prefix="fps_late_"), keys=("event_type",), delay_s=1800
+        stream, scratch_dir("fps_late_"), keys=("event_type",), delay_s=1800
     )
     side = agg.read_side(spark)
     return side.select(
@@ -1861,12 +1860,11 @@ def streaming_ann_pq_topk(spark, sf_dir):
     the batch pq_topk. Value-checked bit-exact by the Python reference
     (streaming_pq_index_ref: wave-0-trained book over the union
     corpus); quantization-drift detection + retrain in tests."""
-    import tempfile
 
     from flink_playground_spark.streaming.pq_index import StreamingPQIndex
 
     emb = _t(spark, sf_dir, "embeddings")
-    idx = StreamingPQIndex(tempfile.mkdtemp(prefix="fps_pqidx_"))
+    idx = StreamingPQIndex(scratch_dir("fps_pqidx_"))
     for w in range(3):
         idx.ingest(emb.filter(F.col("vec_id") % 3 == w))
     return idx.query(spark, emb.filter(F.col("vec_id") < 8), k=5)
@@ -3528,7 +3526,6 @@ def streaming_dedup_clusters(spark, sf_dir):
     the SAME member-attach tail as the batch query
     (dedupe.attach_cluster_members), so the output — and the recursive-
     CTE DuckDB oracle — are identical to batch dedup_clusters."""
-    import tempfile
 
     from flink_playground_spark.functions.dedupe import (
         _lsh_rep_pairs,
@@ -3540,7 +3537,7 @@ def streaming_dedup_clusters(spark, sf_dir):
     members, idx, rep_pairs = _lsh_rep_pairs(
         docs, "doc_id", "text", 128, 32, 3, 0.8, True, 10_000
     )
-    index = StreamingDupClusters(tempfile.mkdtemp(prefix="fps_ccidx_"))
+    index = StreamingDupClusters(scratch_dir("fps_ccidx_"))
     for w in range(3):
         wave = rep_pairs.filter(F.pmod(F.xxhash64("id_a", "id_b"), F.lit(3)) == w)
         index.ingest(wave, batch_id=w, src="id_a", dst="id_b")
@@ -3597,13 +3594,12 @@ def streaming_value_drift_psi(spark, sf_dir):
     live histogram (exactly-once bucket counts), and the PSI terms read
     from state alone. The oracle recomputes the identical math from the
     parity split — reference = even event_ids, live = odd."""
-    import tempfile
 
     from flink_playground_spark.streaming.drift import StreamingDriftMonitor
     from flink_playground_spark.streaming.runners import replay_events_waves
 
     stream = replay_events_waves(spark, sf_dir, waves=2).select("value")
-    mon = StreamingDriftMonitor(tempfile.mkdtemp(prefix="fps_drift_"))
+    mon = StreamingDriftMonitor(scratch_dir("fps_drift_"))
     q = (
         stream.writeStream.foreachBatch(lambda b, i: mon.ingest(b, i))
         .trigger(availableNow=True)
@@ -3652,12 +3648,11 @@ def streaming_broadcast_rules(spark, sf_dir):
     evaluations from the literal rule sets. A replayed wave changes
     nothing (rule state is transactional; per-batch output dirs are
     overwritten idempotently)."""
-    import tempfile
 
     from flink_playground_spark.streaming.broadcast_rules import BroadcastRulesEngine
     from flink_playground_spark.streaming.runners import replay_events_waves
 
-    work = tempfile.mkdtemp(prefix="fps_rules_")
+    work = scratch_dir("fps_rules_")
     engine = BroadcastRulesEngine(f"{work}/state")
     control = {
         0: [
@@ -3715,7 +3710,6 @@ def streaming_retractable_agg(spark, sf_dir):
     a no-op. The drained view must equal the batch GROUP BY over the
     deduplicated table — Flink's materialized-view guarantee, verified
     by this oracle."""
-    import tempfile
 
     from flink_playground_spark.streaming.changelog import keep_latest_changelog_stream
     from flink_playground_spark.streaming.ivm import RetractableAggView
@@ -3726,7 +3720,7 @@ def streaming_retractable_agg(spark, sf_dir):
     )
     log = keep_latest_changelog_stream(stream, "user_id", "ts", tiebreakers=("event_id",))
     view = RetractableAggView(
-        tempfile.mkdtemp(prefix="fps_ivm_"), ["event_type"], ["value"]
+        scratch_dir("fps_ivm_"), ["event_type"], ["value"]
     )
     bids = sorted(r[0] for r in log.select("batch_id").distinct().collect())  # = waves
     for bid in bids:
@@ -3758,7 +3752,6 @@ def streaming_retractable_minmax(spark, sf_dir):
     keeps value state. Same keep-latest changelog input as the sum view;
     the oracle checks the drained view equals batch MIN/MAX over the
     deduplicated table."""
-    import tempfile
 
     from flink_playground_spark.streaming.changelog import keep_latest_changelog_stream
     from flink_playground_spark.streaming.ivm import RetractableMinMaxView
@@ -3769,7 +3762,7 @@ def streaming_retractable_minmax(spark, sf_dir):
     )
     log = keep_latest_changelog_stream(stream, "user_id", "ts", tiebreakers=("event_id",))
     view = RetractableMinMaxView(
-        tempfile.mkdtemp(prefix="fps_ivm_mm_"), ["event_type"], "value"
+        scratch_dir("fps_ivm_mm_"), ["event_type"], "value"
     )
     for bid in sorted(r[0] for r in log.select("batch_id").distinct().collect()):
         view.apply_batch(log.filter(F.col("batch_id") == bid), int(bid))
@@ -4352,14 +4345,13 @@ def streaming_substring_dedup(spark, sf_dir):
     a planted-total-collision test). Oracle = the BATCH exact-substring
     SQL: the drained stream must reproduce the batch rewrite
     character for character."""
-    import tempfile
 
     from flink_playground_spark.streaming.substring_dedup import (
         StreamingSubstringLedger,
     )
 
     docs = _t(spark, sf_dir, "documents")
-    led = StreamingSubstringLedger(tempfile.mkdtemp(prefix="fps_ssd_"))
+    led = StreamingSubstringLedger(scratch_dir("fps_ssd_"))
     for w in range(3):
         led.ingest(docs.filter(F.col("doc_id") % 3 == w))
     return led.rewrite(docs)
@@ -5296,7 +5288,6 @@ def streaming_phash_neardup(spark, sf_dir):
     later member arrives, so the drained set equals the batch answer —
     value-checked against the SAME bit-exact Python reference as the
     batch query (streaming/phash_index.py)."""
-    import tempfile
 
     from flink_playground_spark.functions.multimodal import (
         perceptual_hash,
@@ -5312,7 +5303,7 @@ def streaming_phash_neardup(spark, sf_dir):
             blobs = [synth_block_image(int(d)) for d in pdf["doc_id"]]
             yield pdf[["doc_id"]].assign(blob=blobs, media_format="image/ppm")
 
-    index = StreamingPhashIndex(tempfile.mkdtemp(prefix="fps_phidx_"))
+    index = StreamingPhashIndex(scratch_dir("fps_phidx_"))
     docs = _spread(_t(spark, sf_dir, "documents").select("doc_id"), "doc_id")
     for w in range(3):
         wave = docs.filter(F.col("doc_id") % 3 == w).mapInPandas(synth, schema=out_schema)
@@ -5462,7 +5453,6 @@ def streaming_audiohash_neardup(spark, sf_dir):
     (StreamingHammingIndex is the honest alias). Drained == batch,
     value-checked against the same bit-exact Python reference as the
     batch audio query."""
-    import tempfile
 
     from flink_playground_spark.functions.multimodal import (
         audio_fingerprint,
@@ -5478,7 +5468,7 @@ def streaming_audiohash_neardup(spark, sf_dir):
             blobs = [synth_envelope_wav(int(d)) for d in pdf["doc_id"]]
             yield pdf[["doc_id"]].assign(blob=blobs, media_format="audio/wav")
 
-    index = StreamingHammingIndex(tempfile.mkdtemp(prefix="fps_ahidx_"))
+    index = StreamingHammingIndex(scratch_dir("fps_ahidx_"))
     docs = _spread(_t(spark, sf_dir, "documents").select("doc_id"), "doc_id")
     for w in range(3):
         wave = docs.filter(F.col("doc_id") % 3 == w).mapInPandas(synth, schema=out_schema)
@@ -5508,7 +5498,6 @@ def streaming_video_neardup(spark, sf_dir):
     copies of each title in DIFFERENT waves, so every planted pair
     crosses state. Drained == batch, value-checked against the same
     bit-exact Python reference as the batch video query."""
-    import tempfile
 
     from flink_playground_spark.functions.multimodal import (
         frame_phash,
@@ -5524,7 +5513,7 @@ def streaming_video_neardup(spark, sf_dir):
             blobs = [synth_scene_video(int(d)) for d in pdf["doc_id"]]
             yield pdf[["doc_id"]].assign(blob=blobs, media_format="video/raw-rgb8")
 
-    index = StreamingFrameSetIndex(tempfile.mkdtemp(prefix="fps_fsidx_"), threshold=0.8)
+    index = StreamingFrameSetIndex(scratch_dir("fps_fsidx_"), threshold=0.8)
     docs = _spread(_t(spark, sf_dir, "documents").select("doc_id"), "doc_id")
     for w in range(3):
         wave = docs.filter(F.col("doc_id") % 3 == w).mapInPandas(synth, schema=out_schema)
@@ -5566,7 +5555,6 @@ def streaming_neardup_pipeline(spark, sf_dir):
     windows over the mapping, no joins) is value-checked bit-exactly
     against an independent brute-force-pairs + union-find Python
     reference (reference.py streaming_neardup_pipeline_ref)."""
-    import tempfile
 
     from pyspark.sql import Window
 
@@ -5587,7 +5575,7 @@ def streaming_neardup_pipeline(spark, sf_dir):
             blobs = [synth_block_image(int(d)) for d in pdf["doc_id"]]
             yield pdf[["doc_id"]].assign(blob=blobs, media_format="image/ppm")
 
-    work = tempfile.mkdtemp(prefix="fps_pipe_")
+    work = scratch_dir("fps_pipe_")
     pipe = StreamingNearDupPipeline(StreamingHammingIndex(f"{work}/idx"))
     docs = _spread(_t(spark, sf_dir, "documents").select("doc_id"), "doc_id")
     for w in range(3):
@@ -5629,7 +5617,6 @@ def streaming_text_neardup_pipeline(spark, sf_dir):
     same SQL batch dedup_clusters is green against (the index verifies
     candidates exactly, so banding recall is the only approximation,
     identical to the batch operator's)."""
-    import tempfile
 
     from pyspark.sql import Window
 
@@ -5639,7 +5626,7 @@ def streaming_text_neardup_pipeline(spark, sf_dir):
     from flink_playground_spark.streaming.minhash_index import StreamingMinHashIndex
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    work = tempfile.mkdtemp(prefix="fps_txtpipe_")
+    work = scratch_dir("fps_txtpipe_")
     pipe = StreamingNearDupPipeline(
         StreamingMinHashIndex(f"{work}/idx", k=128, bands=32, n=3, threshold=0.8)
     )
@@ -5693,7 +5680,6 @@ def streaming_text_update_pipeline(spark, sf_dir):
     keep-latest changelog semantics of WithStateTtlJob.java:73-77 and
     WithDeduplicateJoinJob.java:88-104, applied to content-level
     near-dup state."""
-    import tempfile
 
     from pyspark.sql import Window
 
@@ -5703,7 +5689,7 @@ def streaming_text_update_pipeline(spark, sf_dir):
     from flink_playground_spark.streaming.minhash_index import StreamingMinHashIndex
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    work = tempfile.mkdtemp(prefix="fps_updpipe_")
+    work = scratch_dir("fps_updpipe_")
     pipe = StreamingNearDupPipeline(
         StreamingMinHashIndex(f"{work}/idx", k=128, bands=32, n=3, threshold=0.8)
     )
@@ -5754,7 +5740,6 @@ def streaming_update_pipeline(spark, sf_dir):
     corpus (reference.py streaming_update_pipeline_ref) — proving the
     update verb on a second index family, with the update's cluster
     raises/merges crossing committed state."""
-    import tempfile
 
     from pyspark.sql import Window
 
@@ -5792,7 +5777,7 @@ def streaming_update_pipeline(spark, sf_dir):
             .filter(F.col("sh").isNotNull())
         )
 
-    work = tempfile.mkdtemp(prefix="fps_updimg_")
+    work = scratch_dir("fps_updimg_")
     pipe = StreamingNearDupPipeline(StreamingHammingIndex(f"{work}/idx"))
     docs = _spread(_t(spark, sf_dir, "documents").select("doc_id"), "doc_id")
     for w in range(3):
@@ -5838,12 +5823,11 @@ def streaming_embedding_neardup(spark, sf_dir):
     vs the one-shot batch join. Reference intent: the stream/batch
     duality the reference's jobs exercise per operator (SURVEY §2),
     applied to vector near-dup."""
-    import tempfile
 
     from flink_playground_spark.streaming.cosine_index import StreamingCosineLSHIndex
 
     v = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    idx = StreamingCosineLSHIndex(tempfile.mkdtemp(prefix="fps_cosidx_"))
+    idx = StreamingCosineLSHIndex(scratch_dir("fps_cosidx_"))
     for w in range(3):
         idx.ingest(v.filter(F.col("vec_id") % 3 == w), batch_id=w)
     return idx.pairs(spark)
@@ -5882,13 +5866,12 @@ def streaming_embedding_neardup_capped(spark, sf_dir):
     in unit tests only): pairs emitted before a crossing survive, a
     bucket overflows exactly when stored ∪ wave occupancy first
     exceeds the cap, and excluded rows never pair."""
-    import tempfile
 
     from flink_playground_spark.streaming.cosine_index import StreamingCosineLSHIndex
 
     v = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     idx = StreamingCosineLSHIndex(
-        tempfile.mkdtemp(prefix="fps_cosidxcap_"), max_bucket=48
+        scratch_dir("fps_cosidxcap_"), max_bucket=48
     )
     for w in range(3):
         idx.ingest(v.filter(F.col("vec_id") % 3 == w), batch_id=w)
@@ -5925,7 +5908,6 @@ def streaming_embedding_update_pipeline(spark, sf_dir):
     whose verification payload is a stored VECTOR, not a fingerprint.
     Reference intent: WithStateTtlJob.java:73-77 PK upsert;
     WithDeduplicateJoinJob.java:88-104 keep-latest."""
-    import tempfile
 
     from pyspark.sql import Window
 
@@ -5935,7 +5917,7 @@ def streaming_embedding_update_pipeline(spark, sf_dir):
     )
 
     v = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    work = tempfile.mkdtemp(prefix="fps_updemb_")
+    work = scratch_dir("fps_updemb_")
     pipe = StreamingNearDupPipeline(StreamingCosineLSHIndex(f"{work}/idx"))
     for w in range(3):
         pipe.ingest(v.filter(F.col("vec_id") % 3 == w), batch_id=w)
@@ -5978,14 +5960,13 @@ def streaming_corpus_similarity(spark, sf_dir):
     batch construction; streaming/corpus_sig.py), then the pairwise
     matrix is computed from signatures alone. Value-checked against the
     same bit-exact Python reference as the batch query."""
-    import tempfile
 
     from pyspark.sql import functions as F  # noqa: F811
 
     from flink_playground_spark.streaming.corpus_sig import StreamingCorpusSignature
 
     docs = _t(spark, sf_dir, "documents")
-    sig = StreamingCorpusSignature(tempfile.mkdtemp(prefix="fps_csig_"), k=64)
+    sig = StreamingCorpusSignature(scratch_dir("fps_csig_"), k=64)
     for w in range(3):
         sig.ingest(docs.filter(F.col("doc_id") % 3 == w), batch_id=w)
     return sig.similarity(spark).select("src_a", "src_b", "est_jaccard")
@@ -6017,13 +5998,12 @@ def streaming_window_topn(spark, sf_dir):
     from state alone — rank is not distributive, so it is evaluated on
     the merged counts, never on per-wave partials
     (streaming/window_topn.py)."""
-    import tempfile
 
     from flink_playground_spark.streaming.window_topn import StreamingWindowTopN
 
     ev = _t(spark, sf_dir, "events").select("event_id", "ts", "user_id")
     op = StreamingWindowTopN(
-        tempfile.mkdtemp(prefix="fps_wtopn_"), "user_id", "ts", "1 hour"
+        scratch_dir("fps_wtopn_"), "user_id", "ts", "1 hour"
     )
     for w in range(3):
         op.ingest(ev.filter(F.col("event_id") % 3 == w), batch_id=w)

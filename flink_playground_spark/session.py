@@ -10,7 +10,10 @@ watermark/retention settings consumed by :mod:`flink_playground_spark.streaming`
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -98,15 +101,21 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def scratch_dir(prefix: str) -> str:
+    """A fresh temporary directory, removed when the interpreter exits:
+    the work directory of a fold or stream called without one. Results
+    read it lazily, so it must outlive the call that made it."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
+
+
 def _ship_package(spark: SparkSession) -> None:
     sc = spark.sparkContext
     if getattr(sc, "_fps_pyfile_shipped", False):
         return
-    import shutil
-    import tempfile
-
     pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    tmp = tempfile.mkdtemp(prefix="fps_pyfiles_")
+    tmp = scratch_dir("fps_pyfiles_")
     zip_path = shutil.make_archive(
         os.path.join(tmp, "flink_playground_spark"),
         "zip",

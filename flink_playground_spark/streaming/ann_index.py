@@ -25,7 +25,9 @@ bloat unevenly, recall drops with no error anywhere. Each ingest
 therefore records the wave's FIT (mean cosine distance of its vectors
 to their assigned centroid, a per-wave aggregate of the assignment the
 ingest computes anyway — zero extra passes). ``drift_report`` exposes
-the series; ``needs_retrain`` compares the latest wave's drift against
+the series; the rows are the ``drift`` ledger of the index directory,
+committed with the wave's cells in one manifest replace (``DriftLog``).
+``needs_retrain`` compares the latest wave's drift against
 the geometry's own training fit (ratio > threshold ⇒ stale);
 ``retrain`` is the explicit offline rebuild: re-run Lloyd over the
 CURRENT state, swap the geometry, reassign every stored vector once,
@@ -41,9 +43,6 @@ from __future__ import annotations
 
 import os
 
-import pyarrow as pa
-import pyarrow.dataset as ds
-import pyarrow.parquet as papq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -52,10 +51,10 @@ from flink_playground_spark.functions.similarity import (
     ivf_assign,
     kmeans_centroids,
 )
-from flink_playground_spark.streaming.txn_state import TransactionalKeyState
+from flink_playground_spark.streaming.txn_state import ManifestRecords, TransactionalKeyState
 from flink_playground_spark.streaming.wave_index import release_checkpoint
 
-# the writer id of an index's state; its batch ids are drift-log waves
+# the writer id of an index's log; its batch ids are drift-log waves
 _WRITER = "waves"
 
 
@@ -74,62 +73,37 @@ def committed_geometry(root: str, state: TransactionalKeyState) -> str | None:
     return f"{root}/w{max(waves)}" if waves else None
 
 
-class DriftLog:
+class DriftLog(ManifestRecords):
     """Per-wave fit log of a frozen-geometry index: one ``(wave, phase,
     n, <metric>)`` row per wave, the metric being the wave's mean fit
     error (IVF: cosine distance to the assigned centroid; PQ: squared
     quantization error).
 
-    The wave number is also the state's batch id and keep-latest order
-    (``fold``), and the row is appended AFTER the state commit: a wave
-    re-ingested after a crash between the two finds its batch committed,
-    skips the merge, and writes its row once."""
+    The rows are the ``drift`` ledger of the index directory, kept in
+    its manifest. The wave number is the log's next batch id, and
+    ``fold`` commits a wave's state merge (keyed on the wave as batch id
+    and order) and its row in ONE manifest replace: a crash anywhere in
+    a wave leaves neither, so the redelivered wave folds — and records
+    its phase — exactly once."""
 
     def __init__(self, path: str, metric: str):
-        self.path = path
+        super().__init__(path, "drift")
         self.metric = metric
-        self._next: int | None = None  # counted from the log on reattach
 
     def next_wave(self) -> int:
-        if self._next is None:
-            # one tiny file per wave, counted from the footers: no Spark job
-            self._next = (
-                ds.dataset(self.path, format="parquet").count_rows()
-                if os.path.isdir(self.path)
-                else 0
-            )
-        return self._next
-
-    def append(self, wave: int, phase: str, n: int, value: float | None) -> None:
-        """Write the wave's row in-process (pyarrow, no Spark job); one
-        file per wave, so a re-append rewrites the same row."""
-        os.makedirs(self.path, exist_ok=True)
-        papq.write_table(
-            pa.table(
-                {
-                    "wave": pa.array([wave], pa.int32()),
-                    "phase": pa.array([phase], pa.string()),
-                    "n": pa.array([n], pa.int64()),
-                    self.metric: pa.array([value], pa.float64()),
-                }
-            ),
-            f"{self.path}/wave-{wave:06d}.parquet",
-        )
-        self._next = wave + 1
+        return self.next_batch(_WRITER)
 
     def fold(self, state: TransactionalKeyState, rows: DataFrame, phase: str) -> None:
         """Fold one checkpointed wave — keyed on ``vid``, with a per-row
-        ``err`` — into ``state`` (keep-latest, the wave number as batch
-        id and order) and into the log; the checkpoint is released when
-        the fold ends, committed or raised. One stats job, then the
-        state merge."""
+        ``err`` — into ``state`` (keep-latest) and the log in one
+        commit; the checkpoint is released when the fold ends, committed
+        or raised. One stats job, then the state merge."""
         try:
             wave = self.next_wave()
             r = rows.agg(F.count(F.lit(1)).alias("n"), F.avg("err").alias("e")).first()
-            state.merge_keep_latest(
-                _WRITER, wave, rows.drop("err").withColumn("__seq", F.lit(wave)), "__seq"
-            )
-            self.append(wave, phase, int(r["n"]), r["e"])
+            cells = rows.drop("err").withColumn("__seq", F.lit(wave))
+            row = [wave, phase, int(r["n"]), r["e"]]
+            self.commit_all([state.stage_keep_latest(cells, "__seq"), (self, row)], _WRITER, wave)
         finally:
             release_checkpoint(rows)
 
@@ -150,8 +124,9 @@ class DriftLog:
             F.when(F.col("phase").isin("train", "retrain"), F.col(self.metric)),
             ignorenulls=True,
         ).over(m)
+        schema = f"wave int, phase string, n bigint, {self.metric} double"
         return (
-            spark.read.parquet(self.path)
+            spark.createDataFrame(self.rows(), schema)
             .withColumn("baseline", base)
             # try_divide: a perfectly-fit geometry has baseline 0.0 and
             # under ANSI x/0 throws; NULL ratio is handled (and still
@@ -198,8 +173,8 @@ class StreamingIVFIndex:
         self.n_centroids = n_centroids
         self.kmeans_iters = kmeans_iters
         self.centroids_path = f"{path}/centroids"
-        self.drift = DriftLog(f"{path}/metrics", "mean_drift")
-        self.cells = TransactionalKeyState(f"{path}/cells", ["vid"], n_buckets)
+        self.drift = DriftLog(path, "mean_drift")
+        self.cells = TransactionalKeyState(path, ["vid"], n_buckets, ledger="cells")
 
     def _train(self, corpus: DataFrame) -> str:
         """Train centroids over ``corpus`` into the directory of the wave

@@ -30,7 +30,6 @@ upsert history — changelog ``+I(a,a); -U(a,a) +U(a,b); -U(a,b) +U(a,c);
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 from collections.abc import Sequence
 
@@ -38,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_playground_spark.operators.dedup import dedup_latest
+from flink_playground_spark.session import scratch_dir
 from flink_playground_spark.sqltext import named_struct, quote, string
 from flink_playground_spark.streaming.txn_state import TransactionalKeyState
 
@@ -172,7 +172,7 @@ def keep_latest_changelog_stream(
     """
     keys = [keys] if isinstance(keys, str) else list(keys)
     spark = stream.sparkSession
-    work = work_dir or tempfile.mkdtemp(prefix="fps_changelog_")
+    work = work_dir or scratch_dir("fps_changelog_")
     state = TransactionalKeyState(f"{work}/state", keys, n_buckets)
     writer = "changelog" if checkpoint else f"changelog-{uuid.uuid4().hex}"
     out_path = f"{work}/ops"
@@ -243,7 +243,7 @@ def outer_join_changelog_stream(
     """
     spark = probe.sparkSession
     probe_keys = list(probe_keys or [on[0][0]])
-    work = work_dir or tempfile.mkdtemp(prefix="fps_ojlog_")
+    work = work_dir or scratch_dir("fps_ojlog_")
     state = TransactionalKeyState(f"{work}/state", list(dim_keys), n_buckets)
     writer = f"ojlog-{uuid.uuid4().hex}"
     out_path = f"{work}/ops"

@@ -32,7 +32,6 @@ Design:
 
 from __future__ import annotations
 
-import tempfile
 import time
 import uuid
 
@@ -40,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flink_playground_spark.functions.chunking import chunk_fingerprints
+from flink_playground_spark.session import scratch_dir
 from flink_playground_spark.streaming.txn_state import TransactionalKeyState
 
 def _merge_agg() -> list[F.Column]:
@@ -66,7 +66,7 @@ def streaming_chunk_dedup(
     (chunk_fp, n_tokens, n_occurrences, n_docs, canonical_doc) for
     every passage currently known to appear in ≥2 documents."""
     spark = doc_stream.sparkSession
-    work = work_dir or tempfile.mkdtemp(prefix="fps_chunkdedup_")
+    work = work_dir or scratch_dir("fps_chunkdedup_")
     state = TransactionalKeyState(f"{work}/state", ["chunk_fp"], n_buckets=n_buckets)
     writer = uuid.uuid4().hex  # one logical query per drain; see txn_state docstring
     seen = {"any": False}

@@ -15,9 +15,11 @@ same conventions as the batch ``value_drift_psi`` query, whose oracle
 also pins this module's math (the streaming query reproduces it over
 the parity waves).
 
-State is two TransactionalKeyState stores keyed by bucket; per-batch
-IO is proportional to buckets touched by the wave, and the PSI read
-aggregates state rows (≤ distinct buckets), never history.
+State is two TransactionalKeyState ledgers keyed by bucket, ``ref`` and
+``live``, of ONE state directory: one manifest and one replay mark, so
+each wave commits once wherever it lands. Per-batch IO is proportional
+to buckets touched by the wave, and the PSI read aggregates state rows
+(≤ distinct buckets), never history.
 """
 
 from __future__ import annotations
@@ -42,8 +44,8 @@ class StreamingDriftMonitor:
         self.value_col = value_col
         self.bucket_width = bucket_width
         self.writer_id = writer_id
-        self.ref = TransactionalKeyState(f"{path}/ref", ["bucket"], n_buckets)
-        self.live = TransactionalKeyState(f"{path}/live", ["bucket"], n_buckets)
+        self.ref = TransactionalKeyState(path, ["bucket"], n_buckets, ledger="ref")
+        self.live = TransactionalKeyState(path, ["bucket"], n_buckets, ledger="live")
 
     def _counts(self, batch: DataFrame) -> DataFrame:
         return (

@@ -22,12 +22,12 @@ every call: each call folds under a fresh writer id, and a reused
 
 from __future__ import annotations
 
-import tempfile
 import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
+from flink_playground_spark.session import scratch_dir
 from flink_playground_spark.streaming.txn_state import TransactionalKeyState
 
 
@@ -48,7 +48,7 @@ def enrichment_join_stream(
     probe side retains nothing either; ``dim_stream`` is unbounded.
     """
     spark = probe.sparkSession
-    state_dir = state_dir or tempfile.mkdtemp(prefix="fps_dim_state_")
+    state_dir = state_dir or scratch_dir("fps_dim_state_")
     state = TransactionalKeyState(f"{state_dir}/latest", list(dim_keys), n_buckets=16)
     writer = f"enrich-{uuid.uuid4().hex}"
 

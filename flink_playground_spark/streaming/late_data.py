@@ -17,12 +17,14 @@ Reproduced here with ``foreachBatch`` + exactly-once keyed state:
 - **watermark**: max event time over all PRIOR batches minus ``delay``
   (Flink advances watermarks between bundles; availableNow replay makes
   this deterministic — batch k's admission decisions depend only on
-  batches < k). Stored as a tiny per-batch high-water ledger, replay
-  idempotent.
+  batches < k). Each batch's max is one ``high_water`` row kept in the
+  state manifest (``ManifestRecords``).
 - **window counts**: admitted rows fold per-(window, key) count
-  partials into ``TransactionalKeyState`` keyed by (writer, batch) —
-  an at-least-once redelivery is a no-op, so refinement never
-  double-counts.
+  partials into the ``counts`` ``TransactionalKeyState`` ledger of the
+  same directory. The counts and the batch's high-water row commit in
+  ONE manifest replace under the (writer, batch) replay mark — an
+  at-least-once redelivery is a no-op, so refinement never
+  double-counts and the watermark never moves twice.
 - **side output**: rejected rows append under ``side/b{batch_id}/``
   (overwrite per batch id — replays rewrite the same files, appends
   never duplicate), carrying ``batch_id`` and the rejecting watermark.
@@ -35,13 +37,12 @@ row-routing rule here is the same boundary — a row is sided iff
 from __future__ import annotations
 
 import datetime as _dt
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_playground_spark.streaming.txn_state import TransactionalKeyState
+from flink_playground_spark.streaming.txn_state import ManifestRecords, TransactionalKeyState
 
 
 class LateDataWindowCounts:
@@ -66,45 +67,25 @@ class LateDataWindowCounts:
         self.lateness_us = round(allowed_lateness_s * 1_000_000)
         self.writer_id = writer_id
         self.counts = TransactionalKeyState(
-            f"{path}/counts", ["window_start", "window_end", *self.keys], n_buckets
+            path, ["window_start", "window_end", *self.keys], n_buckets, ledger="counts"
         )
+        self.high_water = ManifestRecords(path, "high_water")  # [batch_id, max ts]
         os.makedirs(f"{path}/side", exist_ok=True)
-        self._hw_path = f"{path}/high_water.json"
-
-    # -- watermark ledger ---------------------------------------------------
-    def _high_water(self) -> dict[str, str]:
-        if not os.path.exists(self._hw_path):
-            return {}
-        with open(self._hw_path) as fh:
-            return json.load(fh)
 
     def _watermark(self, batch_id: int) -> _dt.datetime | None:
         """Max event time over batches strictly before ``batch_id`` minus
         the delay — replays of batch k see exactly what the first run of
         batch k saw."""
         prior = [
-            _dt.datetime.fromisoformat(v)
-            for k, v in self._high_water().items()
-            if int(k) < batch_id
+            _dt.datetime.fromisoformat(ts) for b, ts in self.high_water.rows() if b < batch_id
         ]
         return max(prior) - self.delay if prior else None
-
-    def _record_high_water(self, batch: DataFrame, batch_id: int) -> None:
-        row = batch.agg(F.max(self.ts_col).alias("m")).collect()[0]  # 1 row, bounded
-        if row["m"] is None:
-            return
-        hw = self._high_water()
-        hw[str(batch_id)] = row["m"].isoformat()
-        tmp = self._hw_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(hw, fh)
-        os.replace(tmp, self._hw_path)
 
     # -- per-batch fold -----------------------------------------------------
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         win = F.window(F.col(self.ts_col), self.window)
         # four actions consume this frame per batch (side probe, side
-        # write, count partials, high-water max) — persist so the wave's
+        # write, high-water max, count partials) — persist so the wave's
         # input is read once, not per action
         with_win = batch.withColumn("window_start", win.start).withColumn(
             "window_end", win.end
@@ -132,10 +113,11 @@ class LateDataWindowCounts:
         partials = admitted.groupBy("window_start", "window_end", *self.keys).agg(
             F.count(F.lit(1)).cast("long").alias("cnt")
         )
-        self.counts.merge_aggregate(
-            self.writer_id, batch_id, partials, [F.sum("cnt").cast("long").alias("cnt")]
-        )
-        self._record_high_water(with_win, batch_id)
+        writes = [self.counts.stage_aggregate(partials, [F.sum("cnt").cast("long").alias("cnt")])]
+        high = with_win.agg(F.max(self.ts_col).alias("m")).first()["m"]  # 1 row, bounded
+        if high is not None:
+            writes.append((self.high_water, [batch_id, high.isoformat()]))
+        TransactionalKeyState.commit_all(writes, self.writer_id, batch_id)
         with_win.unpersist()
 
     # -- readers ------------------------------------------------------------

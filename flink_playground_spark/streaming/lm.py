@@ -11,6 +11,11 @@ state alone and applies the SAME arithmetic as the batch scorer, so a
 drained stream's scores are bit-identical to scoring the union batch —
 the property the test pins.
 
+Both count stores are ledgers (``bigrams``, ``unigrams``) of ONE state
+directory, so a wave commits into both with one manifest replace and
+one replay mark — the model never holds one wave's bigrams without its
+unigrams.
+
 Per-wave work ∝ wave tokens; state size ∝ distinct bigrams/vocabulary,
 never corpus size. The vocabulary count is NOT a stored scalar (a
 scalar can't merge under replays) — it derives from the unigram store's
@@ -32,21 +37,17 @@ class StreamingBigramLM:
 
     def __init__(self, path: str, n_buckets: int = 8, writer_id: str = "lm"):
         self.writer_id = writer_id
-        self.bigrams = TransactionalKeyState(f"{path}/bigrams", ["w1", "w2"], n_buckets)
-        self.unigrams = TransactionalKeyState(f"{path}/unigrams", ["w"], n_buckets)
+        self.bigrams = TransactionalKeyState(path, ["w1", "w2"], n_buckets, ledger="bigrams")
+        self.unigrams = TransactionalKeyState(path, ["w"], n_buckets, ledger="unigrams")
 
     def ingest(self, batch: DataFrame, batch_id: int, id_col: str, text_col: str) -> bool:
         """Fold one wave's counts in, exactly once per (writer, batch).
         Unigram rows carry BOTH the history count (occurrences as a
         bigram's first token) and a seen-flag for vocabulary size, so
-        one store serves c1 and V."""
+        one store serves c1 and V. Both stores commit in one manifest
+        replace; a replayed batch returns False."""
         bg = doc_bigrams(batch, id_col, text_col)
-        b_applied = self.bigrams.merge_aggregate(
-            self.writer_id,
-            batch_id,
-            bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("long").alias("n")),
-            [F.sum("n").cast("long").alias("n")],
-        )
+        pairs = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("long").alias("n"))
         hist = bg.groupBy(F.col("w1").alias("w")).agg(
             F.count(F.lit(1)).cast("long").alias("h")
         )
@@ -60,13 +61,11 @@ class StreamingBigramLM:
             .groupBy("w")
             .agg(F.sum("h").cast("long").alias("h"))
         )
-        u_applied = self.unigrams.merge_aggregate(
-            self.writer_id, batch_id, uni, [F.sum("h").cast("long").alias("h")]
-        )
-        # a crash between the two commits leaves the stores desynced by
-        # one wave; re-ingesting the SAME wave under the same batch_id
-        # is then safe (the committed store skips, the lagging catches up)
-        return b_applied or u_applied
+        writes = [
+            self.bigrams.stage_aggregate(pairs, [F.sum("n").cast("long").alias("n")]),
+            self.unigrams.stage_aggregate(uni, [F.sum("h").cast("long").alias("h")]),
+        ]
+        return TransactionalKeyState.commit_all(writes, self.writer_id, batch_id) is not None
 
     def score(
         self, df: DataFrame, id_col: str, text_col: str, alpha: float = 0.5

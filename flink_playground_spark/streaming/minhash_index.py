@@ -48,7 +48,6 @@ most here.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -60,6 +59,7 @@ from flink_playground_spark.functions.dedupe import (
     shingle_index,
     verify_pairs,
 )
+from flink_playground_spark.session import scratch_dir
 from flink_playground_spark.streaming.wave_index import (
     BandedWaveIndex,
     Ledger,
@@ -144,7 +144,7 @@ def streaming_neardup(
     if work_dir and os.path.exists(f"{work_dir}/manifest.json"):
         raise ValueError(f"work_dir {work_dir} already holds index state")
     idx = StreamingMinHashIndex(
-        work_dir or tempfile.mkdtemp(prefix="fps_neardup_"),
+        work_dir or scratch_dir("fps_neardup_"),
         id_col, text_col, k, bands, n, threshold, max_bucket,
     )
     writer = doc_stream.writeStream.foreachBatch(lambda b, i: idx.ingest(b, i))

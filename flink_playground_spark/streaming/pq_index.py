@@ -28,8 +28,10 @@ STALENESS: frozen codebooks degrade when the ingest distribution
 drifts — quantization error (the winning codeword's squared L2, which
 the encode pass computes anyway) creeps up with no error anywhere.
 Each ingest records the wave's mean error in the same ``DriftLog`` as
-the IVF index, with the same fit-ratio contract, and versions its book
-the same way: ``book/w<wave>``, read once that wave's codes commit
+the IVF index, with the same fit-ratio contract — the codes and the
+drift row are ledgers of the index directory, committed with one
+manifest replace per wave — and versions its book the same way:
+``book/w<wave>``, read once that wave's codes commit
 (``ann_index.committed_geometry``).
 """
 
@@ -64,8 +66,8 @@ class StreamingPQIndex:
         self.vec_col = vec_col
         self.dim, self.m, self.n_codes, self.iters = dim, m, n_codes, iters
         self.book_path = f"{path}/book"
-        self.drift = DriftLog(f"{path}/metrics", "mean_err")
-        self.codes = TransactionalKeyState(f"{path}/codes", ["vid"], n_buckets)
+        self.drift = DriftLog(path, "mean_err")
+        self.codes = TransactionalKeyState(path, ["vid"], n_buckets, ledger="codes")
         # the frozen geometry is BOUNDED (m × n_codes entries) and
         # immutable between (re)trains, so it lives driver-side for the
         # index's lifetime: the parquet copy is the durable/reattach
@@ -100,9 +102,8 @@ class StreamingPQIndex:
         driver-side book comes straight from pq_train (it holds the
         book across Lloyd rounds).
 
-        The durable parquet copy is written in-process by pyarrow, as
-        the drift log's rows are: the geometry is m × n_codes tiny
-        rows, and the former ``book_df.write.parquet`` cost a ~0.7s
+        The durable parquet copy is written in-process by pyarrow: the
+        geometry is m × n_codes tiny rows, and the former ``book_df.write.parquet`` cost a ~0.7s
         Spark job per index build (round-13 profile) to move a few KB."""
         import os
 
@@ -132,10 +133,10 @@ class StreamingPQIndex:
 
     def _fold(self, vectors: DataFrame, phase: str, book: tuple[str, dict]) -> None:
         """Encode ``vectors`` against ``book`` and fold the codes
-        into state and the drift log. The encode is ONE zero-shuffle
-        Arrow stage (``pq_encode_rows``: all m subspaces per batch, no
-        explode, no (vid)-keyed re-assembly exchange; codes bit-identical
-        to the exploded batch encoder) that also yields each vector's
+        into state and the drift log, in one commit. The encode is ONE
+        zero-shuffle Arrow stage (``pq_encode_rows``: all m subspaces per
+        batch, no explode, no (vid)-keyed re-assembly exchange; codes
+        bit-identical to the exploded batch encoder) that also yields each vector's
         quantization error (Σ over subspaces of the winning codeword's
         squared L2) as ``err``. LAZY checkpoint: the drift log's stats
         job both executes the encode pass and materializes the

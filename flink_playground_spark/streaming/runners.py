@@ -13,13 +13,13 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-import tempfile
 import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_playground_spark.session import scratch_dir
 from flink_playground_spark.sources.tables import (
     _ensure_nanos_conf,
     load_table,
@@ -51,7 +51,7 @@ def replay_waves(table: DataFrame, waves: Sequence[Column]) -> DataFrame:
     ``waves``: each wave's rows land in one parquet file, copied into the
     source directory with strictly increasing mtimes, which pin the file
     source's batch order (``maxFilesPerTrigger=1``)."""
-    work = tempfile.mkdtemp(prefix="fps_wavesrc_")
+    work = scratch_dir("fps_wavesrc_")
     src = f"{work}/src"
     os.makedirs(src)
     for i, cond in enumerate(waves):

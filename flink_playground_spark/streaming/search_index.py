@@ -25,7 +25,10 @@ Both stores are TRANSACTIONAL (txn_state.py): tf/dl are aggregate
 merges, which double-count under foreachBatch's at-least-once delivery
 unless replays are skipped — pass the streaming epoch id as
 ``batch_id`` and a re-delivered wave is a no-op (r2 ADVICE; the same
-hole chunkdedup was migrated off in r2).
+hole chunkdedup was migrated off in r2). They are the ``postings`` and
+``doclen`` ledgers of ONE state directory, so a wave lands in both with
+one manifest replace and one replay mark: a crash leaves the index at
+the previous wave, never with one store a wave ahead of the other.
 """
 
 from __future__ import annotations
@@ -51,49 +54,27 @@ class StreamingSearchIndex:
         self.id_col = id_col
         self.text_col = text_col
         self.writer_id = writer_id
-        self.postings = TransactionalKeyState(f"{path}/postings", ["term", id_col], n_buckets)
-        self.doclen = TransactionalKeyState(f"{path}/doclen", [id_col], n_buckets)
+        self.postings = TransactionalKeyState(path, ["term", id_col], n_buckets, ledger="postings")
+        self.doclen = TransactionalKeyState(path, [id_col], n_buckets, ledger="doclen")
 
     def ingest(self, batch: DataFrame, batch_id: int | None = None) -> bool:
         """Fold a document wave into the index (work ∝ wave tokens),
         exactly once per (writer_id, batch_id). Pass the foreachBatch
         epoch id as ``batch_id``; a replayed batch returns False and
         changes nothing. Without one, the next unseen id is assigned.
-
-        A crash between the two store commits is recoverable: with the
-        SAME wave re-ingested under the lagging store's id (explicitly,
-        or via the error below), the already-committed store skips and
-        the lagging one catches up. Auto-id mode REFUSES to run while
-        the stores disagree — silently reusing the committed id would
-        drop a genuinely new wave's postings, and a fresh id would
-        double-count a replayed one; only the caller knows which wave
-        this is, so the error says exactly what to do."""
+        Both stores commit in one manifest replace."""
         if batch_id is None:
-            p_next, d_next = (st.next_batch(self.writer_id) for st in (self.postings, self.doclen))
-            if p_next != d_next:
-                lag = min(p_next, d_next)
-                raise RuntimeError(
-                    "search index stores are desynced (a crash between the "
-                    f"postings and doclen commits): postings next={p_next}, "
-                    f"doclen next={d_next}. Re-ingest the in-flight wave "
-                    f"explicitly with batch_id={lag} to resync, then resume "
-                    "auto ids."
-                )
-            batch_id = p_next
+            batch_id = self.postings.next_batch(self.writer_id)
         toks = whitespace_tokens(batch, self.id_col, self.text_col)
         tf = toks.groupBy("term", self.id_col).agg(
             F.count(F.lit(1)).cast("long").alias("tf")
         )
-        applied = self.postings.merge_aggregate(
-            self.writer_id, batch_id, tf, [F.sum("tf").cast("long").alias("tf")]
-        )
         dl = toks.groupBy(self.id_col).agg(F.count(F.lit(1)).cast("long").alias("dl"))
-        dl_applied = self.doclen.merge_aggregate(
-            self.writer_id, batch_id, dl, [F.sum("dl").cast("long").alias("dl")]
-        )
-        # True if ANY store advanced (a catch-up after a mid-ingest crash
-        # applies to exactly one side); False only for a full replay
-        return applied or dl_applied
+        writes = [
+            self.postings.stage_aggregate(tf, [F.sum("tf").cast("long").alias("tf")]),
+            self.doclen.stage_aggregate(dl, [F.sum("dl").cast("long").alias("dl")]),
+        ]
+        return TransactionalKeyState.commit_all(writes, self.writer_id, batch_id) is not None
 
     def query(
         self,

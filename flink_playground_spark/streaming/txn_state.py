@@ -1,21 +1,37 @@
-"""Transactional bucketed state: exactly-once foreachBatch merges.
+"""Transactional state directories: exactly-once foreachBatch folds.
 
-The one keyed-state primitive of the streaming folds (keep-latest,
-mergeable aggregates, CDC apply, arbitrary transitions). foreachBatch is
-AT-LEAST-ONCE: if the job dies after the state write and before Spark
-commits the batch's offsets to the checkpoint, the batch REPLAYS.
-Keep-latest merges would absorb a replay (idempotent); aggregate merges
-would DOUBLE-COUNT it.
+The keyed-state primitives of the streaming folds (keep-latest,
+mergeable aggregates, CDC apply, arbitrary transitions, append-only
+deltas). foreachBatch is AT-LEAST-ONCE: if the job dies after the state
+write and before Spark commits the batch's offsets to the checkpoint,
+the batch REPLAYS. Keep-latest merges would absorb a replay
+(idempotent); aggregate merges would DOUBLE-COUNT it.
 
-This store makes every merge exactly-once with the snapshot-manifest technique
-(operators/snapshots.py): data files are immutable and versioned, and a
-single atomic manifest replace is the commit point.
+Every store here makes its merges exactly-once with the snapshot-
+manifest technique (operators/snapshots.py): data files are immutable
+and versioned, and a single atomic manifest replace is the commit point.
+
+ONE TRANSACTION LOG PER DIRECTORY. A store instance is one named
+``ledger`` of a state directory (``""``, the default, is the one-ledger
+layout), and the directory's ``manifest.json`` is its one log. The log
+(``DirLedger``) owns, once for every store: the writer lock, the
+manifest read, the ``writers`` replay mark (``committed`` /
+``next_batch``) and the tmp-write + ``os.replace`` commit.
+``commit_all(writes, writer_id, batch_id)`` stages writes to several
+ledgers of one directory — ``TransactionalKeyState`` bucket merges,
+``AppendDeltaState`` appends/upserts/prunes, ``ManifestRecords`` rows —
+and publishes them with ONE manifest replace carrying one replay mark:
+a wave that spans stores is committed whole or not at all.
 
 Layout::
 
-    path/t<txn>/__bucket=<k>/...   immutable, never overwritten
-    path/manifest.json             {"writers": {"<writer_id>": n, ...},
-                                    "txn": t,
+    path/manifest.json              {"writers": {"<writer_id>": n, ...},
+                                     <the "" ledger's fields>,
+                                     "ledgers": {"<name>": {<fields>}}}
+    path/[<ledger>/]t<txn>/__bucket=<k>/...   TransactionalKeyState
+    path/[<ledger>/]d<seq>/, x<seq>/          AppendDeltaState
+
+    TransactionalKeyState fields:  {"txn": t,
                                     "buckets": {"3": 7, ...},
                                     "n_buckets": 16,
                                     "keys": ["k", ...],
@@ -26,6 +42,12 @@ Layout::
                                    other keys cannot mis-route them;
                                    schema = the committed state columns,
                                    so reads skip parquet schema inference)
+    AppendDeltaState fields:       {"deltas": [...], "tombs": [...]}
+                                   plus the directory's "seq" counter
+    ManifestRecords fields:        {"rows": [[...], ...]}
+
+A one-ledger TransactionalKeyState directory is exactly the store's
+historical layout (fields at the top level), so it reattaches unchanged.
 
 Batch ids are only monotonic WITHIN one checkpointed streaming query —
 a different query (or a restarted one with a fresh checkpoint) starts
@@ -35,24 +57,23 @@ pass the same writer_id across restarts of one logical query and every
 re-delivered (writer, batch) pair is skipped; a different writer_id
 never collides.
 
-Merge protocol for writer ``w``, batch ``b``:
+Commit protocol for writer ``w``, batch ``b``:
 
 1. ``b <= writers[w]``  →  REPLAY: skip, state already includes it;
-2. read the touched buckets' CURRENT versions via the manifest (never
-   via directory listing — uncommitted files are invisible by
+2. every write reads its ledger's CURRENT versions via the manifest
+   (never via directory listing — uncommitted files are invisible by
    construction);
-3. write the merged buckets under a fresh ``t<txn>/`` (a brand-new
-   directory: nothing is overwritten, a crash mid-write leaves only
-   orphans);
-4. atomically replace the manifest pointing the touched buckets at the
-   new txn (a touched bucket the merge left empty leaves the manifest)
-   and recording ``writers[w] = b`` — the commit. A crash before (4) replays the batch against the
-   OLD manifest and reproduces the same merge; orphan files from the
+3. every write lands in fresh immutable directories (``t<txn>/``,
+   ``d<seq>/``; nothing is overwritten, a crash mid-write leaves only
+   orphans) and stages its new pointers into the in-memory manifest;
+4. atomically replace the manifest, recording ``writers[w] = b`` — the
+   commit. A crash before (4) replays the batch against the OLD
+   manifest and reproduces the same writes; orphan files from the
    failed attempt are shadowed, then garbage-collectable by ``vacuum``.
 
-A batch whose columns differ from the committed schema is refused with
-a ``ValueError`` before anything is written: the store never widens or
-null-fills its schema silently.
+A batch whose columns differ from a ledger's committed schema is refused
+with a ``ValueError`` before anything is written: the store never widens
+or null-fills its schema silently.
 
 On a cluster the same protocol works on any store with atomic
 single-object replace (every object store has PUT) — it is the
@@ -67,6 +88,7 @@ import shutil
 from collections.abc import Sequence
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
+from functools import partial
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -91,9 +113,10 @@ class ConcurrentWriteError(RuntimeError):
 
 @contextmanager
 def _writer_lock(path: str):
-    """Exclusive non-blocking flock over the store's writer lock file —
-    the single-writer protocol every mutation (merge, prune, rebucket)
-    runs under. Raises ConcurrentWriteError instead of waiting."""
+    """Exclusive non-blocking flock over the directory's writer lock
+    file — the single-writer protocol every mutation (merge, prune,
+    rebucket) runs under. Raises ConcurrentWriteError instead of
+    waiting."""
     import fcntl
 
     lock = open(f"{path}/.writer.lock", "w")
@@ -111,56 +134,34 @@ def _writer_lock(path: str):
         lock.close()
 
 
-class TransactionalKeyState:
-    """Exactly-once keyed state over immutable versioned bucket files."""
+class DirLedger:
+    """One named ledger of a state directory, and the directory's ONE
+    transaction log (module docstring): the writer lock, the manifest,
+    the ``writers`` replay mark and the atomic commit live here once.
+    Subclasses keep their fields in ``_entry(manifest)`` and stage
+    ``commit_all`` writes in ``_stage``."""
 
-    def __init__(
-        self,
-        path: str,
-        keys: Sequence[str],
-        n_buckets: int = 16,
-        retain_txns: int = 4,
-    ):
-        """``retain_txns``: steady-state retention — every commit prunes
-        bucket versions that are BOTH shadowed (a newer committed version
-        exists) and older than the newest ``retain_txns`` transactions.
-        The grace window keeps a concurrent reader's already-resolved
-        paths alive for N more commits (readers resolve paths from the
-        manifest once, then scan); replay safety needs no history at all —
-        replays are skipped via the writers map before any state read.
-        0 disables auto-pruning (explicit ``vacuum()`` only)."""
+    def __init__(self, path: str, ledger: str = ""):
         self.path = path
-        self.keys = list(keys)
-        self.n_buckets = n_buckets
-        self.retain_txns = retain_txns
+        self.ledger = ledger
+        self.dir = f"{path}/{ledger}" if ledger else path
         os.makedirs(path, exist_ok=True)
 
-    # -- manifest ----------------------------------------------------------
     def _manifest(self) -> dict:
         p = f"{self.path}/manifest.json"
         if not os.path.exists(p):
-            return {"writers": {}, "txn": 0, "buckets": {}}
+            return {"writers": {}}
         with open(p) as fh:
-            manifest = json.load(fh)
-        # The COMMITTED bucket count is authoritative: after a rebucket(),
-        # an instance constructed with the old count would otherwise hash
-        # keys into the wrong buckets — silent state corruption. Older
-        # manifests (pre-rescale feature) carry no count; the constructor
-        # value stands for those.
-        self.n_buckets = manifest.get("n_buckets", self.n_buckets)
-        # the keys are not adoptable like the count: other keys hash the
-        # same rows into other buckets. Manifests written before keys
-        # were recorded skip the check until their next commit.
-        if manifest.get("keys", self.keys) != self.keys:
-            raise ValueError(
-                f"keyed state at {self.path} is bucketed on {manifest['keys']}; "
-                f"reattaching with keys {self.keys} would mis-route them"
-            )
-        return manifest
+            return json.load(fh)
+
+    def _entry(self, manifest: dict) -> dict:
+        """This ledger's field dict in ``manifest``: the manifest itself
+        for the ``""`` ledger, else its ``"ledgers"`` entry."""
+        if not self.ledger:
+            return manifest
+        return manifest.setdefault("ledgers", {}).setdefault(self.ledger, {})
 
     def _commit(self, manifest: dict) -> None:
-        manifest["n_buckets"] = self.n_buckets
-        manifest["keys"] = self.keys
         tmp = f"{self.path}/manifest.json.tmp"
         with open(tmp, "w") as fh:
             json.dump(manifest, fh)
@@ -173,19 +174,141 @@ class TransactionalKeyState:
         same id and folds once."""
         return self._manifest()["writers"].get(writer_id, -1) + 1
 
+    def committed(self, writer_id: str, batch_id: int) -> bool:
+        """True when this (writer, batch) pair is already committed —
+        the replay probe a fold runs BEFORE its first write, so a
+        redelivered wave skips the whole ingest (every side effect, not
+        just the ledger writes).
+
+        Batch-id contract: ids must be MONOTONICALLY NON-DECREASING per
+        writer — exactly what Structured Streaming's foreachBatch
+        delivers (a restart re-delivers the last uncommitted batch, it
+        never jumps backwards with NEW data). The probe stores only the
+        per-writer high-water mark, so a genuinely out-of-order NEW
+        batch (batch 0 first delivered after batch 2 committed) would
+        be indistinguishable from a replay and skipped; callers outside
+        foreachBatch must sequence their own batch ids."""
+        return batch_id < self.next_batch(writer_id)
+
+    @staticmethod
+    def commit_all(writes, writer_id: str | None = None, batch_id: int | None = None):
+        """Commit ``writes`` — ``(ledger, *args)`` tuples over ledgers of
+        ONE directory, each staged by ``ledger._stage(manifest, *args)``
+        — in one manifest replace with one replay mark. Every file lands
+        in a fresh dir before the replace, so a crash anywhere leaves
+        the committed manifest untouched. Maintenance a write owes
+        (compaction) is staged into the same commit; vacuums run after
+        it. Returns each write's result, or None when ``(writer_id,
+        batch_id)`` was already committed. A commit that changes nothing
+        (no mark, nothing written) skips the replace."""
+        first = writes[0][0]
+        if any(st.path != first.path for st, *_ in writes):
+            raise ValueError("commit_all spans ledgers of one directory only")
+        mark = writer_id is not None and batch_id is not None
+        with _writer_lock(first.path):
+            manifest = first._manifest()
+            if mark and batch_id <= manifest["writers"].get(writer_id, -1):
+                return None
+            # address (and check) every ledger before anything is written
+            for st, *_ in writes:
+                st._entry(manifest)
+            before = json.dumps(manifest, sort_keys=True)
+            results = [st._stage(manifest, *args) for st, *args in writes]
+            after = [st._settle(manifest, *args) for st, *args in writes]
+            if mark:
+                manifest["writers"][writer_id] = batch_id
+            if json.dumps(manifest, sort_keys=True) != before:
+                first._commit(manifest)
+            for cleanup in dict.fromkeys(a for a in after if a is not None):
+                cleanup()
+            return results
+
+    def _settle(self, manifest: dict, *args):
+        """Stage what a write owes once every write is staged; returns a
+        cleanup to run after the commit, or None."""
+        return None
+
+
+class ManifestRecords(DirLedger):
+    """A named ledger of small per-wave records kept IN the manifest —
+    a drift-fit row, a high-water mark — so they commit with the wave's
+    state and need no file or Spark job. ``(records, row)`` is its
+    ``commit_all`` write; ``rows()`` reads the committed ones."""
+
+    def _entry(self, manifest: dict) -> dict:
+        led = super()._entry(manifest)
+        led.setdefault("rows", [])
+        return led
+
+    def _stage(self, manifest: dict, row) -> None:
+        self._entry(manifest)["rows"].append(list(row))
+
+    def rows(self) -> list[list]:
+        return self._entry(self._manifest())["rows"]
+
+
+class TransactionalKeyState(DirLedger):
+    """Exactly-once keyed state over immutable versioned bucket files."""
+
+    def __init__(
+        self,
+        path: str,
+        keys: Sequence[str],
+        n_buckets: int = 16,
+        retain_txns: int = 4,
+        ledger: str = "",
+    ):
+        """``retain_txns``: steady-state retention — every commit prunes
+        bucket versions that are BOTH shadowed (a newer committed version
+        exists) and older than the newest ``retain_txns`` transactions.
+        The grace window keeps a concurrent reader's already-resolved
+        paths alive for N more commits (readers resolve paths from the
+        manifest once, then scan); replay safety needs no history at all —
+        replays are skipped via the writers map before any state read.
+        0 disables auto-pruning (explicit ``vacuum()`` only).
+
+        ``ledger`` names the store within the directory ``path`` (an
+        address like ``path``; module docstring)."""
+        super().__init__(path, ledger)
+        self.keys = list(keys)
+        self.n_buckets = n_buckets
+        self.retain_txns = retain_txns
+        os.makedirs(self.dir, exist_ok=True)
+
+    def _entry(self, manifest: dict) -> dict:
+        led = super()._entry(manifest)
+        led.setdefault("txn", 0)
+        led.setdefault("buckets", {})
+        # The COMMITTED bucket count is authoritative: after a rebucket(),
+        # an instance constructed with the old count would otherwise hash
+        # keys into the wrong buckets — silent state corruption. Older
+        # manifests (pre-rescale feature) carry no count; the constructor
+        # value stands for those.
+        self.n_buckets = led.get("n_buckets", self.n_buckets)
+        # the keys are not adoptable like the count: other keys hash the
+        # same rows into other buckets. Manifests written before keys
+        # were recorded skip the check until their next commit.
+        if led.get("keys", self.keys) != self.keys:
+            raise ValueError(
+                f"keyed state at {self.dir} is bucketed on {led['keys']}; "
+                f"reattaching with keys {self.keys} would mis-route them"
+            )
+        led["n_buckets"], led["keys"] = self.n_buckets, self.keys
+        return led
+
     def _bucket(self) -> F.Column:
         keys = ", ".join(quote(k) for k in self.keys)
         return F.expr(f"CAST(pmod(xxhash64({keys}), {int(self.n_buckets)}) AS INT)")
 
-    def _bucket_paths(self, manifest: dict, buckets=None) -> list[str]:
+    def _bucket_paths(self, led: dict, buckets=None) -> list[str]:
         return [
-            f"{self.path}/t{v}/{BUCKET_COL}={b}"
-            for b, v in manifest["buckets"].items()
+            f"{self.dir}/t{v}/{BUCKET_COL}={b}"
+            for b, v in led["buckets"].items()
             if buckets is None or int(b) in buckets
         ]
 
-    def _read_buckets(self, spark: SparkSession, manifest: dict, buckets=None) -> DataFrame | None:
-        paths = self._bucket_paths(manifest, buckets)
+    def _read_buckets(self, spark: SparkSession, led: dict, buckets=None) -> DataFrame | None:
+        paths = self._bucket_paths(led, buckets)
         if not paths:
             return None
         # explicit leaf dirs: no partition discovery, no bucket column —
@@ -193,36 +316,50 @@ class TransactionalKeyState:
         # The committed schema skips the footer-inference job; manifests
         # written before it was recorded still read through inference.
         reader = spark.read
-        if "schema" in manifest:
-            reader = reader.schema(StructType.fromJson(manifest["schema"]))
+        if "schema" in led:
+            reader = reader.schema(StructType.fromJson(led["schema"]))
         return reader.parquet(*paths)
 
-    def _written_buckets(self, txn: int) -> set[int]:
-        """Buckets a txn's write produced (directory listing: metadata,
-        not a Spark job)."""
-        tdir = f"{self.path}/t{txn}"
+    def _write_buckets(self, df: DataFrame, txn: int) -> set[int]:
+        """Write ``df`` (with the bucket column) as txn ``txn``'s brand-new
+        immutable directory; the buckets it produced (directory listing:
+        metadata, not a Spark job)."""
+        tdir = f"{self.dir}/t{txn}"
+        df.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tdir)
         if not os.path.isdir(tdir):
             return set()
         return {
             int(d.split("=")[1]) for d in os.listdir(tdir) if d.startswith(f"{BUCKET_COL}=")
         }
 
-    def _check_columns(self, manifest: dict, cols: Sequence[str]) -> None:
+    def _check_columns(self, led: dict, cols: Sequence[str]) -> None:
         """Refuse a batch whose columns differ from the committed state's
         (from the first commit that records a schema on): unioning it in
         would null-fill (or drop) columns silently."""
-        if "schema" not in manifest:
+        if "schema" not in led:
             return
-        committed = StructType.fromJson(manifest["schema"]).names
+        committed = StructType.fromJson(led["schema"]).names
         missing = [c for c in committed if c not in cols]
         extra = [c for c in cols if c not in committed]
         if missing or extra:
             raise ValueError(
                 f"batch columns differ from the committed state schema at "
-                f"{self.path}: missing {missing}, unexpected {extra}"
+                f"{self.dir}: missing {missing}, unexpected {extra}"
             )
 
     # -- merges ------------------------------------------------------------
+    def stage_aggregate(self, partials: DataFrame, agg_cols: Sequence[F.Column]) -> tuple:
+        """``merge_aggregate``'s ``commit_all`` write, uncommitted."""
+        return (
+            self,
+            partials,
+            lambda base, cols: base.groupBy(*self.keys, BUCKET_COL)
+            .agg(*agg_cols)
+            .select(*cols, BUCKET_COL),
+            None,
+            True,
+        )
+
     def merge_aggregate(
         self,
         writer_id: str,
@@ -233,14 +370,24 @@ class TransactionalKeyState:
         """Fold pre-aggregated partials in, exactly once per (writer,
         batch). Returns False if this writer already committed
         ``batch_id`` (replay skipped)."""
-        return self._merge(
-            writer_id,
-            batch_id,
-            partials,
-            lambda base, cols: base.groupBy(*self.keys, BUCKET_COL)
-            .agg(*agg_cols)
-            .select(*cols, BUCKET_COL),
-            by_bucket=True,
+        return self._merge(writer_id, batch_id, self.stage_aggregate(partials, agg_cols))
+
+    def stage_keep_latest(
+        self,
+        batch: DataFrame,
+        order_col: str,
+        tiebreakers: Sequence[str] = (),
+        on_write=None,
+    ) -> tuple:
+        """``merge_keep_latest``'s ``commit_all`` write, uncommitted."""
+        return (
+            self,
+            batch,
+            lambda base, cols: dedup_latest(
+                base, [*self.keys, BUCKET_COL], order_col, tiebreakers
+            ),
+            on_write,
+            True,
         )
 
     def merge_keep_latest(
@@ -264,14 +411,7 @@ class TransactionalKeyState:
         a replay either is skipped or rewrites the same output. If either
         write fails, nothing is committed."""
         return self._merge(
-            writer_id,
-            batch_id,
-            batch,
-            lambda base, cols: dedup_latest(
-                base, [*self.keys, BUCKET_COL], order_col, tiebreakers
-            ),
-            on_write,
-            by_bucket=True,
+            writer_id, batch_id, self.stage_keep_latest(batch, order_col, tiebreakers, on_write)
         )
 
     def merge_changes(
@@ -291,15 +431,12 @@ class TransactionalKeyState:
         one batch resolves to the reinsert and vice versa. The state
         keeps ``op_col`` (the winning op); a bucket whose last key is
         deleted leaves the manifest."""
-        return self._merge(
-            writer_id,
-            batch_id,
-            changes,
-            lambda base, cols: dedup_latest(
-                base, [*self.keys, BUCKET_COL], order_col, tiebreakers
-            ).filter(F.col(op_col) != "D"),
-            by_bucket=True,
-        )
+
+        def combine(base, cols):
+            latest = dedup_latest(base, [*self.keys, BUCKET_COL], order_col, tiebreakers)
+            return latest.filter(F.col(op_col) != "D")
+
+        return self._merge(writer_id, batch_id, (self, changes, combine, None, True))
 
     def merge_transform(
         self, writer_id: str, batch_id: int, batch: DataFrame, combine
@@ -313,49 +450,33 @@ class TransactionalKeyState:
         transition must be deterministic: a crash before the manifest
         commit replays the batch against the old state and must
         reproduce the same result."""
-        return self._merge(writer_id, batch_id, batch, combine)
+        return self._merge(writer_id, batch_id, (self, batch, combine, None, False))
 
-    def _merge(
+    def _merge(self, writer_id: str, batch_id: int, write: tuple) -> bool:
+        """Exactly-once merge of one ``stage_*`` write: its own
+        one-write ``commit_all``. False on a replay."""
+        return self.commit_all([write], writer_id, batch_id) is not None
+
+    def _stage(
         self,
-        writer_id: str,
-        batch_id: int,
+        manifest: dict,
         batch: DataFrame,
         combine,
         on_write=None,
         by_bucket: bool = False,
     ) -> bool:
-        """Exactly-once merge of ``batch`` into the touched buckets.
-        ``combine(base, cols)`` maps old ∪ batch rows to the buckets' new
-        contents. With ``by_bucket`` it receives ``base`` with the bucket
-        column, already hash-clustered on it, and groups by keys plus
-        bucket, so the merge and the bucket-clustered write share one
-        shuffle; otherwise it sees plain rows and the write re-clusters."""
-        # ENFORCE the single-writer protocol rather than assuming it: two
-        # concurrent merges would both read manifest M and the second
-        # commit would silently drop the first's bucket pointers. An
-        # exclusive flock held across read-manifest..commit makes the
-        # overlap a loud error instead (ConcurrentWriteError), which a
-        # scheduler-level retry can handle.
-        with _writer_lock(self.path):
-            return self._merge_locked(writer_id, batch_id, batch, combine, on_write, by_bucket)
-
-    def _merge_locked(
-        self,
-        writer_id: str,
-        batch_id: int,
-        batch: DataFrame,
-        combine,
-        on_write,
-        by_bucket: bool,
-    ) -> bool:
-        manifest = self._manifest()
-        last = manifest["writers"].get(writer_id)
-        if last is not None and batch_id <= last:
-            return False  # replay of a committed batch: exactly-once skip
-        txn = manifest["txn"] + 1
+        """Merge ``batch`` into the touched buckets under a fresh txn and
+        point ``manifest`` at it (uncommitted). ``combine(base, cols)``
+        maps old ∪ batch rows to the buckets' new contents. With
+        ``by_bucket`` it receives ``base`` with the bucket column,
+        already hash-clustered on it, and groups by keys plus bucket, so
+        the merge and the bucket-clustered write share one shuffle;
+        otherwise it sees plain rows and the write re-clusters."""
+        led = self._entry(manifest)
+        txn = led["txn"] + 1
         spark = batch.sparkSession
         cols = batch.columns
-        self._check_columns(manifest, cols)
+        self._check_columns(led, cols)
         # the wave is read TWICE (touched-bucket discovery, then the
         # merge write; a third time by an ``on_write`` side output) —
         # persist it so the later passes read the cached
@@ -377,7 +498,7 @@ class TransactionalKeyState:
         try:
             tagged.write.mode("overwrite").format("noop").save()
             touched = sorted(int(b) for b in obs.get["b"])
-            old = self._read_buckets(spark, manifest, set(touched))
+            old = self._read_buckets(spark, led, set(touched))
             base = (
                 tagged
                 if old is None
@@ -403,15 +524,8 @@ class TransactionalKeyState:
                     .repartition(tasks, F.col(BUCKET_COL))
                 )
             schema = StructType([f for f in merged.schema.fields if f.name != BUCKET_COL])
-
-            def write_state() -> None:
-                # brand-new immutable directory; nothing existing is touched
-                merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(
-                    f"{self.path}/t{txn}"
-                )
-
             if on_write is None:
-                write_state()
+                written = self._write_buckets(merged, txn)
             else:
                 # the side output reads only the cached wave and immutable
                 # committed files, so its job runs beside the state write
@@ -420,35 +534,37 @@ class TransactionalKeyState:
                     side = pool.submit(
                         inheritable_thread_target(spark)(on_write), old, tagged.drop(BUCKET_COL)
                     )
-                    write_state()
+                    written = self._write_buckets(merged, txn)
                     side.result()
         finally:
             tagged.unpersist()
         # a touched bucket the combine left empty (a CDC delete of its
         # last key, a transition that drops its rows) has no directory
         # under t<txn>: it leaves the manifest, as in ``prune``
-        written = self._written_buckets(txn)
         for b in touched:
             if b in written:
-                manifest["buckets"][str(b)] = txn
+                led["buckets"][str(b)] = txn
             else:
-                manifest["buckets"].pop(str(b), None)
-        manifest["writers"][writer_id] = batch_id
-        manifest["txn"] = txn
-        manifest["schema"] = schema.jsonValue()
-        self._commit(manifest)
-        if self.retain_txns:
-            # steady-state retention: shadowed versions older than the
-            # grace window go now, so file count is bounded by
-            # O(buckets + retain_txns × touched-per-batch) regardless of
-            # how many batches ever committed
-            self.vacuum(keep_newer_than=txn - self.retain_txns)
+                led["buckets"].pop(str(b), None)
+        led["txn"] = txn
+        led["schema"] = schema.jsonValue()
         return True
+
+    def _settle(self, manifest: dict, *args):
+        return partial(self._retain, self._entry(manifest)["txn"])
+
+    def _retain(self, txn: int) -> None:
+        """Steady-state retention after committing ``txn``: shadowed
+        versions older than the grace window go now, so file count is
+        bounded by O(buckets + retain_txns × touched-per-batch)
+        regardless of how many batches ever committed."""
+        if self.retain_txns:
+            self.vacuum(keep_newer_than=txn - self.retain_txns)
 
     # -- reads & maintenance ----------------------------------------------
     def read(self, spark: SparkSession) -> DataFrame | None:
         """Current committed state (no bucket column), or None if empty."""
-        return self._read_buckets(spark, self._manifest())
+        return self._read_buckets(spark, self._entry(self._manifest()))
 
     def prune(self, spark: SparkSession, predicate: F.Column) -> int:
         """Transactionally DELETE state rows matching ``predicate`` (state
@@ -466,45 +582,39 @@ class TransactionalKeyState:
         STILL skipped (retention must not resurrect data through the
         at-least-once path)."""
         with _writer_lock(self.path):
-            return self._prune_locked(spark, predicate)
-
-    def _prune_locked(self, spark: SparkSession, predicate: F.Column) -> int:
-        manifest = self._manifest()
-        state = self._read_buckets(spark, manifest)
-        if state is None:
-            return 0
-        # NULL predicate rows are KEPT (a delete must be affirmative)
-        pred = F.coalesce(predicate.cast("boolean"), F.lit(False))
-        tagged = state.withColumn(BUCKET_COL, self._bucket())
-        per_bucket = (
-            tagged.groupBy(BUCKET_COL)
-            .agg(
-                F.sum(pred.cast("long")).alias("hits"),
-                F.count(F.lit(1)).alias("total"),
+            manifest = self._manifest()
+            led = self._entry(manifest)
+            state = self._read_buckets(spark, led)
+            if state is None:
+                return 0
+            # NULL predicate rows are KEPT (a delete must be affirmative)
+            pred = F.coalesce(predicate.cast("boolean"), F.lit(False))
+            tagged = state.withColumn(BUCKET_COL, self._bucket())
+            per_bucket = (
+                tagged.groupBy(BUCKET_COL)
+                .agg(
+                    F.sum(pred.cast("long")).alias("hits"),
+                    F.count(F.lit(1)).alias("total"),
+                )
+                .filter(F.col("hits") > 0)
+                .collect()
             )
-            .filter(F.col("hits") > 0)
-            .collect()
-        )
-        if not per_bucket:
-            return 0
-        touched = {int(r[BUCKET_COL]): (int(r["hits"]), int(r["total"])) for r in per_bucket}
-        emptied = {b for b, (h, t) in touched.items() if h == t}
-        survivors = sorted(set(touched) - emptied)
-        txn = manifest["txn"] + 1
-        if survivors:
-            kept = tagged.filter(F.col(BUCKET_COL).isin(survivors) & ~pred)
-            kept.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(
-                f"{self.path}/t{txn}"
-            )
-            for b in survivors:
-                manifest["buckets"][str(b)] = txn
-        for b in emptied:
-            manifest["buckets"].pop(str(b), None)
-        manifest["txn"] = txn
-        self._commit(manifest)
-        if self.retain_txns:
-            self.vacuum(keep_newer_than=txn - self.retain_txns)
-        return sum(h for h, _ in touched.values())
+            if not per_bucket:
+                return 0
+            touched = {int(r[BUCKET_COL]): (int(r["hits"]), int(r["total"])) for r in per_bucket}
+            emptied = {b for b, (h, t) in touched.items() if h == t}
+            survivors = sorted(set(touched) - emptied)
+            txn = led["txn"] + 1
+            if survivors:
+                self._write_buckets(tagged.filter(F.col(BUCKET_COL).isin(survivors) & ~pred), txn)
+                for b in survivors:
+                    led["buckets"][str(b)] = txn
+            for b in emptied:
+                led["buckets"].pop(str(b), None)
+            led["txn"] = txn
+            self._commit(manifest)
+            self._retain(txn)
+            return sum(h for h, _ in touched.values())
 
     def rebucket(self, spark: SparkSession, new_n_buckets: int) -> bool:
         """Savepoint-style state RESCALE (Flink's rescale-on-restore for
@@ -530,24 +640,21 @@ class TransactionalKeyState:
         a rare maintenance pass, same class as ``prune``."""
         with _writer_lock(self.path):
             manifest = self._manifest()
+            led = self._entry(manifest)
             if new_n_buckets == self.n_buckets:
                 return False
-            state = self._read_buckets(spark, manifest)
-            self.n_buckets = new_n_buckets
+            state = self._read_buckets(spark, led)
+            self.n_buckets = led["n_buckets"] = new_n_buckets
             if state is None:
                 # nothing stored yet: just commit the new count
                 self._commit(manifest)
                 return True
-            txn = manifest["txn"] + 1
-            tagged = state.withColumn(BUCKET_COL, self._bucket())
-            tagged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(
-                f"{self.path}/t{txn}"
-            )
-            manifest["buckets"] = {str(b): txn for b in self._written_buckets(txn)}
-            manifest["txn"] = txn
+            txn = led["txn"] + 1
+            written = self._write_buckets(state.withColumn(BUCKET_COL, self._bucket()), txn)
+            led["buckets"] = {str(b): txn for b in written}
+            led["txn"] = txn
             self._commit(manifest)
-            if self.retain_txns:
-                self.vacuum(keep_newer_than=txn - self.retain_txns)
+            self._retain(txn)
             return True
 
     def vacuum(self, keep_newer_than: int | None = None) -> int:
@@ -560,10 +667,10 @@ class TransactionalKeyState:
         concurrent readers mid-scan on paths they resolved from an older
         manifest. ``None`` (a full vacuum) spares nothing but the live
         set."""
-        manifest = self._manifest()
-        live = {(v, int(b)) for b, v in manifest["buckets"].items()}
+        led = self._entry(self._manifest())
+        live = {(v, int(b)) for b, v in led["buckets"].items()}
         removed = 0
-        for entry in os.listdir(self.path):
+        for entry in os.listdir(self.dir):
             if not entry.startswith("t"):
                 continue
             try:
@@ -572,7 +679,7 @@ class TransactionalKeyState:
                 continue
             if keep_newer_than is not None and txn > keep_newer_than:
                 continue
-            tdir = f"{self.path}/{entry}"
+            tdir = f"{self.dir}/{entry}"
             for bdir in os.listdir(tdir):
                 if not bdir.startswith(f"{BUCKET_COL}="):
                     continue
@@ -585,7 +692,7 @@ class TransactionalKeyState:
         return removed
 
 
-class AppendDeltaState:
+class AppendDeltaState(DirLedger):
     """Append-only delta ledger for ORDER-FREE mergeable aggregates
     (MIN/MAX/SUM/COUNT — anything where agg(a ∪ b) == agg(agg(a) ∪ b)).
 
@@ -615,24 +722,16 @@ class AppendDeltaState:
       any write — an at-least-once foreachBatch redelivery cannot
       double-count.
 
-    One directory is one transaction log: an instance is one named
-    ``ledger`` of it (``""``, the default, is the one-ledger store), and
-    ``commit_all`` appends to, upserts and prunes several ledgers of the
-    same directory in ONE manifest replace carrying one replay mark — a
-    wave that spans ledgers is committed whole or not at all.
+    An instance is one named ``ledger`` of its directory's one
+    transaction log (module docstring): ``(ledger, drop, add,
+    agg_cols)`` is its ``commit_all`` write, so a wave appends to,
+    upserts and prunes several ledgers — and merges TransactionalKeyState
+    buckets — in ONE manifest replace carrying one replay mark.
 
-    Layout::
-
-        path/[<ledger>/]d<seq>/*.parquet   immutable, one dir per delta
-        path/[<ledger>/]x<seq>/*.parquet   immutable DELETION VECTORS
-                                     (tombstone key tuples + __upto seq
-                                     watermark) — committed by ``upsert``,
-                                     applied by readers, settled+cleared
-                                     at compaction
-        path/manifest.json           {"seq": n, "writers": {"w": batch},
-                                      "deltas": [...], "tombs": [...]}
-                                     one-ledger store; a named ledger's
-                                     lists sit in "ledgers": {name: {...}}
+    Layout (module docstring): one immutable ``d<seq>/`` dir per delta,
+    and ``x<seq>/`` DELETION VECTORS (tombstone key tuples + ``__upto``
+    seq watermark) — committed by ``upsert``, applied by readers,
+    settled and cleared at compaction.
 
     On a cluster this is the LSM shape every table format implements
     natively — append = commit a new file set, ``upsert`` = the
@@ -658,52 +757,19 @@ class AppendDeltaState:
         passes ``[["id_a"], ["id_b"]]`` against single-column doc
         tombstones; a doc-keyed ledger passes ``[["doc"]]``. None
         (default) disables ``upsert``; every other verb is unchanged."""
-        self.path = path
-        self.ledger = ledger
-        self.dir = f"{path}/{ledger}" if ledger else path
+        super().__init__(path, ledger)
         self.keys = list(keys)
         self.compact_every = compact_every
         self.tomb_match = [list(g) for g in tomb_match] if tomb_match else None
         os.makedirs(self.dir, exist_ok=True)
 
-    def _manifest(self) -> dict:
-        p = f"{self.path}/manifest.json"
-        if not os.path.exists(p):
-            return {"seq": 0, "writers": {}}
-        with open(p) as fh:
-            return json.load(fh)
-
     def _entry(self, manifest: dict) -> dict:
         """This ledger's {"deltas", "tombs"} lists in ``manifest``."""
-        led = manifest
-        if self.ledger:
-            led = manifest.setdefault("ledgers", {}).setdefault(self.ledger, {})
+        manifest.setdefault("seq", 0)
+        led = super()._entry(manifest)
         led.setdefault("deltas", [])
         led.setdefault("tombs", [])
         return led
-
-    def _commit(self, manifest: dict) -> None:
-        tmp = f"{self.path}/manifest.json.tmp"
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(tmp, f"{self.path}/manifest.json")  # the commit point
-
-    def committed(self, writer_id: str, batch_id: int) -> bool:
-        """True when this (writer, batch) pair is already committed —
-        the replay probe a fold runs BEFORE its first write, so a
-        redelivered wave skips the whole ingest (every side effect, not
-        just the ledger writes).
-
-        Batch-id contract: ids must be MONOTONICALLY NON-DECREASING per
-        writer — exactly what Structured Streaming's foreachBatch
-        delivers (a restart re-delivers the last uncommitted batch, it
-        never jumps backwards with NEW data). The probe stores only the
-        per-writer high-water mark, so a genuinely out-of-order NEW
-        batch (batch 0 first delivered after batch 2 committed) would
-        be indistinguishable from a replay and skipped; callers outside
-        foreachBatch must sequence their own batch ids."""
-        last = self._manifest()["writers"].get(writer_id)
-        return last is not None and batch_id <= last
 
     def append(
         self,
@@ -784,59 +850,38 @@ class AppendDeltaState:
             raise ValueError("upsert needs tomb_match declared at construction")
         return self.commit_all([(self, drop, add, agg_cols)], writer_id, batch_id) is not None
 
-    @staticmethod
-    def commit_all(writes, writer_id: str | None = None, batch_id: int | None = None):
-        """Commit ``writes`` — ``(ledger, drop, add, agg_cols)`` tuples
-        over ledgers of ONE directory — in one manifest replace with one
-        replay mark. ``drop`` names the rows a write removes: None (an
-        ``append``), key tuples (a DataFrame: an ``upsert``'s deletion
-        vector) or a predicate (a Column: a ``prune``). Every delta lands
-        in a fresh dir before the replace, so a crash anywhere leaves the
-        committed manifest untouched. A ledger whose deltas or tombstones
-        reach ``compact_every`` is folded by its ``agg_cols`` inside the
-        same commit. Returns the rows each write pruned (0 for the
-        others), or None when ``(writer_id, batch_id)`` was already
-        committed."""
-        first = writes[0][0]
-        if any(st.path != first.path for st, *_ in writes):
-            raise ValueError("commit_all spans ledgers of one directory only")
-        mark = writer_id is not None and batch_id is not None
-        with _writer_lock(first.path):
-            manifest = first._manifest()
-            last = manifest["writers"].get(writer_id)
-            if mark and last is not None and batch_id <= last:
-                return None
-            # taken before any write: tombstones kill rows committed
-            # before this commit, never a delta it writes (a prune's too)
-            upto = manifest["seq"]
-            removed = []
-            # a prune or a compaction shadows live deltas: vacuum after
-            shadowed = False
-            for st, drop, add, _ in writes:
-                led = st._entry(manifest)
-                pruned = 0
-                if isinstance(drop, Column):
-                    pruned = st._prune_staged(SparkSession.active(), manifest, drop)
-                    shadowed = True
-                elif drop is not None and led["deltas"]:
-                    # a tombstone against an EMPTY ledger kills nothing
-                    drop = drop.distinct().withColumn("__upto", F.lit(int(upto)))
-                    led["tombs"].append(st._write(manifest, drop, "x"))
-                if add is not None:
-                    led["deltas"].append(st._write(manifest, add, "d"))
-                removed.append(pruned)
-            for st, _, _, agg_cols in writes:
-                led = st._entry(manifest)
-                live = max(len(led["deltas"]), len(led["tombs"]))
-                if agg_cols is not None and live >= st.compact_every:
-                    shadowed |= st._fold(SparkSession.active(), manifest, agg_cols)
-            if mark:
-                manifest["writers"][writer_id] = batch_id
-            if mark or manifest["seq"] != upto:
-                first._commit(manifest)
-            if shadowed:
-                first.vacuum()
-            return removed
+    def _stage(self, manifest: dict, drop, add, agg_cols) -> int:
+        """Stage one write: ``drop`` names the rows it removes — None
+        (an ``append``), key tuples (a DataFrame: an ``upsert``'s
+        deletion vector) or a predicate (a Column: a ``prune``) — and
+        ``add`` lands as a fresh delta. Returns the rows a prune
+        removed (0 for the others)."""
+        led = self._entry(manifest)
+        pruned = 0
+        if isinstance(drop, Column):
+            pruned = self._prune_staged(SparkSession.active(), manifest, drop)
+        elif drop is not None and led["deltas"]:
+            # a tombstone kills the rows the ledger holds before this
+            # write, never the delta it adds (against an EMPTY ledger it
+            # kills nothing)
+            drop = drop.distinct().withColumn("__upto", F.lit(int(manifest["seq"])))
+            led["tombs"].append(self._write(manifest, drop, "x"))
+        if add is not None:
+            led["deltas"].append(self._write(manifest, add, "d"))
+        return pruned
+
+    def _settle(self, manifest: dict, drop, add, agg_cols):
+        """Fold the ledger by ``agg_cols`` inside the same commit once
+        its deltas or tombstones reach ``compact_every``; a fold or a
+        prune shadows live deltas, so the ledger is vacuumed after."""
+        led = self._entry(manifest)
+        live = max(len(led["deltas"]), len(led["tombs"]))
+        folded = (
+            agg_cols is not None
+            and live >= self.compact_every
+            and self._fold(SparkSession.active(), manifest, agg_cols)
+        )
+        return self.vacuum if folded or isinstance(drop, Column) else None
 
     def _write(self, manifest: dict, df: DataFrame, kind: str) -> int:
         """Write ``df`` as this ledger's next ``d``/``x`` dir; its seq."""
@@ -955,18 +1000,14 @@ class AppendDeltaState:
         return [v for f in files for v in pq.read_table(f, columns=[col])[col].to_pylist()]
 
     def vacuum(self) -> int:
-        """Delete every ledger's delta/tombstone dirs the manifest no
+        """Delete this ledger's delta/tombstone dirs the manifest no
         longer references (shadowed by compaction, or orphans of crashed
         commits)."""
-        manifest = self._manifest()
+        led = self._entry(self._manifest())
+        live = {f"d{s}" for s in led["deltas"]} | {f"x{s}" for s in led["tombs"]}
         removed = 0
-        for name, led in {"": manifest, **manifest.get("ledgers", {})}.items():
-            d = f"{self.path}/{name}" if name else self.path
-            live = {f"d{s}" for s in led.get("deltas", [])} | {
-                f"x{s}" for s in led.get("tombs", [])
-            }
-            for entry in os.listdir(d) if os.path.isdir(d) else ():
-                if entry[:1] in ("d", "x") and entry[1:].isdigit() and entry not in live:
-                    shutil.rmtree(f"{d}/{entry}", ignore_errors=True)
-                    removed += 1
+        for entry in os.listdir(self.dir) if os.path.isdir(self.dir) else ():
+            if entry[:1] in ("d", "x") and entry[1:].isdigit() and entry not in live:
+                shutil.rmtree(f"{self.dir}/{entry}", ignore_errors=True)
+                removed += 1
         return removed

@@ -26,13 +26,31 @@ def sf_dir():
 
 @pytest.fixture
 def crash_at(monkeypatch):
-    """``crash_at(point)`` makes the next ``AppendDeltaState`` commit die
-    at ``point``: ``"manifest"`` (its one manifest replace) or
-    ``"second_delta"`` (the second delta dir it writes).
-    ``monkeypatch.undo()`` disarms it."""
+    """``crash_at(point)`` makes the next state commit die at ``point``:
+    ``"manifest"`` (its one manifest replace), ``"second_delta"`` (the
+    second ``AppendDeltaState`` delta dir it writes), ``"bucket_write"``
+    / ``"second_bucket_write"`` (the first / second
+    ``TransactionalKeyState`` bucket write) or ``"record"`` (the first
+    ``ManifestRecords`` row it stages). ``monkeypatch.undo()`` disarms
+    it."""
     import os
 
-    from flink_playground_spark.streaming.txn_state import AppendDeltaState
+    from flink_playground_spark.streaming.txn_state import (
+        AppendDeltaState,
+        ManifestRecords,
+        TransactionalKeyState,
+    )
+
+    def fail_nth(cls, name: str, n: int, what: str) -> None:
+        real, calls = getattr(cls, name), []
+
+        def dies(self, *args):
+            calls.append(name)
+            if len(calls) == n:
+                raise RuntimeError(f"simulated crash at {what}")
+            return real(self, *args)
+
+        monkeypatch.setattr(cls, name, dies)
 
     def arm(point: str) -> None:
         if point == "manifest":
@@ -44,17 +62,14 @@ def crash_at(monkeypatch):
                 return replace(src, dst)
 
             monkeypatch.setattr(os, "replace", dies_at_replace)
-            return
-        assert point == "second_delta", point
-        write, calls = AppendDeltaState._write, []
-
-        def dies_at_second(self, manifest, df, kind):
-            calls.append(kind)
-            if len(calls) == 2:
-                raise RuntimeError("simulated crash at the second delta write")
-            return write(self, manifest, df, kind)
-
-        monkeypatch.setattr(AppendDeltaState, "_write", dies_at_second)
+        elif point == "second_delta":
+            fail_nth(AppendDeltaState, "_write", 2, "the second delta write")
+        elif point in ("bucket_write", "second_bucket_write"):
+            n = 1 if point == "bucket_write" else 2
+            fail_nth(TransactionalKeyState, "_write_buckets", n, f"bucket write {n}")
+        else:
+            assert point == "record", point
+            fail_nth(ManifestRecords, "_stage", 1, "a record row")
 
     return arm
 

@@ -1,0 +1,244 @@
+"""One commit per wave for the multi-store folds on TransactionalKeyState
+(streaming/txn_state.py): every store a wave touches — and its drift row
+or high-water mark — is a ledger of ONE state directory, so a wave lands
+with one ``manifest.json`` replace, a crash anywhere inside that commit
+leaves the manifest byte-identical, and redelivery converges to the
+uncrashed run."""
+
+from __future__ import annotations
+
+import datetime as dt
+import os
+from dataclasses import dataclass
+from typing import Callable
+
+import pytest
+from pyspark.sql import functions as F
+
+from flink_playground_spark.sources.tables import load_table
+
+BASE = dt.datetime(2024, 5, 1)
+TERMS = ["vector", "stream"]
+
+
+@dataclass
+class Fold:
+    make: Callable  # path -> fold
+    waves: Callable  # (spark, sf_dir) -> list of wave DataFrames
+    ingest: Callable  # (fold, wave, wave number) -> bool | None
+    outcome: Callable  # (spark, sf_dir, fold) -> (exact, approximate floats)
+    crash_wave: int  # the wave whose commit the crash hits
+    replayable: bool  # ingest takes the wave number as its batch id
+
+
+def _docs(spark, sf):
+    docs = load_table(spark, sf, "documents").filter(F.col("doc_id") < 120)
+    return [docs.filter(F.col("doc_id") % 2 == w) for w in range(2)]
+
+
+def _vectors(spark, sf):
+    rows = load_table(spark, sf, "embeddings")
+    return [rows.filter(F.col("vec_id") % 2 == w) for w in range(2)]
+
+
+def _late_waves(spark, sf):
+    return [
+        spark.createDataFrame(
+            [(i, BASE + dt.timedelta(minutes=m), k) for i, m, k in rows],
+            "event_id long, ts timestamp_ntz, k string",
+        )
+        for rows in (
+            [(1, 5, "a"), (2, 70, "a")],
+            [(3, 200, "a"), (4, 15, "a")],
+            [(5, 100, "b"), (6, 250, "a")],
+        )
+    ]
+
+
+def _search(path):
+    from flink_playground_spark.streaming.search_index import StreamingSearchIndex
+
+    return StreamingSearchIndex(path, "doc_id", "text")
+
+
+def _lm(path):
+    from flink_playground_spark.streaming.lm import StreamingBigramLM
+
+    return StreamingBigramLM(path)
+
+
+def _drift(path):
+    from flink_playground_spark.streaming.drift import StreamingDriftMonitor
+
+    return StreamingDriftMonitor(path)
+
+
+def _ivf(path):
+    from flink_playground_spark.streaming.ann_index import StreamingIVFIndex
+
+    return StreamingIVFIndex(path, n_centroids=8, kmeans_iters=1)
+
+
+def _pq(path):
+    from flink_playground_spark.streaming.pq_index import StreamingPQIndex
+
+    return StreamingPQIndex(path)
+
+
+def _late(path):
+    from flink_playground_spark.streaming.late_data import LateDataWindowCounts
+
+    return LateDataWindowCounts(path, keys=("k",), window="1 hour", delay_s=0)
+
+
+def _drift_rows(spark, idx, state):
+    report = idx.drift_report(spark).select("wave", "phase", "n", idx.drift.metric)
+    drift = sorted(tuple(r) for r in report.collect())
+    cells = sorted(tuple(r) for r in getattr(idx, state).read(spark).collect())
+    return (cells, [r[:3] for r in drift]), [r[3] for r in drift]
+
+
+FOLDS = {
+    "search": Fold(
+        _search,
+        _docs,
+        lambda idx, w, i: idx.ingest(w, i),
+        lambda spark, sf, idx: (sorted(tuple(r) for r in idx.query(spark, TERMS, k=10).collect()), []),
+        1,
+        True,
+    ),
+    "lm": Fold(
+        _lm,
+        _docs,
+        lambda idx, w, i: idx.ingest(w, i, "doc_id", "text"),
+        lambda spark, sf, idx: (
+            sorted(tuple(r) for r in idx.score(_docs(spark, sf)[0], "doc_id", "text").collect()),
+            [],
+        ),
+        1,
+        True,
+    ),
+    "drift": Fold(
+        _drift,
+        lambda spark, sf: [
+            load_table(spark, sf, "events").filter(F.col("event_id") % 3 == w).select("value")
+            for w in range(3)
+        ],
+        lambda idx, w, i: idx.ingest(w, i),
+        lambda spark, sf, idx: (sorted(tuple(r) for r in idx.psi(spark).collect()), []),
+        1,
+        True,
+    ),
+    # the first wave trains the geometry: a crash in its commit must
+    # leave the redelivered wave recorded as "train"
+    "ivf": Fold(
+        _ivf, _vectors, lambda idx, w, i: idx.ingest(w), lambda s, sf, i: _drift_rows(s, i, "cells"), 0, False
+    ),
+    "pq": Fold(
+        _pq, _vectors, lambda idx, w, i: idx.ingest(w), lambda s, sf, i: _drift_rows(s, i, "codes"), 0, False
+    ),
+    "late": Fold(
+        _late,
+        _late_waves,
+        lambda idx, w, i: idx.apply_batch(w, i),
+        lambda spark, sf, idx: (
+            (
+                sorted(tuple(r) for r in idx.read_counts(spark).collect()),
+                sorted(tuple(r) for r in idx.read_side(spark).collect()),
+            ),
+            [],
+        ),
+        1,
+        True,
+    ),
+}
+POINTS = {
+    "search": ["second_bucket_write", "manifest"],
+    "lm": ["second_bucket_write", "manifest"],
+    "drift": ["bucket_write", "manifest"],
+    "ivf": ["bucket_write", "record", "manifest"],
+    "pq": ["bucket_write", "record", "manifest"],
+    "late": ["bucket_write", "record", "manifest"],
+}
+
+
+@pytest.fixture(scope="module")
+def uncrashed(spark, sf_dir, tmp_path_factory):
+    """Each fold's outcome after all its waves, computed once."""
+    done = {}
+
+    def run(name):
+        if name not in done:
+            fold = FOLDS[name]
+            idx = fold.make(str(tmp_path_factory.mktemp(f"clean_{name}")))
+            for i, wave in enumerate(fold.waves(spark, sf_dir)):
+                fold.ingest(idx, wave, i)
+            done[name] = fold.outcome(spark, sf_dir, idx)
+        return done[name]
+
+    return run
+
+
+def _count_replaces(monkeypatch) -> list:
+    real, seen = os.replace, []
+
+    def counting(src, dst):
+        if str(dst).endswith("/manifest.json"):
+            seen.append(dst)
+        return real(src, dst)
+
+    monkeypatch.setattr(os, "replace", counting)
+    return seen
+
+
+@pytest.mark.parametrize(
+    "name,point", [(name, point) for name, points in POINTS.items() for point in points]
+)
+def test_crash_inside_one_commit_redelivers_cleanly(
+    spark, sf_dir, tmp_path, crash_at, monkeypatch, uncrashed, name, point
+):
+    """A fault inside a wave's one commit — at a TransactionalKeyState
+    bucket write (the second store's, where a wave writes two), at the
+    drift row or high-water mark, or at the manifest replace — leaves
+    ``manifest.json`` byte-identical. A restarted fold re-ingests the
+    wave and the rest with exactly one manifest replace each, a
+    replayed wave performs none, and the outcome equals the uncrashed
+    run's."""
+    fold = FOLDS[name]
+    waves = fold.waves(spark, sf_dir)
+    k = fold.crash_wave
+    idx = fold.make(str(tmp_path))
+    for i in range(k):
+        fold.ingest(idx, waves[i], i)
+    manifest = tmp_path / "manifest.json"
+    before = manifest.read_bytes() if manifest.exists() else None
+
+    crash_at(point)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        fold.ingest(idx, waves[k], k)
+    monkeypatch.undo()
+    assert (manifest.read_bytes() if manifest.exists() else None) == before
+
+    idx = fold.make(str(tmp_path))  # the restarted process reattaches
+    replaces = _count_replaces(monkeypatch)
+    for i in range(k, len(waves)):
+        replaces.clear()
+        fold.ingest(idx, waves[i], i)
+        assert len(replaces) == 1, (i, replaces)
+    if fold.replayable:
+        replaces.clear()
+        assert not fold.ingest(idx, waves[-1], len(waves) - 1)
+        assert replaces == []
+    monkeypatch.undo()
+
+    (got, got_f), (want, want_f) = fold.outcome(spark, sf_dir, idx), uncrashed(name)
+    assert got == want
+    assert got_f == pytest.approx(want_f, rel=1e-12)
+    if name in ("ivf", "pq"):
+        assert got[1][0] == (0, "train", 250)
+    if name == "search":
+        from flink_playground_spark.functions.tfidf import bm25_topk
+
+        docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 120)
+        batch = bm25_topk(docs, "doc_id", "text", TERMS, k=10).collect()
+        assert got == sorted(tuple(r) for r in batch)

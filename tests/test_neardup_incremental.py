@@ -253,46 +253,6 @@ def test_streaming_ivf_drift_detection_and_retrain(spark, tmp_path):
     )
 
 
-def test_search_index_crash_between_stores_resyncs(spark, sf_dir, tmp_path):
-    """Crash between the postings and doclen commits: auto-id mode
-    REFUSES to run while the stores disagree (guessing either id drops
-    or double-counts data depending on which wave the caller feeds);
-    the error names the lagging id, re-ingesting the in-flight wave
-    under it makes postings skip and doclen catch up, and the final
-    index equals the uninterrupted run."""
-    from pyspark.sql import functions as F
-
-    from flink_playground_spark.functions.tfidf import bm25_topk
-    from flink_playground_spark.sources.tables import load_table
-    from flink_playground_spark.streaming.search_index import StreamingSearchIndex
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 120)
-    waves = [docs.filter(F.col("doc_id") % 2 == w) for w in range(2)]
-
-    idx = StreamingSearchIndex(str(tmp_path / "cidx"), "doc_id", "text")
-    assert idx.ingest(waves[0]) is True
-    # simulate the crash: wave 1's postings commit landed, doclen's didn't
-    from flink_playground_spark.functions.tfidf import whitespace_tokens
-
-    toks = whitespace_tokens(waves[1], "doc_id", "text")
-    tf = toks.groupBy("term", "doc_id").agg(F.count(F.lit(1)).cast("long").alias("tf"))
-    assert idx.postings.merge_aggregate(
-        idx.writer_id, 1, tf, [F.sum("tf").cast("long").alias("tf")]
-    )
-    # auto-id mode refuses while desynced, naming the resync id
-    with pytest.raises(RuntimeError, match="batch_id=1"):
-        idx.ingest(waves[1])
-    # recovery per the error: same wave under the lagging id — postings
-    # skips its committed batch, doclen catches up
-    assert idx.ingest(waves[1], batch_id=1) is True
-    # resynced: auto mode works again, and an explicit replay skips both
-    assert idx.ingest(waves[1], batch_id=1) is False
-
-    got = [tuple(r) for r in idx.query(spark, ["vector", "stream"], k=10).collect()]
-    want = [tuple(r) for r in bm25_topk(docs, "doc_id", "text", ["vector", "stream"], k=10).collect()]
-    assert sorted(got) == sorted(want)
-
-
 def test_ivf_drift_detected_with_perfect_baseline(spark, tmp_path):
     """A geometry that fits its training wave EXACTLY (distinct vectors
     <= n_centroids, so each is its own centroid: mean_drift 0.0) must
@@ -475,12 +435,12 @@ def test_streaming_pq_index_matches_frozen_book_batch(spark, tmp_path):
 
 @pytest.mark.parametrize("family", ["decontam", "ivf", "pq"])
 def test_crash_after_state_commit_reingests_once(spark, tmp_path, family):
-    """A fault on a non-first wave between the state commit and the
-    drift-log append (the decontaminator keeps no drift log: there the
-    fault is inside the manifest commit), then a restarted index
-    re-ingests the same wave: state rows, drift-log rows and the state's
-    committed txn count equal an uninterrupted run's — the committed
-    merge is skipped, not folded twice."""
+    """A fault on a non-first wave inside its commit — after the state's
+    bucket write, at the drift row staged beside it (the decontaminator
+    keeps no drift log: there the fault is at the manifest commit) —
+    then a restarted index re-ingests the same wave: state rows,
+    drift-log rows and the state's committed txn count equal an
+    uninterrupted run's — the merge lands once, not twice."""
     from pyspark.sql import functions as F
 
     from flink_playground_spark.streaming.ann_index import DriftLog, StreamingIVFIndex
@@ -507,13 +467,13 @@ def test_crash_after_state_commit_reingests_once(spark, tmp_path, family):
             state = "cells"
         else:
             make, state = StreamingPQIndex, "codes"
-        ingest, fault = "ingest", (DriftLog, "append")
+        ingest, fault = "ingest", (DriftLog, "_stage")
     waves = [rows.filter(F.col(key) % 3 == w) for w in range(3)]
 
     def outcome(idx):
         st = getattr(idx, state)
-        drift = [] if family == "decontam" else spark.read.parquet(idx.drift.path).collect()
-        return sorted(st.read(spark).collect()), st._manifest()["txn"], sorted(drift)
+        drift = [] if family == "decontam" else idx.drift_report(spark).collect()
+        return sorted(st.read(spark).collect()), st._entry(st._manifest())["txn"], sorted(drift)
 
     clean = make(str(tmp_path / "clean"))
     for wave in waves:
@@ -571,7 +531,7 @@ def test_crash_before_first_commit_retrains_geometry(spark, tmp_path, family):
         make, state = StreamingPQIndex, "codes"
 
     def outcome(idx):
-        drift = sorted(spark.read.parquet(idx.drift.path).collect())
+        drift = sorted(idx.drift_report(spark).collect())
         return sorted(getattr(idx, state).read(spark).collect()), [r[:3] for r in drift]
 
     clean = make(str(tmp_path / "clean"))
