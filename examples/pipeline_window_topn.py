@@ -7,7 +7,8 @@ counts into transactional state exactly once (a redelivered wave is a
 visible no-op), the current top-3 per hour window is ranked from state
 alone at any moment, and ``expire`` transactionally drops windows past
 the retention horizon so state tracks the live horizon, not stream
-history.
+history. Each wave appends its partial counts as one delta; ``expire``
+reports the partial-count rows it removed.
 
 Run: ``python examples/pipeline_window_topn.py``
 """
@@ -51,7 +52,7 @@ def main() -> None:
     removed = op.expire(spark, horizon)
     live = op.topn(spark, 3)
     print(
-        f"retention at {horizon}: {removed} state rows dropped, "
+        f"retention at {horizon}: {removed} partial-count rows dropped, "
         f"{live.select('window_start').distinct().count()} windows live"
     )
     live.orderBy("window_start", "rn").show(9, truncate=False)

@@ -5992,11 +5992,11 @@ def streaming_window_topn(spark, sf_dir):
     """Flink SQL Window Top-N (window TVF + per-window ROW_NUMBER, the
     documented companion of WindowsProctimeAggJob.java:65-81's window
     aggregations) maintained INCREMENTALLY: events replayed in three
-    deterministic waves fold per-(window, user) partial counts through
-    transactional state (SUM is associative; the replay skip makes the
-    fold exactly-once), then the top-3 users per hour window are ranked
-    from state alone — rank is not distributive, so it is evaluated on
-    the merged counts, never on per-wave partials
+    deterministic waves append per-(window, user) partial counts to
+    transactional delta state (SUM is associative; the replay skip makes
+    the fold exactly-once), then the top-3 users per hour window are
+    ranked from state alone — rank is not distributive, so it is
+    evaluated on the folded counts, never on per-wave partials
     (streaming/window_topn.py)."""
 
     from flink_playground_spark.streaming.window_topn import StreamingWindowTopN

@@ -72,7 +72,10 @@ def get_spark(app_name: str = "flink-playground-spark", cpus: int | str | None =
     """Build (or fetch) the engine SparkSession.
 
     ``cpus`` controls local parallelism (reference: ``setParallelism``,
-    ``WithStateTtlJob.java:40-41``); default ``local[*]``.
+    ``WithStateTtlJob.java:40-41``); default ``local[*]``. Ships this
+    package to the executors, as ``tune`` does for a session we don't
+    own, so Python workers import engine modules whatever the driver's
+    working directory.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = SparkSession.builder.master(f"local[{cpus}]").appName(app_name)
@@ -80,6 +83,7 @@ def get_spark(app_name: str = "flink-playground-spark", cpus: int | str | None =
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _ship_package(spark)
     return spark
 
 
@@ -88,9 +92,10 @@ def tune(spark: SparkSession) -> SparkSession:
 
     Safe on sessions we don't own; ignores conf keys the running Spark
     version refuses to set at runtime. Also ships this package to the
-    executors so Python-UDF closures that reference engine modules
-    resolve regardless of the driver's working directory (on a real
-    cluster this is the --py-files equivalent).
+    executors (once per SparkContext; ``get_spark`` already has) so
+    Python-UDF closures that reference engine modules resolve regardless
+    of the driver's working directory (on a real cluster this is the
+    --py-files equivalent).
     """
     for k, v in RUNTIME_CONF.items():
         try:

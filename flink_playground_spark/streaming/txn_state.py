@@ -42,12 +42,18 @@ Layout::
                                    other keys cannot mis-route them;
                                    schema = the committed state columns,
                                    so reads skip parquet schema inference)
-    AppendDeltaState fields:       {"deltas": [...], "tombs": [...]}
+    AppendDeltaState fields:       {"deltas": [...], "tombs": [...],
+                                    "schema": {<StructType JSON>}}
                                    plus the directory's "seq" counter
+                                   (schema = the committed data columns;
+                                   tombstone dirs keep their own)
     ManifestRecords fields:        {"rows": [[...], ...]}
 
 A one-ledger TransactionalKeyState directory is exactly the store's
 historical layout (fields at the top level), so it reattaches unchanged.
+A ledger is one store's for good: opening it as another store (its
+manifest entry holds the other store's fields) raises a ``ValueError``
+naming the path, instead of reading the other store's state as empty.
 
 Batch ids are only monotonic WITHIN one checkpointed streaming query —
 a different query (or a restarted one with a fresh checkpoint) starts
@@ -73,7 +79,8 @@ Commit protocol for writer ``w``, batch ``b``:
 
 A batch whose columns differ from a ledger's committed schema is refused
 with a ``ValueError`` before anything is written: the store never widens
-or null-fills its schema silently.
+or null-fills its schema silently. Reads use the committed schema, so
+they submit no parquet footer-inference job.
 
 On a cluster the same protocol works on any store with atomic
 single-object replace (every object store has PUT) — it is the
@@ -141,6 +148,9 @@ class DirLedger:
     Subclasses keep their fields in ``_entry(manifest)`` and stage
     ``commit_all`` writes in ``_stage``."""
 
+    # the manifest-entry keys that mark a ledger as this store's
+    fields: tuple[str, ...] = ()
+
     def __init__(self, path: str, ledger: str = ""):
         self.path = path
         self.ledger = ledger
@@ -156,10 +166,43 @@ class DirLedger:
 
     def _entry(self, manifest: dict) -> dict:
         """This ledger's field dict in ``manifest``: the manifest itself
-        for the ``""`` ledger, else its ``"ledgers"`` entry."""
-        if not self.ledger:
-            return manifest
-        return manifest.setdefault("ledgers", {}).setdefault(self.ledger, {})
+        for the ``""`` ledger, else its ``"ledgers"`` entry. Raises when
+        the entry is another store's: read as this store's, it would
+        look empty while its surviving replay mark skips new waves."""
+        led = manifest
+        if self.ledger:
+            led = manifest.setdefault("ledgers", {}).setdefault(self.ledger, {})
+        for store in (TransactionalKeyState, AppendDeltaState, ManifestRecords):
+            if not isinstance(self, store) and any(f in led for f in store.fields):
+                raise ValueError(
+                    f"ledger at {self.dir} holds {store.__name__} state; "
+                    f"it cannot be opened as {type(self).__name__}"
+                )
+        return led
+
+    def _check_columns(self, led: dict, cols: Sequence[str]) -> None:
+        """Refuse a batch whose columns differ from the committed state's
+        (from the first commit that records a schema on): unioning it in
+        would null-fill (or drop) columns silently."""
+        if "schema" not in led:
+            return
+        committed = StructType.fromJson(led["schema"]).names
+        missing = [c for c in committed if c not in cols]
+        extra = [c for c in cols if c not in committed]
+        if missing or extra:
+            raise ValueError(
+                f"batch columns differ from the committed state schema at "
+                f"{self.dir}: missing {missing}, unexpected {extra}"
+            )
+
+    @staticmethod
+    def _reader(spark: SparkSession, led: dict):
+        """``spark.read`` with the ledger's committed schema, which skips
+        the parquet footer-inference job; manifests written before the
+        schema was recorded still read through inference."""
+        if "schema" not in led:
+            return spark.read
+        return spark.read.schema(StructType.fromJson(led["schema"]))
 
     def _commit(self, manifest: dict) -> None:
         tmp = f"{self.path}/manifest.json.tmp"
@@ -235,6 +278,8 @@ class ManifestRecords(DirLedger):
     state and need no file or Spark job. ``(records, row)`` is its
     ``commit_all`` write; ``rows()`` reads the committed ones."""
 
+    fields = ("rows",)
+
     def _entry(self, manifest: dict) -> dict:
         led = super()._entry(manifest)
         led.setdefault("rows", [])
@@ -249,6 +294,8 @@ class ManifestRecords(DirLedger):
 
 class TransactionalKeyState(DirLedger):
     """Exactly-once keyed state over immutable versioned bucket files."""
+
+    fields = ("txn", "buckets")
 
     def __init__(
         self,
@@ -312,13 +359,8 @@ class TransactionalKeyState(DirLedger):
         if not paths:
             return None
         # explicit leaf dirs: no partition discovery, no bucket column —
-        # and only COMMITTED files are reachable, orphans are invisible.
-        # The committed schema skips the footer-inference job; manifests
-        # written before it was recorded still read through inference.
-        reader = spark.read
-        if "schema" in led:
-            reader = reader.schema(StructType.fromJson(led["schema"]))
-        return reader.parquet(*paths)
+        # and only COMMITTED files are reachable, orphans are invisible
+        return self._reader(spark, led).parquet(*paths)
 
     def _write_buckets(self, df: DataFrame, txn: int) -> set[int]:
         """Write ``df`` (with the bucket column) as txn ``txn``'s brand-new
@@ -331,21 +373,6 @@ class TransactionalKeyState(DirLedger):
         return {
             int(d.split("=")[1]) for d in os.listdir(tdir) if d.startswith(f"{BUCKET_COL}=")
         }
-
-    def _check_columns(self, led: dict, cols: Sequence[str]) -> None:
-        """Refuse a batch whose columns differ from the committed state's
-        (from the first commit that records a schema on): unioning it in
-        would null-fill (or drop) columns silently."""
-        if "schema" not in led:
-            return
-        committed = StructType.fromJson(led["schema"]).names
-        missing = [c for c in committed if c not in cols]
-        extra = [c for c in cols if c not in committed]
-        if missing or extra:
-            raise ValueError(
-                f"batch columns differ from the committed state schema at "
-                f"{self.dir}: missing {missing}, unexpected {extra}"
-            )
 
     # -- merges ------------------------------------------------------------
     def stage_aggregate(self, partials: DataFrame, agg_cols: Sequence[F.Column]) -> tuple:
@@ -699,10 +726,11 @@ class AppendDeltaState(DirLedger):
     ``TransactionalKeyState.merge_aggregate`` re-aggregates old∪new
     inside every touched bucket each wave — right when waves touch a few
     buckets, but a ledger keyed on a HASH OF CONTENT (e.g. the streaming
-    exact-substring gram ledger) touches essentially every bucket every
-    wave, so each merge rewrote the whole accumulated state: per-wave
-    write IO ∝ total ingested corpus (the round-9 verdict's one
-    scale-killer). This store makes the merge a pure APPEND instead —
+    exact-substring gram ledger), or one whose waves each spread over
+    many keys (the window top-N counts), touches essentially every
+    bucket every wave, so each merge rewrote the whole accumulated
+    state: per-wave write IO ∝ total ingested corpus (the round-9
+    verdict's one scale-killer). This store makes the merge a pure APPEND instead —
     legal precisely because the aggregate is order-free, so partials can
     sit side by side and be folded at read time:
 
@@ -731,13 +759,21 @@ class AppendDeltaState(DirLedger):
     Layout (module docstring): one immutable ``d<seq>/`` dir per delta,
     and ``x<seq>/`` DELETION VECTORS (tombstone key tuples + ``__upto``
     seq watermark) — committed by ``upsert``, applied by readers,
-    settled and cleared at compaction.
+    settled and cleared at compaction. The ledger's ``schema`` is the
+    committed data columns: every delta reads with it (no footer-
+    inference job), and a data write whose column names differ from it
+    (``append``, ``upsert``'s ``add``) raises a ``ValueError`` before
+    any file is written. Compaction and ``prune`` rewrite rows read with
+    that schema, so they keep it by construction; tombstones keep their
+    own columns.
 
     On a cluster this is the LSM shape every table format implements
     natively — append = commit a new file set, ``upsert`` = the
     merge-on-read DELETE+INSERT commit (deletion vectors), compact =
     rewrite-minor — so the same ledger maps onto Delta/Iceberg appends,
     DV deletes, + OPTIMIZE."""
+
+    fields = ("deltas", "tombs")
 
     def __init__(
         self,
@@ -798,8 +834,9 @@ class AppendDeltaState(DirLedger):
         led = self._entry(manifest)
         if not led["deltas"]:
             return None
+        reader = self._reader(spark, led)
         if not led["tombs"]:
-            return spark.read.parquet(*[f"{self.dir}/d{s}" for s in led["deltas"]])
+            return reader.parquet(*[f"{self.dir}/d{s}" for s in led["deltas"]])
         # merge-on-read: tag each delta's rows with its seq (the union
         # fan-in is bounded by compact_every), then anti-join the
         # tombstone set per match group with the watermark condition —
@@ -807,7 +844,7 @@ class AppendDeltaState(DirLedger):
         # is what lets one atomic upsert drop a key and re-add it.
         data = None
         for s in led["deltas"]:
-            part = spark.read.parquet(f"{self.dir}/d{s}").withColumn("__seq", F.lit(int(s)))
+            part = reader.parquet(f"{self.dir}/d{s}").withColumn("__seq", F.lit(int(s)))
             data = part if data is None else data.unionByName(part)
         tomb = spark.read.parquet(*[f"{self.dir}/x{s}" for s in led["tombs"]])
         tcols = [c for c in tomb.columns if c != "__upto"]
@@ -857,6 +894,8 @@ class AppendDeltaState(DirLedger):
         ``add`` lands as a fresh delta. Returns the rows a prune
         removed (0 for the others)."""
         led = self._entry(manifest)
+        if add is not None:
+            self._check_columns(led, add.columns)
         pruned = 0
         if isinstance(drop, Column):
             pruned = self._prune_staged(SparkSession.active(), manifest, drop)
@@ -884,9 +923,12 @@ class AppendDeltaState(DirLedger):
         return self.vacuum if folded or isinstance(drop, Column) else None
 
     def _write(self, manifest: dict, df: DataFrame, kind: str) -> int:
-        """Write ``df`` as this ledger's next ``d``/``x`` dir; its seq."""
+        """Write ``df`` as this ledger's next ``d``/``x`` dir; its seq. A
+        data delta records its columns as the ledger's schema."""
         seq = manifest["seq"] = manifest["seq"] + 1
         df.write.mode("overwrite").parquet(f"{self.dir}/{kind}{seq}")
+        if kind == "d":
+            self._entry(manifest)["schema"] = df.schema.jsonValue()
         return seq
 
     def compact(self, spark: SparkSession, agg_cols: Sequence[F.Column]) -> bool:
@@ -923,7 +965,10 @@ class AppendDeltaState(DirLedger):
         grams), not folded aggregates a deleted row contributed to —
         deleting a partial from a MIN/SUM fold (the substring gram
         ledger) cannot un-count its contribution; such ledgers need a
-        rebuild instead, and their owners do not expose prune.
+        rebuild instead, and their owners do not expose prune. The one
+        exception is a predicate fixed by the keys alone (the window top-
+        N's window end): it drops every partial of a key together, so
+        the key leaves the fold whole.
 
         Mechanics mirror TransactionalKeyState.prune: one full-state
         scan, survivors land in ONE fresh delta (so the pass doubles as

@@ -10,27 +10,34 @@ splits exactly along the Flink runtime's own seam:
 
 - **ingestion** maintains the window aggregate incrementally: each
   micro-batch is pre-aggregated to per-``(window_start, key)`` partial
-  counts (map-side combine inside the wave — state merge traffic is
-  ∝ distinct keys touched, not wave rows) and folded into
-  ``TransactionalKeyState`` with SUM. Counts are mergeable aggregates,
-  which double-count under foreachBatch's at-least-once delivery, so
-  the transactional store's (writer, batch) replay skip is load-bearing
-  here, exactly as in streaming/search_index.py.
+  counts (map-side combine inside the wave — state traffic is
+  ∝ distinct keys touched, not wave rows) and APPENDED as one delta of
+  an ``AppendDeltaState`` keyed on ``(window_start, key)``. A wave
+  spreads over most keys' hash buckets, so a bucketed merge would
+  re-read and rewrite the whole state every wave; the append writes
+  only the wave's partials. Counts are mergeable aggregates, which
+  double-count under foreachBatch's at-least-once delivery, so the
+  store's (writer, batch) replay skip is load-bearing here, exactly as
+  in streaming/search_index.py. Every ``compact_every`` appends the
+  store folds its deltas into one inside the same commit (SUM of
+  ``cnt``, MAX of ``window_end``), which bounds the read fan-in.
 - **ranking** is evaluated on read, over state alone (never re-touching
-  events): a per-window row_number with a deterministic tie-break.
+  events): the live deltas are folded per ``(window_start, key)``, then
+  ranked per window by row_number with a deterministic tie-break.
   Rank is NOT distributive — a key outside every wave's local top-N can
   win globally — so ranking partial top-Ns would be wrong; ranking the
-  merged counts is exact.
+  folded counts is exact.
 
-State size is ∝ distinct (window, key), the same bound Flink's own
-window rank operator carries until retention fires; ``expire`` drops
-windows past a horizon as a transactional predicate delete
-(``TransactionalKeyState.prune``), so steady-state size is
-∝ live-horizon windows × keys.
+State size is ∝ distinct (window, key) summed over the live deltas
+(at most ``compact_every`` of them), within a constant of the bound
+Flink's own window rank operator carries until retention fires;
+``expire`` drops windows past a horizon as a transactional predicate
+delete (``AppendDeltaState.prune``, whose survivors land in one delta),
+so steady-state size is ∝ live-horizon windows × keys.
 
-Scale shape: per-batch IO ∝ touched buckets; the read-side rank
-shuffles only the state relation (one Exchange on window_start), and
-Catalyst's window-group-limit pushes N below the sort.
+Scale shape: per-wave IO ∝ the wave's partials; the read-side fold and
+rank share ONE Exchange on window_start (the fold's grouping keys
+include it), and Catalyst's window-group-limit pushes N below the sort.
 """
 
 from __future__ import annotations
@@ -39,7 +46,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_playground_spark.operators.windows import tumble_agg
-from flink_playground_spark.streaming.txn_state import TransactionalKeyState
+from flink_playground_spark.sqltext import quote
+from flink_playground_spark.streaming.txn_state import AppendDeltaState
+
+# the fold of one (window_start, key)'s partial counts, shared by the
+# store's compaction and the read. window_end is functionally determined
+# by window_start; MAX is a deterministic way to carry it through.
+_FOLD = ("MAX(window_end) AS window_end", "SUM(cnt) AS cnt")
 
 
 class StreamingWindowTopN:
@@ -51,17 +64,16 @@ class StreamingWindowTopN:
         key_col: str,
         time_col: str = "ts",
         size: str = "1 hour",
-        n_buckets: int = 8,
         writer_id: str = "window-topn",
     ):
         self.key_col = key_col
         self.time_col = time_col
         self.size = size
         self.writer_id = writer_id
-        self.state = TransactionalKeyState(path, ["window_start", key_col], n_buckets)
+        self.state = AppendDeltaState(path, ["window_start", key_col])
 
     def ingest(self, batch: DataFrame, batch_id: int) -> bool:
-        """Fold one wave's per-(window, key) counts into state, exactly
+        """Append one wave's per-(window, key) counts as a delta, exactly
         once per (writer_id, batch_id) — a replayed wave is a no-op.
         Pass the foreachBatch epoch id as ``batch_id``."""
         partials = tumble_agg(
@@ -71,21 +83,17 @@ class StreamingWindowTopN:
             [self.key_col],
             [F.count(F.lit(1)).cast("long").alias("cnt")],
         ).select("window_start", self.key_col, "window_end", "cnt")
-        return self.state.merge_aggregate(
-            self.writer_id,
-            batch_id,
-            partials,
-            # window_end is functionally determined by window_start; MAX
-            # is a deterministic way to carry it through the re-aggregate
-            [F.max("window_end").alias("window_end"), F.sum("cnt").alias("cnt")],
+        return self.state.append(
+            partials, self.writer_id, batch_id, [F.expr(e) for e in _FOLD]
         )
 
     def expire(self, spark: SparkSession, older_than) -> int:
         """Window retention: transactionally drop state for windows that
         END before ``older_than`` (a timestamp or ISO string). Returns
-        rows removed. IO ∝ buckets holding expired windows; the replay
-        ledger survives, so a replayed wave touching expired windows is
-        still skipped, never resurrected."""
+        the partial-count rows removed (one per live delta holding the
+        window and key, not one per window and key). The replay ledger
+        survives, so a replayed wave touching expired windows is still
+        skipped, never resurrected."""
         return self.state.prune(
             spark, F.col("window_end") < F.lit(older_than).cast("timestamp_ntz")
         )
@@ -97,13 +105,18 @@ class StreamingWindowTopN:
         state = self.state.read(spark)
         if state is None:
             raise ValueError("window top-n state is empty — ingest first")
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("window_start").orderBy(
-            F.desc("cnt"), F.asc(self.key_col)
-        )
-        return (
-            state.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= n)
-            .select("window_start", "window_end", self.key_col, "cnt", "rn")
+        # one SQL text, analyzed once; the REPARTITION hint is the plan's
+        # one Exchange, which both the fold (grouped by window_start and
+        # key) and the per-window rank reuse
+        k = quote(self.key_col)
+        return spark.sql(
+            f"""SELECT * FROM (
+                  SELECT window_start, window_end, {k}, cnt,
+                         ROW_NUMBER() OVER (PARTITION BY window_start
+                                            ORDER BY cnt DESC, {k}) AS rn
+                  FROM (SELECT window_start, {k}, {", ".join(_FOLD)}
+                        FROM (SELECT /*+ REPARTITION(window_start) */ * FROM {{state}})
+                        GROUP BY window_start, {k}))
+                WHERE rn <= {int(n)}""",
+            state=state,
         )

@@ -1,9 +1,9 @@
-"""One commit per wave for the multi-store folds on TransactionalKeyState
-(streaming/txn_state.py): every store a wave touches — and its drift row
-or high-water mark — is a ledger of ONE state directory, so a wave lands
-with one ``manifest.json`` replace, a crash anywhere inside that commit
-leaves the manifest byte-identical, and redelivery converges to the
-uncrashed run."""
+"""One commit per wave for the folds on the state directories of
+streaming/txn_state.py: every store a wave touches — and its drift row
+or high-water mark, or the compaction its append triggers — is a ledger
+of ONE state directory, so a wave lands with one ``manifest.json``
+replace, a crash anywhere inside that commit leaves the manifest
+byte-identical, and redelivery converges to the uncrashed run."""
 
 from __future__ import annotations
 
@@ -55,6 +55,11 @@ def _late_waves(spark, sf):
     ]
 
 
+def _event_waves(spark, sf):
+    events = load_table(spark, sf, "events").select("event_id", "ts", "user_id")
+    return [events.filter(F.col("event_id") % 8 == w) for w in range(8)]
+
+
 def _search(path):
     from flink_playground_spark.streaming.search_index import StreamingSearchIndex
 
@@ -89,6 +94,12 @@ def _late(path):
     from flink_playground_spark.streaming.late_data import LateDataWindowCounts
 
     return LateDataWindowCounts(path, keys=("k",), window="1 hour", delay_s=0)
+
+
+def _topn(path):
+    from flink_playground_spark.streaming.window_topn import StreamingWindowTopN
+
+    return StreamingWindowTopN(path, "user_id", "ts", "1 hour")
 
 
 def _drift_rows(spark, idx, state):
@@ -151,6 +162,16 @@ FOLDS = {
         1,
         True,
     ),
+    # the 8th append reaches compact_every: the append and the
+    # compaction it triggers are one commit
+    "topn": Fold(
+        _topn,
+        _event_waves,
+        lambda op, w, i: op.ingest(w, i),
+        lambda spark, sf, op: (sorted(tuple(r) for r in op.topn(spark, 3).collect()), []),
+        7,
+        True,
+    ),
 }
 POINTS = {
     "search": ["second_bucket_write", "manifest"],
@@ -159,6 +180,7 @@ POINTS = {
     "ivf": ["bucket_write", "record", "manifest"],
     "pq": ["bucket_write", "record", "manifest"],
     "late": ["bucket_write", "record", "manifest"],
+    "topn": ["second_delta", "manifest"],
 }
 
 
@@ -199,7 +221,8 @@ def test_crash_inside_one_commit_redelivers_cleanly(
 ):
     """A fault inside a wave's one commit — at a TransactionalKeyState
     bucket write (the second store's, where a wave writes two), at the
-    drift row or high-water mark, or at the manifest replace — leaves
+    drift row or high-water mark, at the compaction an append triggers
+    (its second delta write), or at the manifest replace — leaves
     ``manifest.json`` byte-identical. A restarted fold re-ingests the
     wave and the rest with exactly one manifest replace each, a
     replayed wave performs none, and the outcome equals the uncrashed

@@ -2,13 +2,14 @@
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import shutil
 
 from pyspark.sql import functions as F
 
 from flink_playground_spark.sources.tables import load_table
-from flink_playground_spark.streaming.txn_state import TransactionalKeyState
+from flink_playground_spark.streaming.txn_state import AppendDeltaState, TransactionalKeyState
 
 
 def _waves(events, k=3):
@@ -333,6 +334,83 @@ def test_manifest_without_schema_still_reads(spark, tmp_path):
     assert st.merge_aggregate("w", 1, df, [F.sum("n").alias("n")]) is True
     assert "schema" in json.loads((path / "manifest.json").read_text())
     assert {(r.k, r.n) for r in st.read(spark).collect()} == {("a", 2), ("b", 4)}
+
+
+def test_delta_schema_drift_raises_and_reads_skip_inference(spark, tmp_path):
+    """AppendDeltaState keeps its committed data schema in the manifest:
+    an append, or an upsert whose ``add`` columns differ, is refused with
+    a ValueError naming the columns before any file is written (manifest
+    and directory unchanged); tombstones keep their own columns; and a
+    read of the deltas submits no Spark job (no parquet footer
+    inference)."""
+    import os
+
+    import pytest
+
+    path = tmp_path / "ads"
+    st = AppendDeltaState(str(path), ["k"], tomb_match=[["k"]])
+    first = spark.createDataFrame([("a", 1, "x"), ("b", 2, "y")], "k string, seq long, p string")
+    assert st.append(first, "w", 0) is True
+    manifest = (path / "manifest.json").read_text()
+    assert [f["name"] for f in json.loads(manifest)["schema"]["fields"]] == ["k", "seq", "p"]
+    dirs = sorted(os.listdir(path))
+    before = set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+    st.read(spark)
+    assert set(spark.sparkContext.statusTracker().getJobIdsForGroup(None)) == before
+
+    extra = spark.createDataFrame([("a", 3, "z", 1.5)], "k string, seq long, p string, score double")
+    with pytest.raises(ValueError, match="score"):
+        st.append(extra, "w", 1)
+    missing = spark.createDataFrame([("a", 3)], "k string, seq long")
+    with pytest.raises(ValueError, match="'p'"):
+        st.upsert(missing.select("k"), missing, "w", 1)
+    assert (path / "manifest.json").read_text() == manifest
+    assert sorted(os.listdir(path)) == dirs
+
+    again = spark.createDataFrame([("a", 3, "z")], "k string, seq long, p string")
+    assert st.upsert(again.select("k"), again, "w", 1) is True
+    assert {(r.k, r.seq, r.p) for r in st.read(spark).collect()} == {("a", 3, "z"), ("b", 2, "y")}
+
+
+def test_ledger_refuses_the_other_store(spark, tmp_path):
+    """A ledger holding TransactionalKeyState state cannot be opened as an
+    AppendDeltaState, nor the other way round: the ValueError names the
+    path, where reading the other store's ledger as empty would let its
+    surviving replay mark skip new waves. So a window top-N directory of
+    the bucketed layout does not reattach."""
+    import re
+
+    import pytest
+
+    from flink_playground_spark.streaming.window_topn import StreamingWindowTopN
+
+    df = spark.createDataFrame([("a", 1)], "k string, n long")
+    tks_path, ads_path = str(tmp_path / "tks"), str(tmp_path / "ads")
+    TransactionalKeyState(tks_path, ["k"]).merge_aggregate("w", 0, df, [F.sum("n").alias("n")])
+    AppendDeltaState(ads_path, ["k"]).append(df, "w", 0)
+    with pytest.raises(ValueError, match=re.escape(tks_path)):
+        AppendDeltaState(tks_path, ["k"]).read(spark)
+    with pytest.raises(ValueError, match=re.escape(ads_path)):
+        TransactionalKeyState(ads_path, ["k"]).read(spark)
+    with pytest.raises(ValueError, match=re.escape(ads_path)):
+        TransactionalKeyState(ads_path, ["k"]).merge_aggregate("w", 1, df, [F.sum("n").alias("n")])
+
+    old = str(tmp_path / "wtopn")
+    counts = spark.createDataFrame(
+        [(dt.datetime(2024, 5, 1), 7, dt.datetime(2024, 5, 1, 1), 2)],
+        "window_start timestamp_ntz, user_id long, window_end timestamp_ntz, cnt long",
+    )
+    TransactionalKeyState(old, ["window_start", "user_id"], 8).merge_aggregate(
+        "window-topn", 0, counts, [F.max("window_end").alias("window_end"), F.sum("cnt").alias("cnt")]
+    )
+    manifest = (tmp_path / "wtopn" / "manifest.json").read_text()
+    wave = counts.selectExpr("window_start AS ts", "user_id")
+    op = StreamingWindowTopN(old, "user_id")
+    with pytest.raises(ValueError, match=re.escape(old)):
+        op.ingest(wave, batch_id=1)
+    with pytest.raises(ValueError, match=re.escape(old)):
+        op.topn(spark)
+    assert (tmp_path / "wtopn" / "manifest.json").read_text() == manifest
 
 
 def test_bucket_write_capped_at_cores_keeps_one_file_per_bucket(spark, tmp_path):
