@@ -124,7 +124,7 @@ def main() -> None:
 
     docs = load_table(spark, SF, "documents").select("doc_id", "text")
 
-    led = StreamingSubstringLedger(f"{work}/substr_ledger", compact_every=2)
+    led = StreamingSubstringLedger(f"{work}/substr_ledger")
     led.ingest(docs.filter(F.col("doc_id") % 2 == 0), writer_id="ingestq", batch_id=0)
     led.ingest(docs.filter(F.col("doc_id") % 2 == 1), writer_id="ingestq", batch_id=1)
     led.ingest(docs.filter(F.col("doc_id") % 2 == 1), writer_id="ingestq", batch_id=1)  # replay

@@ -61,7 +61,7 @@ def main() -> None:
             ).alias("v"),
         ).select("user", "v.plan", "v.seq")
         return keep_latest_changelog_stream(
-            stream, "user", "seq", n_buckets=4, work_dir=work_dir, checkpoint=True
+            stream, "user", "seq", work_dir=work_dir, checkpoint=True
         )
 
     for wave in WAVES:

@@ -917,9 +917,7 @@ def streaming_changelog_dedup(spark, sf_dir):
     stream = replay_events_waves(spark, sf_dir, waves=2).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    log = keep_latest_changelog_stream(
-        stream, "user_id", "ts", tiebreakers=("event_id",), n_buckets=16
-    )
+    log = keep_latest_changelog_stream(stream, "user_id", "ts", tiebreakers=("event_id",))
     return log.select("op", "batch_id", "user_id", "event_id", "ts", "event_type", "value")
 
 
@@ -994,7 +992,6 @@ def streaming_outer_join_changelog(spark, sf_dir):
         dim_order_col="ts",
         dim_tiebreakers=("event_id",),
         probe_keys=["c_custkey"],
-        n_buckets=16,
     )
     return log.select(
         "op", "batch_id", "c_custkey", "c_name", "event_id", "ts", "event_type", "value"

@@ -166,7 +166,6 @@ class StreamingIVFIndex:
         vec_col: str = "embedding",
         n_centroids: int = 16,
         kmeans_iters: int = 2,
-        n_buckets: int = 8,
     ):
         self.id_col = id_col
         self.vec_col = vec_col
@@ -174,7 +173,7 @@ class StreamingIVFIndex:
         self.kmeans_iters = kmeans_iters
         self.centroids_path = f"{path}/centroids"
         self.drift = DriftLog(path, "mean_drift")
-        self.cells = TransactionalKeyState(path, ["vid"], n_buckets, ledger="cells")
+        self.cells = TransactionalKeyState(path, ["vid"], ledger="cells")
 
     def _train(self, corpus: DataFrame) -> str:
         """Train centroids over ``corpus`` into the directory of the wave

@@ -43,9 +43,9 @@ class BroadcastRulesEngine:
     an event matches a live rule when its ``event_type`` equals the
     rule's and its ``value >= min_value``."""
 
-    def __init__(self, path: str, n_buckets: int = 4, writer_id: str = "rules"):
+    def __init__(self, path: str, writer_id: str = "rules"):
         self.writer_id = writer_id
-        self.state = TransactionalKeyState(f"{path}/rules", ["rule_id"], n_buckets)
+        self.state = TransactionalKeyState(f"{path}/rules", ["rule_id"])
 
     def update_rules(self, control_batch: DataFrame, batch_id: int) -> bool:
         """Fold one control wave in (keep-latest per rule_id by ``seq``,

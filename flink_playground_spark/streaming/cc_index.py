@@ -60,14 +60,10 @@ class StreamingDupClusters:
     write instead — how the composed pipeline (dedup_pipeline.py) lands
     the mapping in its index's wave commit."""
 
-    def __init__(self, workdir: str, compact_every: int = 8):
+    def __init__(self, workdir: str):
         self.workdir = workdir
         self._state = AppendDeltaState(
-            workdir,
-            keys=["node"],
-            compact_every=compact_every,
-            tomb_match=[["node"]],
-            ledger="mapping",
+            workdir, keys=["node"], tomb_match=[["node"]], ledger="mapping"
         )
 
     @staticmethod

@@ -142,7 +142,6 @@ def keep_latest_changelog_stream(
     keys: str | Sequence[str],
     order_col: str,
     tiebreakers: Sequence[str] = (),
-    n_buckets: int = 16,
     work_dir: str | None = None,
     checkpoint: bool = False,
 ) -> DataFrame:
@@ -173,7 +172,7 @@ def keep_latest_changelog_stream(
     keys = [keys] if isinstance(keys, str) else list(keys)
     spark = stream.sparkSession
     work = work_dir or scratch_dir("fps_changelog_")
-    state = TransactionalKeyState(f"{work}/state", keys, n_buckets)
+    state = TransactionalKeyState(f"{work}/state", keys)
     writer = "changelog" if checkpoint else f"changelog-{uuid.uuid4().hex}"
     out_path = f"{work}/ops"
     emitted = {"any": os.path.isdir(out_path)}
@@ -222,7 +221,6 @@ def outer_join_changelog_stream(
     dim_order_col: str,
     dim_tiebreakers: Sequence[str] = (),
     probe_keys: Sequence[str] | None = None,
-    n_buckets: int = 16,
     work_dir: str | None = None,
 ) -> DataFrame:
     """Changelog of ``probe ⟕ latest(dim)`` as the dim stream arrives —
@@ -244,7 +242,7 @@ def outer_join_changelog_stream(
     spark = probe.sparkSession
     probe_keys = list(probe_keys or [on[0][0]])
     work = work_dir or scratch_dir("fps_ojlog_")
-    state = TransactionalKeyState(f"{work}/state", list(dim_keys), n_buckets)
+    state = TransactionalKeyState(f"{work}/state", list(dim_keys))
     writer = f"ojlog-{uuid.uuid4().hex}"
     out_path = f"{work}/ops"
     # probe is re-joined every batch against only the changed dim rows;

@@ -20,7 +20,9 @@ Design:
   instead of a double count — streaming/txn_state.py):
   only the hash buckets the batch's fingerprints touch are read and
   rewritten into a fresh ``t<txn>`` directory, so state IO is O(batch
-  fingerprints), while total state grows with the corpus.
+  fingerprints), while total state grows with the corpus. The bucket
+  count is the store's default, and each folded batch is one committed
+  ``txn`` of the state's manifest.
 - The merge is exact because the aggregates are MERGEABLE given
   append-only ingestion (each document arrives in exactly one batch —
   the standard corpus-ingestion contract): occurrence counts and
@@ -32,7 +34,6 @@ Design:
 
 from __future__ import annotations
 
-import time
 import uuid
 
 from pyspark.sql import DataFrame
@@ -57,9 +58,7 @@ def streaming_chunk_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     min_tokens: int = 4,
-    n_buckets: int = 16,
     work_dir: str | None = None,
-    batch_seconds: list | None = None,
 ) -> DataFrame:
     """Drain ``doc_stream`` (availableNow) through incremental
     chunk-level dedup; returns the duplicated-passage table
@@ -67,12 +66,11 @@ def streaming_chunk_dedup(
     every passage currently known to appear in ≥2 documents."""
     spark = doc_stream.sparkSession
     work = work_dir or scratch_dir("fps_chunkdedup_")
-    state = TransactionalKeyState(f"{work}/state", ["chunk_fp"], n_buckets=n_buckets)
+    state = TransactionalKeyState(f"{work}/state", ["chunk_fp"])
     writer = uuid.uuid4().hex  # one logical query per drain; see txn_state docstring
     seen = {"any": False}
 
     def fold(batch: DataFrame, epoch_id: int) -> None:
-        t0 = time.monotonic()
         fps = chunk_fingerprints(batch, id_col, text_col).filter(
             F.col("n_tokens") >= min_tokens
         )
@@ -84,8 +82,6 @@ def streaming_chunk_dedup(
         )
         state.merge_aggregate(writer, epoch_id, partials, _merge_agg())
         seen["any"] = True
-        if batch_seconds is not None:
-            batch_seconds.append(time.monotonic() - t0)
 
     q = doc_stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
     q.awaitTermination()

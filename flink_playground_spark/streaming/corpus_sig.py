@@ -43,7 +43,6 @@ class StreamingCorpusSignature:
         source_col: str = "source",
         k: int = 64,
         n: int = 3,
-        n_buckets: int = 8,
         writer_id: str = "corpus-sig",
     ):
         self.id_col = id_col
@@ -52,7 +51,7 @@ class StreamingCorpusSignature:
         self.k = k
         self.n = n
         self.writer_id = writer_id
-        self.state = TransactionalKeyState(path, [source_col, "perm"], n_buckets)
+        self.state = TransactionalKeyState(path, [source_col, "perm"])
 
     def _partials(self, batch: DataFrame) -> DataFrame:
         """(source, perm, m): the wave's per-permutation min over its

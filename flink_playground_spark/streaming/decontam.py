@@ -41,13 +41,12 @@ class StreamingDecontaminator:
         id_col: str,
         text_col: str,
         n: int = 3,
-        n_buckets: int = 8,
     ):
         self.id_col = id_col
         self.text_col = text_col
         self.n = n
         self.eval_path = f"{path}/eval_shingles"
-        self.ledger = TransactionalKeyState(f"{path}/ledger", [id_col], n_buckets)
+        self.ledger = TransactionalKeyState(f"{path}/ledger", [id_col])
         # benchmark shingles: computed once, persisted, reused every batch
         (
             shingle_index(eval_df, id_col, text_col, n)

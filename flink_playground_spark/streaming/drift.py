@@ -38,14 +38,13 @@ class StreamingDriftMonitor:
         path: str,
         value_col: str = "value",
         bucket_width: float = 10.0,
-        n_buckets: int = 8,
         writer_id: str = "drift",
     ):
         self.value_col = value_col
         self.bucket_width = bucket_width
         self.writer_id = writer_id
-        self.ref = TransactionalKeyState(path, ["bucket"], n_buckets, ledger="ref")
-        self.live = TransactionalKeyState(path, ["bucket"], n_buckets, ledger="live")
+        self.ref = TransactionalKeyState(path, ["bucket"], ledger="ref")
+        self.live = TransactionalKeyState(path, ["bucket"], ledger="live")
 
     def _counts(self, batch: DataFrame) -> DataFrame:
         return (

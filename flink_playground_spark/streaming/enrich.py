@@ -49,7 +49,7 @@ def enrichment_join_stream(
     """
     spark = probe.sparkSession
     state_dir = state_dir or scratch_dir("fps_dim_state_")
-    state = TransactionalKeyState(f"{state_dir}/latest", list(dim_keys), n_buckets=16)
+    state = TransactionalKeyState(f"{state_dir}/latest", list(dim_keys))
     writer = f"enrich-{uuid.uuid4().hex}"
 
     def fold_batch(batch: DataFrame, epoch_id: int) -> None:

@@ -21,8 +21,11 @@ module is that operator for the micro-batch engine:
   sums would drift under retraction and the view would diverge from the
   batch answer it must equal;
 - a group whose live count reaches zero keeps a tombstone partial row
-  (filtered on read); ``TransactionalKeyState.prune(cnt = 0)`` is the
-  periodic cleanup.
+  (filtered on read); ``prune_tombstones`` — ``TransactionalKeyState
+  .prune(cnt = 0)``, one commit that rewrites only the buckets holding
+  tombstones — is the periodic cleanup;
+- the state's layout (its bucket count) is the store's default, as for
+  every fold: no view chooses it.
 
 Correctness contract (pinned by the ``streaming_retractable_agg``
 oracle): after consuming the keep-latest changelog of a stream, the
@@ -53,7 +56,6 @@ class RetractableAggView:
         sum_cols: Sequence[str] = (),
         op_col: str = "op",
         scale: int = 6,
-        n_buckets: int = 8,
         writer_id: str = "ivm",
     ):
         self.group_cols = list(group_cols)
@@ -61,7 +63,7 @@ class RetractableAggView:
         self.op_col = op_col
         self.scale = scale
         self.writer_id = writer_id
-        self.state = TransactionalKeyState(path, self.group_cols, n_buckets)
+        self.state = TransactionalKeyState(path, self.group_cols)
 
     def _partials(self, ops: DataFrame) -> DataFrame:
         sign = F.when(F.col(self.op_col).isin(*_ADD_OPS), 1).otherwise(-1)
@@ -119,14 +121,13 @@ class RetractableMinMaxView:
         group_cols: Sequence[str],
         value_col: str,
         op_col: str = "op",
-        n_buckets: int = 8,
         writer_id: str = "ivm-minmax",
     ):
         self.group_cols = list(group_cols)
         self.value_col = value_col
         self.op_col = op_col
         self.writer_id = writer_id
-        self.state = TransactionalKeyState(path, [*self.group_cols, value_col], n_buckets)
+        self.state = TransactionalKeyState(path, [*self.group_cols, value_col])
 
     def apply_batch(self, ops: DataFrame, batch_id: int) -> bool:
         sign = F.when(F.col(self.op_col).isin(*_ADD_OPS), 1).otherwise(-1)

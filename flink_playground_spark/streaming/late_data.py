@@ -56,7 +56,6 @@ class LateDataWindowCounts:
         window: str = "1 hour",
         delay_s: float = 1800.0,
         allowed_lateness_s: float = 0.0,
-        n_buckets: int = 8,
         writer_id: str = "late_window_counts",
     ):
         self.path = path
@@ -67,7 +66,7 @@ class LateDataWindowCounts:
         self.lateness_us = round(allowed_lateness_s * 1_000_000)
         self.writer_id = writer_id
         self.counts = TransactionalKeyState(
-            path, ["window_start", "window_end", *self.keys], n_buckets, ledger="counts"
+            path, ["window_start", "window_end", *self.keys], ledger="counts"
         )
         self.high_water = ManifestRecords(path, "high_water")  # [batch_id, max ts]
         os.makedirs(f"{path}/side", exist_ok=True)

@@ -35,10 +35,10 @@ class StreamingBigramLM:
     """Fold document waves into bigram/unigram count state; score any
     DataFrame against the CURRENT model."""
 
-    def __init__(self, path: str, n_buckets: int = 8, writer_id: str = "lm"):
+    def __init__(self, path: str, writer_id: str = "lm"):
         self.writer_id = writer_id
-        self.bigrams = TransactionalKeyState(path, ["w1", "w2"], n_buckets, ledger="bigrams")
-        self.unigrams = TransactionalKeyState(path, ["w"], n_buckets, ledger="unigrams")
+        self.bigrams = TransactionalKeyState(path, ["w1", "w2"], ledger="bigrams")
+        self.unigrams = TransactionalKeyState(path, ["w"], ledger="unigrams")
 
     def ingest(self, batch: DataFrame, batch_id: int, id_col: str, text_col: str) -> bool:
         """Fold one wave's counts in, exactly once per (writer, batch).

@@ -60,14 +60,13 @@ class StreamingPQIndex:
         m: int = 8,
         n_codes: int = 16,
         iters: int = 2,
-        n_buckets: int = 8,
     ):
         self.id_col = id_col
         self.vec_col = vec_col
         self.dim, self.m, self.n_codes, self.iters = dim, m, n_codes, iters
         self.book_path = f"{path}/book"
         self.drift = DriftLog(path, "mean_err")
-        self.codes = TransactionalKeyState(path, ["vid"], n_buckets, ledger="codes")
+        self.codes = TransactionalKeyState(path, ["vid"], ledger="codes")
         # the frozen geometry is BOUNDED (m × n_codes entries) and
         # immutable between (re)trains, so it lives driver-side for the
         # index's lifetime: the parquet copy is the durable/reattach

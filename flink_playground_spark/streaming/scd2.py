@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from flink_playground_spark.operators.dedup import dedup_latest
 from flink_playground_spark.operators.scd import scd2_build
-from flink_playground_spark.streaming.txn_state import TransactionalKeyState
+from flink_playground_spark.streaming.txn_state import BUCKET_COL, TransactionalKeyState
 
 _WRITER = "scd2"
 
@@ -41,13 +41,12 @@ class Scd2Maintainer:
         ts_col: str,
         attr_cols: Sequence[str],
         tiebreaker: str,
-        n_buckets: int = 16,
     ):
         self.keys = list(keys)
         self.ts_col = ts_col
         self.attr_cols = list(attr_cols)
         self.tiebreaker = tiebreaker
-        self.changes = TransactionalKeyState(f"{path}/changes", self.keys, n_buckets)
+        self.changes = TransactionalKeyState(f"{path}/changes", self.keys)
 
     def apply_batch(self, batch: DataFrame) -> None:
         """Fold a change batch into the touched buckets' stored changes.
@@ -55,7 +54,9 @@ class Scd2Maintainer:
         ts, tiebreaker), so at-least-once delivery is safe. The batch
         commits as the store's next unseen batch id for writer ``scd2``:
         re-applying a batch whose commit failed folds it once."""
-        identity = [*self.keys, self.ts_col, self.tiebreaker]
+        # the keys fix the bucket, so grouping by it too changes no
+        # group and lets the collapse reuse the write's clustering
+        identity = [*self.keys, self.ts_col, self.tiebreaker, BUCKET_COL]
         batch_id = self.changes.next_batch(_WRITER)
         self.changes.merge_transform(
             _WRITER,

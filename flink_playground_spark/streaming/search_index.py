@@ -48,14 +48,13 @@ class StreamingSearchIndex:
         path: str,
         id_col: str,
         text_col: str,
-        n_buckets: int = 8,
         writer_id: str = "search-index",
     ):
         self.id_col = id_col
         self.text_col = text_col
         self.writer_id = writer_id
-        self.postings = TransactionalKeyState(path, ["term", id_col], n_buckets, ledger="postings")
-        self.doclen = TransactionalKeyState(path, [id_col], n_buckets, ledger="doclen")
+        self.postings = TransactionalKeyState(path, ["term", id_col], ledger="postings")
+        self.doclen = TransactionalKeyState(path, [id_col], ledger="doclen")
 
     def ingest(self, batch: DataFrame, batch_id: int | None = None) -> bool:
         """Fold a document wave into the index (work ∝ wave tokens),

@@ -72,16 +72,13 @@ class StreamingSubstringLedger:
         id_col: str = "doc_id",
         text_col: str = "text",
         min_len: int = 40,
-        compact_every: int = 8,
         _hash=None,
     ):
         self.id_col = id_col
         self.text_col = text_col
         self.min_len = min_len
         self._hash = _hash if _hash is not None else F.xxhash64
-        self.state = AppendDeltaState(
-            f"{path}/grams", ["gh"], compact_every=compact_every
-        )
+        self.state = AppendDeltaState(f"{path}/grams", ["gh"])
 
     # the order-free fold shared by read-time aggregation and compaction
     # (a method, not a class attribute: Column construction needs a live

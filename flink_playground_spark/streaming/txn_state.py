@@ -43,10 +43,11 @@ Layout::
                                    schema = the committed state columns,
                                    so reads skip parquet schema inference)
     AppendDeltaState fields:       {"deltas": [...], "tombs": [...],
-                                    "schema": {<StructType JSON>}}
+                                    "schema": {<StructType JSON>},
+                                    "tomb_schema": {<StructType JSON>}}
                                    plus the directory's "seq" counter
                                    (schema = the committed data columns;
-                                   tombstone dirs keep their own)
+                                   tomb_schema = the tombstone columns)
     ManifestRecords fields:        {"rows": [[...], ...]}
 
 A one-ledger TransactionalKeyState directory is exactly the store's
@@ -63,15 +64,27 @@ pass the same writer_id across restarts of one logical query and every
 re-delivered (writer, batch) pair is skipped; a different writer_id
 never collides.
 
-Commit protocol for writer ``w``, batch ``b``:
+ONE DOOR. Every mutation of a directory is a ``commit_all``, the only
+code here that takes the writer lock or replaces the manifest: the
+TransactionalKeyState merges (``merge_aggregate``,
+``merge_keep_latest``, ``merge_changes``, ``merge_transform``) and its
+maintenance verbs ``prune`` (retention) and ``rebucket`` (rescale), the
+AppendDeltaState ``append``, ``upsert`` and ``prune`` (compaction rides
+inside an append's or upsert's commit), and ``ManifestRecords`` rows.
+A write that changes nothing — a replayed batch, a prune that matches
+nothing, a rebucket to the current count — makes no replace.
+
+Commit protocol for writer ``w``, batch ``b`` (the maintenance verbs
+carry no mark and skip step 1):
 
 1. ``b <= writers[w]``  →  REPLAY: skip, state already includes it;
 2. every write reads its ledger's CURRENT versions via the manifest
    (never via directory listing — uncommitted files are invisible by
    construction);
 3. every write lands in fresh immutable directories (``t<txn>/``,
-   ``d<seq>/``; nothing is overwritten, a crash mid-write leaves only
-   orphans) and stages its new pointers into the in-memory manifest;
+   ``d<seq>/``, ``x<seq>/``; nothing is overwritten, a crash mid-write
+   leaves only orphans) and stages its new pointers into the in-memory
+   manifest;
 4. atomically replace the manifest, recording ``writers[w] = b`` — the
    commit. A crash before (4) replays the batch against the OLD
    manifest and reproduces the same writes; orphan files from the
@@ -81,6 +94,11 @@ A batch whose columns differ from a ledger's committed schema is refused
 with a ``ValueError`` before anything is written: the store never widens
 or null-fills its schema silently. Reads use the committed schema, so
 they submit no parquet footer-inference job.
+
+The layout — bucket count, compaction cadence, retention window — is
+this module's choice: the folds build their stores with the defaults
+below, and a directory that already exists keeps its committed bucket
+count.
 
 On a cluster the same protocol works on any store with atomic
 single-object replace (every object store has PUT) — it is the
@@ -121,9 +139,8 @@ class ConcurrentWriteError(RuntimeError):
 @contextmanager
 def _writer_lock(path: str):
     """Exclusive non-blocking flock over the directory's writer lock
-    file — the single-writer protocol every mutation (merge, prune,
-    rebucket) runs under. Raises ConcurrentWriteError instead of
-    waiting."""
+    file — the single-writer protocol every ``commit_all`` runs under.
+    Raises ConcurrentWriteError instead of waiting."""
     import fcntl
 
     lock = open(f"{path}/.writer.lock", "w")
@@ -196,13 +213,14 @@ class DirLedger:
             )
 
     @staticmethod
-    def _reader(spark: SparkSession, led: dict):
-        """``spark.read`` with the ledger's committed schema, which skips
-        the parquet footer-inference job; manifests written before the
-        schema was recorded still read through inference."""
-        if "schema" not in led:
+    def _reader(spark: SparkSession, led: dict, key: str = "schema"):
+        """``spark.read`` with the ledger's committed schema under
+        ``key``, which skips the parquet footer-inference job; manifests
+        written before the schema was recorded still read through
+        inference."""
+        if key not in led:
             return spark.read
-        return spark.read.schema(StructType.fromJson(led["schema"]))
+        return spark.read.schema(StructType.fromJson(led[key]))
 
     def _commit(self, manifest: dict) -> None:
         tmp = f"{self.path}/manifest.json.tmp"
@@ -237,7 +255,9 @@ class DirLedger:
     def commit_all(writes, writer_id: str | None = None, batch_id: int | None = None):
         """Commit ``writes`` — ``(ledger, *args)`` tuples over ledgers of
         ONE directory, each staged by ``ledger._stage(manifest, *args)``
-        — in one manifest replace with one replay mark. Every file lands
+        — in one manifest replace with one replay mark: the directory's
+        one door (module docstring), so how a directory commits changes
+        here and nowhere else. Every file lands
         in a fresh dir before the replace, so a crash anywhere leaves
         the committed manifest untouched. Maintenance a write owes
         (compaction) is staged into the same commit; vacuums run after
@@ -383,8 +403,6 @@ class TransactionalKeyState(DirLedger):
             lambda base, cols: base.groupBy(*self.keys, BUCKET_COL)
             .agg(*agg_cols)
             .select(*cols, BUCKET_COL),
-            None,
-            True,
         )
 
     def merge_aggregate(
@@ -414,7 +432,6 @@ class TransactionalKeyState(DirLedger):
                 base, [*self.keys, BUCKET_COL], order_col, tiebreakers
             ),
             on_write,
-            True,
         )
 
     def merge_keep_latest(
@@ -436,7 +453,8 @@ class TransactionalKeyState(DirLedger):
         output it writes idempotently (e.g. a per-batch changelog
         directory in overwrite mode) commits exactly once with the state:
         a replay either is skipped or rewrites the same output. If either
-        write fails, nothing is committed."""
+        write fails, nothing is committed. A wave with no rows touches no
+        bucket, so it writes nothing and ``on_write`` does not run."""
         return self._merge(
             writer_id, batch_id, self.stage_keep_latest(batch, order_col, tiebreakers, on_write)
         )
@@ -463,46 +481,49 @@ class TransactionalKeyState(DirLedger):
             latest = dedup_latest(base, [*self.keys, BUCKET_COL], order_col, tiebreakers)
             return latest.filter(F.col(op_col) != "D")
 
-        return self._merge(writer_id, batch_id, (self, changes, combine, None, True))
+        return self._merge(writer_id, batch_id, (self, changes, combine))
 
     def merge_transform(
         self, writer_id: str, batch_id: int, batch: DataFrame, combine
     ) -> bool:
         """Arbitrary keyed state transition, exactly once per (writer,
         batch): ``combine(base, cols)`` receives the union of the
-        touched buckets' current rows and the batch rows (same schema)
-        and returns the buckets' NEW full contents. The SCD2 change
+        touched buckets' current rows and the batch rows, with the
+        bucket column (``BUCKET_COL``), and returns the buckets' NEW
+        full contents with that column kept — group by keys plus the
+        bucket column, as every merge here does. The SCD2 change
         store's full-identity collapse is this shape — neither an
         aggregate fold nor a keep-latest on the bucketing keys. The
         transition must be deterministic: a crash before the manifest
         commit replays the batch against the old state and must
         reproduce the same result."""
-        return self._merge(writer_id, batch_id, (self, batch, combine, None, False))
+        return self._merge(writer_id, batch_id, (self, batch, combine))
 
     def _merge(self, writer_id: str, batch_id: int, write: tuple) -> bool:
         """Exactly-once merge of one ``stage_*`` write: its own
         one-write ``commit_all``. False on a replay."""
         return self.commit_all([write], writer_id, batch_id) is not None
 
-    def _stage(
-        self,
-        manifest: dict,
-        batch: DataFrame,
-        combine,
-        on_write=None,
-        by_bucket: bool = False,
-    ) -> bool:
-        """Merge ``batch`` into the touched buckets under a fresh txn and
-        point ``manifest`` at it (uncommitted). ``combine(base, cols)``
-        maps old ∪ batch rows to the buckets' new contents. With
-        ``by_bucket`` it receives ``base`` with the bucket column,
-        already hash-clustered on it, and groups by keys plus bucket, so
-        the merge and the bucket-clustered write share one shuffle;
-        otherwise it sees plain rows and the write re-clusters."""
+    def _stage(self, manifest: dict, wave, combine, on_write=None) -> int:
+        """Merge ``wave`` into the buckets it touches under a fresh txn
+        and point ``manifest`` at it (uncommitted); returns the wave's
+        row count. ``wave`` is a batch DataFrame, or a callable that
+        derives it from this ledger's manifest entry under the writer
+        lock (``prune``'s matching rows, ``rebucket``'s whole state;
+        None: nothing to merge). ``combine(base, cols)`` maps the
+        touched buckets' old rows ∪ the wave's to their new contents:
+        ``base`` carries the bucket column, already hash-clustered on
+        it, and the combine groups by keys plus bucket, so the merge and
+        the bucket-clustered write share one shuffle. A wave that
+        touches no bucket stages nothing: no txn, no directory."""
         led = self._entry(manifest)
+        if callable(wave):
+            wave = wave(led)
+            if wave is None:
+                return 0
         txn = led["txn"] + 1
-        spark = batch.sparkSession
-        cols = batch.columns
+        spark = wave.sparkSession
+        cols = wave.columns
         self._check_columns(led, cols)
         # the wave is read TWICE (touched-bucket discovery, then the
         # merge write; a third time by an ``on_write`` side output) —
@@ -511,20 +532,23 @@ class TransactionalKeyState(DirLedger):
         # the source (wave-sized, bounded by the micro-batch). The
         # discovery rides the cache materialization as an OBSERVATION
         # (round 14, guide §5): collect_set(__bucket) — bounded by
-        # n_buckets — is computed inside the one noop pass that fills
-        # the cache, where the old distinct().collect() paid a second
-        # job and an extra exchange per wave.
+        # n_buckets — and the row count are computed inside the one noop
+        # pass that fills the cache, where the old distinct().collect()
+        # paid a second job and an extra exchange per wave.
         from pyspark.sql import Observation
 
         obs = Observation()
         tagged = (
-            batch.withColumn(BUCKET_COL, self._bucket())
-            .observe(obs, F.collect_set(F.col(BUCKET_COL)).alias("b"))
+            wave.withColumn(BUCKET_COL, self._bucket())
+            .observe(obs, F.collect_set(F.col(BUCKET_COL)).alias("b"), F.count(F.lit(1)).alias("n"))
             .persist()
         )
         try:
             tagged.write.mode("overwrite").format("noop").save()
-            touched = sorted(int(b) for b in obs.get["b"])
+            seen = obs.get
+            touched = sorted(int(b) for b in seen["b"])
+            if not touched:
+                return 0
             old = self._read_buckets(spark, led, set(touched))
             base = (
                 tagged
@@ -542,14 +566,7 @@ class TransactionalKeyState(DirLedger):
             # capped at the core count, since more writer tasks than
             # cores only add launch overhead.
             tasks = bucket_writer_tasks(spark, touched)
-            if by_bucket:
-                merged = combine(base.repartition(tasks, F.col(BUCKET_COL)), cols)
-            else:
-                merged = (
-                    combine(base.drop(BUCKET_COL), cols)
-                    .withColumn(BUCKET_COL, self._bucket())
-                    .repartition(tasks, F.col(BUCKET_COL))
-                )
+            merged = combine(base.repartition(tasks, F.col(BUCKET_COL)), cols)
             schema = StructType([f for f in merged.schema.fields if f.name != BUCKET_COL])
             if on_write is None:
                 written = self._write_buckets(merged, txn)
@@ -566,8 +583,8 @@ class TransactionalKeyState(DirLedger):
         finally:
             tagged.unpersist()
         # a touched bucket the combine left empty (a CDC delete of its
-        # last key, a transition that drops its rows) has no directory
-        # under t<txn>: it leaves the manifest, as in ``prune``
+        # last key, a prune of its last row) has no directory under
+        # t<txn>: it leaves the manifest
         for b in touched:
             if b in written:
                 led["buckets"][str(b)] = txn
@@ -575,7 +592,7 @@ class TransactionalKeyState(DirLedger):
                 led["buckets"].pop(str(b), None)
         led["txn"] = txn
         led["schema"] = schema.jsonValue()
-        return True
+        return int(seen["n"])
 
     def _settle(self, manifest: dict, *args):
         return partial(self._retain, self._entry(manifest)["txn"])
@@ -597,64 +614,43 @@ class TransactionalKeyState(DirLedger):
         """Transactionally DELETE state rows matching ``predicate`` (state
         retention: expired windows, aged-out keys). Returns rows removed.
 
-        Runs under the writer lock as its own transaction. Cost shape:
-        ONE full-state scan locates the matches (retention is a rare
-        maintenance pass, amortized over many merges — a predicate on a
-        key prefix could consult per-bucket min/max stats instead, not
-        wired), then only buckets that actually contain matching rows
-        are rewritten (write IO ∝ touched buckets, like every merge).
-        A bucket emptied by the delete is dropped from the manifest
-        explicitly, not left as a zero-row file. The ``writers`` map is
-        untouched — a replayed wave whose rows were since pruned is
-        STILL skipped (retention must not resurrect data through the
+        A ``commit_all`` write like every merge: the committed rows
+        matching the predicate are the wave, so only the buckets holding
+        them are rewritten (write IO ∝ touched buckets), and the combine
+        drops them. Finding them costs ONE full-state scan (retention is
+        a rare maintenance pass, amortized over many merges — a
+        predicate on a key prefix could consult per-bucket min/max stats
+        instead, not wired). A bucket the delete empties leaves the
+        manifest, not a zero-row file; a prune that matches nothing
+        makes no commit. It carries no replay mark, so the ``writers``
+        map is untouched — a replayed wave whose rows were since pruned
+        is STILL skipped (retention must not resurrect data through the
         at-least-once path)."""
-        with _writer_lock(self.path):
-            manifest = self._manifest()
-            led = self._entry(manifest)
+        # NULL predicate rows are KEPT (a delete must be affirmative)
+        pred = F.coalesce(predicate.cast("boolean"), F.lit(False))
+
+        def matching(led: dict) -> DataFrame | None:
             state = self._read_buckets(spark, led)
-            if state is None:
-                return 0
-            # NULL predicate rows are KEPT (a delete must be affirmative)
-            pred = F.coalesce(predicate.cast("boolean"), F.lit(False))
-            tagged = state.withColumn(BUCKET_COL, self._bucket())
-            per_bucket = (
-                tagged.groupBy(BUCKET_COL)
-                .agg(
-                    F.sum(pred.cast("long")).alias("hits"),
-                    F.count(F.lit(1)).alias("total"),
-                )
-                .filter(F.col("hits") > 0)
-                .collect()
-            )
-            if not per_bucket:
-                return 0
-            touched = {int(r[BUCKET_COL]): (int(r["hits"]), int(r["total"])) for r in per_bucket}
-            emptied = {b for b, (h, t) in touched.items() if h == t}
-            survivors = sorted(set(touched) - emptied)
-            txn = led["txn"] + 1
-            if survivors:
-                self._write_buckets(tagged.filter(F.col(BUCKET_COL).isin(survivors) & ~pred), txn)
-                for b in survivors:
-                    led["buckets"][str(b)] = txn
-            for b in emptied:
-                led["buckets"].pop(str(b), None)
-            led["txn"] = txn
-            self._commit(manifest)
-            self._retain(txn)
-            return sum(h for h, _ in touched.values())
+            return None if state is None else state.filter(pred)
+
+        return self.commit_all([(self, matching, lambda base, cols: base.filter(~pred))])[0]
 
     def rebucket(self, spark: SparkSession, new_n_buckets: int) -> bool:
         """Savepoint-style state RESCALE (Flink's rescale-on-restore for
         keyed state): rewrite the whole state under a new bucket count in
-        one transaction. Returns False if the count is already current.
+        one ``commit_all``. Returns False, committing nothing, if the
+        count is already current.
 
         Why it exists: bucket count fixes the parallelism/IO granularity
         of every merge; a stream that outgrows its initial count needs
         more buckets without losing state or exactly-once replay
-        protection. Semantics:
+        protection. The write reads the committed state, clears the
+        bucket pointers, records the new count and stages the whole
+        state as its wave, all in one manifest replace. Semantics:
 
-        - the ``writers`` ledger is untouched, so a wave redelivered
-          across the rescale is still skipped;
+        - it carries no replay mark, so the ``writers`` map is
+          untouched and a wave redelivered across the rescale is still
+          skipped;
         - crash-safe like every merge: the new layout becomes visible
           only at the atomic manifest commit — a crash mid-rewrite
           leaves the old layout fully live and the half-written txn dir
@@ -665,24 +661,19 @@ class TransactionalKeyState(DirLedger):
 
         Cost: one full-state read + write (state size, not history) —
         a rare maintenance pass, same class as ``prune``."""
-        with _writer_lock(self.path):
-            manifest = self._manifest()
-            led = self._entry(manifest)
-            if new_n_buckets == self.n_buckets:
-                return False
+        rescaled = []
+
+        def whole_state(led: dict) -> DataFrame | None:
+            if led["n_buckets"] == new_n_buckets:
+                return None
             state = self._read_buckets(spark, led)
+            led["buckets"] = {}
             self.n_buckets = led["n_buckets"] = new_n_buckets
-            if state is None:
-                # nothing stored yet: just commit the new count
-                self._commit(manifest)
-                return True
-            txn = led["txn"] + 1
-            written = self._write_buckets(state.withColumn(BUCKET_COL, self._bucket()), txn)
-            led["buckets"] = {str(b): txn for b in written}
-            led["txn"] = txn
-            self._commit(manifest)
-            self._retain(txn)
-            return True
+            rescaled.append(new_n_buckets)
+            return state
+
+        self.commit_all([(self, whole_state, lambda base, cols: base)])
+        return bool(rescaled)
 
     def vacuum(self, keep_newer_than: int | None = None) -> int:
         """Delete files no committed bucket version references (orphans of
@@ -740,11 +731,11 @@ class AppendDeltaState(DirLedger):
       state (pinned by tests/test_chunkdedup.py's bytes-written test);
     - ``read`` unions the live delta dirs; callers fold with their
       ``agg_cols`` (read amplification grows with the live-delta count,
-      which compaction bounds);
-    - ``compact`` folds all live deltas into one (a rare maintenance
-      pass, amortized: triggered every ``compact_every`` appends, so
-      steady-state read fan-in stays ≤ compact_every and amortized
-      write IO per wave stays O(state/compact_every + wave));
+      which compaction bounds: an append or upsert given ``agg_cols``
+      folds all live deltas into one inside its own commit once they
+      reach ``compact_every``, so steady-state read fan-in stays ≤
+      compact_every and amortized write IO per wave stays
+      O(state/compact_every + wave));
     - replay-safe exactly like ``TransactionalKeyState``: the
       ``writers`` map skips re-delivered (writer, batch) pairs BEFORE
       any write — an at-least-once foreachBatch redelivery cannot
@@ -765,11 +756,12 @@ class AppendDeltaState(DirLedger):
     (``append``, ``upsert``'s ``add``) raises a ``ValueError`` before
     any file is written. Compaction and ``prune`` rewrite rows read with
     that schema, so they keep it by construction; tombstones keep their
-    own columns.
+    own columns, recorded as ``tomb_schema`` so their reads skip
+    inference too.
 
     On a cluster this is the LSM shape every table format implements
     natively — append = commit a new file set, ``upsert`` = the
-    merge-on-read DELETE+INSERT commit (deletion vectors), compact =
+    merge-on-read DELETE+INSERT commit (deletion vectors), compaction =
     rewrite-minor — so the same ledger maps onto Delta/Iceberg appends,
     DV deletes, + OPTIMIZE."""
 
@@ -846,7 +838,9 @@ class AppendDeltaState(DirLedger):
         for s in led["deltas"]:
             part = reader.parquet(f"{self.dir}/d{s}").withColumn("__seq", F.lit(int(s)))
             data = part if data is None else data.unionByName(part)
-        tomb = spark.read.parquet(*[f"{self.dir}/x{s}" for s in led["tombs"]])
+        tomb = self._reader(spark, led, "tomb_schema").parquet(
+            *[f"{self.dir}/x{s}" for s in led["tombs"]]
+        )
         tcols = [c for c in tomb.columns if c != "__upto"]
         for grp in self.tomb_match or [tcols]:
             d = data.alias("__d")
@@ -924,24 +918,13 @@ class AppendDeltaState(DirLedger):
 
     def _write(self, manifest: dict, df: DataFrame, kind: str) -> int:
         """Write ``df`` as this ledger's next ``d``/``x`` dir; its seq. A
-        data delta records its columns as the ledger's schema."""
+        data delta records its columns as the ledger's ``schema``, a
+        tombstone dir as its ``tomb_schema``."""
         seq = manifest["seq"] = manifest["seq"] + 1
         df.write.mode("overwrite").parquet(f"{self.dir}/{kind}{seq}")
-        if kind == "d":
-            self._entry(manifest)["schema"] = df.schema.jsonValue()
+        key = "schema" if kind == "d" else "tomb_schema"
+        self._entry(manifest)[key] = df.schema.jsonValue()
         return seq
-
-    def compact(self, spark: SparkSession, agg_cols: Sequence[F.Column]) -> bool:
-        """Fold all live deltas into one (read fan-in back to 1). Crash-
-        safe: the fold lands in a fresh dir and becomes visible only at
-        the manifest commit. Returns False when already compact."""
-        with _writer_lock(self.path):
-            manifest = self._manifest()
-            if not self._fold(spark, manifest, agg_cols):
-                return False
-            self._commit(manifest)
-            self.vacuum()
-            return True
 
     def _fold(self, spark: SparkSession, manifest: dict, agg_cols: Sequence[F.Column]) -> bool:
         """Stage this ledger's compaction into ``manifest`` (uncommitted)."""
@@ -970,13 +953,15 @@ class AppendDeltaState(DirLedger):
         N's window end): it drops every partial of a key together, so
         the key leaves the fold whole.
 
-        Mechanics mirror TransactionalKeyState.prune: one full-state
-        scan, survivors land in ONE fresh delta (so the pass doubles as
-        a compaction), the atomic manifest replace is the commit point,
-        shadowed deltas are vacuumed, and the ``writers`` replay ledger
-        is untouched — a replayed wave whose rows were since pruned is
-        STILL skipped (retention must not resurrect data through the
-        at-least-once path). Cost ∝ live state, a rare maintenance pass."""
+        A ``commit_all`` write like every verb: one full-state scan,
+        survivors land in ONE fresh delta (so the pass doubles as a
+        compaction), the atomic manifest replace is the commit point (a
+        prune that matches nothing on a ledger with no pending
+        tombstones makes none), shadowed deltas are vacuumed, and it
+        carries no replay mark, so the ``writers`` map is untouched — a
+        replayed wave whose rows were since pruned is STILL skipped
+        (retention must not resurrect data through the at-least-once
+        path). Cost ∝ live state, a rare maintenance pass."""
         return self.commit_all([(self, predicate, None, None)])[0]
 
     def _prune_staged(self, spark: SparkSession, manifest: dict, predicate: F.Column) -> int:

@@ -66,7 +66,7 @@ def _checkpointed_log(spark, src, work):
         spark.readStream.schema(FIXTURE_SCHEMA).option("maxFilesPerTrigger", "1").parquet(src)
     )
     return keep_latest_changelog_stream(
-        stream, "iso", "seq", n_buckets=4, work_dir=work, checkpoint=True
+        stream, "iso", "seq", work_dir=work, checkpoint=True
     )
 
 
@@ -81,7 +81,7 @@ def test_flink_fixture_changelog_sequence(spark):
     """+I(a,a); -U(a,a)+U(a,b); -U(a,b)+U(a,c); -U(a,c)+U(a,d) — the
     changelog Flink prints for the PK'd countries view."""
     stream = _wave_stream(spark, FIXTURE_WAVES, FIXTURE_SCHEMA)
-    got = _ops(keep_latest_changelog_stream(stream, "iso", "seq", n_buckets=4))
+    got = _ops(keep_latest_changelog_stream(stream, "iso", "seq"))
     assert got == FIXTURE_LOG
     # final upsert state = keep-latest oracle: exactly one row, capital 'd'
     final = {}
@@ -101,7 +101,7 @@ def test_late_loser_emits_nothing(spark):
         [("a", "stale", 5)],  # older than seq 10 — must be silent
     ]
     stream = _wave_stream(spark, waves, "iso string, capital string, seq long")
-    log = keep_latest_changelog_stream(stream, "iso", "seq", n_buckets=4)
+    log = keep_latest_changelog_stream(stream, "iso", "seq")
     rows = log.collect()
     assert sorted((r["op"], r["iso"]) for r in rows) == [("+I", "a"), ("+I", "b")]
 
@@ -181,7 +181,6 @@ def test_outer_join_changelog_reference_fixture(spark):
         dim_keys=["iso"],
         dim_order_col="seq",
         probe_keys=["name"],
-        n_buckets=4,
     )
     rows = [
         (r["batch_id"], r["op"], r["name"], r["capital"])
@@ -313,7 +312,7 @@ def test_outer_join_changelog_colliding_column_names(spark):
     dim = _wave_stream(spark, waves, "iso string, capital string, seq long")
     log = outer_join_changelog_stream(
         probe, dim, on=[("iso", "iso")], dim_keys=["iso"],
-        dim_order_col="seq", probe_keys=["pid"], n_buckets=2,
+        dim_order_col="seq", probe_keys=["pid"],
     )
     assert "right_seq" in log.columns and "seq" in log.columns
     rows = [(r["batch_id"], r["op"], r["capital"], r["right_seq"]) for r in log.orderBy("batch_id", "op").collect()]
@@ -364,6 +363,6 @@ def test_changelog_stream_leaks_no_cached_rdds(spark):
     jsc = spark.sparkContext._jsc
     before = jsc.getPersistentRDDs().size()
     stream = _wave_stream(spark, FIXTURE_WAVES, FIXTURE_SCHEMA)
-    log = keep_latest_changelog_stream(stream, "iso", "seq", n_buckets=4)
+    log = keep_latest_changelog_stream(stream, "iso", "seq")
     assert log.count() == len(FIXTURE_LOG)
     assert jsc.getPersistentRDDs().size() <= before

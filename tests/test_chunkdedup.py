@@ -20,15 +20,15 @@ def _rows(pdf):
 
 
 def test_streaming_chunk_dedup_equals_batch(spark, sf_dir, tmp_path):
+    import json
+
     stream = replay_documents_stream(spark, sf_dir, waves=3)
-    secs: list = []
-    got = streaming_chunk_dedup(
-        stream, work_dir=str(tmp_path / "state"), batch_seconds=secs
-    ).toPandas()
+    got = streaming_chunk_dedup(stream, work_dir=str(tmp_path / "state")).toPandas()
     want = ALL_QUERIES["chunk_dedup"].spark_fn(spark, sf_dir).toPandas()
     cols = ["chunk_fp", "n_tokens", "n_occurrences", "n_docs", "canonical_doc"]
     assert _rows(got[cols]) == _rows(want[cols])
-    assert len(secs) == 3
+    # three waves, three folds: one committed txn each
+    assert json.loads((tmp_path / "state" / "state" / "manifest.json").read_text())["txn"] == 3
 
 
 def test_streaming_chunk_dedup_state_reattach(spark, sf_dir, tmp_path):
@@ -363,7 +363,8 @@ def test_substring_ledger_compaction_and_replay_skip(spark, tmp_path):
     docs = spark.createDataFrame(
         [(i, base * 2 + f"tail{i}") for i in range(6)], "doc_id bigint, text string"
     )
-    led = StreamingSubstringLedger(str(tmp_path / "led"), min_len=30, compact_every=3)
+    led = StreamingSubstringLedger(str(tmp_path / "led"), min_len=30)
+    led.state.compact_every = 3
     assert led.ingest(docs.filter("doc_id < 2"), writer_id="w", batch_id=0)
     assert led.ingest(docs.filter("doc_id in (2,3)"), writer_id="w", batch_id=1)
     # replay of batch 1: skipped, ledger unchanged
@@ -398,7 +399,8 @@ def test_append_delta_steady_state_fan_in_bounded_long_stream(spark, tmp_path):
     from flink_playground_spark.streaming.substring_dedup import StreamingSubstringLedger
 
     base = "abcdefghij klmnopqrst uvwxyz0123 4567890abc defghijklm "
-    led = StreamingSubstringLedger(str(tmp_path / "led"), min_len=30, compact_every=3)
+    led = StreamingSubstringLedger(str(tmp_path / "led"), min_len=30)
+    led.state.compact_every = 3
     mid_t = None
     for w in range(10):
         docs = spark.createDataFrame(

@@ -131,9 +131,7 @@ def test_scd2_incremental_matches_batch(spark, sf_dir, tmp_path):
     from flink_playground_spark.streaming.scd2 import Scd2Maintainer
 
     changes, waves = _scd2_waves(spark, sf_dir)
-    m = Scd2Maintainer(
-        str(tmp_path / "scd2"), ["user_id"], "ts", ["state"], "event_id", n_buckets=8
-    )
+    m = Scd2Maintainer(str(tmp_path / "scd2"), ["user_id"], "ts", ["state"], "event_id")
     for wave in waves:
         m.apply_batch(wave)
 
@@ -153,9 +151,10 @@ def test_scd2_incremental_matches_batch(spark, sf_dir, tmp_path):
     )
     m.apply_batch(late)
     after = m.changes._manifest()["buckets"]
+    n_buckets = F.lit(m.changes.n_buckets)
     target = str(
         spark.range(1)
-        .select(F.pmod(F.xxhash64(F.lit(one.user_id).cast("long")), F.lit(8)).cast("int"))
+        .select(F.pmod(F.xxhash64(F.lit(one.user_id).cast("long")), n_buckets).cast("int"))
         .first()[0]
     )
     assert after[target] != before[target]
@@ -174,11 +173,11 @@ def test_scd2_reapply_after_failed_commit(spark, sf_dir, tmp_path, monkeypatch):
 
     _, waves = _scd2_waves(spark, sf_dir)
     args = (["user_id"], "ts", ["state"], "event_id")
-    clean = Scd2Maintainer(str(tmp_path / "clean"), *args, n_buckets=8)
+    clean = Scd2Maintainer(str(tmp_path / "clean"), *args)
     for wave in waves:
         clean.apply_batch(wave)
 
-    m = Scd2Maintainer(str(tmp_path / "crash"), *args, n_buckets=8)
+    m = Scd2Maintainer(str(tmp_path / "crash"), *args)
     m.apply_batch(waves[0])
     commit = TransactionalKeyState._commit
 

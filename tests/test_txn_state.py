@@ -342,7 +342,7 @@ def test_delta_schema_drift_raises_and_reads_skip_inference(spark, tmp_path):
     a ValueError naming the columns before any file is written (manifest
     and directory unchanged); tombstones keep their own columns; and a
     read of the deltas submits no Spark job (no parquet footer
-    inference)."""
+    inference), nor does one with a pending deletion vector."""
     import os
 
     import pytest
@@ -369,6 +369,10 @@ def test_delta_schema_drift_raises_and_reads_skip_inference(spark, tmp_path):
 
     again = spark.createDataFrame([("a", 3, "z")], "k string, seq long, p string")
     assert st.upsert(again.select("k"), again, "w", 1) is True
+    # the pending deletion vector reads with its recorded schema too
+    before = set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+    st.read(spark)
+    assert set(spark.sparkContext.statusTracker().getJobIdsForGroup(None)) == before
     assert {(r.k, r.seq, r.p) for r in st.read(spark).collect()} == {("a", 3, "z"), ("b", 2, "y")}
 
 
